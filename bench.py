@@ -53,11 +53,11 @@ EXTRAS = [
     "curation_manifest_e2e",
     "snapshot_diff",
     # round 3
-    "stats_ks_test",        # reworked r4: shared literal-boundary prefix_sums
+    "stats_ks_test",        # shared binned_prefix_sums (footer bounds)
     "sample_temperature",   # integer-quota mixture sampling
     # round 4
-    "pack_token_budget",    # shared prefix_sums (exclusive form)
-    "agg_winsorized_mean",  # grouped_rank, literal-boundary pids
+    "pack_token_budget",    # binned in-plan prefix (exclusive form)
+    "agg_winsorized_mean",  # (grp, cents) histogram + grp window
     "events_sessionize_gap",  # one-exchange sessionization cascade
     "join_interval_overlap",  # binned interval-overlap equi-join
 ]

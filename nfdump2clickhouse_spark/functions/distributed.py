@@ -2,378 +2,109 @@
 
 A window with ORDER BY and no PARTITION BY funnels the whole input
 through ONE task — correct on a fixture, a deadlock at 100 TB. These
-helpers provide the exact same results with bounded per-task work via
-the two-phase scan pattern:
+helpers give the exact same results with bounded per-task work via an
+IN-PLAN two-phase scan that runs as ONE executed job (no driver
+collect, no localCheckpoint):
 
-1. split the global ordering into ``num_parts`` ranges;
-2. collect ONE subtotal row per range (O(P) driver work, the one
-   legitimate collect);
-3. broadcast the per-range start offsets back and finish with a window
-   PARTITIONED BY range id, so every task scans only its slice.
+1. every row gets an equi-width bin id over caller-supplied [lo, hi]
+   bounds of the LEADING order column — parquet-footer min/max when the
+   column is physical (driver metadata, no job), or ``lo=hi=None`` for
+   a one-row min/max aggregate broadcast back in-plan (derived
+   columns);
+2. the rows hash-repartition on the bin id and a window PARTITIONED BY
+   it computes each row's bin-local result plus its bin's subtotal;
+3. a bounded one-row-per-bin window turns the subtotals into per-bin
+   start offsets (and grand totals), which rejoin via broadcast.
 
-Two range-id mechanisms coexist, with different determinism stories:
-
-- ``sample_boundaries`` + ``range_pid`` (used by :func:`prefix_sums`
-  and :func:`grouped_rank`): split tuples are sampled ONCE, collected,
-  and pinned as LITERALS in the plan. The partition id is then a pure
-  function of the row — re-execution cannot resample the split points,
-  which kills the repartitionByRange phantom-bin hazard (split points
-  resampled between the offset collect and the final query — found the
-  hard way in r1) by construction. One hash exchange total; the
-  optional input localCheckpoint (``materialize``) is purely a compute
-  cache shared by the passes, never a correctness dependency. Ordering
-  is ascending, nulls first (matching Spark's default ASC NULLS FIRST
-  window order).
-
-- ``repartitionByRange`` + ``localCheckpoint`` (used by
-  :func:`global_rank`, which must honor arbitrary ASC/DESC SortOrder
-  columns): the checkpoint materializes ONE sampling of the split
-  points so the offset collect and the final query see the same bins.
-
-``exact_ntile`` derives SQL ``ntile(k)`` from the global rank in
-closed form — bit-identical to the single-task window, not an
-approximation (the approx-quantile range-cut documented on
-``curriculum_binning`` remains the cheaper alternative when exact tile
-counts are not required).
-
-r12: a third, fully IN-PLAN mechanism (``binned_prefix_sums`` /
-``binned_grouped_rank``), generalizing the r11 ``stats_ks_test`` /
-``pack_token_budget`` rework (guide §1.2/§2.4). The serial driver
-chain of the samplers above (localCheckpoint job + boundary-sample
-collect + O(P) subtotal collect + the real job) collapses to ONE
-executed job: the range id is an equi-width-bin LITERAL over caller-
-supplied [lo, hi] bounds of the leading order column (parquet-footer
-min/max when the column is physical — driver metadata, no job — or
-one min/max aggregation for derived columns), the per-bin start
-offsets come from a bounded nbins-row window + broadcast join, and
-grand totals ride the same broadcast as columns instead of driver
-values. Monotonicity of the bin id in the leading key is the only
-correctness requirement — bin BALANCE affects parallelism, never
-values — so inexact bounds (truncated footer stats, stale min/max)
-still give exact results: values below lo get negative bin ids,
-values above hi clamp into the top bin, both order-preserving.
+Monotonicity of the bin id in the leading key is the only correctness
+requirement — bin BALANCE affects parallelism, never values — so
+inexact bounds (truncated footer stats, stale min/max) still give exact
+results: values below lo get negative bin ids, values above hi clamp
+into the top bin, both order-preserving. The bin id is a pure function
+of the row and the bounds, so re-executed tasks recompute identical
+bins (no sampled split points that could drift between passes).
 """
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def sample_boundaries(
-    df: DataFrame, cols: list[str], num_parts: int, seed: int = 7
-) -> list[tuple]:
-    """``num_parts - 1`` lexicographic split tuples over ``cols``,
-    sampled in one distributed top-k job (orderBy(rand).limit — a heap,
-    never a global sort) and returned as plain Python values to be
-    pinned as plan literals. Correctness of the callers never depends
-    on WHICH boundaries come back — only balance does — so the sample
-    seed is a tuning knob, not a reproducibility requirement."""
-    if num_parts <= 1:
-        return []
-    cand = df.select(*cols).orderBy(F.rand(seed)).limit(num_parts * 64).collect()
-    if not cand:
-        return []
-
-    def keyfn(row):
-        return tuple((v is not None, v) for v in row)  # nulls sort first
-
-    cand.sort(key=keyfn)
-    n = len(cand)
-    return [
-        tuple(cand[min(i * n // num_parts, n - 1)]) for i in range(1, num_parts)
-    ]
+# NULL leading keys sort first ASC (NULLS FIRST) and last DESC (NULLS
+# LAST): their bin sits below / above every finite bin id
+_NULL_BIN = 1 << 62
 
 
-def range_pid(df: DataFrame, cols: list[str], bounds: list[tuple]) -> Column:
-    """Deterministic range-partition id: the number of boundary tuples
-    strictly below the row's ``cols`` tuple (asc, nulls first). ONE
-    struct comparison per boundary — Spark's struct ordering is exactly
-    the lexicographic ASC NULLS FIRST total order (null fields smallest,
-    verified by test) and runs ~13× faster than the equivalent nested
-    boolean CASE chain (measured on 48M rows × 31 boundaries). Pure
-    Column arithmetic over literals — stays in whole-stage codegen and
-    is identical on every execution by construction. ``df`` supplies
-    the column types so null boundary values cast correctly."""
-    if not bounds:
-        return F.lit(0)
-    key = F.struct(*cols)
-    pid = F.lit(0)
-    for b in bounds:
-        lit_b = F.struct(
-            *[
-                F.lit(v).cast(df.schema[c].dataType).alias(c)
-                for c, v in zip(cols, b)
-            ]
-        )
-        pid = pid + (key > lit_b).cast("int")
-    return pid
+def _default_nbins(df: DataFrame) -> int:
+    """Bins scale with the cluster, never with the data."""
+    return max(df.sparkSession.sparkContext.defaultParallelism, 2) * 8
 
 
-def prefix_sums(
-    df: DataFrame,
-    order_cols: list[str],
-    sum_cols: list[str],
-    exclusive: bool = False,
-    num_parts: int = 8,
-    seed: int = 7,
-    prefix: str = "_ps_",
-    materialize: bool = True,
-) -> tuple[DataFrame, dict[str, int]]:
-    """Distributed running totals of every ``sum_cols`` column over the
-    global ``order_cols`` ordering (asc, nulls first) — THE one home of
-    the two-phase prefix-sum (VERDICT r3 wrong-#3: four hand-rolled
-    copies re-pointed here). Returns ``(df + one "_ps_<col>" bigint
-    column per sum col, {col: grand_total})`` — the totals fall out of
-    the offset pass for free.
-
-    ``exclusive=True`` yields the sum over STRICTLY preceding rows
-    (first row 0), the form bin-packing wants; default is inclusive.
-    The ordering must be total (callers append a unique tiebreaker,
-    SURVEY §5.3) so the prefix is deterministic across partitionings.
-    Plan shape: one boundary-sample job, one O(P)-row subtotal collect,
-    then a single hash exchange into pid-partitioned windows — no
-    unpartitioned window, and the literal boundaries make the pid
-    reproducible on any re-execution.
-
-    ``materialize`` (default True) localCheckpoints the input ONCE so
-    the three passes don't recompute its lineage — at 100 TB this is
-    the staged table you'd persist anyway; unlike the old
-    checkpoint-keyed design, CORRECTNESS does not depend on it (the
-    r1 phantom-bin class is structurally gone either way — probe r4:
-    skipping it tripled stats_ks_test's wall by re-running the
-    upstream distinct-value agg per pass). Pass False for inputs that
-    are trivially recomputable.
-    """
-    if materialize:
-        df = df.localCheckpoint()
-    bounds = sample_boundaries(df, order_cols, num_parts, seed)
-    p = df.withColumn("_pid", range_pid(df, order_cols, bounds))
-    subtot = (
-        p.groupBy("_pid")
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        .orderBy("_pid")
-        .collect()
-    )
-    offsets: dict[str, dict[int, int]] = {c: {} for c in sum_cols}
-    acc = {c: 0 for c in sum_cols}
-    for row in subtot:
-        for c in sum_cols:
-            offsets[c][row["_pid"]] = acc[c]
-            acc[c] += row[c] or 0
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
-    )
-    out = p
-    for c in sum_cols:
-        off = (
-            F.coalesce(
-                *[F.when(F.col("_pid") == k, F.lit(v)) for k, v in offsets[c].items()],
-                F.lit(0),
-            )
-            if offsets[c]
-            else F.lit(0)
-        )
-        out = out.withColumn(
-            prefix + c,
-            (off + F.coalesce(F.sum(c).over(w), F.lit(0))).cast("bigint"),
-        )
-    return out.drop("_pid"), {c: int(v) for c, v in acc.items()}
+def _micros(b):
+    """A ``datetime`` bound as its (UTC) epoch-microsecond count, to
+    match ``unix_micros`` on a timestamp column; other bounds pass."""
+    if not isinstance(b, datetime.datetime):
+        return b
+    if b.tzinfo is None:
+        b = b.replace(tzinfo=datetime.timezone.utc)
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    return (b - epoch) / datetime.timedelta(microseconds=1)
 
 
-def global_rank(
-    df: DataFrame,
-    order_cols: list[Column | str],
-    rank_col: str = "_grank",
-    num_parts: int = 8,
-) -> tuple[DataFrame, int]:
-    """Exact 1-based global row number over ``order_cols`` without an
-    unpartitioned window. Returns ``(df + rank_col, total_row_count)``
-    — the total falls out of the offset pass for free.
-
-    Accepts arbitrary ASC/DESC SortOrder columns, hence the
-    repartitionByRange + localCheckpoint mechanism (the checkpoint pins
-    ONE sampling of the split points; see module docstring). The
-    ordering must be total (callers pass a unique tiebreaker last,
-    SURVEY §5.3) so the rank is deterministic across partitionings.
-    ``num_parts`` bounds driver-side offset state at O(P); at cluster
-    scale raise it to the write parallelism you'd use anyway.
-    """
-    parts = df.repartitionByRange(num_parts, *order_cols).sortWithinPartitions(
-        *order_cols
-    )
-    parts = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    counts = parts.groupBy("_pid").count().orderBy("_pid").collect()
-    offsets: dict[int, int] = {}
-    acc = 0
-    for row in counts:
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    if not offsets:  # empty input: rank column, no rows (ADVICE r3 class)
-        return parts.drop("_pid").withColumn(
-            rank_col, F.lit(None).cast("bigint")
-        ), 0
-    off = F.coalesce(
-        *[F.when(F.col("_pid") == p, F.lit(o)) for p, o in offsets.items()],
-        F.lit(0),
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked = parts.withColumn(
-        rank_col, (off + F.row_number().over(w)).cast("bigint")
-    ).drop("_pid")
-    return ranked, acc
-
-
-def exact_ntile(
-    df: DataFrame,
-    k: int,
-    order_cols: list[Column | str],
-    out_col: str,
-    num_parts: int = 8,
-) -> DataFrame:
-    """SQL ``ntile(k) OVER (ORDER BY order_cols)`` computed from the
-    distributed global rank — the first ``n mod k`` tiles take
-    ``ceil(n/k)`` rows, the rest ``floor(n/k)``, exactly the standard
-    semantics, with no single-task sort."""
-    rank_col = f"_grank_{out_col}"
-    ranked, n = global_rank(df, order_cols, rank_col=rank_col, num_parts=num_parts)
-    if n == 0:
-        return ranked.withColumn(out_col, F.lit(None).cast("int")).drop(rank_col)
-    q, r = divmod(n, k)
-    boundary = r * (q + 1)
-    # all-integer DIV (no float division to round across a tile edge)
-    tile = F.expr(
-        f"CASE WHEN {rank_col} <= {boundary}L"
-        f" THEN ({rank_col} - 1L) DIV {q + 1}L"
-        f" ELSE {r}L + ({rank_col} - 1L - {boundary}L) DIV {max(q, 1)}L END"
-    )
-    return ranked.withColumn(out_col, (tile + 1).cast("int")).drop(rank_col)
-
-
-def grouped_rank(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    rank_col: str = "_grank",
-    num_parts: int = 8,
-    seed: int = 7,
-    materialize: bool = True,
-) -> DataFrame:
-    """Exact 1-based rank WITHIN each group (asc, nulls first), without
-    funneling a whole group through one task — the grouped form of
-    :func:`global_rank`.
-
-    A plain ``Window.partitionBy(group)`` is the right tool when groups
-    are plentiful; with a HANDFUL of huge groups (order-status flags,
-    boolean segments) each partition is a third of the corpus through
-    one task. Here rows get a LITERAL-boundary range id over (group,
-    order) — a pure function of the row, so no localCheckpoint is
-    needed to freeze the binning (VERDICT r3 next-#6: the r3 design's
-    pre-checkpoint range exchange + sort are gone; the one remaining
-    shuffle is the (pid, group) window's hash exchange) — per-(pid,
-    group) row counts come back as ONE P·G-row collect (use this
-    helper only when the group count G is small — that is exactly the
-    skewed case), and start offsets rejoin via broadcast. The input is
-    still localCheckpointed ONCE (``materialize``) so the three passes
-    share one compute — a cache, not a correctness crutch. Empty input
-    short-circuits to an empty frame with the rank column (ADVICE r3:
-    the offsets createDataFrame cannot infer an empty schema).
-    """
-    if materialize:
-        df = df.localCheckpoint()
-    keys = [*group_cols, *order_cols]
-    bounds = sample_boundaries(df, keys, num_parts, seed)
-    p = df.withColumn("_pid", range_pid(df, keys, bounds))
-    counts = p.groupBy("_pid", *group_cols).count().orderBy("_pid").collect()
-    if not counts:
-        return df.withColumn(rank_col, F.lit(None).cast("bigint"))
-    acc: dict[tuple, int] = {}
-    rows = []
-    for r in counts:
-        gkey = tuple(r[c] for c in group_cols)
-        rows.append((r["_pid"], *gkey, acc.get(gkey, 0)))
-        acc[gkey] = acc.get(gkey, 0) + r["count"]
-    off = df.sparkSession.createDataFrame(rows, ["_pid", *group_cols, "_goff"])
-    w = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    return (
-        p.join(F.broadcast(off), ["_pid", *group_cols])
-        .withColumn(rank_col, (F.col("_goff") + F.row_number().over(w)).cast("bigint"))
-        .drop("_pid", "_goff")
-    )
-
-
-def _with_bin_pid(df: DataFrame, col: str, lo, hi, nbins: int) -> DataFrame:
-    """``df`` + a ``_pid`` equi-width-bin column over ``col`` (callers
-    repartition on it themselves). ``lo``/``hi`` as Python literals
-    keep the bin id a pure plan literal (zero jobs); ``lo=None``/
-    ``hi=None`` derives the bounds IN-PLAN from a broadcast one-row
-    min/max aggregate over ``df`` itself (for DERIVED leading columns
-    with no parquet footer to read — still zero driver jobs and
-    deterministic on re-execution, unlike a rand() boundary sample:
-    min/max are pure functions of the input, so retried tasks
-    recompute identical bin ids). The broadcast arm re-plans ``df``'s
-    lineage; callers whose input hangs below an aggregation get that
-    subtree's exchange back via ReusedExchange, so the upstream scan
-    still runs once."""
-    if lo is not None and hi is not None:
-        return df.withColumn("_pid", _bin_pid(df, col, lo, hi, nbins))
-    v = F.col(col)
-    if str(df.schema[col].dataType).startswith("Timestamp"):
-        v = F.unix_micros(v)
-    b = df.agg(
-        F.min(v).cast("double").alias("_blo"), F.max(v).cast("double").alias("_bhi")
-    )
-    null_pid = F.lit(-(1 << 62)).cast("bigint")
-    pid = F.when(v.isNull(), null_pid).otherwise(
-        F.when(
-            F.col("_blo").isNull() | (F.col("_bhi") == F.col("_blo")),
-            F.lit(0).cast("bigint"),
-        ).otherwise(
+def _bin_id(x: Column, lo: Column, hi: Column, nbins: int, desc: bool) -> Column:
+    """THE equi-width bin-id expression (bigint) over ``x``, monotone in
+    its ASC NULLS FIRST order (``desc=False``) or DESC NULLS LAST order
+    (``desc=True``: ``x`` negates, so ``lo``/``hi`` must bound ``-x``).
+    NULLs take the sentinel below (ASC) or above (DESC) every finite bin;
+    values under ``lo`` floor negative, values over ``hi`` clamp into the
+    top bin. NULL bounds (empty input) or ``lo == hi`` put every
+    non-NULL row in bin 0. ``lo``/``hi`` are double Columns: literals
+    constant-fold away the guard, broadcast columns evaluate it per
+    row."""
+    v = -x if desc else x
+    null_pid = F.lit(_NULL_BIN if desc else -_NULL_BIN).cast("bigint")
+    return F.when(x.isNull(), null_pid).otherwise(
+        F.when(lo.isNull() | (hi == lo), F.lit(0).cast("bigint")).otherwise(
             F.least(
-                F.floor(
-                    (v.cast("double") - F.col("_blo"))
-                    / ((F.col("_bhi") - F.col("_blo")) / nbins)
-                ),
+                F.floor((v.cast("double") - lo) / ((hi - lo) / nbins)),
                 F.lit(nbins - 1).cast("bigint"),
             )
         )
     )
-    return df.join(F.broadcast(b)).withColumn("_pid", pid).drop("_blo", "_bhi")
 
 
-def _bin_pid(df: DataFrame, col: str, lo, hi, nbins: int) -> Column:
-    """Equi-width bin literal over ``col`` (bigint, monotone in the
-    column's ASC NULLS FIRST order): NULLs take a sentinel below every
-    finite bin, values under ``lo`` floor negative, values over ``hi``
-    clamp into the top bin — all order-preserving, so stale/truncated
-    bounds only unbalance the bins, never reorder them. Timestamp
-    columns bin on their microsecond count."""
-    v = F.col(col)
+def _with_bin_pid(
+    df: DataFrame, col: str, lo, hi, nbins: int, desc: bool = False
+) -> DataFrame:
+    """``df`` + a ``_pid`` bin-id column over ``col`` (see
+    :func:`_bin_id`; callers repartition on it themselves). ``lo``/``hi``
+    are always the RAW column's bounds; timestamp columns bin on their
+    microsecond count. Literal bounds keep the bin id a pure plan
+    literal (no join, zero jobs); ``lo=None``/``hi=None`` derives the
+    bounds IN-PLAN from a broadcast one-row min/max aggregate over
+    ``df`` itself (for DERIVED leading columns with no parquet footer to
+    read — still zero driver jobs and deterministic on re-execution:
+    min/max are pure functions of the input, so retried tasks recompute
+    identical bin ids). The broadcast arm re-plans ``df``'s lineage;
+    callers whose input hangs below an aggregation get that subtree's
+    exchange back via ReusedExchange, so the upstream scan still runs
+    once."""
+    x = F.col(col)
     if str(df.schema[col].dataType).startswith("Timestamp"):
-        v = F.unix_micros(v)
-        if lo is not None:
-            import datetime
-
-            if isinstance(lo, datetime.datetime):
-                epoch = datetime.datetime(
-                    1970, 1, 1, tzinfo=datetime.timezone.utc
-                )
-                lo_ts = lo if lo.tzinfo else lo.replace(tzinfo=datetime.timezone.utc)
-                hi_ts = hi if hi.tzinfo else hi.replace(tzinfo=datetime.timezone.utc)
-                lo = (lo_ts - epoch) / datetime.timedelta(microseconds=1)
-                hi = (hi_ts - epoch) / datetime.timedelta(microseconds=1)
-    null_pid = F.lit(-(1 << 62)).cast("bigint")
-    if lo is None or hi is None or float(hi) == float(lo):
-        return F.when(v.isNull(), null_pid).otherwise(F.lit(0).cast("bigint"))
-    width = (float(hi) - float(lo)) / nbins
-    return F.when(v.isNull(), null_pid).otherwise(
-        F.least(
-            F.floor((v.cast("double") - float(lo)) / width),
-            F.lit(nbins - 1).cast("bigint"),
-        )
+        x = F.unix_micros(x)
+    if lo is not None and hi is not None:
+        blo, bhi = float(_micros(lo)), float(_micros(hi))
+        if desc:
+            blo, bhi = -bhi, -blo
+        return df.withColumn("_pid", _bin_id(x, F.lit(blo), F.lit(bhi), nbins, desc))
+    v = -x if desc else x
+    b = df.agg(
+        F.min(v).cast("double").alias("_blo"), F.max(v).cast("double").alias("_bhi")
     )
+    pid = _bin_id(x, F.col("_blo"), F.col("_bhi"), nbins, desc)
+    return df.join(F.broadcast(b)).withColumn("_pid", pid).drop("_blo", "_bhi")
 
 
 def binned_prefix_sums(
@@ -387,27 +118,29 @@ def binned_prefix_sums(
     nbins: int | None = None,
     totals: list[str] | None = None,
 ) -> DataFrame:
-    """In-plan two-phase running totals over the global ``order_cols``
-    ordering (asc, nulls first) — the :func:`prefix_sums` contract with
-    ZERO driver jobs (module docstring, r12 mechanism; the proven
-    ``stats_ks_test``/``pack_token_budget`` shape shared).
+    """Running totals of every ``sum_cols`` column over the global
+    ``order_cols`` ordering (asc, nulls first), equal to
+    ``SUM(col) OVER (ORDER BY order_cols ROWS BETWEEN UNBOUNDED
+    PRECEDING AND CURRENT ROW)`` — or ``AND 1 PRECEDING`` (first row 0)
+    with ``exclusive=True``, the form bin-packing wants — with ZERO
+    driver jobs. The ordering must be total (callers append a unique
+    tiebreaker, SURVEY §5.3) so the prefix is deterministic across
+    partitionings.
 
     ``lo``/``hi`` bound the leading order column's non-null domain
     (parquet footer stats, or one min/max agg for derived columns);
     only monotonicity of the derived bin id matters, so inexact bounds
     are safe. Adds one ``prefix + col`` bigint column per sum col, and,
     for every col in ``totals``, a ``prefix + "tot_" + col`` bigint
-    grand-total column (the in-plan replacement for the driver-side
-    totals dict — NULL-free: empty bins contribute 0, an empty input
-    yields an empty frame). Plan shape: one hash exchange on the bin
+    grand-total column carried on every row (NULL-free: empty bins
+    contribute 0, an empty input yields an empty frame). Plan shape: one hash exchange on the bin
     id shared by the main window and the offsets arm (ReusedExchange
     at runtime), a bounded nbins-row unpartitioned window on the
     offsets arm (one row per bin — bins scale with the cluster, never
     the data; callers must be allowlisted in
     test_no_unpartitioned_windows_full_registry), and one broadcast
     join."""
-    spark = df.sparkSession
-    nbins = nbins or max(spark.sparkContext.defaultParallelism, 2) * 8
+    nbins = nbins or _default_nbins(df)
     p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition("_pid")
     w_run = (
         Window.partitionBy("_pid")
@@ -470,15 +203,17 @@ def binned_grouped_rank(
     rank_col: str = "_grank",
     nbins: int | None = None,
 ) -> DataFrame:
-    """In-plan exact 1-based rank WITHIN each group over ``order_cols``
-    (asc, nulls first) — the :func:`grouped_rank` contract with ZERO
-    driver jobs (module docstring, r12 mechanism). ``lo``/``hi`` bound
-    the LEADING ORDER column (groups share the bins). The offsets arm
+    """Exact 1-based rank WITHIN each group over ``order_cols`` (asc,
+    nulls first), equal to ``ROW_NUMBER() OVER (PARTITION BY group_cols
+    ORDER BY order_cols)`` for a total order, with ZERO driver jobs and
+    without funneling a whole group through one task (a HANDFUL of huge
+    groups would each be one task under a plain group window).
+    ``lo``/``hi`` bound the LEADING ORDER column (groups share the
+    bins). The offsets arm
     here is a window PARTITIONED BY the group columns over one row per
     (bin, group) — bounded by nbins x |groups| and, being partitioned,
     needs no unpartitioned-window allowlisting."""
-    spark = df.sparkSession
-    nbins = nbins or max(spark.sparkContext.defaultParallelism, 2) * 8
+    nbins = nbins or _default_nbins(df)
     p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition(
         "_pid", *group_cols
     )
@@ -534,8 +269,7 @@ def binned_grouped_prefix_sums(
     the group columns over one row per (bin, group) — bounded by
     nbins x |groups|, no unpartitioned-window allowlisting needed.
     Monotonicity contract of ``lo``/``hi`` as in the ungrouped form."""
-    spark = df.sparkSession
-    nbins = nbins or max(spark.sparkContext.defaultParallelism, 2) * 8
+    nbins = nbins or _default_nbins(df)
     p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition(
         "_pid", *group_cols
     )
@@ -594,55 +328,6 @@ def binned_grouped_prefix_sums(
     return out.drop(*drop)
 
 
-def _with_bin_pid_dir(
-    df: DataFrame, col: str, lo, hi, nbins: int, desc: bool
-) -> DataFrame:
-    """Directional form of :func:`_with_bin_pid`: for ``desc=True`` the
-    bin id is monotone in the DESC NULLS LAST order (Spark's default
-    for ``F.desc``) — values negate, bounds swap-negate, and the NULL
-    sentinel moves ABOVE every finite bin. ``lo``/``hi`` are always the
-    RAW column's bounds; ``None`` derives them in-plan (broadcast
-    min/max arm, see :func:`_with_bin_pid`)."""
-    if not desc:
-        return _with_bin_pid(df, col, lo, hi, nbins)
-    v = -F.col(col)
-    if lo is not None and hi is not None:
-        nlo, nhi = -float(hi), -float(lo)
-        null_pid = F.lit(1 << 62).cast("bigint")
-        if float(nhi) == float(nlo):
-            pid = F.when(F.col(col).isNull(), null_pid).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        else:
-            width = (float(nhi) - float(nlo)) / nbins
-            pid = F.when(F.col(col).isNull(), null_pid).otherwise(
-                F.least(
-                    F.floor((v.cast("double") - float(nlo)) / width),
-                    F.lit(nbins - 1).cast("bigint"),
-                )
-            )
-        return df.withColumn("_pid", pid)
-    b = df.agg(
-        F.min(v).cast("double").alias("_blo"), F.max(v).cast("double").alias("_bhi")
-    )
-    null_pid = F.lit(1 << 62).cast("bigint")
-    pid = F.when(F.col(col).isNull(), null_pid).otherwise(
-        F.when(
-            F.col("_blo").isNull() | (F.col("_bhi") == F.col("_blo")),
-            F.lit(0).cast("bigint"),
-        ).otherwise(
-            F.least(
-                F.floor(
-                    (v.cast("double") - F.col("_blo"))
-                    / ((F.col("_bhi") - F.col("_blo")) / nbins)
-                ),
-                F.lit(nbins - 1).cast("bigint"),
-            )
-        )
-    )
-    return df.join(F.broadcast(b)).withColumn("_pid", pid).drop("_blo", "_bhi")
-
-
 def binned_global_rank(
     df: DataFrame,
     lead: str,
@@ -655,13 +340,12 @@ def binned_global_rank(
     nbins: int | None = None,
 ) -> DataFrame:
     """In-plan exact 1-based global row number over
-    ``(lead [asc|desc], *tiebreaks asc)`` — the :func:`global_rank`
-    contract with ZERO driver jobs (module docstring, r12 mechanism:
-    `global_rank` ran repartitionByRange-sample + localCheckpoint +
-    O(P) count collect before the real job). ``lo``/``hi`` bound the
+    ``(lead [asc|desc], *tiebreaks asc)``, equal to ``ROW_NUMBER()
+    OVER (ORDER BY ...)`` (DESC NULLS LAST, Spark's ``F.desc`` default)
+    for a total order, with ZERO driver jobs. ``lo``/``hi`` bound the
     RAW lead column (parquet footer stats; ``None`` = in-plan broadcast
-    min/max arm). ``total_col`` names an optional per-row grand-total
-    column (the in-plan replacement for the returned driver count).
+    min/max arm). ``total_col`` names an optional per-row column
+    holding the total row count.
 
     Plan shape: one hash exchange on the bin id; the bounded nbins-row
     offsets arm (callers must be allowlisted in
@@ -671,10 +355,9 @@ def binned_global_rank(
     whenever the caller carries no extra payload columns (extra columns
     are pruned from the offsets arm, which then re-plans the lineage as
     a NARROW column scan: still one executed job, documented tradeoff)."""
-    spark = df.sparkSession
-    nbins = nbins or max(spark.sparkContext.defaultParallelism, 2) * 8
+    nbins = nbins or _default_nbins(df)
     order = [F.desc(lead) if desc else F.asc(lead)] + [F.asc(c) for c in tiebreaks]
-    p = _with_bin_pid_dir(df, lead, lo, hi, nbins, desc).repartition("_pid")
+    p = _with_bin_pid(df, lead, lo, hi, nbins, desc).repartition("_pid")
     w_rn = Window.partitionBy("_pid").orderBy(*order)
     w_cnt = (
         Window.partitionBy("_pid")
@@ -725,9 +408,10 @@ def binned_exact_ntile(
 ) -> DataFrame:
     """SQL ``ntile(k) OVER (ORDER BY lead [asc|desc], tiebreaks)``
     computed from :func:`binned_global_rank` with the tile arithmetic
-    entirely in-plan (the :func:`exact_ntile` contract — first
-    ``n mod k`` tiles take ``ceil(n/k)`` rows — with ZERO driver jobs;
-    n rides the offsets broadcast instead of a collect)."""
+    entirely in-plan — the standard semantics, first ``n mod k`` tiles
+    take ``ceil(n/k)`` rows and the rest ``floor(n/k)``, bit-identical
+    to the single-task window; n rides the offsets broadcast instead of
+    a collect."""
     rank_col = f"_grank_{out_col}"
     r = binned_global_rank(
         df, lead, tiebreaks, rank_col, lo, hi, desc, total_col="_ntot", nbins=nbins
@@ -737,7 +421,7 @@ def binned_exact_ntile(
     boundary = rr * (q + 1)
     rk = F.col(rank_col)
     # all-integer DIV (no float division to round across a tile edge);
-    # GREATEST(q,1) guards n < k exactly like the Python max(q, 1)
+    # GREATEST(q,1) guards the divisor when n < k (q = 0)
     tile = F.when(
         rk <= boundary,
         F.expr(f"({rank_col} - 1L) DIV (_ntot DIV {k}L + 1L)"),
@@ -760,6 +444,5 @@ def binned_pid(
     ASC NULLS FIRST order, bounds from literals or the in-plan
     broadcast min/max arm (see :func:`_with_bin_pid`). Callers
     repartition on ``_pid`` themselves."""
-    spark = df.sparkSession
-    nbins = nbins or max(spark.sparkContext.defaultParallelism, 2) * 8
+    nbins = nbins or _default_nbins(df)
     return _with_bin_pid(df, col, lo, hi, nbins)

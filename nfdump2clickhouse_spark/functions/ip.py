@@ -37,17 +37,6 @@ def ipv4_to_num(col: Column) -> Column:
     )
 
 
-def num_to_ipv4(col: Column) -> Column:
-    """uint32-as-long → dotted-quad string (ClickHouse IPv4NumToString)."""
-    return F.concat_ws(
-        ".",
-        (col / 16777216).cast("bigint") % 256,
-        (col / 65536).cast("bigint") % 256,
-        (col / 256).cast("bigint") % 256,
-        col % 256,
-    )
-
-
 def cidr_range(cidr: str) -> tuple[int, int]:
     """'10.0.0.0/20' → (lo, hi) inclusive numeric bounds."""
     addr, _, bits = cidr.partition("/")

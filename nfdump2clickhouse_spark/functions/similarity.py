@@ -36,10 +36,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_rounded(a: Column, b: Column, digits: int = 4) -> Column:
-    return F.round(cosine(a, b), digits)
-
-
 def blocked_pair_topk(
     e,  # DataFrame(vec_id long, emb array<double>)
     n_blocks: int = 8,

@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.ip import ipv4_to_num
-from ..schemas import FLOWS, NFDUMP_CSV_RAW
+from ..schemas import NFDUMP_CSV_RAW
 
 #: columns kept from the raw nfdump record (the reference's projection [P])
 KEEP = ["ts", "te", "td", "sa", "da", "sp", "dp", "pr", "flg", "ipkt", "ibyt", "ra"]
@@ -168,19 +168,6 @@ def read_flow_csv(spark: SparkSession, path: str, flowsrc: str) -> DataFrame:
         .csv(path)
     )
     return project_flows(raw, flowsrc)
-
-
-def stream_flow_dir(spark: SparkSession, watch_dir: str, flowsrc: str) -> DataFrame:
-    """Streaming source over a watched directory of rotated parquet flow
-    files — Spark's seen-files log replaces the reference's watchdog +
-    completeness heuristics (SURVEY §3.2 E2'); `cleanSource=archive` (set
-    by callers that own the dir) replaces post-insert deletion."""
-    return (
-        spark.readStream.schema(FLOWS)
-        .option("maxFilesPerTrigger", 1)  # one nfcapd rotation per micro-batch
-        .parquet(watch_dir)
-        .withColumn("flowsrc", F.coalesce("flowsrc", F.lit(flowsrc)))
-    )
 
 
 # --- deterministic synthetic flow data (FIXTURES.md §B) ---------------------

@@ -80,7 +80,8 @@ _SLOW_TESTS = {
     # scale-rehearsal contracts >= ~20 s: internal-equivalence /
     # large-volume rehearsals, not oracle or edge coverage
     "test_ivfpq_recall_contract",                        # 70 s
-    "test_exact_ntile_equals_window_ntile",              # 52 s
+    "test_exact_ntile_equals_window_ntile",              # 31 s (4 cores;
+    #   binned_exact_ntile: 9 (n, k) shapes x 8 bound cases)
     "test_pacf_and_cusum_survive_large_daily_volume",    # 46 s
     "test_semantic_dedup_contracts",                     # 31 s
     "test_provenance_split_reconciles",                  # 27 s

@@ -1405,57 +1405,91 @@ def test_substring_spans_are_verbatim(spark, sf_dir):
             assert w1[s1 + n] != w2[s2 + n], ("extends right", r["id1"], r["id2"])
 
 
+def _binned_bound_cases(df, vmax, nbins=4):
+    """``(case, input, lo, hi, nbins)`` for every bound shape the
+    ``functions.distributed.binned_*`` helpers must survive, over a frame
+    whose leading order column ``v`` spans [0, vmax] and whose ``id`` is
+    unique: footer-like literal bounds, the in-plan broadcast min/max
+    arm (``lo=hi=None``), bounds narrower than the data (rows below
+    ``lo`` and above ``hi``), ``lo == hi``, NULL leading keys (literal
+    and broadcast), empty input (broadcast: NULL min/max) and more bins
+    than rows. Only the bin ids move between cases; every helper result
+    must stay equal to the engine's single-task window."""
+    import pyspark.sql.functions as F
+
+    nulls = df.withColumn(
+        "v", F.when(F.col("id") % 11 == 0, None).otherwise(F.col("v"))
+    )
+    return [
+        ("literal", df, 0, vmax, nbins),
+        ("broadcast", df, None, None, nbins),
+        ("narrow", df, vmax // 3, 2 * vmax // 3, nbins),
+        ("lo_eq_hi", df, vmax // 2, vmax // 2, nbins),
+        ("null_keys", nulls, 0, vmax, nbins),
+        ("null_keys_broadcast", nulls, None, None, nbins),
+        ("empty", df.filter(F.lit(False)), None, None, nbins),
+        ("nbins_gt_rows", df, 0, vmax, 1024),
+    ]
+
+
+def _by_id(df, *cols):
+    return df.select("id", *cols).toPandas().sort_values("id").reset_index(drop=True)
+
+
 @pytest.mark.parametrize("n,k", [(1, 3), (2, 3), (3, 3), (7, 4), (100, 7), (101, 7), (105, 7), (64, 64), (63, 64)])
 def test_exact_ntile_equals_window_ntile(spark, n, k):
-    """functions.distributed.exact_ntile's closed-form arithmetic must
-    equal the engine's own ntile() window for adversarial (n, k) shapes:
-    n<k, n=k, n%k=0, n%k!=0, single row."""
+    """functions.distributed.binned_exact_ntile's in-plan tile arithmetic
+    must equal the engine's own ntile() window for adversarial (n, k)
+    shapes — n<k, n=k, n%k=0, n%k!=0, single row — under every bound
+    case of _binned_bound_cases."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from nfdump2clickhouse_spark.functions.distributed import exact_ntile
+    from nfdump2clickhouse_spark.functions.distributed import binned_exact_ntile
 
     df = spark.range(n).select((F.col("id") * 37 % 1000).alias("v"), "id")
-    got = (
-        exact_ntile(df, k, [F.asc("v"), F.asc("id")], "t", num_parts=4)
-        .select("id", "t")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    exp = (
-        df.select(
-            "id", F.ntile(k).over(Window.orderBy("v", "id")).alias("t")
+    for case, inp, lo, hi, nbins in _binned_bound_cases(df, 999):
+        got = _by_id(
+            binned_exact_ntile(inp, k, "v", ["id"], "t", lo, hi, nbins=nbins), "t"
         )
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    assert got.equals(exp), (n, k)
+        exp = _by_id(
+            inp.select("id", F.ntile(k).over(Window.orderBy("v", "id")).alias("t")),
+            "t",
+        )
+        assert got.equals(exp), (n, k, case)
 
 
 def test_global_rank_equals_row_number(spark):
-    """Two-phase global_rank == single-task row_number over the same
-    total order, including the returned total count."""
+    """functions.distributed.binned_global_rank == single-task
+    row_number over the same total order, ASC and DESC (NULLS FIRST /
+    NULLS LAST, Spark's defaults), under every bound case of
+    _binned_bound_cases, including the per-row total-count column."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from nfdump2clickhouse_spark.functions.distributed import global_rank
+    from nfdump2clickhouse_spark.functions.distributed import binned_global_rank
 
     df = spark.range(500).select((F.col("id") * 13 % 97).alias("v"), "id")
-    ranked, total = global_rank(df, [F.desc("v"), F.asc("id")], "rk", num_parts=6)
-    assert total == 500
-    got = ranked.select("id", "rk").toPandas().sort_values("id").reset_index(drop=True)
-    exp = (
-        df.select(
-            "id",
-            F.row_number().over(Window.orderBy(F.desc("v"), F.asc("id"))).cast("bigint").alias("rk"),
-        )
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    assert got.equals(exp)
+    for case, inp, lo, hi, nbins in _binned_bound_cases(df, 96):
+        total = inp.count()
+        for desc in (False, True):
+            ranked = binned_global_rank(
+                inp, "v", ["id"], "rk", lo, hi, desc, total_col="tot", nbins=nbins
+            )
+            got = _by_id(ranked, "rk", "tot")
+            lead = F.desc("v") if desc else F.asc("v")
+            exp = _by_id(
+                inp.select(
+                    "id",
+                    F.row_number()
+                    .over(Window.orderBy(lead, F.asc("id")))
+                    .cast("bigint")
+                    .alias("rk"),
+                ),
+                "rk",
+            )
+            assert got[["id", "rk"]].equals(exp), (case, desc)
+            assert (got["tot"] == total).all(), (case, desc)
 
 
 @pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
@@ -1505,57 +1539,86 @@ def test_winsorized_mean_across_sfs(sfd, spark, ddb_by_sf):
 
 
 def test_grouped_rank_equals_partitioned_row_number(spark):
-    """grouped_rank (range-partitioned two-phase, broadcast offsets) must
-    equal row_number() OVER (PARTITION BY g ORDER BY ...) exactly,
-    including when a group straddles several range partitions."""
+    """functions.distributed.binned_grouped_rank ((bin, group) windows,
+    broadcast offsets) must equal row_number() OVER (PARTITION BY g
+    ORDER BY ...) exactly, including when a group straddles several
+    bins, under every bound case of _binned_bound_cases."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from nfdump2clickhouse_spark.functions.distributed import grouped_rank
+    from nfdump2clickhouse_spark.functions.distributed import binned_grouped_rank
 
     df = spark.range(997).select(
         (F.col("id") % 3).alias("g"), (F.col("id") * 37 % 101).alias("v"), "id"
     )
-    got = (
-        grouped_rank(df, ["g"], ["v", "id"], "rk", num_parts=5)
-        .select("id", "rk")
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    exp = (
-        df.select(
-            "id",
-            F.row_number()
-            .over(Window.partitionBy("g").orderBy("v", "id"))
-            .cast("bigint")
-            .alias("rk"),
+    for case, inp, lo, hi, nbins in _binned_bound_cases(df, 100):
+        got = _by_id(
+            binned_grouped_rank(inp, ["g"], ["v", "id"], lo, hi, "rk", nbins), "rk"
         )
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
+        exp = _by_id(
+            inp.select(
+                "id",
+                F.row_number()
+                .over(Window.partitionBy("g").orderBy("v", "id"))
+                .cast("bigint")
+                .alias("rk"),
+            ),
+            "rk",
+        )
+        assert got.equals(exp), case
+
+
+def test_grouped_prefix_sums_equals_partitioned_window(spark):
+    """functions.distributed.binned_grouped_prefix_sums must equal the
+    partitioned running sum SUM(a) OVER (PARTITION BY g ORDER BY ...)
+    bit-for-bit, with per-group ``totals=``, under every bound case of
+    _binned_bound_cases."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from nfdump2clickhouse_spark.functions.distributed import (
+        binned_grouped_prefix_sums,
     )
-    assert got.equals(exp)
-    # empty input must not crash the offsets createDataFrame (ADVICE r3)
-    empty = grouped_rank(df.filter(F.lit(False)), ["g"], ["v", "id"], "rk")
-    assert empty.count() == 0 and "rk" in empty.columns
+
+    df = spark.range(997).select(
+        (F.col("id") % 3).alias("g"),
+        (F.col("id") * 37 % 101).alias("v"),
+        "id",
+        (F.col("id") % 7 + 1).alias("a"),
+    )
+    w = Window.partitionBy("g").orderBy("v", "id")
+    for case, inp, lo, hi, nbins in _binned_bound_cases(df, 100):
+        got = _by_id(
+            binned_grouped_prefix_sums(
+                inp, ["g"], ["v", "id"], ["a"], lo, hi, nbins=nbins, totals=["a"]
+            ),
+            "_ps_a", "_ps_tot_a",
+        )
+        exp = _by_id(
+            inp.select(
+                "id",
+                F.sum("a").over(w).cast("bigint").alias("_ps_a"),
+                F.sum("a").over(Window.partitionBy("g")).cast("bigint").alias("_ps_tot_a"),
+            ),
+            "_ps_a", "_ps_tot_a",
+        )
+        assert got.equals(exp), case
 
 
 @pytest.mark.parametrize("n,parts,exclusive", [
     (0, 8, False), (1, 8, True), (997, 5, False), (997, 5, True), (64, 64, False),
 ])
 def test_prefix_sums_equals_unpartitioned_window(spark, n, parts, exclusive):
-    """functions.distributed.prefix_sums (VERDICT r3 wrong-#3: the one
-    home of the two-phase scan) must equal the single-task global
-    window bit-for-bit — multiple sum columns, inclusive and exclusive
-    frames, empty input, more partitions than rows. The literal
-    boundaries make the partition id a pure function of the row, so no
-    materialization step exists to drift between the offset collect and
-    the final query (the r1 phantom-bin class is structurally gone)."""
+    """functions.distributed.binned_prefix_sums must equal the
+    single-task global window bit-for-bit — multiple sum columns,
+    inclusive and exclusive frames, empty input, as many bins as rows
+    (``parts`` is the bin count) — under every bound case of
+    _binned_bound_cases, and its ``totals=`` columns must carry the
+    grand sums on every row."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from nfdump2clickhouse_spark.functions.distributed import prefix_sums
+    from nfdump2clickhouse_spark.functions.distributed import binned_prefix_sums
 
     df = spark.range(n).select(
         (F.col("id") * 37 % 101).alias("v"),
@@ -1563,50 +1626,53 @@ def test_prefix_sums_equals_unpartitioned_window(spark, n, parts, exclusive):
         (F.col("id") % 7 + 1).alias("a"),
         (F.col("id") * 13 % 29).alias("b"),
     )
-    got_df, totals = prefix_sums(
-        df, ["v", "id"], ["a", "b"], exclusive=exclusive, num_parts=parts
-    )
-    got = got_df.select("id", "_ps_a", "_ps_b").toPandas().sort_values(
-        "id"
-    ).reset_index(drop=True)
     end = -1 if exclusive else 0
     w = Window.orderBy("v", "id").rowsBetween(Window.unboundedPreceding, end)
-    exp = (
-        df.select(
-            "id",
-            F.coalesce(F.sum("a").over(w), F.lit(0)).cast("bigint").alias("_ps_a"),
-            F.coalesce(F.sum("b").over(w), F.lit(0)).cast("bigint").alias("_ps_b"),
+    for case, inp, lo, hi, nbins in _binned_bound_cases(df, 100, nbins=parts):
+        got = _by_id(
+            binned_prefix_sums(
+                inp, ["v", "id"], ["a", "b"], lo, hi, exclusive,
+                nbins=nbins, totals=["a", "b"],
+            ),
+            "_ps_a", "_ps_b", "_ps_tot_a", "_ps_tot_b",
         )
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    assert got.equals(exp), (n, parts, exclusive)
-    agg = df.agg(F.sum("a"), F.sum("b")).collect()[0]
-    assert totals == {"a": agg[0] or 0, "b": agg[1] or 0}
+        exp = _by_id(
+            inp.select(
+                "id",
+                F.coalesce(F.sum("a").over(w), F.lit(0)).cast("bigint").alias("_ps_a"),
+                F.coalesce(F.sum("b").over(w), F.lit(0)).cast("bigint").alias("_ps_b"),
+            ),
+            "_ps_a", "_ps_b",
+        )
+        assert got[["id", "_ps_a", "_ps_b"]].equals(exp), (n, parts, exclusive, case)
+        agg = inp.agg(F.sum("a"), F.sum("b")).collect()[0]
+        assert (got["_ps_tot_a"] == (agg[0] or 0)).all(), case
+        assert (got["_ps_tot_b"] == (agg[1] or 0)).all(), case
 
 
 def test_prefix_sums_null_order_keys_sort_first(spark):
     """NULL order keys rank first (Spark ASC NULLS FIRST) and still
-    accumulate correctly through the literal-boundary pid."""
+    accumulate correctly through the NULL sentinel bin, with literal
+    and broadcast bounds."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from nfdump2clickhouse_spark.functions.distributed import prefix_sums
+    from nfdump2clickhouse_spark.functions.distributed import binned_prefix_sums
 
     df = spark.range(200).select(
         F.when(F.col("id") % 11 == 0, None).otherwise(F.col("id") * 7 % 31).alias("v"),
         "id",
         F.lit(1).alias("one"),
     )
-    got_df, totals = prefix_sums(df, ["v", "id"], ["one"], num_parts=6)
-    got = got_df.select("id", "_ps_one").toPandas().sort_values("id").reset_index(drop=True)
     w = Window.orderBy("v", "id").rowsBetween(Window.unboundedPreceding, 0)
-    exp = (
-        df.select("id", F.sum("one").over(w).cast("bigint").alias("_ps_one"))
-        .toPandas().sort_values("id").reset_index(drop=True)
-    )
-    assert got.equals(exp) and totals == {"one": 200}
+    exp = _by_id(df.select("id", F.sum("one").over(w).cast("bigint").alias("_ps_one")), "_ps_one")
+    for lo, hi in ((0, 30), (None, None)):
+        got = _by_id(
+            binned_prefix_sums(df, ["v", "id"], ["one"], lo, hi, nbins=6, totals=["one"]),
+            "_ps_one", "_ps_tot_one",
+        )
+        assert got[["id", "_ps_one"]].equals(exp), (lo, hi)
+        assert (got["_ps_tot_one"] == 200).all(), (lo, hi)
 
 
 @pytest.mark.parametrize("sfd", CROSS_SF_DIRS)

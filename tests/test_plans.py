@@ -507,8 +507,9 @@ def test_no_unpartitioned_windows_full_registry(spark):
             offenders[key] = bad[:2]
     assert not offenders, (
         "data-sized unpartitioned ORDER-BY window(s) — use "
-        "functions.distributed (prefix_sums/global_rank/grouped_rank/"
-        f"exact_ntile) or argue boundedness in the allowlist: {offenders}"
+        "functions.distributed (binned_prefix_sums/binned_global_rank/"
+        "binned_grouped_rank/binned_exact_ntile) or argue boundedness in "
+        f"the allowlist: {offenders}"
     )
     # the allowlist must not rot: every entry still exists in the
     # registry (a renamed/removed key gets pruned, not grandfathered)
@@ -531,12 +532,11 @@ def test_hamming_retrieval_banded_no_corpus_broadcast(spark, sf_dir):
 def test_round3_shuffle_budgets(spark, sf_dir):
     """Exchange budgets for the round-3 keys (counts include broadcast
     exchanges — same convention as the earlier budget tests). The
-    exact_ntile keys read from localCheckpointed global_rank state, so
-    only their post-checkpoint exchanges appear; stats_ks_test moved to
-    the checkpoint-free literal-boundary prefix_sums in r4, so its FULL
-    lineage (distinct-value agg + pid window + final 1-row agg) is now
-    visible in one plan — one more Exchange in the plan text, one FEWER
-    materialization at runtime."""
+    in-plan binned scans (binned_exact_ntile keys, stats_ks_test's
+    binned_prefix_sums) carry no checkpoint, so their FULL lineage
+    (bin repartition + bin-offsets arm + downstream aggs) is visible in
+    one plan — more Exchanges in the plan text, fewer materializations
+    at runtime."""
     budgets = {
         "sample_temperature": 6,   # 2 aggs + rank window + final agg + 2 bcast
         "emb_pq_quantize": 3,      # explode->subspace agg (+ sort)
@@ -564,10 +564,8 @@ def test_round3_shuffle_budgets(spark, sf_dir):
 
 def test_round3_late_shuffle_budgets(spark, sf_dir):
     """Exchange budgets for the late round-3 keys (broadcast exchanges
-    included, as in the earlier budget tests). The grouped_rank keys
-    carry the known post-checkpoint re-shuffle (see
-    functions/distributed.py) — budgets pin today's counts so growth is
-    a visible regression."""
+    included, as in the earlier budget tests). Budgets pin today's
+    counts so growth is a visible regression."""
     budgets = {
         "stats_bootstrap_ci": 2,
         "ts_period_over_period": 2,
@@ -694,8 +692,9 @@ def test_wave22_exchange_budgets(spark, sf_dir):
     flows_stitch_rotation plans ONE data-sized exchange on the flow key
     shared by the lag window, the island window, AND the (k, island)
     aggregation — only the bounded distribution rollup exchanges again.
-    stats_mann_whitney rides the shared prefix_sums scan: the
-    distinct-value agg + one pid exchange, no unpartitioned window."""
+    stats_mann_whitney rides the shared binned_prefix_sums scan: the
+    distinct-value agg + one bin-id exchange, no data-sized
+    unpartitioned window."""
     budgets = {
         "flows_stitch_rotation": 2,
         "dedup_url_canonicalize": 2,   # canonical groupBy + distinct 2-phase
@@ -1027,8 +1026,8 @@ def test_wave29_exchange_budgets(spark, sf_dir):
 def test_wave30_exchange_budgets(spark, sf_dir):
     """Round-5 wave-30 keys: audited Exchange budgets."""
     budgets = {
-        # grouped_rank x2 (literal-boundary pids, (pid,grp) windows)
-        # + (grp,value) avg-rank exchanges + corr agg + ordering — the
+        # binned_grouped_rank x2 (literal-bound bin ids, (bin,grp)
+        # windows) + (grp,value) avg-rank exchanges + corr agg + ordering — the
         # 3-value group key makes a plain partitionBy(grp) window a
         # one-task-per-group sort (8x probe measured 7.2; this shape
         # probes 1.6)
@@ -1096,10 +1095,10 @@ def test_ppswor_is_take_ordered_and_project(spark, sf_dir):
 
 
 def test_lift_has_no_unpartitioned_datasized_window(spark, sf_dir):
-    """Decile assignment must use the two-phase exact_ntile rank, not a
-    single-task ntile() OVER (ORDER BY) on the full table: every Window
-    in the plan is either range-pid-partitioned or over the bounded
-    10-row gains table."""
+    """Decile assignment must use the two-phase binned_exact_ntile
+    rank, not a single-task ntile() OVER (ORDER BY) on the full table:
+    every Window in the plan is either bin-id-partitioned or over the
+    bounded 10-row gains table."""
     plan = get_plan(SPECS["ml_eval_lift"].fn(spark, sf_dir), "simple")
     assert "ntile" not in plan.lower(), plan
 
@@ -1656,9 +1655,8 @@ def test_shingle_size_curve_runtime_exchange_reuse(spark, sf_dir):
 def test_wave51_exchange_budgets(spark, sf_dir):
     """Round-5 wave-51 keys: audited Exchange budgets."""
     budgets = {
-        # global ordered rank/cumsum (prefix_sums is the scale form,
-        # per the ml_eval_auc precedent) + 1-row fold
-        # r12 binned in-plan scan (see stats_mann_whitney note)
+        # global ordered rank/cumsum via the binned in-plan scan
+        # (binned_prefix_sums, see stats_mann_whitney note) + 1-row fold
         "ml_eval_average_precision": 5,
         # checkpointed cell table + day-partitioned rank windows +
         # k rank sums + 1-row stat
@@ -1725,10 +1723,9 @@ def test_binned_prefix_runtime_exchange_reuse(spark, sf_dir):
     assert (
         spark.conf.get("spark.sql.exchangeReuseEnabled", "true") != "false"
     ), "exchange reuse disabled: the shared-exchange plan would 2x-scan"
-    # r12 (VERDICT r11 next-#4): every remaining sampler prefix_sums/
-    # grouped_rank consumer moved to the in-plan binned scan — each is
-    # pinned here with its audited executed-shuffle-stage cap (the
-    # static plans duplicate the pre-bin subtree into the offsets arm;
+    # every binned_prefix_sums / binned_grouped_rank / binned_global_rank
+    # consumer is pinned here with its audited executed-shuffle-stage
+    # cap (the static plans duplicate the pre-bin subtree into the offsets arm;
     # runtime ReusedExchange must collapse it). stats_spearman_corr's
     # cap reflects the documented rank-1 demand asymmetry (rn_q).
     stage_caps = {
@@ -1841,3 +1838,49 @@ def test_theta_range_bucket_is_exact_integer_division(spark, sf_dir):
     )
     for r in df.collect():
         assert r.bk == r.us // b, (r.us, r.bk, r.us // b)
+
+
+def test_every_public_function_helper_has_a_package_reference():
+    """Dead-helper guard (Spark-free): every public top-level function in
+    ``nfdump2clickhouse_spark/functions/*.py`` must be referenced — as
+    an AST name, attribute or import alias — somewhere in the package
+    outside its own definition. A helper whose last caller moved away
+    is deleted, not kept as a second generation of the same
+    mechanism."""
+    import ast
+    from pathlib import Path
+
+    import nfdump2clickhouse_spark
+
+    pkg = Path(nfdump2clickhouse_spark.__file__).parent
+    trees = {p: ast.parse(p.read_text()) for p in sorted(pkg.rglob("*.py"))}
+    helpers = {
+        node: f"{path.name}::{node.name}"
+        for path, tree in trees.items()
+        if path.parent == pkg / "functions"
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not node.name.startswith("_")
+    }
+    refs: dict[str, set] = {}
+
+    def walk(node, inside):
+        for child in ast.iter_child_nodes(node):
+            owner = inside or (child if child in helpers else None)
+            if isinstance(child, ast.Name):
+                refs.setdefault(child.id, set()).add(owner)
+            elif isinstance(child, ast.Attribute):
+                refs.setdefault(child.attr, set()).add(owner)
+            elif isinstance(child, ast.alias):
+                for name in (child.name.split(".")[-1], child.asname):
+                    refs.setdefault(name, set()).add(owner)
+            walk(child, owner)
+
+    for tree in trees.values():
+        walk(tree, None)
+    dead = sorted(
+        label
+        for node, label in helpers.items()
+        if not refs.get(node.name, set()) - {node}
+    )
+    assert not dead, f"unreferenced public helpers in functions/: {dead}"

@@ -29,9 +29,9 @@ PROBED = [
     "agg_pricing_summary",
     "join_multiway",
     "topk_per_group",
-    "stats_ks_test",          # two-phase prefix sums
-    "curriculum_binning",     # exact_ntile two-phase rank
-    "agg_winsorized_mean",    # grouped_rank two-phase
+    "stats_ks_test",          # binned in-plan prefix sums
+    "curriculum_binning",     # binned_exact_ntile in-plan rank
+    "agg_winsorized_mean",    # (grp, cents) histogram + grp window
     "sample_temperature",
     "events_rfm_segmentation",
     "text_tfidf",
@@ -47,7 +47,7 @@ PROBED = [
     "ann_ivfpq_search",       # Arrow-batched PQ train/encode (reworked r4)
     # round 5
     "flows_stitch_rotation",  # one-exchange lag window + island agg
-    "stats_mann_whitney",     # shared prefix_sums rank scan
+    "stats_mann_whitney",     # shared binned_prefix_sums rank scan
     "join_spatial_grid",      # grid-bucketed candidate join (wave-23)
     "tokenizer_vocab_coverage",  # TakeOrderedAndProject vocab + bcast join
     "dedup_bloom_screen",     # bloom screen under 8x dup mass (wave-24)
@@ -60,7 +60,7 @@ PROBED = [
     "stats_spearman_corr",    # one hash(grp) exchange: ranks + tie peers + corr
     "text_zipf_slope",        # WindowGroupLimit top-100 per lang
     "sample_ppswor",          # zero-exchange TakeOrderedAndProject top-200
-    "ml_eval_lift",           # exact_ntile two-phase decile rank
+    "ml_eval_lift",           # binned_exact_ntile decile rank
     "privacy_t_closeness",    # integer TVD; (QI,s) rollup + siblings
     "events_interarrival_stats",  # lag window + rollup on one exchange
     "graph_adamic_adar",      # distinct-edge agg + bounded GEMM batch (r6)
@@ -89,7 +89,7 @@ PROBED = [
     "graph_pagerank",             # iterative PR rounds on the event graph
     "graph_label_propagation",    # iterative LP rounds
     "dedup_semantic_cluster",     # Lloyd rounds + assignment
-    "agg_group_quantiles_exact",  # grouped_rank exact group quantiles
+    "agg_group_quantiles_exact",  # (grp, cents) histogram group quantiles
     "events_survival_km",         # life-table fold
     "join_asof",                  # time-bucketed as-of join
     "ts_subsequence_search",      # z-normalized sliding distance
@@ -141,7 +141,7 @@ PROBED = [
     "privacy_t_closeness",        # integer TVD vs global distro
     "privacy_cell_suppression",   # small-cell primary+complementary
     "privacy_pseudonymize",       # keyed-hash token projection
-    "ml_eval_auc",                # shared prefix_sums rank scan (r3 rework)
+    "ml_eval_auc",                # shared binned_prefix_sums rank scan
     "ml_eval_ndcg",               # per-query WGL top-k + log2 fold
     "ml_eval_calibration",        # score-bucket rollup
     "ml_feature_woe_binning",     # bin rollup + WoE fold
