@@ -209,10 +209,10 @@ def binned_grouped_rank(
     without funneling a whole group through one task (a HANDFUL of huge
     groups would each be one task under a plain group window).
     ``lo``/``hi`` bound the LEADING ORDER column (groups share the
-    bins). The offsets arm
-    here is a window PARTITIONED BY the group columns over one row per
-    (bin, group) — bounded by nbins x |groups| and, being partitioned,
-    needs no unpartitioned-window allowlisting."""
+    bins). The offsets arm here is a window PARTITIONED BY the group
+    columns over one row per (bin, group) — bounded by nbins x |groups|
+    and, being partitioned, needs no unpartitioned-window
+    allowlisting."""
     nbins = nbins or _default_nbins(df)
     p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition(
         "_pid", *group_cols

@@ -1027,10 +1027,10 @@ def test_wave30_exchange_budgets(spark, sf_dir):
     """Round-5 wave-30 keys: audited Exchange budgets."""
     budgets = {
         # binned_grouped_rank x2 (literal-bound bin ids, (bin,grp)
-        # windows) + (grp,value) avg-rank exchanges + corr agg + ordering — the
-        # 3-value group key makes a plain partitionBy(grp) window a
-        # one-task-per-group sort (8x probe measured 7.2; this shape
-        # probes 1.6)
+        # windows) + (grp,value) avg-rank exchanges + corr agg +
+        # ordering — the 3-value group key makes a plain
+        # partitionBy(grp) window a one-task-per-group sort (8x probe
+        # measured 7.2; this shape probes 1.6)
         # r12 binned grouped ranks (x2): static copies of each rank's
         # subtree in its offsets arm; runtime reuse collapses rank-2's
         # (rank-1's offsets arm recomputes — demand asymmetry on rn_q,
@@ -1725,8 +1725,8 @@ def test_binned_prefix_runtime_exchange_reuse(spark, sf_dir):
     ), "exchange reuse disabled: the shared-exchange plan would 2x-scan"
     # every binned_prefix_sums / binned_grouped_rank / binned_global_rank
     # consumer is pinned here with its audited executed-shuffle-stage
-    # cap (the static plans duplicate the pre-bin subtree into the offsets arm;
-    # runtime ReusedExchange must collapse it). stats_spearman_corr's
+    # cap (the static plans duplicate the pre-bin subtree into the
+    # offsets arm; runtime ReusedExchange must collapse it). stats_spearman_corr's
     # cap reflects the documented rank-1 demand asymmetry (rn_q).
     stage_caps = {
         "stats_ks_test": 4,
