@@ -133,12 +133,12 @@ def binned_prefix_sums(
     are safe. Adds one ``prefix + col`` bigint column per sum col, and,
     for every col in ``totals``, a ``prefix + "tot_" + col`` bigint
     grand-total column carried on every row (NULL-free: empty bins
-    contribute 0, an empty input yields an empty frame). Plan shape: one hash exchange on the bin
-    id shared by the main window and the offsets arm (ReusedExchange
-    at runtime), a bounded nbins-row unpartitioned window on the
-    offsets arm (one row per bin — bins scale with the cluster, never
-    the data; callers must be allowlisted in
-    test_no_unpartitioned_windows_full_registry), and one broadcast
+    contribute 0, an empty input yields an empty frame). Plan shape:
+    one hash exchange on the bin id shared by the main window and the
+    offsets arm (ReusedExchange at runtime), a bounded nbins-row
+    unpartitioned window on the offsets arm (one row per bin — bins
+    scale with the cluster, never the data; callers must be allowlisted
+    in test_no_unpartitioned_windows_full_registry), and one broadcast
     join."""
     nbins = nbins or _default_nbins(df)
     p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition("_pid")
