@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
+    DateType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -132,6 +133,19 @@ FLOWS = _st(
     ("ibyt", LongType()),
     ("ra", StringType()),
     ("flowsrc", StringType()),
+)
+
+# The at-rest table as FlowService's sink writes it, in the order a
+# schema-inferring read returns it: the FLOWS data columns, the numeric
+# address columns, then the hive partition columns dt= and flowsrc=.
+FLOWS_TABLE = StructType(
+    [f for f in FLOWS.fields if f.name != "flowsrc"]
+    + _st(
+        ("sa_num", LongType()),
+        ("da_num", LongType()),
+        ("dt", DateType()),
+        ("flowsrc", StringType()),
+    ).fields
 )
 
 # Raw nfdump `-o csv` header: the full ~48-field record the reference

@@ -39,8 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from .functions.ip import ipv4_to_num
-from .schemas import FLOWS, NFDUMP_CSV_RAW
-from .sources.flows import project_flows
+from .schemas import FLOWS, FLOWS_TABLE, NFDUMP_CSV_RAW
+from .sources.flows import decode_capture, project_flows, write_staged_flows
 from .sources.sinks import (
     compact_partitions,
     drop_expired_partitions,
@@ -248,18 +248,16 @@ class FlowService:
 
         One rotation file per call keeps the unit of retry the capture
         file, exactly like nfcapd's own rotation; the decode itself
-        runs on executors via binaryFile + mapInPandas
-        (``sources.flows.read_v9_directory``)."""
-        from .sources.flows import read_v9_directory
-
-        return self._decode_native_files(src, read_v9_directory, "v9")
+        runs in the driver process (``sources.flows.decode_capture``)
+        and launches no Spark job."""
+        return self._decode_native_files(src, "v9")
 
     def decode_nffile_files(self, src: SourceConfig) -> list[str]:
         """Native decode of new nfdump ON-DISK files (nffile v2 — what
         real nfcapd writes) into staged FLOWS parquet: the same ledger,
         retry, and atomic-rename contract as ``decode_v9_files``, with
-        ``sources.flows.read_nffile_directory`` doing the decode
-        (VERDICT r4 missing-#2).
+        ``sources.flows.decode_capture`` doing the decode in the driver
+        process (VERDICT r4 missing-#2).
 
         Codec coverage: none/bz2/LZO1X always — LZO (nfdump's default
         ``-z`` codec in many deployments) decodes through the in-house
@@ -270,11 +268,13 @@ class FlowService:
         plus LZ4/zstd when a library is importable; a genuinely
         unopenable codec raises a ValueError naming the decode_cmd
         escape hatch."""
-        from .sources.flows import read_nffile_directory
+        return self._decode_native_files(src, "nffile")
 
-        return self._decode_native_files(src, read_nffile_directory, "nffile")
-
-    def _decode_native_files(self, src: SourceConfig, read_fn, label: str) -> list[str]:
+    def _decode_native_files(self, src: SourceConfig, fmt: str) -> list[str]:
+        """The stage is serial, per file and driver-local (it lists and
+        renames in the watch and staging dirs), so each capture decodes
+        in this process: a one-task Spark job around it would add a
+        Python worker's start-up cost and no parallelism."""
         staging = self._staging_dir(src)
         ledger = os.path.join(staging, "_decoded")
         os.makedirs(ledger, exist_ok=True)
@@ -284,36 +284,28 @@ class FlowService:
             marker = os.path.join(ledger, f"{name}.done")
             if not os.path.isfile(path) or os.path.exists(marker):
                 continue
-            tmp_out = os.path.join(staging, f"_tmp_{name}")
+            # `_`-prefixed names are hidden from the file stream source
+            tmp = os.path.join(staging, f"_tmp_{name}")
             try:
-                df = read_fn(
-                    self.spark, path, flowsrc=src.flowsrc, exporter=src.exporter
-                )
-                df.write.mode("overwrite").parquet(tmp_out)
-                # flatten the part files into the staging dir (the file
-                # stream source lists plain files, not write dirs) —
+                with open(path, "rb") as fh:
+                    flows = decode_capture(fh.read(), fmt, exporter=src.exporter)
+                shutil.rmtree(tmp, ignore_errors=True)  # a leftover write dir
+                write_staged_flows(flows, src.flowsrc, tmp)
                 # rename is atomic on one filesystem, so the stream never
                 # sees a half-written rotation
-                n_part = 0
-                for part in sorted(os.listdir(tmp_out)):
-                    if part.endswith(".parquet"):
-                        os.rename(
-                            os.path.join(tmp_out, part),
-                            os.path.join(staging, f"{name}.{n_part:03d}.parquet"),
-                        )
-                        n_part += 1
-                shutil.rmtree(tmp_out, ignore_errors=True)
+                os.replace(tmp, os.path.join(staging, f"{name}.000.parquet"))
             except Exception as ex:  # corrupt capture: log, retry next run
-                shutil.rmtree(tmp_out, ignore_errors=True)
+                if os.path.isfile(tmp):
+                    os.remove(tmp)
                 self._log.warning(
                     "source=%s %s decode failed file=%s err=%s",
-                    src.name, label, name, str(ex)[-500:],
+                    src.name, fmt, name, str(ex)[-500:],
                 )
                 continue
             with open(marker, "w") as fh:
                 fh.write("ok")
             done.append(name)
-            self._log.info("source=%s %s-decoded file=%s", src.name, label, name)
+            self._log.info("source=%s %s-decoded file=%s", src.name, fmt, name)
         return done
 
     # --- streams -----------------------------------------------------------
@@ -449,8 +441,11 @@ class FlowService:
             self._log.info("backfill committed")
 
     def table(self) -> DataFrame:
-        """The queryable at-rest table (the reference's `nfsen.flows`)."""
-        return self.spark.read.parquet(self.config.table_path)
+        """The queryable at-rest table (the reference's `nfsen.flows`),
+        read with the pinned ``FLOWS_TABLE`` schema: inferring it would
+        cost a footer-reading Spark job on every ``table``, ``sql`` and
+        ``query_filter`` call."""
+        return self.spark.read.schema(FLOWS_TABLE).parquet(self.config.table_path)
 
     def sql(self, query: str) -> DataFrame:
         """Run ANSI SQL against the at-rest table as ``flows`` — the

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.ip import ipv4_to_num
 from ..schemas import NFDUMP_CSV_RAW
+from .netflow_v9 import FLOW_COLUMNS, decode_flow_stream
+from .nffile import decode_nffile, is_nffile
 
 #: columns kept from the raw nfdump record (the reference's projection [P])
 KEEP = ["ts", "te", "td", "sa", "da", "sp", "dp", "pr", "flg", "ipkt", "ibyt", "ra"]
@@ -56,42 +58,69 @@ def project_flows(raw: DataFrame, flowsrc: str) -> DataFrame:
     )
 
 
-def read_v9_directory(
-    spark: SparkSession, path: str, flowsrc: str, exporter: str | None = None
-) -> DataFrame:
-    """Native template-decode of a directory of v9/IPFIX capture files
-    into the SAME 13-col + layout shape as ``project_flows`` — the
-    nfdump-subprocess-free ingest seam (SURVEY §1.2; VERDICT r3 next-#1).
+def decode_capture(
+    content: bytes, fmt: str, exporter: str | None = None
+) -> list[tuple]:
+    """One capture file → FLOW_COLUMNS tuples (ts/te in epoch ms), by the
+    source's format: ``"nffile"`` (nfdump's on-disk files, layout v1 or
+    v2) or ``"v9"`` (raw v9/IPFIX export packets).
 
-    One capture file decodes whole on one executor (template state never
-    crosses rotation files — exporters re-announce per rotation), via
-    ``binaryFile`` + Arrow-batched ``mapInPandas``; the decoder emits
-    epoch-ms integers which are cast to TimestampType here. The result
-    feeds ``sinks.write_flows_partitioned`` unchanged."""
-    from .netflow_v9 import FLOW_COLUMNS
+    The per-capture unit shared by the service's decode stage and the
+    bulk directory readers below. Structural misconfiguration raises the
+    decoder's actionable ValueError instead of yielding zero rows
+    silently: ``decode_nffile`` names format=v9 for export packets, and
+    the v9 arm refuses nffile magic here, since an export-packet walk
+    over an on-disk file would decode nothing."""
+    if fmt == "nffile":
+        return decode_nffile(content, exporter=exporter)
+    if is_nffile(content):
+        raise ValueError(
+            "nfdump nffile magic detected: this directory holds nfcapd "
+            "on-disk files, not raw v9/IPFIX export packets — use "
+            "format=nffile (native) or decode_cmd"
+        )
+    return decode_flow_stream(content, exporter=exporter)
+
+
+def write_staged_flows(flows: list[tuple], flowsrc: str, path: str) -> None:
+    """Write decoded FLOW_COLUMNS tuples as ONE parquet file with exactly
+    the FLOWS columns (``_arrow_schema``): epoch-ms ts/te become µs
+    timestamps and every row carries ``flowsrc``. Zero flows write a
+    0-row file, so an empty capture still stages (and ledgers) like any
+    other."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # UTC-adjusted timestamps, as Spark writes them, so even a
+    # schema-inferring read of the file sees exactly FLOWS
+    schema = pa.schema(
+        f.with_type(pa.timestamp("us", tz="UTC"))
+        if pa.types.is_timestamp(f.type) else f
+        for f in _arrow_schema()
+    )
+    cols = list(zip(*flows)) or [()] * len(FLOW_COLUMNS)
+    arrays = [
+        pa.array([ms * 1000 for ms in values]
+                 if pa.types.is_timestamp(f.type) else values, f.type)
+        for f, values in zip(schema, cols)
+    ]
+    arrays.append(pa.array([flowsrc] * len(flows), pa.string()))
+    pq.write_table(pa.Table.from_arrays(arrays, schema=schema), path)
+
+
+def _read_capture_directory(
+    spark: SparkSession, path: str, fmt: str, flowsrc: str, exporter: str | None
+) -> DataFrame:
+    """Every capture under ``path`` decoded whole by ``decode_capture`` on
+    one executor task (``binaryFile`` + Arrow-batched ``mapInPandas``),
+    then cast to the FLOWS contract plus the layout columns."""
 
     def decode(batches):
         import pandas as pd
 
-        from nfdump2clickhouse_spark.sources.netflow_v9 import (
-            decode_flow_stream,
-        )
-        from nfdump2clickhouse_spark.sources.nffile import is_nffile
-
         for pdf in batches:
             for content in pdf["content"]:
-                content = bytes(content)
-                if is_nffile(content):  # wrong-source guard: nfcapd's
-                    # on-disk record format is NOT an export-packet
-                    # stream — the silent-zero-rows failure mode VERDICT
-                    # r4 missing-#2 names
-                    raise ValueError(
-                        "nfdump nffile magic detected: this directory "
-                        "holds nfcapd on-disk files, not raw v9/IPFIX "
-                        "export packets — use format=nffile (native) "
-                        "or decode_cmd"
-                    )
-                flows = decode_flow_stream(content, exporter=exporter)
+                flows = decode_capture(bytes(content), fmt, exporter=exporter)
                 if flows:
                     yield pd.DataFrame(flows, columns=FLOW_COLUMNS)
 
@@ -101,12 +130,6 @@ def read_v9_directory(
         "ts long, te long, td double, sa string, da string, sp int, dp int,"
         " pr string, flg string, ipkt long, ibyt long, ra string",
     )
-    return _finalize_decoded(decoded, flowsrc)
-
-
-def _finalize_decoded(decoded: DataFrame, flowsrc: str) -> DataFrame:
-    """Epoch-ms decoder output → FLOWS contract + layout columns (shared
-    tail of both native binary sources)."""
     return decoded.select(
         F.timestamp_millis("ts").alias("ts"),
         F.timestamp_millis("te").alias("te"),
@@ -121,6 +144,20 @@ def _finalize_decoded(decoded: DataFrame, flowsrc: str) -> DataFrame:
     )
 
 
+def read_v9_directory(
+    spark: SparkSession, path: str, flowsrc: str, exporter: str | None = None
+) -> DataFrame:
+    """Native template-decode of a directory of v9/IPFIX capture files
+    into the SAME 13-col + layout shape as ``project_flows`` — the
+    nfdump-subprocess-free ingest seam (SURVEY §1.2; VERDICT r3 next-#1).
+
+    One capture file decodes whole on one executor (template state never
+    crosses rotation files — exporters re-announce per rotation); the
+    decoder emits epoch-ms integers which are cast to TimestampType here.
+    The result feeds ``sinks.write_flows_partitioned`` unchanged."""
+    return _read_capture_directory(spark, path, "v9", flowsrc, exporter)
+
+
 def read_nffile_directory(
     spark: SparkSession, path: str, flowsrc: str, exporter: str | None = None
 ) -> DataFrame:
@@ -131,32 +168,10 @@ def read_nffile_directory(
     spec in ``sources/nffile.py``).
 
     Identical scale shape to ``read_v9_directory``: one nfcapd file
-    decodes whole on one executor via ``binaryFile`` + Arrow-batched
-    ``mapInPandas`` (the file is the natural unit — blocks inside it
-    share the file header's codec), and Spark owns scheduling and
-    retries. Structural misconfiguration (raw export packets, missing
-    codec) raises the decoder's actionable ValueError instead of
-    yielding zero rows silently."""
-    from .netflow_v9 import FLOW_COLUMNS
-
-    def decode(batches):
-        import pandas as pd
-
-        from nfdump2clickhouse_spark.sources.nffile import decode_nffile
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                flows = decode_nffile(bytes(content), exporter=exporter)
-                if flows:
-                    yield pd.DataFrame(flows, columns=FLOW_COLUMNS)
-
-    raw = spark.read.format("binaryFile").load(path)
-    decoded = raw.select("content").mapInPandas(
-        decode,
-        "ts long, te long, td double, sa string, da string, sp int, dp int,"
-        " pr string, flg string, ipkt long, ibyt long, ra string",
-    )
-    return _finalize_decoded(decoded, flowsrc)
+    decodes whole on one executor (the file is the natural unit — blocks
+    inside it share the file header's codec), and Spark owns scheduling
+    and retries."""
+    return _read_capture_directory(spark, path, "nffile", flowsrc, exporter)
 
 
 def read_flow_csv(spark: SparkSession, path: str, flowsrc: str) -> DataFrame:

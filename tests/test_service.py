@@ -8,6 +8,7 @@ import os
 from datetime import date, datetime, timezone
 
 import pyspark.sql.functions as F
+import pytest
 
 from nfdump2clickhouse_spark.service import FlowService, parse_config
 from nfdump2clickhouse_spark.sources.flows import write_flow_files
@@ -423,3 +424,279 @@ def test_service_sql_surface(spark, tmp_path):
     q = svc.sql("SELECT sa, ibyt FROM flows WHERE dt = DATE'2024-03-01'")
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "dt" in plan
+
+
+# --- native decode stage: in-process decode, pinned table schema ------------
+
+
+def _native_service(spark, base, watch, fmt, exporter=None):
+    from nfdump2clickhouse_spark.service import ServiceConfig, SourceConfig
+
+    return FlowService(spark, ServiceConfig(
+        table_path=os.path.join(base, "table"),
+        checkpoint_root=os.path.join(base, "ckpt"),
+        sources=(SourceConfig(name="edge", watch_dir=watch, flowsrc="edge",
+                              fmt=fmt, exporter=exporter),),
+        log_dir=os.path.join(base, "log"),
+    ))
+
+
+def _jobs_in(spark, fn):
+    """(fn(), Spark jobs fn ran) — counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"t-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _write_captures(fmt, codec, watch, exporter, n_files=2, records=16):
+    from nfdump2clickhouse_spark.sources import nffile as nf
+    from nfdump2clickhouse_spark.sources.netflow_v9 import write_netflow_v9
+
+    if fmt == "v9":
+        return write_netflow_v9(watch, n_files=n_files,
+                                records_per_file=records, exporter=exporter)
+    codecs = {"none": nf.COMPRESSION_NONE, "bz2": nf.COMPRESSION_BZ2,
+              "lzo": nf.COMPRESSION_LZO}
+    return nf.write_nffile(watch, n_files=n_files, records_per_file=records,
+                           compression=codecs[codec], exporter=exporter)
+
+
+@pytest.mark.parametrize("exporter", [None, "203.0.113.9"],
+                         ids=["router-element", "exporter-override"])
+@pytest.mark.parametrize("fmt,codec", [("nffile", "none"), ("nffile", "bz2"),
+                                       ("nffile", "lzo"), ("v9", None)])
+def test_decode_stage_matches_executor_path(spark, tmp_path, fmt, codec, exporter):
+    """The decode stage runs no Spark job per capture, and each staged
+    file holds exactly the FLOWS columns and the rows the executor-side
+    bulk reader decodes from the same capture (IPv4 and IPv6 records)."""
+    from nfdump2clickhouse_spark.schemas import FLOWS
+    from nfdump2clickhouse_spark.sources.flows import (
+        read_nffile_directory,
+        read_v9_directory,
+    )
+
+    watch = str(tmp_path / "watch")
+    expected = _write_captures(fmt, codec, watch, exporter)
+    assert any(":" in t[3] for t in expected) and any(":" not in t[3] for t in expected)
+    svc = _native_service(spark, str(tmp_path), watch, fmt, exporter)
+    src = svc.config.sources[0]
+    decode = svc.decode_v9_files if fmt == "v9" else svc.decode_nffile_files
+    done, jobs = _jobs_in(spark, lambda: decode(src))
+    names = sorted(os.listdir(watch))
+    assert done == names and jobs == 0
+    read_dir = read_v9_directory if fmt == "v9" else read_nffile_directory
+    staging = svc._staging_dir(src)
+    for name in names:
+        staged = os.path.join(staging, f"{name}.000.parquet")
+        assert spark.read.parquet(staged).schema == FLOWS
+        got = spark.read.schema(FLOWS).parquet(staged)
+        want = read_dir(spark, os.path.join(watch, name), flowsrc="edge",
+                        exporter=exporter).select(*FLOWS.fieldNames())
+        assert _rows(got) == _rows(want)
+    assert spark.read.schema(FLOWS).parquet(staging).count() == len(expected)
+
+
+def test_decode_stage_stages_an_empty_capture(spark, tmp_path):
+    """A capture that decodes to zero flows is ledgered and stages a 0-row
+    FLOWS file, like any other capture."""
+    import struct
+
+    from nfdump2clickhouse_spark.schemas import FLOWS
+    from nfdump2clickhouse_spark.sources import nffile as nf
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    (watch / "nfcapd.empty").write_bytes(struct.pack(
+        nf._FILE_HEADER_V2, nf.MAGIC, nf.LAYOUT_V2, 0x010700, 0, 0, 0, 0, 0,
+        0, 1 << 20, 0))
+    svc = _native_service(spark, str(tmp_path), str(watch), "nffile")
+    src = svc.config.sources[0]
+    assert svc.decode_nffile_files(src) == ["nfcapd.empty"]
+    staging = svc._staging_dir(src)
+    assert os.path.exists(os.path.join(staging, "_decoded", "nfcapd.empty.done"))
+    staged = spark.read.parquet(os.path.join(staging, "nfcapd.empty.000.parquet"))
+    assert staged.schema == FLOWS and staged.count() == 0
+
+
+def test_table_schema_is_pinned(spark, tmp_path):
+    """svc.table() reads with the pinned FLOWS_TABLE schema, which equals
+    what inference gives on a service-written table; building table(),
+    sql() and query_filter() runs no Spark job."""
+    from nfdump2clickhouse_spark.schemas import FLOWS_TABLE
+
+    watch = str(tmp_path / "watch")
+    _write_captures("nffile", "bz2", watch, None, n_files=1, records=24)
+    svc = _native_service(spark, str(tmp_path), watch, "nffile")
+    svc.run_once()
+    table, jobs = _jobs_in(spark, svc.table)
+    assert jobs == 0
+    assert table.schema == FLOWS_TABLE == spark.read.parquet(svc.config.table_path).schema
+    _, jobs = _jobs_in(spark, lambda: svc.sql("SELECT sa, SUM(ibyt) FROM flows GROUP BY sa"))
+    assert jobs == 0
+    _, jobs = _jobs_in(spark, lambda: svc.query_filter("src net 10.0.0.0/8 and dst port 443"))
+    assert jobs == 0
+    assert table.count() == 24
+
+
+def _clean_table(spark, base, watch, fmt):
+    svc = _native_service(spark, base, watch, fmt)
+    svc.run_once()
+    return _rows(svc.table())
+
+
+def _staged_files(svc):
+    return sorted(n for n in os.listdir(svc._staging_dir(svc.config.sources[0]))
+                  if n != "_decoded")
+
+
+def _log_text(svc):
+    for h in svc._log.handlers:
+        h.flush()
+    with open(os.path.join(svc.config.log_dir, "flows.log")) as fh:
+        return fh.read()
+
+
+@pytest.mark.parametrize("fault", ["v9-under-nffile", "encrypted-header"])
+def test_structural_decode_error_logs_and_retries(spark, tmp_path, fault):
+    """A structural decode error logs the decoder's own message, leaves no
+    marker and no staged file, and the capture decodes on a later run once
+    the source (or the capture) is fixed; the table then equals a clean
+    run's."""
+    import shutil
+    import struct
+
+    from nfdump2clickhouse_spark.sources import nffile as nf
+
+    watch = str(tmp_path / "watch")
+    good_fmt = "v9" if fault == "v9-under-nffile" else "nffile"
+    _write_captures(good_fmt, "bz2", watch, None, n_files=1, records=16)
+    (name,) = os.listdir(watch)
+    cap = os.path.join(watch, name)
+    original = open(cap, "rb").read()
+    clean_watch = str(tmp_path / "clean_watch")
+    shutil.copytree(watch, clean_watch)
+    clean = _clean_table(spark, str(tmp_path / "clean"), clean_watch, good_fmt)
+    if fault == "v9-under-nffile":
+        message = ("this is a raw NetFlow export-packet capture, not an nfdump "
+                   "nffile — use format=v9")
+    else:
+        message = "nffile: encrypted files are not supported"
+        head = list(struct.unpack_from(nf._FILE_HEADER_V2, original, 0))
+        head[5] = 1  # the encryption field
+        with open(cap, "wb") as fh:
+            fh.write(struct.pack(nf._FILE_HEADER_V2, *head)
+                     + original[struct.calcsize(nf._FILE_HEADER_V2):])
+
+    base = str(tmp_path / "svc")
+    svc = _native_service(spark, base, watch, "nffile")
+    for attempt in (1, 2):  # retried on every run until fixed
+        svc.run_once()
+        assert _log_text(svc).count(message) == attempt
+        assert _staged_files(svc) == []
+        assert os.listdir(os.path.join(svc._staging_dir(svc.config.sources[0]),
+                                       "_decoded")) == []
+        assert not os.path.exists(svc.config.table_path)
+
+    if fault == "v9-under-nffile":  # the operator fixes the source's format
+        svc = _native_service(spark, base, watch, "v9")
+    else:  # an intact copy of the capture replaces the damaged one
+        with open(cap, "wb") as fh:
+            fh.write(original)
+    svc.run_once()
+    assert _staged_files(svc) == [f"{name}.000.parquet"]
+    assert _rows(svc.table()) == clean
+
+
+@pytest.mark.parametrize("leftover", ["file", "dir"])
+def test_leftover_tmp_is_hidden_and_overwritten(spark, tmp_path, leftover):
+    """A `_tmp_<name>` left in staging by an interrupted decode (a file, or
+    a write directory) is ignored by the stream and overwritten when that
+    capture decodes."""
+    import shutil
+
+    from nfdump2clickhouse_spark.sources.flows import write_staged_flows
+
+    watch = str(tmp_path / "watch")
+    _write_captures("nffile", "none", watch, None, n_files=2, records=16)
+    clean = _clean_table(spark, str(tmp_path / "clean"), watch, "nffile")
+    late = sorted(os.listdir(watch))[-1]
+    parked = str(tmp_path / "parked")
+    os.makedirs(parked)
+    shutil.move(os.path.join(watch, late), parked)
+
+    svc = _native_service(spark, str(tmp_path / "svc"), watch, "nffile")
+    staging = svc._staging_dir(svc.config.sources[0])
+    os.makedirs(staging)
+    tmp = os.path.join(staging, f"_tmp_{late}")
+    junk = [(0, 1, 1.0, "10.9.9.9", "10.9.9.8", 1, 2, "TCP", "......", 1, 1, "x")] * 5
+    if leftover == "dir":
+        os.makedirs(tmp)
+        write_staged_flows(junk, "edge", os.path.join(tmp, "part-00000.parquet"))
+    else:
+        write_staged_flows(junk, "edge", tmp)
+    svc.run_once()
+    assert svc.table().count() == len(clean) // 2  # the junk rows stayed hidden
+
+    shutil.move(os.path.join(parked, late), watch)
+    svc.run_once()
+    assert not os.path.exists(tmp)
+    assert _rows(svc.table()) == clean
+
+
+def test_deleted_decode_marker_adds_no_rows(spark, tmp_path):
+    """Deleting a consumed capture's `.done` marker re-decodes it onto the
+    same staged name, which the stream has already seen: no rows added."""
+    watch = str(tmp_path / "watch")
+    _write_captures("nffile", "bz2", watch, None, n_files=1, records=100)
+    clean = _clean_table(spark, str(tmp_path / "clean"), watch, "nffile")
+    svc = _native_service(spark, str(tmp_path / "svc"), watch, "nffile")
+    svc.run_once()
+    assert svc.table().count() == 100
+    (name,) = os.listdir(watch)
+    marker = os.path.join(svc._staging_dir(svc.config.sources[0]), "_decoded",
+                          f"{name}.done")
+    os.remove(marker)
+    svc.run_once()
+    assert os.path.exists(marker)
+    assert svc.table().count() == 100
+    assert _rows(svc.table()) == clean
+
+
+def test_service_reads_never_infer_parquet_schema():
+    """Spark-free lint: every parquet read chain in service.py carries
+    `.schema(`, so schema inference (one Spark job per read) cannot creep
+    back onto the query path."""
+    import ast
+
+    import nfdump2clickhouse_spark.service as service
+
+    tree = ast.parse(open(service.__file__).read())
+    reads = 0
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"):
+            continue
+        chain, cur = [], node.func.value
+        while isinstance(cur, (ast.Call, ast.Attribute)):
+            if isinstance(cur, ast.Attribute):
+                chain.append(cur.attr)
+                cur = cur.value
+            else:
+                cur = cur.func
+        if "write" in chain or "writeStream" in chain:
+            continue
+        reads += 1
+        assert "schema" in chain, f"service.py:{node.lineno}: parquet read without .schema("
+    assert reads >= 2  # table() and the staged-parquet stream
