@@ -35,7 +35,7 @@ def project_flows(raw: DataFrame, flowsrc: str) -> DataFrame:
     `sa_num`/`da_num` LongType addresses and a `dt` date partition column —
     the two layout choices that buy data skipping at 100 TB (SURVEY §4.3).
     """
-    return raw.select(
+    flows = raw.select(
         F.to_timestamp("ts").alias("ts"),
         F.to_timestamp("te").alias("te"),
         F.col("td").cast("double").alias("td"),
@@ -49,7 +49,15 @@ def project_flows(raw: DataFrame, flowsrc: str) -> DataFrame:
         F.col("ibyt").cast("bigint").alias("ibyt"),
         F.col("ra"),
         F.lit(flowsrc).alias("flowsrc"),
-    ).withColumns(
+    )
+    return with_layout_columns(flows)
+
+
+def with_layout_columns(df: DataFrame) -> DataFrame:
+    """The derived columns that buy data skipping at 100 TB: numeric
+    `sa_num`/`da_num` addresses for CIDR range pushdown (SURVEY §4.3.2;
+    NULL for IPv6, the index is v4-only) and the `dt` partition key."""
+    return df.withColumns(
         {
             "sa_num": ipv4_to_num(F.col("sa")),
             "da_num": ipv4_to_num(F.col("da")),
@@ -65,8 +73,9 @@ def decode_capture(
     source's format: ``"nffile"`` (nfdump's on-disk files, layout v1 or
     v2) or ``"v9"`` (raw v9/IPFIX export packets).
 
-    The per-capture unit shared by the service's decode stage and the
-    bulk directory readers below. Structural misconfiguration raises the
+    The one place that picks a decoder by format: the service's decode
+    stage, the bulk directory readers below and the streaming flow
+    source all decode through it. Structural misconfiguration raises the
     decoder's actionable ValueError instead of yielding zero rows
     silently: ``decode_nffile`` names format=v9 for export packets, and
     the v9 arm refuses nffile magic here, since an export-packet walk
@@ -130,18 +139,13 @@ def _read_capture_directory(
         "ts long, te long, td double, sa string, da string, sp int, dp int,"
         " pr string, flg string, ipkt long, ibyt long, ra string",
     )
-    return decoded.select(
+    flows = decoded.select(
         F.timestamp_millis("ts").alias("ts"),
         F.timestamp_millis("te").alias("te"),
         "td", "sa", "da", "sp", "dp", "pr", "flg", "ipkt", "ibyt", "ra",
         F.lit(flowsrc).alias("flowsrc"),
-    ).withColumns(
-        {
-            "sa_num": ipv4_to_num(F.col("sa")),  # NULL for IPv6 (v4-only index)
-            "da_num": ipv4_to_num(F.col("da")),
-            "dt": F.to_date("ts"),
-        }
     )
+    return with_layout_columns(flows)
 
 
 def read_v9_directory(

@@ -92,19 +92,19 @@ def write_bucketed(
     )
 
 
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_glob: str = "dt=*/flowsrc=*",
-) -> list[str]:
+#: compaction's target output file size, and the leaf partitions it visits
+COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
+COMPACT_PARTITION_GLOB = "dt=*/flowsrc=*"
+
+
+def compact_partitions(spark: SparkSession, path: str) -> list[str]:
     """Small-files compaction — the engine's analog of MergeTree's
     background part merges [P]. Streaming ingest with one micro-batch per
     5-min rotation necessarily writes one small file per batch per
     partition; query-side scan cost then grows with file COUNT, not data
     size. Compaction rewrites each leaf partition into
-    ceil(bytes/target) files, preserving the (ts, sa_num) sort that buys
-    row-group skipping.
+    ceil(bytes/COMPACT_TARGET_FILE_BYTES) files, preserving the
+    (ts, sa_num) sort that buys row-group skipping.
 
     Runs per-leaf-partition (never a global rewrite), so at 100 TB it is
     driven incrementally: only partitions whose file count exceeds a
@@ -114,12 +114,12 @@ def compact_partitions(
     import math
 
     compacted = []
-    for leaf in sorted(_glob.glob(os.path.join(path, partition_glob))):
+    for leaf in sorted(_glob.glob(os.path.join(path, COMPACT_PARTITION_GLOB))):
         files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
         if len(files) <= 1:
             continue
         total = sum(os.path.getsize(os.path.join(leaf, f)) for f in files)
-        n_out = max(1, math.ceil(total / target_file_bytes))
+        n_out = max(1, math.ceil(total / COMPACT_TARGET_FILE_BYTES))
         if n_out >= len(files):
             continue
         df = spark.read.parquet(leaf)
@@ -141,6 +141,28 @@ def compact_partitions(
     return compacted
 
 
+def batch_ledger(write, ledger_path: str | None):
+    """``write(batch_df, batch_id)`` as a foreachBatch function keyed by
+    batch id: skip the batch if ``batch_<id>.done`` exists in
+    ``ledger_path``, else write it and then the marker (no ledger path:
+    ``write`` itself). A re-offered batch is a no-op only once its marker
+    exists: a crash between the write and the marker writes it again on
+    restart (ROADMAP direction 3)."""
+    if ledger_path is None:
+        return write
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        marker = os.path.join(ledger_path, f"batch_{batch_id}.done")
+        if os.path.exists(marker):
+            return
+        write(batch_df, batch_id)
+        os.makedirs(ledger_path, exist_ok=True)
+        with open(marker, "w") as fh:
+            fh.write("ok")
+
+    return write_batch
+
+
 def jdbc_batch_writer(
     url: str,
     table: str,
@@ -149,48 +171,35 @@ def jdbc_batch_writer(
 ):
     """foreachBatch sink for the ClickHouse-parity path (SURVEY §4.3.5).
 
-    Returns f(batch_df, batch_id) that appends via JDBC. Idempotence: a
-    batch-id ledger is consulted before writing, so a restarted query
-    re-offering batch N is a no-op (reference parity: file-level retry
-    [P]). With a real ClickHouse target, pair with ReplacingMergeTree
-    keyed on (batch_id, row) for exactly-once-effect.
+    Returns f(batch_df, batch_id) that appends via JDBC behind the
+    ``batch_ledger`` (reference parity: file-level retry [P]): a
+    re-offered batch is skipped once its marker is written, but a crash
+    between the append and the marker appends it again on restart
+    (ROADMAP direction 3).
+    With a real ClickHouse target, pair with ReplacingMergeTree keyed
+    on (batch_id, row) for exactly-once-effect.
     """
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if ledger_path is not None:
-            marker = os.path.join(ledger_path, f"batch_{batch_id}.done")
-            if os.path.exists(marker):
-                return
+    def write(batch_df: DataFrame, batch_id: int) -> None:
         # batch_id rides along (same contract as parquet_batch_writer):
         # the provenance column replays/audits need downstream
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "append"
         ).jdbc(url, table, properties=properties)
-        if ledger_path is not None:
-            os.makedirs(ledger_path, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write("ok")
 
-    return write_batch
+    return batch_ledger(write, ledger_path)
 
 
 def parquet_batch_writer(path: str, ledger_path: str | None = None):
-    """Same idempotent-foreachBatch protocol with a parquet target —
-    used where no JDBC endpoint exists (tests, offline dev)."""
+    """Same ``batch_ledger`` protocol, and the same crash window between
+    append and marker, with a parquet target — used where no JDBC
+    endpoint exists (tests, offline dev)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if ledger_path is not None:
-            marker = os.path.join(ledger_path, f"batch_{batch_id}.done")
-            if os.path.exists(marker):
-                return
+    def write(batch_df: DataFrame, batch_id: int) -> None:
         (
             batch_df.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
             .parquet(path)
         )
-        if ledger_path is not None:
-            os.makedirs(ledger_path, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write("ok")
 
-    return write_batch
+    return batch_ledger(write, ledger_path)

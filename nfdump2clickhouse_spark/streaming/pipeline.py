@@ -632,7 +632,7 @@ def run_v9_stream_source(spark: SparkSession) -> DataFrame:
 
     cap_dir, ckpt = _tmp("v9src"), _tmp("v9ckpt")
     write_netflow_v9(cap_dir, n_files=2, records_per_file=10)
-    _register_v9_stream_source(spark)
+    _register_flow_stream_source(spark, "v9_stream", "v9")
     name = _mem_name()
     q = (
         spark.readStream.format("v9_stream")
@@ -678,12 +678,14 @@ def _register_flow_stream_source(
 ) -> None:
     """Register a flow-capture Python DataSource (stream reader with
     last-rotation-name offsets) on this session; idempotent. ``decoder``
-    selects the per-file decode on the EXECUTOR ("v9" export-packet
-    streams / "nffile" nfdump on-disk format) — everything else (the
-    O(1) offset design, per-file partitions, whole-file decode) is
-    format-independent, which is the point: the streaming contract of
-    an nfcapd directory does not depend on what nfcapd wrote into the
-    files."""
+    is the format each file decodes with on the EXECUTOR, through
+    ``sources.flows.decode_capture`` ("v9" export-packet streams /
+    "nffile" nfdump on-disk format), so a directory of the other format
+    fails the query with that decoder's error instead of streaming zero
+    rows. Everything else (the O(1) offset design, per-file partitions,
+    whole-file decode) is format-independent, which is the point: the
+    streaming contract of an nfcapd directory does not depend on what
+    nfcapd wrote into the files."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -717,20 +719,13 @@ def _register_flow_stream_source(
             ]
 
         def read(self, partition):
-            if decoder == "nffile":
-                from nfdump2clickhouse_spark.sources.nffile import (
-                    decode_nffile as dec,
-                )
-            else:
-                from nfdump2clickhouse_spark.sources.netflow_v9 import (
-                    decode_flow_stream as dec,
-                )
+            from nfdump2clickhouse_spark.sources.flows import decode_capture
 
             fpath = partition.value
             with open(fpath, "rb") as fh:
                 content = fh.read()
             cap = os.path.basename(fpath)
-            for t in dec(content):
+            for t in decode_capture(content, decoder):
                 yield (cap, *t)
 
         def commit(self, end):
@@ -752,10 +747,6 @@ def _register_flow_stream_source(
             return FlowStreamReader(self.options)
 
     spark.dataSource.register(FlowStreamSource)
-
-
-def _register_v9_stream_source(spark: SparkSession) -> None:
-    _register_flow_stream_source(spark, "v9_stream", "v9")
 
 
 def run_nffile_stream_source(spark: SparkSession) -> DataFrame:
@@ -818,7 +809,7 @@ def run_v9_restartable(spark: SparkSession, cap_dir: str, ckpt: str) -> int:
     sink at ``ckpt``'s sibling, returning the cumulative row count —
     used by the checkpoint-restart test: each call is a NEW query
     resuming from the committed offset."""
-    _register_v9_stream_source(spark)
+    _register_flow_stream_source(spark, "v9_stream", "v9")
     out = ckpt + "_out"
     q = (
         spark.readStream.format("v9_stream")

@@ -429,14 +429,14 @@ def test_service_sql_surface(spark, tmp_path):
 # --- native decode stage: in-process decode, pinned table schema ------------
 
 
-def _native_service(spark, base, watch, fmt, exporter=None):
+def _native_service(spark, base, watch, fmt, exporter=None, decode_cmd=None):
     from nfdump2clickhouse_spark.service import ServiceConfig, SourceConfig
 
     return FlowService(spark, ServiceConfig(
         table_path=os.path.join(base, "table"),
         checkpoint_root=os.path.join(base, "ckpt"),
         sources=(SourceConfig(name="edge", watch_dir=watch, flowsrc="edge",
-                              fmt=fmt, exporter=exporter),),
+                              fmt=fmt, exporter=exporter, decode_cmd=decode_cmd),),
         log_dir=os.path.join(base, "log"),
     ))
 
@@ -674,6 +674,35 @@ def test_deleted_decode_marker_adds_no_rows(spark, tmp_path):
     assert _rows(svc.table()) == clean
 
 
+def test_failed_decode_cmd_output_stays_hidden(spark, tmp_path):
+    """A decode_cmd that writes part of its output and then exits non-zero
+    leaves no visible `<name>.csv` and adds no rows; once the command is
+    fixed, the retry ingests the whole rotation, as a clean run does."""
+    watch = str(tmp_path / "watch")
+    (path,) = write_flow_files(spark, watch, n_files=1, rows_per_file=80, fmt="csv")
+    name = os.path.basename(path)[: -len(".csv")]
+    os.rename(path, os.path.join(watch, name))
+    fixed = "cp {file} {out}"
+    clean_svc = _native_service(spark, str(tmp_path / "clean"), watch, "csv",
+                                decode_cmd=fixed)
+    clean_svc.run_once()
+    clean = _rows(clean_svc.table())
+    assert len(clean) == 80
+
+    base = str(tmp_path / "svc")
+    broken = 'sh -c "head -n 11 $0 > $1; exit 1" {file} {out}'
+    svc = _native_service(spark, base, watch, "csv", decode_cmd=broken)
+    svc.run_once()
+    assert _staged_files(svc) == []
+    assert not os.path.exists(svc.config.table_path)
+    assert f"file={name} err=decode_cmd exited 1" in _log_text(svc)
+
+    svc = _native_service(spark, base, watch, "csv", decode_cmd=fixed)
+    svc.run_once()
+    assert _staged_files(svc) == [f"{name}.csv"]
+    assert _rows(svc.table()) == clean
+
+
 def test_service_reads_never_infer_parquet_schema():
     """Spark-free lint: every parquet read chain in service.py carries
     `.schema(`, so schema inference (one Spark job per read) cannot creep
@@ -700,3 +729,56 @@ def test_service_reads_never_infer_parquet_schema():
         reads += 1
         assert "schema" in chain, f"service.py:{node.lineno}: parquet read without .schema("
     assert reads >= 2  # table() and the staged-parquet stream
+
+
+def test_ingest_decisions_exist_once():
+    """Spark-free lint over service.py, sources/ and streaming/: the
+    layout-column dict (`"sa_num": ipv4_to_num(...)`) is built once, the
+    two capture decoders are called only from `decode_capture` (outside
+    their own modules), and the `batch_{id}.done` ledger marker path is
+    built once."""
+    import ast
+    import glob
+
+    import nfdump2clickhouse_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    files = [os.path.join(root, "service.py"),
+             *glob.glob(os.path.join(root, "sources", "*.py")),
+             *glob.glob(os.path.join(root, "streaming", "*.py"))]
+    decoders = {"decode_flow_stream", "decode_nffile"}
+    layouts, markers, stray_calls = [], [], []
+    for path in files:
+        tree = ast.parse(open(path).read())
+        where = os.path.relpath(path, root)
+        defined = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+        aliases = {a.asname or a.name: a.name for n in ast.walk(tree)
+                   if isinstance(n, ast.ImportFrom) for a in n.names}
+
+        def visit(node, func):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            if isinstance(node, ast.Dict) and any(
+                    isinstance(k, ast.Constant) and k.value == "sa_num"
+                    and isinstance(v, ast.Call)
+                    and getattr(v.func, "id", None) == "ipv4_to_num"
+                    for k, v in zip(node.keys, node.values)):
+                layouts.append(f"{where}:{node.lineno}")
+            if isinstance(node, ast.JoinedStr):
+                text = [v.value for v in node.values if isinstance(v, ast.Constant)]
+                if text and text[0].endswith("batch_") and text[-1] == ".done":
+                    markers.append(f"{where}:{node.lineno}")
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = (aliases.get(f.id, f.id) if isinstance(f, ast.Name)
+                        else getattr(f, "attr", None))
+                if (name in decoders and name not in defined
+                        and func != "decode_capture"):
+                    stray_calls.append(f"{where}:{node.lineno}")
+            for child in ast.iter_child_nodes(node):
+                visit(child, func)
+
+        visit(tree, None)
+    assert len(layouts) == 1, f"layout columns built at {layouts}"
+    assert stray_calls == [], f"decoder called outside decode_capture at {stray_calls}"
+    assert len(markers) == 1, f"batch ledger marker built at {markers}"

@@ -231,3 +231,14 @@ def test_v9_stream_source_checkpoint_restart(spark, tmp_path):
     )
     out2 = sp.run_v9_restartable(spark, cap, ckpt)
     assert out2 == 21  # 16 replay-free + exactly the 5 new rows
+
+
+def test_v9_stream_source_refuses_nffile_captures(spark, tmp_path):
+    """A v9_stream query over nfdump on-disk captures fails with the
+    decoder's error naming format=nffile; it must not stream zero rows."""
+    from nfdump2clickhouse_spark.sources.nffile import write_nffile
+
+    cap = str(tmp_path / "caps")
+    write_nffile(cap, n_files=1, records_per_file=8)
+    with pytest.raises(Exception, match="format=nffile"):
+        sp.run_v9_restartable(spark, cap, str(tmp_path / "ckpt"))

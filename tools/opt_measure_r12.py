@@ -6,8 +6,8 @@ job description, printing one JSON line with per-key seconds and plan
 stats (Exchange count, join strategies, Python eval nodes).
 
 Usage:
-    python tools/opt_measure.py <tag> [key ...]      # default: bench set
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/opt_measure.py before
+    python tools/opt_measure_r12.py <tag> [key ...]      # default: bench set
+    SPARK_GRAFT_SF_DIR=<sf0.1 fixture dir> python tools/opt_measure_r12.py before
 """
 
 from __future__ import annotations
