@@ -65,23 +65,31 @@ def _source(
     )
 
 
+def _drain_to_memory(
+    df: DataFrame, ckpt: str, output_mode: str = "append"
+) -> DataFrame:
+    """Drain ``df`` to its end (availableNow) into a fresh memory sink
+    checkpointed at ``ckpt``; return the sink's contents."""
+    name = _mem_name()
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return df.sparkSession.table(name)
+
+
 def run_stream_dir(spark: SparkSession) -> DataFrame:
     """src_stream_dir: ingest 3 rotated files exactly once; the checkpoint
     seen-files log is the dedup ledger (rerunning the query adds nothing).
     """
     watch, ckpt = _tmp("watch"), _tmp("ckpt")
     write_flow_files(spark, watch, n_files=3, rows_per_file=200)
-    name = _mem_name()
-    q = (
-        _source(spark, watch)
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).groupBy("ra").agg(
+    return _drain_to_memory(_source(spark, watch), ckpt).groupBy("ra").agg(
         F.count(F.lit(1)).alias("n_flows"), F.sum("ibyt").alias("bytes")
     )
 
@@ -126,7 +134,6 @@ def run_watermark(spark: SparkSession) -> DataFrame:
         spark, os.path.join(watch), n_files=1, rows_per_file=50, start=start,
         tag="late", arrival=1,
     )
-    name = _mem_name()
     agg = (
         _source(spark, watch)
         .withWatermark("ts", "10 minutes")
@@ -136,16 +143,7 @@ def run_watermark(spark: SparkSession) -> DataFrame:
         .select(F.col("window.start").alias("wstart"), "n")
     )
     with _demo_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return _drain_to_memory(agg, ckpt)
 
 
 def run_dedup_watermark(spark: SparkSession) -> DataFrame:
@@ -164,23 +162,14 @@ def run_dedup_watermark(spark: SparkSession) -> DataFrame:
         spark, watch, n_files=1, rows_per_file=100, start=start, tag="replay",
         arrival=1,
     )
-    name = _mem_name()
     dedup = (
         _source(spark, watch)
         .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(["sa", "da", "sp", "dp", "ts"])
     )
     with _demo_state_partitions(spark):
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).groupBy("ra").agg(F.count(F.lit(1)).alias("n_unique"))
+        sink = _drain_to_memory(dedup, ckpt)
+    return sink.groupBy("ra").agg(F.count(F.lit(1)).alias("n_unique"))
 
 
 def run_output_modes(spark: SparkSession) -> DataFrame:
@@ -189,21 +178,11 @@ def run_output_modes(spark: SparkSession) -> DataFrame:
     append; complete re-emits full state per batch)."""
     watch, ckpt = _tmp("watch"), _tmp("ckpt")
     write_flow_files(spark, watch, n_files=3, rows_per_file=100)
-    name = _mem_name()
     agg = _source(spark, watch).groupBy("dp").agg(
         F.count(F.lit(1)).alias("n"), F.sum("ibyt").alias("bytes")
     )
     with _demo_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return _drain_to_memory(agg, ckpt, "complete")
 
 
 def run_session_stream(spark: SparkSession) -> DataFrame:
@@ -215,7 +194,6 @@ def run_session_stream(spark: SparkSession) -> DataFrame:
     requirement for an unbounded flow stream."""
     watch, ckpt = _tmp("watch"), _tmp("ckpt")
     write_flow_files(spark, watch, n_files=4, rows_per_file=120)
-    name = _mem_name()
     agg = (
         _source(spark, watch)
         .withWatermark("ts", "10 minutes")
@@ -230,16 +208,7 @@ def run_session_stream(spark: SparkSession) -> DataFrame:
         )
     )
     with _demo_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return _drain_to_memory(agg, ckpt)
 
 
 def run_transform_with_state(spark: SparkSession) -> DataFrame:
@@ -303,7 +272,6 @@ def run_transform_with_state(spark: SparkSession) -> DataFrame:
 
     watch, ckpt = _tmp("watch"), _tmp("ckpt")
     write_flow_files(spark, watch, n_files=3, rows_per_file=150)
-    name = _mem_name()
     # transformWithState requires the RocksDB state store (the default
     # HDFS-backed provider does not implement the new state-variable API)
     spark.conf.set(
@@ -321,17 +289,9 @@ def run_transform_with_state(spark: SparkSession) -> DataFrame:
         )
     )
     with _demo_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        sink = _drain_to_memory(out, ckpt, "update")
     # last emitted totals per key = the stitched final state
-    return spark.table(name).groupBy("sa", "da").agg(
+    return sink.groupBy("sa", "da").agg(
         F.max("n_flows").alias("n_flows"), F.max("total_bytes").alias("total_bytes")
     )
 
@@ -345,7 +305,6 @@ def run_stateful_sessions(spark: SparkSession) -> DataFrame:
 
     watch, ckpt = _tmp("watch"), _tmp("ckpt")
     write_flow_files(spark, watch, n_files=3, rows_per_file=150)
-    name = _mem_name()
 
     def stitch(key, pdfs, state: GroupState):
         n, total = state.get if state.exists else (0, 0)
@@ -369,17 +328,9 @@ def run_stateful_sessions(spark: SparkSession) -> DataFrame:
         )
     )
     with _demo_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        sink = _drain_to_memory(out, ckpt, "update")
     # final state per key = last emitted row (max n_flows)
-    return spark.table(name).groupBy("sa", "da").agg(
+    return sink.groupBy("sa", "da").agg(
         F.max("n_flows").alias("n_flows"), F.max("total_bytes").alias("total_bytes")
     )
 
@@ -484,18 +435,8 @@ def run_stream_stream_join(spark: SparkSession) -> DataFrame:
         & (F.col("r_ts") <= F.col("ts") + F.expr("INTERVAL 5 MINUTES")),
         "inner",
     ).select("ts", "sa", "da", "sp", "dp", "ibyt", "r_ibyt")
-    name = _mem_name()
     with _demo_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+        return _drain_to_memory(joined, ckpt)
 
 
 def run_stream_left_outer_join(spark: SparkSession) -> DataFrame:
@@ -530,8 +471,8 @@ def run_stream_left_outer_join(spark: SparkSession) -> DataFrame:
 
     adv = pq.read_table(os.path.join(watch_a, sorted(os.listdir(watch_a))[0]))
     apdf = adv.to_pandas().head(5).copy()
-    apdf["ts"] = apdf["ts"] + pd_timedelta_hours(2)
-    apdf["te"] = apdf["te"] + pd_timedelta_hours(2)
+    apdf["ts"] = apdf["ts"] + pd.Timedelta(hours=2)
+    apdf["te"] = apdf["te"] + pd.Timedelta(hours=2)
     apdf["sa"] = "255.255.255.255"
     apdf["da"] = "255.255.255.254"
     # the join's GLOBAL watermark is min(req side, resp side), so the
@@ -602,12 +543,6 @@ def run_stream_left_outer_join(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(out).filter(F.col("sa") != "255.255.255.255")
 
 
-def pd_timedelta_hours(h: int):
-    import pandas as pd
-
-    return pd.Timedelta(hours=h)
-
-
 def run_v9_stream_source(spark: SparkSession) -> DataFrame:
     """stream_v9_source: an nfcapd capture directory as a GENUINE
     streaming source through the Python DataSource stream-reader API —
@@ -630,15 +565,29 @@ def run_v9_stream_source(spark: SparkSession) -> DataFrame:
     ledger, not mtime races, decides)."""
     from ..sources.netflow_v9 import write_netflow_v9
 
-    cap_dir, ckpt = _tmp("v9src"), _tmp("v9ckpt")
-    write_netflow_v9(cap_dir, n_files=2, records_per_file=10)
-    _register_flow_stream_source(spark, "v9_stream", "v9")
+    return _run_capture_stream_source(spark, write_netflow_v9, "v9", "v9")
+
+
+def _run_capture_stream_source(
+    spark: SparkSession, write, decoder: str, tag: str
+) -> DataFrame:
+    """The two-drain demo behind `stream_v9_source` and
+    `stream_nffile_source`: ``write`` lays down 2 rotations
+    ``nfcapd.<tag>.NNNN`` in the capture format ``decoder`` reads, a
+    memory-sink query drains them, a third rotation arrives, and the
+    same query drains again. Returns per-capture counts plus the row
+    totals seen after each drain."""
+    import shutil
+
+    cap_dir, ckpt = _tmp(f"{tag}src"), _tmp(f"{tag}ckpt")
+    write(cap_dir, n_files=2, records_per_file=10)
+    fmt_name = f"{decoder}_stream"
+    _register_flow_stream_source(spark, fmt_name, decoder)
     name = _mem_name()
     q = (
-        spark.readStream.format("v9_stream")
+        spark.readStream.format(fmt_name)
         .option("path", cap_dir)
         .load()
-        .withColumn("batch", F.lit(0))
         .writeStream.format("memory")
         .queryName(name)
         .option("checkpointLocation", ckpt)
@@ -648,13 +597,11 @@ def run_v9_stream_source(spark: SparkSession) -> DataFrame:
         q.processAllAvailable()
         n_first = spark.table(name).count()
         # a third rotation arrives (lexicographically later name)
-        import shutil as _sh
-
-        extra = _tmp("v9extra")
-        write_netflow_v9(extra, n_files=1, records_per_file=6)
-        _sh.move(
-            os.path.join(extra, "nfcapd.v9.0000"),
-            os.path.join(cap_dir, "nfcapd.v9.0002"),
+        extra = _tmp(f"{tag}extra")
+        write(extra, n_files=1, records_per_file=6)
+        shutil.move(
+            os.path.join(extra, f"nfcapd.{tag}.0000"),
+            os.path.join(cap_dir, f"nfcapd.{tag}.0002"),
         )
         q.processAllAvailable()
         n_total = spark.table(name).count()
@@ -763,45 +710,7 @@ def run_nffile_stream_source(spark: SparkSession) -> DataFrame:
     new rotation."""
     from ..sources.nffile import write_nffile
 
-    cap_dir, ckpt = _tmp("nfsrc"), _tmp("nfckpt")
-    write_nffile(cap_dir, n_files=2, records_per_file=10)
-    _register_flow_stream_source(spark, "nffile_stream", "nffile")
-    name = _mem_name()
-    q = (
-        spark.readStream.format("nffile_stream")
-        .option("path", cap_dir)
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n_first = spark.table(name).count()
-        import shutil as _sh
-
-        extra = _tmp("nfextra")
-        write_nffile(extra, n_files=1, records_per_file=6)
-        _sh.move(
-            os.path.join(extra, "nfcapd.nf.0000"),
-            os.path.join(cap_dir, "nfcapd.nf.0002"),
-        )
-        q.processAllAvailable()
-        n_total = spark.table(name).count()
-    finally:
-        q.stop()
-    return (
-        spark.table(name)
-        .groupBy("capture")
-        .agg(
-            F.count(F.lit(1)).alias("n_flows"),
-            F.sum("ibyt").alias("bytes"),
-            F.min("ts").alias("first_ms"),
-        )
-        .withColumn("n_first_drain", F.lit(n_first))
-        .withColumn("n_total", F.lit(n_total))
-    )
+    return _run_capture_stream_source(spark, write_nffile, "nffile", "nf")
 
 
 def run_v9_restartable(spark: SparkSession, cap_dir: str, ckpt: str) -> int:

@@ -68,11 +68,14 @@ def sf_dir() -> str:
 # service tests. Timings are from the full r12 run (7,292 s total,
 # contended box; per-function call-time aggregates):
 _SLOW_TESTS = {
-    # cross-SF re-sweeps: redundant oracle coverage at sf0.001/sf0.1 —
-    # the driver oracle-checks those SFs itself, and every key keeps
-    # its sf0.01 oracle test in the default tier. ~3,500 s combined;
-    # test_label_propagation_across_sfs alone measured 2,759 s at
-    # sf0.1 (iterative min-label propagation, driver-loop rounds).
+    # cross-SF re-sweep: test_oracle_keys_across_sfs re-checks every
+    # oracle key at sf0.001 and sf0.1 (768 cases) — the driver
+    # oracle-checks those SFs itself, and every key keeps its sf0.01
+    # oracle test in the default tier. Measured on a 4-CPU, 16 GB host:
+    # 111 s for the 384 sf0.001 cases, 394 s for 383 of the sf0.1 ones.
+    # The graph_label_propagation-sf0.1 case does not finish there: its
+    # oracle's CTEs, inlined by DuckDB, exhaust RAM (or, under a memory
+    # limit, 20 GB of spill disk); it measured 2,759 s on a larger box.
     # (matched by the "_across_sfs" suffix rule below)
     #
     # full-registry plan sweep: builds all 465 plans (159 s)

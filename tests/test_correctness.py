@@ -32,24 +32,6 @@ def test_query_vs_oracle(key, spark, ddb, sf_dir):
     compare_frames(spark_pdf, oracle_pdf, key)
 
 
-# The r2-reworked keys (array outputs flattened for the driver
-# canonicalizer) re-checked at the OTHER two scale factors: scale-dependent
-# bugs (-0.0 flips, rounding-boundary ulps, phantom partitions) hide from
-# any single SF (SURVEY §8 bug catalog; VERDICT r1 next-#9).
-_REWORKED = [
-    "agg_quantile",
-    "agg_collect_sorted",
-    "agg_sum_map",
-    "agg_avg_foreach",
-    "array_funcs",
-    "array_cumsum",
-    "array_difference",
-    "mm_feature_extract",
-    # r8: exact min<>max constancy gate must stay a no-op at every SF
-    "stats_jarque_bera",
-]
-
-
 @pytest.fixture(scope="session")
 def ddb_by_sf():
     import duckdb
@@ -74,9 +56,15 @@ def ddb_by_sf():
         c.close()
 
 
+# Every oracle key re-checked at the OTHER two scale factors:
+# scale-dependent bugs (-0.0 flips, rounding-boundary ulps, int32-literal
+# overflows, phantom partitions) hide from any single SF (SURVEY §8 bug
+# catalog). Derived from the registry, so a new key cannot be missed.
 @pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _REWORKED)
-def test_reworked_keys_across_sfs(key, sfd, spark, ddb_by_sf):
+@pytest.mark.parametrize(
+    "key", sorted(k for k, s in SPECS.items() if s.oracle is not None)
+)
+def test_oracle_keys_across_sfs(key, sfd, spark, ddb_by_sf):
     spec = SPECS[key]
     spark_pdf = spec.fn(spark, sfd).toPandas()
     oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
@@ -257,30 +245,6 @@ def test_freq_items_contains_true_mode(spark, sf_dir):
 
 # --- wave-4 (round 2) --------------------------------------------------------
 
-_WAVE4_HASH = [
-    "sample_reservoir",
-    "cdc_scd2",
-    "join_interval_bin",
-    "zorder_layout",
-    "join_bloom_prefilter",
-    "flows_ddos_amplification",
-    "ts_resample_ohlc",
-    "events_anomaly_zscore",
-    "graph_pagerank",
-    "text_containment",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE4_HASH)
-def test_wave4_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF discipline for the round-2 keys: rounding-boundary and
-    scale-dependent bugs have only ever shown up off the sf0.01 gate."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_pca_matches_numpy(spark, sf_dir):
     """emb_pca_project (rows-only) pinned against numpy's full PCA on the
@@ -339,30 +303,6 @@ def test_bloom_prefilter_selectivity(spark, sf_dir):
 
 # --- wave-5 (round 2) --------------------------------------------------------
 
-_WAVE5_HASH = [
-    "stats_corr_matrix",
-    "agg_linreg",
-    "ts_autocorr",
-    "ts_seasonal_decompose",
-    "graph_triangle_count",
-    "agg_partial_merge",
-    "data_profile",
-    "sample_weighted",
-    "text_ngram_lm",
-    "curation_manifest_e2e",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE5_HASH)
-def test_wave5_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF discipline for the wave-5 keys (caught sample_weighted's
-    -0.0 at sf0.1 before the driver did)."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_minhash_pure_precision_and_recall(spark, sf_dir):
     """dedup_minhash_pure (rows-only): every emitted pair must be a true
@@ -417,25 +357,6 @@ def test_partial_merge_equals_direct(spark, sf_dir):
 
 
 # --- wave-6 (round 2) --------------------------------------------------------
-
-_WAVE6_HASH = [
-    "win_rolling_median",
-    "drift_psi",
-    "snapshot_diff",
-    "events_attribution",
-    "ts_changepoint",
-    "join_null_safe",
-    "agg_mean_family",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE6_HASH)
-def test_wave6_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_hll_sketch_merge_error_bound(spark, sf_dir):
@@ -500,25 +421,6 @@ def test_stream_stream_join_matches_all_requests(spark):
 
 # --- wave-7 (round 2) --------------------------------------------------------
 
-_WAVE7_HASH = [
-    "udtf_python_lateral",
-    "json_variant",
-    "agg_boolean_family",
-    "text_vocab_topk",
-    "curriculum_binning",
-    "sample_mixture_quota",
-    "map_hof_funcs",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE7_HASH)
-def test_wave7_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_orc_roundtrip_equals_parquet_path(spark, sf_dir):
     """scan_orc (rows-only): the ORC round-trip aggregate must equal the
@@ -558,23 +460,6 @@ def test_mixture_quota_respected(spark, sf_dir):
 
 # --- wave-8 (round 2) --------------------------------------------------------
 
-_WAVE8_HASH = [
-    "sql_recursive_cte",
-    "sql_pipe_syntax",
-    "str_collation",
-    "agg_approx_topk",
-    "join_lateral",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE8_HASH)
-def test_wave8_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_schema_evolution_backfill(spark, sf_dir):
     """mergeSchema invariants: unified 3-column schema (+_no corrupt
@@ -596,22 +481,6 @@ def test_csv_malformed_accounting(spark, sf_dir):
 
 
 # --- wave-9 (round 2) --------------------------------------------------------
-
-_WAVE9_HASH = [
-    "observe_metrics",
-    "agg_grouping_id",
-    "set_intersect_all",
-    "set_except_all",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE9_HASH)
-def test_wave9_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_python_datasource_partition_contract(spark, sf_dir):
@@ -643,21 +512,6 @@ def test_state_reader_sees_all_groups(spark, sf_dir):
 
 
 # --- wave-10 (round 2) -------------------------------------------------------
-
-_WAVE10_HASH = [
-    "udf_arrow_optimized",
-    "sql_parameterized",
-    "sql_session_variables",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE10_HASH)
-def test_wave10_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_netflow_v5_decode_roundtrip(spark, sf_dir):
@@ -707,22 +561,6 @@ def test_rebalance_collapses_empty_partitions(spark, sf_dir):
 
 # --- wave-11 (round 2) -------------------------------------------------------
 
-_WAVE11_HASH = [
-    "text_repetition_filter",
-    "corpus_report_e2e",
-    "events_lag_features",
-    "features_pit_join",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE11_HASH)
-def test_wave11_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_pit_join_never_leaks_future(spark, sf_dir):
     """Leakage audit on the point-in-time join: re-derive each label's
@@ -753,14 +591,6 @@ def test_pit_join_never_leaks_future(spark, sf_dir):
 
 
 # --- wave-12 (round 2) -------------------------------------------------------
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_line_dedup_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["text_line_dedup"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"text_line_dedup@{sfd}")
 
 
 def test_line_dedup_global_invariants(spark, sf_dir):
@@ -824,22 +654,6 @@ def test_bpe_merges_match_reference(spark, sf_dir):
 
 # --- wave-13 (round 2) -------------------------------------------------------
 
-_WAVE13_HASH = [
-    "emb_matryoshka_truncate",
-    "sample_negative_mining",
-    "events_rfm_segmentation",
-    "flows_beaconing_detection",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE13_HASH)
-def test_wave13_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_matryoshka_prefix_recall(spark, sf_dir):
     """MRL contract, calibrated to the fixture: the embeddings are
@@ -880,14 +694,6 @@ def test_negative_mining_contract(spark, sf_dir):
     per_label = pdf.groupby("label_id").size()
     assert per_label.max() <= 2
     assert (pdf["label_id"] != pdf["neg_id"]).all()
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_stat_report_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["flows_stat_report"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"flows_stat_report@{sfd}")
 
 
 def test_registry_order_certification_rotation():
@@ -943,16 +749,6 @@ def test_registry_order_certification_rotation():
     stream_pos = [i for i, k in enumerate(reg_order) if k.startswith("stream_")]
     assert all(i >= 0.6 * len(reg_order) for i in stream_pos), (
         "streaming demos must register late (cheap hash families first)")
-    # VERDICT r5 next-#1: never-swept _SWEEP_PRIORITY keys (the
-    # ETL-parity core the r5 tail-shuffle deferred) lead the
-    # never-swept pool; certified ones drop out (tier self-empties)
-    assert set(registry._SWEEP_PRIORITY) <= set(reg_order)
-    never = [k for k in keys if evidence.get(k) is None]
-    prio_never = [k for k in never if k in set(registry._SWEEP_PRIORITY)]
-    if prio_never:
-        assert never[: len(prio_never)] == prio_never, (
-            "never-swept priority (ETL-core) keys must head the "
-            "never-swept queue")
 
 
 def test_evidence_hashes_cover_every_driver_certification():
@@ -1027,14 +823,6 @@ def test_registry_hash_invalidation_requeues_rewritten_keys(tmp_path, monkeypatc
     )
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_ks_test_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["stats_ks_test"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"stats_ks_test@{sfd}")
-
-
 def test_ks_matches_scipy_style_reference(spark, sf_dir):
     """Pin the KS computation against a direct numpy two-sample CDF-gap
     evaluation of the same hash split."""
@@ -1060,14 +848,6 @@ def test_ks_matches_scipy_style_reference(spark, sf_dir):
     row = SPECS["stats_ks_test"].fn(spark, sf_dir).collect()[0]
     ks_engine = row.max_diff / (row.n0 * row.n1)
     assert abs(ks_engine - ks_ref) < 1e-12, (ks_engine, ks_ref)
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_sql_function_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["udf_sql_function"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"udf_sql_function@{sfd}")
 
 
 def test_binary_hamming_recall_vs_cosine(spark, sf_dir):
@@ -1112,14 +892,6 @@ def test_dedup_overlap_invariants(spark, sf_dir):
         (pdf.method_a == "jaccard08") & (pdf.method_b == "minhash")
     ].iloc[0]
     assert row.n_both == row.n_b  # minhash ⊆ exact pairs
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_unicode_nfc_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["text_unicode_nfc"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"text_unicode_nfc@{sfd}")
 
 
 def test_netflow_v9_decoder_roundtrip_and_template_cache():
@@ -1222,14 +994,6 @@ def test_netflow_v9_key_matches_generator(spark, sf_dir):
         assert int(row["last_ms"]) == max(e[1] for e in exp)
         assert abs(float(row["sum_td"]) - round(sum(e[2] for e in exp), 3)) < 1e-9
         assert int(row["n_exporters"]) == 1
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_sample_temperature_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["sample_temperature"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"sample_temperature@{sfd}")
 
 
 def test_sample_temperature_rebalances(spark, sf_dir):
@@ -1355,6 +1119,28 @@ def test_sweep_order_unit(monkeypatch):
     assert got == ["b", "f", "c", "e", "a", "d"]
 
 
+def test_sweep_order_tiers_on_synthetic_evidence(monkeypatch):
+    """All four tiers on the real registry with made-up driver evidence
+    (the committed evidence certifies every key, so it exercises only
+    the last tier). The last three registered keys are, in registration
+    order, never swept, a pass whose source changed since certification,
+    and an ERR; they must lead in reverse order (ERR, stale pass, never
+    swept), followed by every certified key in registration order."""
+    registry._load_operators()
+    reg_order = list(registry._REGISTRY)
+    *certified, never, stale, err = reg_order
+    evidence = {k: ("pass", 12) for k in certified + [stale]}
+    evidence[err] = ("err", 12)
+    hashes = {
+        k: {"hash": registry.source_hash(registry._REGISTRY[k].fn), "round": 12}
+        for k in certified
+    }
+    hashes[stale] = {"hash": "0" * 16, "round": 12}
+    monkeypatch.setattr(registry, "_evidence_detail", lambda: evidence)
+    monkeypatch.setattr(registry, "_certified_hashes", lambda: hashes)
+    assert registry._sweep_order(reg_order) == [err, stale, never] + certified
+
+
 def test_semantic_dedup_contracts(spark, sf_dir):
     """SemDeDup cluster blocking: exact in-cell verify admits no false
     positives (blocked pair count <= brute-force pair count), soft
@@ -1367,14 +1153,6 @@ def test_semantic_dedup_contracts(spark, sf_dir):
     assert blocked >= 0.7 * len(ex)  # soft-assign recall floor (0.857 measured)
     assert (got["n_dropped"] <= got["n_vectors"]).all()
     assert (got["n_dropped"] <= got["n_candidate_pairs"]).all()
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_substring_spans_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["dedup_substring_spans"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"dedup_substring_spans@{sfd}")
 
 
 def test_substring_spans_are_verbatim(spark, sf_dir):
@@ -1492,14 +1270,6 @@ def test_global_rank_equals_row_number(spark):
             assert (got["tot"] == total).all(), (case, desc)
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_bootstrap_ci_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["stats_bootstrap_ci"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"stats_bootstrap_ci@{sfd}")
-
-
 def test_bootstrap_ci_contains_sample_mean(spark, sf_dir):
     """Statistical sanity: lo < hi, and the 2nd..31st-order-stat interval
     of 32 Poisson resamples contains the observed per-segment mean (the
@@ -1520,22 +1290,6 @@ def test_bootstrap_ci_contains_sample_mean(spark, sf_dir):
     for seg, row in got.iterrows():
         assert row["ci_lo_c"] < row["ci_hi_c"]
         assert row["ci_lo_c"] <= obs[seg] <= row["ci_hi_c"], (seg, obs[seg], row)
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_period_over_period_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["ts_period_over_period"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"ts_period_over_period@{sfd}")
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_winsorized_mean_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["agg_winsorized_mean"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"agg_winsorized_mean@{sfd}")
 
 
 def test_grouped_rank_equals_partitioned_row_number(spark):
@@ -1675,14 +1429,6 @@ def test_prefix_sums_null_order_keys_sort_first(spark):
         assert (got["_ps_tot_one"] == 200).all(), (lo, hi)
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_sentiment_lexicon_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["text_sentiment_lexicon"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"text_sentiment_lexicon@{sfd}")
-
-
 def test_subsequence_search_matches_numpy(spark, sf_dir):
     """ts_subsequence_search pinned against a direct numpy z-normalized
     Euclidean recomputation of the same day series: identical top-5
@@ -1722,14 +1468,6 @@ def test_subsequence_search_matches_numpy(spark, sf_dir):
     assert np.allclose(got["zdist"], exp["zdist"], atol=2e-4)
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_group_quantiles_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["agg_group_quantiles_exact"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"agg_group_quantiles_exact@{sfd}")
-
-
 def test_sampling_correction_scales_exactly(spark, sf_dir):
     """Corrected totals must equal raw x the header's sampling interval
     (100 here), and raw totals must match the generator's deterministic
@@ -1751,14 +1489,6 @@ def test_sampling_correction_scales_exactly(spark, sf_dir):
         assert int(pdf.iloc[f]["raw_bytes"]) == octs
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_did_estimator_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["events_did_estimator"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"events_did_estimator@{sfd}")
-
-
 def test_did_identity(spark, sf_dir):
     """DiD must equal (treat_post - treat_pre) - (ctrl_post - ctrl_pre)
     of the reported cell means, and the null-effect hash split should
@@ -1768,14 +1498,6 @@ def test_did_identity(spark, sf_dir):
     assert row.did_c == did
     overall = (row.m_treat_pre + row.m_treat_post + row.m_ctrl_pre + row.m_ctrl_post) / 4
     assert abs(row.did_c) < 0.5 * overall
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_label_propagation_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["graph_label_propagation"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"graph_label_propagation@{sfd}")
 
 
 def test_label_propagation_partitions_and_structure(spark, sf_dir):
@@ -1788,14 +1510,6 @@ def test_label_propagation_partitions_and_structure(spark, sf_dir):
     assert len(pdf) >= 2  # k-NN sparsification must expose structure
     assert (pdf["min_nation"] <= pdf["community"]).all()
     assert (pdf["community"] <= pdf["max_nation"]).all()
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_asof_nearest_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["join_asof_nearest"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"join_asof_nearest@{sfd}")
 
 
 def test_asof_nearest_is_truly_nearest(spark, sf_dir):
@@ -1830,14 +1544,6 @@ def test_asof_nearest_is_truly_nearest(spark, sf_dir):
         assert abs((p["ts"] - chosen["ts"]).value) == abs((p["ts"] - best.ts).value), r
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_auc_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["ml_eval_auc"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"ml_eval_auc@{sfd}")
-
-
 def test_auc_matches_numpy_mannwhitney(spark, sf_dir):
     """Pin the integer AUC against a direct numpy tie-aware
     rank-statistic computation (midrank Mann-Whitney U / (P*N))."""
@@ -1869,15 +1575,6 @@ def test_auc_matches_numpy_mannwhitney(spark, sf_dir):
     assert abs(row.auc_e6 / 1e6 - auc) < 2e-6, (row.auc_e6, auc)
 
 
-@pytest.mark.parametrize("key", ["ml_eval_calibration", "ml_eval_pr_threshold"])
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_ml_eval_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
-
 def test_pr_threshold_monotone(spark, sf_dir):
     """Raising the threshold can only raise precision's numerator share
     structure: recall must be non-increasing in thr, and tp+fn (total
@@ -1888,14 +1585,6 @@ def test_pr_threshold_monotone(spark, sf_dir):
     totals = (pdf["tp"] + pdf["fn"]).unique()
     assert len(totals) == 1
     assert (pdf["recall_bp"].diff().dropna() <= 0).all()
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_target_encoding_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["features_target_encoding"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"features_target_encoding@{sfd}")
 
 
 def test_target_encoding_never_leaks_own_fold(spark, sf_dir):
@@ -1918,14 +1607,6 @@ def test_target_encoding_never_leaks_own_fold(spark, sf_dir):
         other = raw[(raw["cat"] == r["cat"]) & (raw["fold"] != r["fold"])]
         s, n = int(other["cents"].sum()), len(other)
         assert int(r["enc_mean_c"]) == (2 * s + n) // (2 * n), r
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_star_except_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["sql_star_except"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"sql_star_except@{sfd}")
 
 
 def test_partition_stats_invariants(spark, sf_dir):
@@ -1988,14 +1669,6 @@ def test_v9_options_key_scales(spark, sf_dir):
     assert (pdf["n_flows"] == 16).all()
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_survival_km_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["events_survival_km"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"events_survival_km@{sfd}")
-
-
 def test_survival_km_matches_pure_python(spark, sf_dir):
     """Pin the recursive-CTE product-limit against a direct pure-Python
     KM fold over the same (duration, censored) cohort, including the
@@ -2041,14 +1714,6 @@ def test_survival_km_matches_pure_python(spark, sf_dir):
     assert (got["s_e6"].diff().dropna() <= 0).all()
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_gini_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["agg_gini_concentration"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"agg_gini_concentration@{sfd}")
-
-
 def test_gini_matches_numpy(spark, sf_dir):
     """Pin the rank-formula Gini against a direct numpy computation on
     the same integer cents; uniform synthetic prices must land near the
@@ -2078,14 +1743,6 @@ def test_gini_matches_numpy(spark, sf_dir):
         assert 0.25 < r["gini_e6"] / 1e6 < 0.40  # ~1/3 for uniform prices
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_lorenz_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["agg_lorenz_deciles"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"agg_lorenz_deciles@{sfd}")
-
-
 def test_lorenz_curve_properties(spark, sf_dir):
     """Lorenz invariants: 10 deciles partitioning all rows, cumulative
     share strictly increasing to exactly 10000 bp, and convexity
@@ -2102,14 +1759,6 @@ def test_lorenz_curve_properties(spark, sf_dir):
     assert all(b > a for a, b in zip(cum, cum[1:]))
     inc = [cum[0]] + [b - a for a, b in zip(cum, cum[1:])]
     assert all(b >= a for a, b in zip(inc, inc[1:]))  # convex
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_cohort_ltv_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["events_cohort_ltv"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"events_cohort_ltv@{sfd}")
 
 
 def test_cohort_ltv_monotone_and_reconciles(spark, sf_dir):
@@ -2134,14 +1783,6 @@ def test_cohort_ltv_monotone_and_reconciles(spark, sf_dir):
     assert int(pdf["rev_c"].sum()) == int(total)
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_degree_histogram_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["dedup_degree_histogram"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"dedup_degree_histogram@{sfd}")
-
-
 def test_degree_histogram_reconciles(spark, sf_dir):
     """Histogram mass must equal the corpus size, and the handshake
     identity must hold: sum(degree * n_docs) == 2 * |pairs|."""
@@ -2153,29 +1794,12 @@ def test_degree_histogram_reconciles(spark, sf_dir):
     assert int((pdf["degree"] * pdf["n_docs"]).sum()) == 2 * pairs
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_hhi_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["agg_hhi_concentration"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"agg_hhi_concentration@{sfd}")
-
-
 def test_hhi_bounds(spark, sf_dir):
     """HHI must satisfy 1e6/n_suppliers <= hhi <= 1e6 per nation
     (floor-division slack on the lower bound)."""
     pdf = SPECS["agg_hhi_concentration"].fn(spark, sf_dir).toPandas()
     assert (pdf["hhi_e6"] <= 1_000_000).all()
     assert (pdf["hhi_e6"] >= 1_000_000 // pdf["n_suppliers"] - 1).all()
-
-
-@pytest.mark.parametrize("key", ["text_ttr_diversity", "events_activity_streaks"])
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_ttr_streaks_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_streaks_reconcile_users(spark, sf_dir):
@@ -2191,22 +1815,6 @@ def test_streaks_reconcile_users(spark, sf_dir):
     n_days = e.select(F.to_date("ts")).distinct().count()
     assert int(pdf["n_users"].sum()) == n_users
     assert int(pdf["streak_days"].max()) <= n_days
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_group_by_all_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["sql_group_by_all"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"sql_group_by_all@{sfd}")
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_asof_tolerance_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["join_asof_tolerance"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"join_asof_tolerance@{sfd}")
 
 
 def test_asof_tolerance_is_subset_of_backward(spark, sf_dir):
@@ -2226,14 +1834,6 @@ def test_asof_tolerance_is_subset_of_backward(spark, sf_dir):
     tp = set(zip(tol[tol["matched"]]["purchase_id"], tol[tol["matched"]]["signup_id"].astype(int)))
     bp = set(zip(back["purchase_id"], back["signup_id"]))
     assert tp <= bp
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_peak_concurrency_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["events_peak_concurrency"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"events_peak_concurrency@{sfd}")
 
 
 def test_peak_concurrency_matches_pure_python(spark, sf_dir):
@@ -2261,15 +1861,6 @@ def test_peak_concurrency_matches_pure_python(spark, sf_dir):
     assert {pd.Timestamp(k): int(v) for k, v in got.items()} == dict(peak)
 
 
-@pytest.mark.parametrize("key", ["events_new_vs_returning", "text_boilerplate_ngrams"])
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_growth_boilerplate_across_sfs(key, sfd, spark, ddb_by_sf):
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
-
 def test_new_vs_returning_reconciles(spark, sf_dir):
     """Sum of new_users over all days == total distinct users (each user
     is new exactly once), and day-1 has zero returning users."""
@@ -2283,14 +1874,6 @@ def test_new_vs_returning_reconciles(spark, sf_dir):
     e = table(spark, sf_dir, "events")
     assert int(pdf["new_users"].sum()) == e.select("user_id").distinct().count()
     assert int(pdf.iloc[0]["returning_users"]) == 0
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_groupwise_min_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["join_groupwise_min"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"join_groupwise_min@{sfd}")
 
 
 def test_groupwise_min_keeps_ties(spark, sf_dir):
@@ -2318,14 +1901,6 @@ def test_groupwise_min_keeps_ties(spark, sf_dir):
         assert len(g) == counts[pk]  # all tied rows survive
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_weekday_seasonality_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["agg_weekday_seasonality"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"agg_weekday_seasonality@{sfd}")
-
-
 def test_weekday_seasonality_reconciles(spark, sf_dir):
     """Seven weekday rows partitioning all orders; shares sum to
     ~10000 bp (floor-division slack < 7)."""
@@ -2335,24 +1910,6 @@ def test_weekday_seasonality_reconciles(spark, sf_dir):
     assert sorted(pdf["dow"]) == list(range(1, 8))
     assert int(pdf["n_orders"].sum()) == table(spark, sf_dir, "orders").count()
     assert 10000 - 7 <= int(pdf["share_bp"].sum()) <= 10000
-
-
-_WAVE16 = [
-    "events_sessionize_gap",
-    "events_funnel_windowed",
-    "data_quality_rules",
-    "events_user_entropy",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE16)
-def test_wave16_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF discipline for the round-4 keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_funnel_windowed_dp_vs_bruteforce(spark, sf_dir):
@@ -2412,24 +1969,6 @@ def test_sessionize_gap_invariants(spark, sf_dir):
     assert (pdf.set_index("user_id")["n_events"].sort_index() == ev.sort_index()).all()
     assert (pdf["n_sessions"] >= 1).all()
     assert (pdf["max_session_events"] <= pdf["n_events"]).all()
-
-
-_WAVE17 = [
-    "privacy_k_anonymity",
-    "sample_repeat_factor",
-    "stats_chi2_srm",
-    "graph_kcore",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE17)
-def test_wave17_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF discipline for the round-4 wave-17 keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_kcore_fixpoint_reached(spark, sf_dir):
@@ -2602,26 +2141,6 @@ def test_whitening_covariance_is_identity(spark, sf_dir):
     assert np.allclose(got["norm_r"], np.round(np.linalg.norm(Z, axis=1), 4))
 
 
-_WAVE19 = [
-    "join_interval_overlap",
-    "stats_anova_f",
-    "scan_csv_multiline_quoted",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE19)
-def test_wave19_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF discipline for the round-4 wave-19 keys. stats_anova_f
-    exists in this list for a reason: its cross-group double fold
-    diverged at the last ulp ONLY at sf0.1 until the fold order was
-    pinned (array_sort+aggregate / list_reduce(ORDER BY))."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
-
 def test_interval_overlap_vs_bruteforce(spark, sf_dir):
     """The binned-equi-join overlap formulation must equal a brute-force
     pandas interval check (third formulation, independent of both the
@@ -2663,14 +2182,6 @@ def test_csv_multiline_content_roundtrip(spark, sf_dir):
     assert len(pdf) > 100
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_l_diversity_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["privacy_l_diversity"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"privacy_l_diversity@{sfd}")
-
-
 def test_holt_winters_matches_reference_loop(spark, sf_dir):
     """ts_holt_winters pinned against an independent pandas/python
     recursion over the same daily series (same fixed alpha/beta/gamma,
@@ -2708,19 +2219,6 @@ def test_holt_winters_matches_reference_loop(spark, sf_dir):
     }
     assert got == exp
     assert len(got) == 5 * 7  # five event types x 7-day horizon
-
-
-_WAVE20 = ["events_cuped_adjust", "data_freshness_sla"]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE20)
-def test_wave20_keys_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF discipline for the round-4 wave-20 keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_cuped_actually_reduces_variance(spark, sf_dir):
@@ -2799,14 +2297,6 @@ def test_registry_catalog_reconciles(spark, sf_dir):
     assert pdf["key"].is_unique
 
 
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-def test_blacklist_match_across_sfs(sfd, spark, ddb_by_sf):
-    spec = SPECS["flows_blacklist_match"]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"flows_blacklist_match@{sfd}")
-
-
 def test_hll_sliding_union_error_bound(spark, sf_dir):
     """The sketch-union sliding distinct must track the exact sliding
     distinct within HLL error (default lgConfigK=12 => ~1.6% standard
@@ -2838,26 +2328,6 @@ def test_hll_sliding_union_error_bound(spark, sf_dir):
 
 
 # --- wave-22 (round 5) -------------------------------------------------------
-
-_WAVE22 = [
-    "flows_stitch_rotation",
-    "dedup_url_canonicalize",
-    "stats_mann_whitney",
-    "text_lm_perplexity_filter",
-    "privacy_dp_counts",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE22)
-def test_wave22_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the round-5 keys: the sf0.1 ANSI int32-literal
-    overflow in the Mann-Whitney rank constant was caught exactly here
-    (invisible at sf0.01 where n0(n0+1) squeaks under 2^31)."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_stitch_conserves_segments_and_bytes(spark, sf_dir):
@@ -2970,25 +2440,6 @@ def test_perplexity_filter_reconciles_with_lm_scores(spark, sf_dir):
 
 
 # --- wave-23 (round 5) -------------------------------------------------------
-
-_WAVE23 = [
-    "join_spatial_grid",
-    "events_forecast_backtest",
-    "sample_group_shuffle_split",
-    "tokenizer_vocab_coverage",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE23)
-def test_wave23_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-23 hash keys (scale-dependent bugs —
-    int32 literal overflow, rounding-boundary ulps — hide from any
-    single SF)."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_spatial_grid_cover_is_complete(spark):
@@ -3158,23 +2609,6 @@ def test_vocab_coverage_matches_pandas(spark, sf_dir):
 
 # --- wave-24 (round 5) -------------------------------------------------------
 
-_WAVE24 = [
-    "agg_quantile_sketch_merge",
-    "events_power_analysis",
-    "ml_feature_hashing",
-    "stats_hill_tail_index",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE24)
-def test_wave24_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-24 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_quantile_sketch_error_bound(spark, sf_dir):
     """The sketch quantiles must land within the bucketing's 1/16
@@ -3326,23 +2760,6 @@ def test_hill_tail_matches_numpy(spark, sf_dir):
 
 # --- wave-25 (round 5) -------------------------------------------------------
 
-_WAVE25 = [
-    "text_novelty_curve",
-    "ml_eval_ndcg",
-    "stats_benjamini_hochberg",
-    "flows_traffic_matrix",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE25)
-def test_wave25_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-25 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_kcenter_matches_numpy_greedy(spark, sf_dir):
     """Exact replication of the farthest-point traversal in numpy
@@ -3474,22 +2891,6 @@ def test_traffic_matrix_conserves_bytes(spark, sf_dir):
 
 # --- wave-26 (round 5) -------------------------------------------------------
 
-_WAVE26 = [
-    "curation_filter_funnel",
-    "maint_skew_report",
-    "maint_cache_inmemory",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE26)
-def test_wave26_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-26 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_filter_funnel_is_monotone(spark, sf_dir):
     """The funnel can only lose documents at each gate, totals
@@ -3566,24 +2967,6 @@ def test_ann_recall_report_arithmetic_and_floor(spark, sf_dir):
 
 
 # --- wave-27 (round 5) -------------------------------------------------------
-
-_WAVE27 = [
-    "sql_scripting_control_flow",
-    "sql_identifier_dynamic",
-    "agg_listagg",
-    "text_keywords_topk",
-    "sql_try_functions",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE27)
-def test_wave27_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-27 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_scripting_result_is_minimal_power(spark, sf_dir):
@@ -3698,22 +3081,6 @@ def test_try_functions_account_for_dirt(spark, sf_dir):
 
 
 # --- wave-28 (round 5) -------------------------------------------------------
-
-_WAVE28 = [
-    "ts_downsample_lttb",
-    "events_association_rules",
-    "ml_feature_woe_binning",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE28)
-def test_wave28_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-28 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_lttb_endpoints_and_membership(spark, sf_dir):
@@ -3848,23 +3215,6 @@ def test_analyze_stats_exact_counts_ndv_bounds(spark, sf_dir):
 
 
 # --- wave-29 (round 5) -------------------------------------------------------
-
-_WAVE29 = [
-    "dedup_canonical_doc",
-    "stats_ratio_delta_method",
-    "flows_port_services",
-    "sample_neyman_allocation",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE29)
-def test_wave29_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-29 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_canonical_doc_reconciles_with_clusters(spark, sf_dir):
@@ -4009,24 +3359,6 @@ def test_neyman_allocates_exact_budget_optimally(spark, sf_dir):
 
 
 # --- wave-30 (round 5) -------------------------------------------------------
-
-_WAVE30 = [
-    "stats_spearman_corr",
-    "ml_eval_regression",
-    "features_scaling",
-    "agg_circular_stats",
-    "text_zipf_slope",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE30)
-def test_wave30_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-30 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_spearman_matches_pandas_average_ranks(spark, sf_dir):
@@ -4174,23 +3506,6 @@ def test_features_scaling_recipe_invariants(spark, sf_dir):
 
 
 # --- wave-31 (round 5) -------------------------------------------------------
-
-_WAVE31_HASH = [
-    "sample_ppswor",
-    "stats_levene_test",
-    "ml_eval_lift",
-    "ts_cusum_anomaly",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE31_HASH)
-def test_wave31_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-31 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_ppswor_is_exact_weighted_top200(spark, sf_dir):
@@ -4363,24 +3678,6 @@ def test_wordpiece_canonical_examples_and_spark_economics(spark, sf_dir):
 
 # --- wave-32 (round 5) -------------------------------------------------------
 
-_WAVE32 = [
-    "agg_theil_index",
-    "events_interarrival_stats",
-    "ml_eval_confusion_multi",
-    "privacy_t_closeness",
-    "scan_text_wholefile",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE32)
-def test_wave32_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-32 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_theil_decomposition_numpy(spark, sf_dir):
     """Numpy Theil replication + the additive decomposition law
@@ -4537,23 +3834,6 @@ def test_wholefile_roundtrip_hashlib(spark, sf_dir):
 
 
 # --- wave-33 (round 5) -------------------------------------------------------
-
-_WAVE33_HASH = [
-    "stats_wilcoxon_signed_rank",
-    "graph_adamic_adar",
-    "ts_rolling_corr",
-    "flows_exporter_dedup",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE33_HASH)
-def test_wave33_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-33 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_wilcoxon_matches_numpy(spark, sf_dir):
@@ -4713,24 +3993,6 @@ def test_compression_ratio_zlib_replication(spark, sf_dir):
 
 # --- wave-34 (round 5) -------------------------------------------------------
 
-_WAVE34 = [
-    "stats_binomial_ci_wilson",
-    "events_frequency_capping",
-    "ml_ranking_mrr",
-    "stats_benford_test",
-    "dedup_threshold_curve",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE34)
-def test_wave34_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-34 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_wilson_interval_laws_and_numpy(spark, sf_dir):
     """Wilson CI laws: lo <= p_hat <= hi, interval inside [0,1],
@@ -4869,24 +4131,6 @@ def test_threshold_curve_monotone_and_reconciles(spark, sf_dir):
 
 # --- wave-35 (round 5) -------------------------------------------------------
 
-_WAVE35 = [
-    "ts_bollinger_bands",
-    "doc_sentence_stats",
-    "emb_dimension_variance",
-    "events_time_to_convert",
-    "scan_csv_gzip",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE35)
-def test_wave35_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-35 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_bollinger_matches_pandas_and_band_laws(spark, sf_dir):
     """pandas rolling replication; band laws: lo <= ma7 <= hi, at most
@@ -5011,23 +4255,6 @@ def test_csv_gzip_roundtrip_files_are_gz(spark, sf_dir):
 
 # --- wave-36 (round 5) -------------------------------------------------------
 
-_WAVE36_HASH = [
-    "emb_random_projection",
-    "events_heatmap_hour_dow",
-    "stats_runs_test",
-    "events_cart_abandonment",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE36_HASH)
-def test_wave36_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-36 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_random_projection_matches_numpy(spark, sf_dir):
     """Numpy replication with the SAME deterministic ±1 matrix; JL
@@ -5150,23 +4377,6 @@ def test_cart_abandonment_pandas(spark, sf_dir):
 
 
 # --- wave-37 (round 5) -------------------------------------------------------
-
-_WAVE37_HASH = [
-    "events_audience_overlap",
-    "stats_g_test",
-    "privacy_pseudonymize",
-    "stats_cohens_d",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE37_HASH)
-def test_wave37_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-37 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_audience_overlap_set_replication(spark, sf_dir):
@@ -5316,23 +4526,6 @@ def test_cohens_d_numpy_and_g_less_than_d(spark, sf_dir):
 
 # --- wave-38 (round 5) -------------------------------------------------------
 
-_WAVE38_HASH = [
-    "stats_ols_two_vars",
-    "events_cohort_retention_matrix",
-    "sample_balanced_downsample",
-    "agg_price_elasticity",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE38_HASH)
-def test_wave38_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-38 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_ols_two_vars_matches_numpy_lstsq(spark, sf_dir):
     """numpy.linalg.lstsq replication of the closed-form betas and R²."""
@@ -5461,23 +4654,6 @@ def test_price_elasticity_matches_numpy(spark, sf_dir):
 
 
 # --- wave-39 (round 5) -------------------------------------------------------
-
-_WAVE39_HASH = [
-    "cast_decimal_money",
-    "flows_prefix_rollup",
-    "events_ab_contamination",
-    "ts_hampel_outliers",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE39_HASH)
-def test_wave39_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-39 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_decimal_money_is_exact_integer_cents(spark, sf_dir):
@@ -5614,24 +4790,6 @@ def test_sketch_error_within_advertised_bounds(spark, sf_dir):
 
 
 # --- wave-40 (round 5) -------------------------------------------------------
-
-_WAVE40 = [
-    "events_recency_weighted_score",
-    "privacy_generalization_ladder",
-    "agg_pareto_8020",
-    "agg_median_of_means",
-    "stats_jarque_bera",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE40)
-def test_wave40_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-40 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_recency_score_matches_numpy(spark, sf_dir):
@@ -5775,24 +4933,6 @@ def test_jarque_bera_matches_numpy(spark, sf_dir):
 
 # --- wave-41 (round 5) -------------------------------------------------------
 
-_WAVE41 = [
-    "stats_bayes_shrunk_rates",
-    "stats_sprt_early_stop",
-    "text_burstiness_dispersion",
-    "ml_calibration_brier",
-    "agg_log_histogram",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE41)
-def test_wave41_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-41 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_bayes_shrinkage_pulls_toward_prior(spark, sf_dir):
     """Shrinkage laws: every shrunk rate sits BETWEEN the raw rate and
@@ -5918,23 +5058,6 @@ def test_log_histogram_numpy_and_cumulative(spark, sf_dir):
 
 
 # --- wave-42 (round 5) -------------------------------------------------------
-
-_WAVE42_HASH = [
-    "stats_nn_matching",
-    "dedup_entity_resolution",
-    "privacy_cell_suppression",
-    "events_growth_accounting",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE42_HASH)
-def test_wave42_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-42 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_nn_matching_python_replication(spark, sf_dir):
@@ -6109,24 +5232,6 @@ def test_csv_column_drift_trap_and_fix(spark, sf_dir):
 
 # --- wave-43 (round 5) -------------------------------------------------------
 
-_WAVE43 = [
-    "text_pmi_collocations",
-    "flows_billing_95th",
-    "events_adoption_curve",
-    "ts_mann_kendall",
-    "dedup_provenance_split",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE43)
-def test_wave43_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-43 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_pmi_matches_python_and_sign(spark, sf_dir):
     """Pure-python PMI replication from document sets; the top pair's
@@ -6249,24 +5354,6 @@ def test_provenance_split_reconciles(spark, sf_dir):
 
 # --- wave-44 (round 5) -------------------------------------------------------
 
-_WAVE44 = [
-    "scan_fixed_width",
-    "str_kv_parse",
-    "dedup_lsh_scurve",
-    "ts_index_rebase",
-    "flows_elephant_mice",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE44)
-def test_wave44_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-44 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_fixed_width_roundtrip_exact(spark, sf_dir):
     """The fixed-width round-trip must conserve ids and cents exactly
@@ -6380,24 +5467,6 @@ def test_elephant_mice_heavy_tail_fact(spark, sf_dir):
 
 
 # --- wave-45 (round 5) -------------------------------------------------------
-
-_WAVE45 = [
-    "emb_centroid_drift",
-    "stats_breusch_pagan",
-    "flows_scan_taxonomy",
-    "ts_seasonality_strength",
-    "agg_gini_daily_trend",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE45)
-def test_wave45_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-45 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_centroid_drift_numpy_and_stability(spark, sf_dir):
@@ -6545,24 +5614,6 @@ def test_daily_gini_matches_numpy(spark, sf_dir):
 
 
 # --- wave-46 (round 5) -------------------------------------------------------
-
-_WAVE46 = [
-    "events_best_send_hour",
-    "stats_ljung_box",
-    "agg_hurst_exponent",
-    "join_interval_overlap_duration",
-    "stats_mcnemar",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE46)
-def test_wave46_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-46 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_best_send_hour_pandas(spark, sf_dir):
@@ -6797,24 +5848,6 @@ def test_mcnemar_cells_and_statistic(spark, sf_dir):
 
 # --- wave-47 (round 5) -------------------------------------------------------
 
-_WAVE47 = [
-    "text_flesch_reading_ease",
-    "flows_unidirectional_ratio",
-    "events_anomaly_deseasonalized",
-    "stats_capture_recapture",
-    "stats_cochran_armitage",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE47)
-def test_wave47_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-47 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_flesch_python_replication(spark, sf_dir):
     """re-based python replication of the heuristic per language."""
@@ -6950,24 +5983,6 @@ def test_cochran_armitage_matches_numpy(spark, sf_dir):
 
 # --- wave-48 (round 5) -------------------------------------------------------
 
-_WAVE48 = [
-    "stats_hodges_lehmann",
-    "sample_systematic",
-    "agg_trimmed_mean",
-    "ts_theil_sen",
-    "events_dose_response",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE48)
-def test_wave48_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-48 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_hodges_lehmann_numpy(spark, sf_dir):
     """Numpy Walsh-average replication; HL sits between min and max of
@@ -7092,23 +6107,6 @@ def test_dose_response_laws(spark, sf_dir):
 
 # --- wave-49 (round 5) -------------------------------------------------------
 
-_WAVE49_HASH = [
-    "text_hapax_ratio",
-    "stats_sign_test",
-    "emb_distance_histogram",
-    "ml_cohens_kappa",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE49_HASH)
-def test_wave49_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-49 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
-
 
 def test_dynamic_partition_overwrite_contract(spark, sf_dir):
     """THE mode's contract: only the overwritten partition's sums
@@ -7231,24 +6229,6 @@ def test_kappa_matches_sklearn_free_formula(spark, sf_dir):
 
 
 # --- wave-50 (round 5) -------------------------------------------------------
-
-_WAVE50 = [
-    "maint_join_cardinality_exact",
-    "text_lang_divergence",
-    "dedup_shingle_size_curve",
-    "stats_grubbs",
-    "stats_block_bootstrap",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE50)
-def test_wave50_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-50 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_join_cardinality_equals_actual_join(spark, sf_dir):
@@ -7377,24 +6357,6 @@ def test_block_bootstrap_python_replication(spark, sf_dir):
 
 
 # --- wave-51 (round 5) -------------------------------------------------------
-
-_WAVE51 = [
-    "ml_eval_average_precision",
-    "stats_friedman_test",
-    "stats_durbin_watson",
-    "events_repeat_purchase",
-    "reshape_unpivot_multi",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE51)
-def test_wave51_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-51 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_average_precision_numpy_and_bounds(spark, sf_dir):
@@ -7541,24 +6503,6 @@ def test_unpivot_multi_reconciles_with_wide(spark, sf_dir):
 
 
 # --- wave-52 (round 5) -------------------------------------------------------
-
-_WAVE52 = [
-    "agg_tukey_fences",
-    "ts_forecast_mase",
-    "stats_one_sample_t",
-    "emb_anisotropy",
-    "sql_lateral_alias",
-]
-
-
-@pytest.mark.parametrize("sfd", CROSS_SF_DIRS)
-@pytest.mark.parametrize("key", _WAVE52)
-def test_wave52_across_sfs(key, sfd, spark, ddb_by_sf):
-    """Triple-SF pin for the wave-52 hash keys."""
-    spec = SPECS[key]
-    spark_pdf = spec.fn(spark, sfd).toPandas()
-    oracle_pdf = ddb_by_sf(sfd).execute(spec.oracle).df()
-    compare_frames(spark_pdf, oracle_pdf, f"{key}@{sfd}")
 
 
 def test_tukey_fences_numpy(spark, sf_dir):
