@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nfdump2clickhouse_spark import registry
-from nfdump2clickhouse_spark.session import get_spark
+from nfdump2clickhouse_spark.session import codegen_compiles, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -164,14 +164,19 @@ def main() -> None:
     # while a single load spike can no longer own the committed number.
     # Ingest gets the same n-of-PASSES defense as the headline (VERDICT r7
     # what's-wrong #2): one measurement per pass, committed value = median.
+    # Each pass also records its Janino compiles: with the session's
+    # codegen cache holding the headline's classes, passes after the first
+    # compile ~0, so a cache regression shows as a per-pass count.
     passes = []
     for _ in range(max(1, PASSES)):
         load_before = round(os.getloadavg()[0], 2)
+        compiles_before = codegen_compiles(spark)
         per_query = {key: _best_of_3(key) for key in HEADLINE}
         passes.append(
             {
                 "total": round(sum(per_query.values()), 3),
                 "queries": per_query,
+                "codegen_compiles": codegen_compiles(spark) - compiles_before,
                 "load_1min_before": load_before,
                 "ingest_rows_per_sec": _ingest_throughput(spark),
                 "load_1min_at_ingest": round(os.getloadavg()[0], 2),
@@ -208,6 +213,7 @@ def main() -> None:
                 "pass_loads_1min_at_ingest": [
                     p["load_1min_at_ingest"] for p in passes
                 ],
+                "pass_codegen_compiles": [p["codegen_compiles"] for p in passes],
                 "load_at_start": load_at_start,
                 "load_after_cooldown": load_after_cooldown,
                 "cooldown_sec": cooldown_taken,

@@ -18,16 +18,23 @@ from datetime import date, timedelta
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from ..schemas import FLOWS_TABLE
 
 
-def write_flows_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Partitioned, sorted columnar layout (MergeTree ORDER BY analog)."""
+def write_flows_partitioned(
+    df: DataFrame, path: str, mode: str = "append", **options: str
+) -> None:
+    """Partitioned, sorted columnar layout (MergeTree ORDER BY analog);
+    ``options`` are extra parquet writer options for this one write."""
     (
         df.repartition("dt", "flowsrc")
         .sortWithinPartitions("ts", "sa_num")
         .write.mode(mode)
         .partitionBy("dt", "flowsrc")
         .option("compression", "zstd")
+        .options(**options)
         .parquet(path)
     )
 
@@ -39,14 +46,10 @@ def overwrite_day_partitions(df: DataFrame, path: str) -> None:
     one write. This is how replayed or corrected rotations land without
     rewriting the table and without the duplicate rows a plain append
     would create; at 100 TB an overwrite touches only the affected
-    day/source leaves (same layout and sort as the normal sink)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        write_flows_partitioned(df, path, mode="overwrite")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    day/source leaves (same layout and sort as the normal sink). The mode
+    is a writer option, so the session's own setting, which every other
+    thread of the session reads, never changes."""
+    write_flows_partitioned(df, path, mode="overwrite", partitionOverwriteMode="dynamic")
 
 
 def drop_expired_partitions(path: str, keep_days: int, today: date) -> list[str]:
@@ -95,6 +98,13 @@ def write_bucketed(
 #: compaction's target output file size, and the leaf partitions it visits
 COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 COMPACT_PARTITION_GLOB = "dt=*/flowsrc=*"
+#: a leaf's staging dir: a leading "_" and no "=" keep it out of Spark's
+#: partition discovery, so readers never see the rewrite, even after a crash
+COMPACT_TMP_DIR = "_compact_tmp"
+#: the columns of a leaf's files: the table without its partition columns
+_LEAF_SCHEMA = StructType(
+    [f for f in FLOWS_TABLE.fields if f.name not in ("dt", "flowsrc")]
+)
 
 
 def compact_partitions(spark: SparkSession, path: str) -> list[str]:
@@ -122,8 +132,8 @@ def compact_partitions(spark: SparkSession, path: str) -> list[str]:
         n_out = max(1, math.ceil(total / COMPACT_TARGET_FILE_BYTES))
         if n_out >= len(files):
             continue
-        df = spark.read.parquet(leaf)
-        tmp = leaf + "._compact_tmp"
+        df = spark.read.schema(_LEAF_SCHEMA).parquet(leaf)
+        tmp = os.path.join(leaf, COMPACT_TMP_DIR)
         (
             df.repartition(n_out)
             .sortWithinPartitions("ts", "sa_num")

@@ -704,31 +704,33 @@ def test_failed_decode_cmd_output_stays_hidden(spark, tmp_path):
 
 
 def test_service_reads_never_infer_parquet_schema():
-    """Spark-free lint: every parquet read chain in service.py carries
-    `.schema(`, so schema inference (one Spark job per read) cannot creep
-    back onto the query path."""
+    """Spark-free lint: every parquet read chain in service.py and
+    sources/sinks.py carries `.schema(`, so schema inference (one Spark
+    job per read) cannot creep back onto the query or compaction path."""
     import ast
 
     import nfdump2clickhouse_spark.service as service
+    import nfdump2clickhouse_spark.sources.sinks as sinks
 
-    tree = ast.parse(open(service.__file__).read())
     reads = 0
-    for node in ast.walk(tree):
-        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "parquet"):
-            continue
-        chain, cur = [], node.func.value
-        while isinstance(cur, (ast.Call, ast.Attribute)):
-            if isinstance(cur, ast.Attribute):
-                chain.append(cur.attr)
-                cur = cur.value
-            else:
-                cur = cur.func
-        if "write" in chain or "writeStream" in chain:
-            continue
-        reads += 1
-        assert "schema" in chain, f"service.py:{node.lineno}: parquet read without .schema("
-    assert reads >= 2  # table() and the staged-parquet stream
+    for module in (service, sinks):
+        where = os.path.basename(module.__file__)
+        for node in ast.walk(ast.parse(open(module.__file__).read())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"):
+                continue
+            chain, cur = [], node.func.value
+            while isinstance(cur, (ast.Call, ast.Attribute)):
+                if isinstance(cur, ast.Attribute):
+                    chain.append(cur.attr)
+                    cur = cur.value
+                else:
+                    cur = cur.func
+            if "write" in chain or "writeStream" in chain:
+                continue
+            reads += 1
+            assert "schema" in chain, f"{where}:{node.lineno}: parquet read without .schema("
+    assert reads >= 3  # table(), the staged-parquet stream and compaction
 
 
 def test_ingest_decisions_exist_once():

@@ -57,15 +57,15 @@ def test_transform_with_state_accumulates(spark):
     assert total == 450  # same stitched totals as the applyInPandasWithState path
 
 
-def test_compaction_merges_small_files(spark, tmp_path):
+def _compaction_service(spark, base: str):
+    """A service whose one leaf holds >= 4 small files: 4 rotations in one
+    dt= day drained as 4 micro-batches. Returns (service, leaf dir)."""
     from datetime import datetime, timezone
 
     from nfdump2clickhouse_spark.service import FlowService, parse_config
     from nfdump2clickhouse_spark.sources.flows import write_flow_files
 
-    base = str(tmp_path)
     watch = os.path.join(base, "watch")
-    # 4 rotations in one dt= day → 4 micro-batches → ≥4 small files per leaf
     write_flow_files(
         spark,
         watch,
@@ -81,8 +81,12 @@ def test_compaction_merges_small_files(spark, tmp_path):
         )
     svc = FlowService(spark, parse_config(conf))
     svc.run_once()
-
     leaf = os.path.join(base, "flows", "dt=2024-03-01", "flowsrc=src")
+    return svc, leaf
+
+
+def test_compaction_merges_small_files(spark, tmp_path):
+    svc, leaf = _compaction_service(spark, str(tmp_path))
     before = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
     assert len(before) >= 4
     total_before = svc.table().count()
@@ -92,6 +96,33 @@ def test_compaction_merges_small_files(spark, tmp_path):
     after = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
     assert len(after) == 1  # tiny data → single target file
     assert svc.table().count() == total_before  # lossless rewrite
+
+
+def test_compaction_crash_leaves_readers_unchanged(spark, tmp_path, monkeypatch):
+    """A crash after compaction staged its rewrite, before it swapped the
+    files in, leaves the staged copy on disk; readers must not count it
+    as data or as a partition."""
+    from nfdump2clickhouse_spark.sources import sinks
+
+    svc, leaf = _compaction_service(spark, str(tmp_path))
+
+    def rows_and_sources():
+        table = svc.table()
+        srcs = table.select("flowsrc").distinct().collect()
+        return table.count(), sorted(r.flowsrc for r in srcs)
+
+    before = rows_and_sources()
+
+    def crash(path):
+        raise OSError(f"injected crash removing {path}")
+
+    monkeypatch.setattr(sinks.os, "remove", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        svc.run_compaction()
+    monkeypatch.undo()
+
+    assert os.path.isdir(os.path.join(leaf, sinks.COMPACT_TMP_DIR))
+    assert rows_and_sources() == before
 
 
 def test_retention_partition_drop(spark):
