@@ -11,7 +11,7 @@ long-lived session compiles each whole-stage class once. At Spark's
 default of 100 entries, the 17 ``bench.py`` headline keys (about 230
 distinct classes) cycled through the LRU and every steady-state pass
 recompiled 223 classes with Janino; at 1000 entries a repeat pass
-compiles 0. ``codegen_compiles`` reads the JVM-wide compile count.
+compiles 0 to 4. ``codegen_compiles`` reads the JVM-wide compile count.
 """
 
 from __future__ import annotations
