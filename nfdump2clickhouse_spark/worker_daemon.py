@@ -10,7 +10,7 @@ it. Spark's worker path holds two archives the workers need not read:
 - the spark-core jar, added by ``PythonUtils.sparkPythonPath``: 5,359
   entries, no Python, 29-40 ms per re-read;
 - ``$SPARK_HOME/python/lib/pyspark.zip``: a copy of pyspark, 7-9 ms per
-  re-read with about 14 importers. It is dropped only when the pyspark
+  re-read with 12-14 importers. It is dropped only when the pyspark
   found without it has a byte-identical ``pyspark/version.py``, so a
   mismatched install keeps Spark's copy.
 

@@ -11,6 +11,7 @@ import zipfile
 
 import pytest
 from pyspark.errors import ArithmeticException
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nfdump2clickhouse_spark.session import PACKAGE_ROOT, codegen_compiles
@@ -160,6 +161,25 @@ def test_runtime_errors_keep_their_condition(spark):
         spark.conf.set("spark.sql.ansi.enabled", ansi)
     assert err.value.getCondition() == "DIVIDE_BY_ZERO"
     assert "== DataFrame ==" not in str(err.value)
+
+
+def test_column_calls_look_up_no_jvm_class(spark, monkeypatch):
+    """PySpark resolves some JVM classes by name on every Column and
+    DataFrame call; the session's JVM view answers those without asking
+    the JVM."""
+    client = spark._jvm._gateway_client
+    send, lookups = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        if command.startswith("r\nu\n"):  # py4j: reflection, unknown member
+            lookups.append(command.split("\n")[2])
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    df = spark.range(3).select(F.col("id"), F.lit(1).alias("one"), F.array("id", F.lit(2)).alias("a"))
+    df = df.withColumn("rank", F.row_number().over(Window.partitionBy("one").orderBy(F.col("id").desc())))
+    df.where(F.col("rank") > 1).groupBy("one").agg(F.sum("id"))
+    assert lookups == []
 
 
 class _BuilderUses(ast.NodeVisitor):
