@@ -6,12 +6,19 @@ pandas, projects 48 → 13 columns, and tags each row with a per-watch-dir
 CSV (or parquet) read, a Column-only projection, and derived numeric
 address columns so CIDR predicates push down (SURVEY §4.3.2).
 
+Native captures (nffile, v9/IPFIX) decode through ``decode_capture`` into
+FLOW_COLUMNS tuples, and ``flows_arrow`` is the one conversion of those
+tuples to the ``schemas.FLOWS`` contract: the service's decode stage
+writes its table to parquet (``write_staged_flows``) and the bulk
+directory readers stream its record batches through ``mapInArrow``.
+
 Also hosts the deterministic synthetic flow generator used by streaming
 and ingest tests (FIXTURES.md §B) — nfcapd-style 5-minute rotated files.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 from datetime import datetime, timedelta, timezone
@@ -20,12 +27,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.ip import ipv4_to_num
-from ..schemas import NFDUMP_CSV_RAW
+from ..schemas import FLOWS, NFDUMP_CSV_RAW
 from .netflow_v9 import FLOW_COLUMNS, decode_flow_stream
 from .nffile import decode_nffile, is_nffile
-
-#: columns kept from the raw nfdump record (the reference's projection [P])
-KEEP = ["ts", "te", "td", "sa", "da", "sp", "dp", "pr", "flg", "ipkt", "ibyt", "ra"]
 
 
 def project_flows(raw: DataFrame, flowsrc: str) -> DataFrame:
@@ -91,22 +95,25 @@ def decode_capture(
     return decode_flow_stream(content, exporter=exporter)
 
 
-def write_staged_flows(flows: list[tuple], flowsrc: str, path: str) -> None:
-    """Write decoded FLOW_COLUMNS tuples as ONE parquet file with exactly
-    the FLOWS columns (``_arrow_schema``): epoch-ms ts/te become µs
-    timestamps and every row carries ``flowsrc``. Zero flows write a
-    0-row file, so an empty capture still stages (and ledgers) like any
-    other."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+@functools.cache
+def _flows_arrow_schema():
+    """``schemas.FLOWS`` as pyarrow types, derived once per process: µs
+    timestamps with tz UTC, as Spark writes them, so even a
+    schema-inferring read of a file written with it sees exactly FLOWS."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    # UTC-adjusted timestamps, as Spark writes them, so even a
-    # schema-inferring read of the file sees exactly FLOWS
-    schema = pa.schema(
-        f.with_type(pa.timestamp("us", tz="UTC"))
-        if pa.types.is_timestamp(f.type) else f
-        for f in _arrow_schema()
-    )
+    return to_arrow_schema(FLOWS)
+
+
+def flows_arrow(flows: list[tuple], flowsrc: str):
+    """Decoded FLOW_COLUMNS tuples → a pyarrow table with exactly the
+    FLOWS columns: epoch-ms ts/te become µs timestamps and every row
+    carries ``flowsrc``. The one conversion from decoded captures to the
+    flows contract, for the service's staged files and the bulk readers
+    alike. Zero flows give a 0-row table."""
+    import pyarrow as pa
+
+    schema = _flows_arrow_schema()
     cols = list(zip(*flows)) or [()] * len(FLOW_COLUMNS)
     arrays = [
         pa.array([ms * 1000 for ms in values]
@@ -114,38 +121,33 @@ def write_staged_flows(flows: list[tuple], flowsrc: str, path: str) -> None:
         for f, values in zip(schema, cols)
     ]
     arrays.append(pa.array([flowsrc] * len(flows), pa.string()))
-    pq.write_table(pa.Table.from_arrays(arrays, schema=schema), path)
+    return pa.Table.from_arrays(arrays, schema=schema)
+
+
+def write_staged_flows(flows: list[tuple], flowsrc: str, path: str) -> None:
+    """Write decoded FLOW_COLUMNS tuples as ONE parquet file of
+    ``flows_arrow``. Zero flows write a 0-row file, so an empty capture
+    still stages (and ledgers) like any other."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(flows_arrow(flows, flowsrc), path)
 
 
 def _read_capture_directory(
     spark: SparkSession, path: str, fmt: str, flowsrc: str, exporter: str | None
 ) -> DataFrame:
     """Every capture under ``path`` decoded whole by ``decode_capture`` on
-    one executor task (``binaryFile`` + Arrow-batched ``mapInPandas``),
-    then cast to the FLOWS contract plus the layout columns."""
+    one executor task (``binaryFile`` + ``mapInArrow``), as the record
+    batches of ``flows_arrow``, plus the layout columns."""
 
     def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                flows = decode_capture(bytes(content), fmt, exporter=exporter)
-                if flows:
-                    yield pd.DataFrame(flows, columns=FLOW_COLUMNS)
+        for batch in batches:
+            for content in batch.column("content").to_pylist():
+                flows = decode_capture(content, fmt, exporter=exporter)
+                yield from flows_arrow(flows, flowsrc).to_batches()
 
     raw = spark.read.format("binaryFile").load(path)
-    decoded = raw.select("content").mapInPandas(
-        decode,
-        "ts long, te long, td double, sa string, da string, sp int, dp int,"
-        " pr string, flg string, ipkt long, ibyt long, ra string",
-    )
-    flows = decoded.select(
-        F.timestamp_millis("ts").alias("ts"),
-        F.timestamp_millis("te").alias("te"),
-        "td", "sa", "da", "sp", "dp", "pr", "flg", "ipkt", "ibyt", "ra",
-        F.lit(flowsrc).alias("flowsrc"),
-    )
-    return with_layout_columns(flows)
+    return with_layout_columns(raw.select("content").mapInArrow(decode, FLOWS))
 
 
 def read_v9_directory(
@@ -157,7 +159,7 @@ def read_v9_directory(
 
     One capture file decodes whole on one executor (template state never
     crosses rotation files — exporters re-announce per rotation); the
-    decoder emits epoch-ms integers which are cast to TimestampType here.
+    decoder's epoch-ms integers become TimestampType in ``flows_arrow``.
     The result feeds ``sinks.write_flows_partitioned`` unchanged."""
     return _read_capture_directory(spark, path, "v9", flowsrc, exporter)
 
@@ -226,29 +228,6 @@ def flow_rows(
     return rows
 
 
-#: pyarrow schema mirroring schemas.FLOWS (µs timestamps — Spark-readable)
-def _arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("ts", pa.timestamp("us")),
-            ("te", pa.timestamp("us")),
-            ("td", pa.float64()),
-            ("sa", pa.string()),
-            ("da", pa.string()),
-            ("sp", pa.int32()),
-            ("dp", pa.int32()),
-            ("pr", pa.string()),
-            ("flg", pa.string()),
-            ("ipkt", pa.int64()),
-            ("ibyt", pa.int64()),
-            ("ra", pa.string()),
-            ("flowsrc", pa.string()),
-        ]
-    )
-
-
 def write_flow_files(
     spark: SparkSession,
     out_dir: str,
@@ -273,7 +252,7 @@ def write_flow_files(
 
     start = start or datetime(2024, 3, 1, tzinfo=timezone.utc)
     os.makedirs(out_dir, exist_ok=True)
-    schema = _arrow_schema()
+    schema = _flows_arrow_schema()
     paths = []
     for fidx in range(n_files):
         fstart = start + timedelta(minutes=5 * fidx)
@@ -300,7 +279,7 @@ def write_flow_files(
                 w.writerow(NFDUMP_CSV_FIELDS)
                 for r in rows:
                     full = {k: "0" for k in NFDUMP_CSV_FIELDS}
-                    for k in KEEP:
+                    for k in FLOW_COLUMNS:
                         v = r[k]
                         full[k] = "" if v is None else str(v)
                     w.writerow([full[k] for k in NFDUMP_CSV_FIELDS])

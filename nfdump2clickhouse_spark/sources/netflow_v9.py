@@ -11,7 +11,7 @@ This module provides:
   that makes the decode stateful);
 - ``decode_flow_stream``: a pure-Python streaming decoder keeping a
   per-(source, template-id) cache while walking one capture file. It is
-  the shared decode body for both the ``binaryFile``+``mapInPandas``
+  the shared decode body for both the ``binaryFile``+``mapInArrow``
   operator and the Python DataSource partition reader
   (``flows_netflow_v9_decode``) — one rotation file per partition, the
   exact sharding of the real nfcapd directory layout.

@@ -738,24 +738,29 @@ def test_ingest_decisions_exist_once():
     layout-column dict (`"sa_num": ipv4_to_num(...)`) is built once, the
     two capture decoders are called only from `decode_capture` (outside
     their own modules), and the `batch_{id}.done` ledger marker path is
-    built once."""
+    built once. Decoded captures reach the flows contract only through
+    `flows_arrow`: no `mapInPandas` or `timestamp_millis` call (the
+    stream demo's DataSource needs neither), and no pyarrow schema
+    literal that lists the flows columns besides `schemas.FLOWS`."""
     import ast
     import glob
 
     import nfdump2clickhouse_spark as pkg
+    from nfdump2clickhouse_spark.sources.netflow_v9 import FLOW_COLUMNS
 
     root = os.path.dirname(pkg.__file__)
     files = [os.path.join(root, "service.py"),
              *glob.glob(os.path.join(root, "sources", "*.py")),
              *glob.glob(os.path.join(root, "streaming", "*.py"))]
     decoders = {"decode_flow_stream", "decode_nffile"}
-    layouts, markers, stray_calls = [], [], []
+    forks = {"mapInPandas", "timestamp_millis"}
+    layouts, markers, stray_calls, conversions = [], [], [], []
     for path in files:
         tree = ast.parse(open(path).read())
         where = os.path.relpath(path, root)
         defined = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
         aliases = {a.asname or a.name: a.name for n in ast.walk(tree)
-                   if isinstance(n, ast.ImportFrom) for a in n.names}
+                   if isinstance(n, (ast.Import, ast.ImportFrom)) for a in n.names}
 
         def visit(node, func):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -777,6 +782,14 @@ def test_ingest_decisions_exist_once():
                 if (name in decoders and name not in defined
                         and func != "decode_capture"):
                     stray_calls.append(f"{where}:{node.lineno}")
+                if name in forks:
+                    conversions.append(f"{where}:{func}:{name}")
+                if (name == "schema" and isinstance(f, ast.Attribute)
+                        and aliases.get(getattr(f.value, "id", None)) == "pyarrow"
+                        and set(FLOW_COLUMNS) <= {
+                            n.value for n in ast.walk(node)
+                            if isinstance(n, ast.Constant)}):
+                    conversions.append(f"{where}:{func}:pyarrow schema")
             for child in ast.iter_child_nodes(node):
                 visit(child, func)
 
@@ -784,3 +797,4 @@ def test_ingest_decisions_exist_once():
     assert len(layouts) == 1, f"layout columns built at {layouts}"
     assert stray_calls == [], f"decoder called outside decode_capture at {stray_calls}"
     assert len(markers) == 1, f"batch ledger marker built at {markers}"
+    assert conversions == [], f"flows contract built outside flows_arrow at {conversions}"
