@@ -101,6 +101,9 @@ COMPACT_PARTITION_GLOB = "dt=*/flowsrc=*"
 #: a leaf's staging dir: a leading "_" and no "=" keep it out of Spark's
 #: partition discovery, so readers never see the rewrite, even after a crash
 COMPACT_TMP_DIR = "_compact_tmp"
+#: the list of a leaf's original files, written into its staging dir once
+#: the rewrite is complete; its presence means the swap must roll forward
+COMPACT_SWAP_LIST = "_originals"
 #: the columns of a leaf's files: the table without its partition columns
 _LEAF_SCHEMA = StructType(
     [f for f in FLOWS_TABLE.fields if f.name not in ("dt", "flowsrc")]
@@ -119,12 +122,23 @@ def compact_partitions(spark: SparkSession, path: str) -> list[str]:
     Runs per-leaf-partition (never a global rewrite), so at 100 TB it is
     driven incrementally: only partitions whose file count exceeds a
     threshold are rewritten, each an independent job touching one
-    partition's data. Returns the compacted partition dirs."""
+    partition's data. Returns the compacted partition dirs.
+
+    The swap rolls forward: a run that dies after the rewrite is staged
+    leaves the staging dir with the list of originals, and the next run
+    finishes that leaf's swap instead of rewriting what is left."""
     import glob as _glob
     import math
 
     compacted = []
     for leaf in sorted(_glob.glob(os.path.join(path, COMPACT_PARTITION_GLOB))):
+        tmp = os.path.join(leaf, COMPACT_TMP_DIR)
+        swap_list = os.path.join(tmp, COMPACT_SWAP_LIST)
+        if os.path.exists(swap_list):
+            with open(swap_list) as fh:
+                _swap_in(leaf, tmp, fh.read().splitlines())
+            compacted.append(leaf)
+            continue
         files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
         if len(files) <= 1:
             continue
@@ -133,7 +147,6 @@ def compact_partitions(spark: SparkSession, path: str) -> list[str]:
         if n_out >= len(files):
             continue
         df = spark.read.schema(_LEAF_SCHEMA).parquet(leaf)
-        tmp = os.path.join(leaf, COMPACT_TMP_DIR)
         (
             df.repartition(n_out)
             .sortWithinPartitions("ts", "sa_num")
@@ -141,14 +154,27 @@ def compact_partitions(spark: SparkSession, path: str) -> list[str]:
             .option("compression", "zstd")
             .parquet(tmp)
         )
-        for f in files:
-            os.remove(os.path.join(leaf, f))
-        for f in os.listdir(tmp):
-            if f.endswith(".parquet"):
-                os.replace(os.path.join(tmp, f), os.path.join(leaf, f))
-        shutil.rmtree(tmp)
+        with open(swap_list + ".tmp", "w") as fh:
+            fh.write("\n".join(files))
+        os.replace(swap_list + ".tmp", swap_list)
+        _swap_in(leaf, tmp, files)
         compacted.append(leaf)
     return compacted
+
+
+def _swap_in(leaf: str, tmp: str, originals: list[str]) -> None:
+    """Replace ``originals`` in ``leaf`` by the parquet files staged in
+    ``tmp``, each file together with its Hadoop ``.crc``, then drop
+    ``tmp``. Every step skips what an earlier, interrupted call already
+    did, so calling it again finishes the swap."""
+    for f in originals:
+        for name in (f, f".{f}.crc"):
+            if os.path.exists(os.path.join(leaf, name)):
+                os.remove(os.path.join(leaf, name))
+    for f in os.listdir(tmp):
+        if f.endswith((".parquet", ".parquet.crc")):
+            os.replace(os.path.join(tmp, f), os.path.join(leaf, f))
+    shutil.rmtree(tmp)
 
 
 def batch_ledger(write, ledger_path: str | None):

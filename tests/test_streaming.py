@@ -125,6 +125,38 @@ def test_compaction_crash_leaves_readers_unchanged(spark, tmp_path, monkeypatch)
     assert rows_and_sources() == before
 
 
+def test_compaction_swap_rolls_forward_after_a_crash(spark, tmp_path, monkeypatch):
+    """A crash part-way through compaction's swap, at the second file
+    removal in the leaf, loses no rows: the next run finishes the swap
+    instead of compacting what is left, and every file leaves or enters
+    the leaf together with its `.crc`."""
+    from nfdump2clickhouse_spark.sources import sinks
+
+    svc, leaf = _compaction_service(spark, str(tmp_path))
+    before = sorted(svc.table().collect())
+    assert len(before) == 400
+    remove, removed = os.remove, []
+
+    def crash_on_second(path):
+        if os.path.dirname(path) == leaf:
+            removed.append(path)
+            if len(removed) == 2:
+                raise OSError(f"injected crash removing {path}")
+        remove(path)
+
+    monkeypatch.setattr(sinks.os, "remove", crash_on_second)
+    with pytest.raises(OSError, match="injected crash"):
+        svc.run_compaction()
+    monkeypatch.undo()
+
+    assert leaf in svc.run_compaction()
+    assert sorted(svc.table().collect()) == before
+    names = os.listdir(leaf)
+    assert sinks.COMPACT_TMP_DIR not in names
+    orphans = [n for n in names if n.endswith(".crc") and n[1:-4] not in names]
+    assert orphans == []
+
+
 def test_retention_partition_drop(spark):
     path, dropped = retention_partition_demo(spark)
     assert dropped == ["dt=2024-03-01"]
