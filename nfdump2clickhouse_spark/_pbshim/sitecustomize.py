@@ -9,54 +9,44 @@ automatically by every Python process with this dir on PYTHONPATH,
 including Spark's forked workers) therefore relaxes ONLY the
 same-major / one-minor-newer case — everything else still reaches the
 original validator — and only when the shim is explicitly enabled.
-Keep the patch logic in sync with pbcompat.relax_runtime_validator().
+The patch itself is ``pbcompat.relax_runtime_validator``, loaded from its
+file in the package directory above this one, so the package (and the
+pyspark it imports) is not imported at interpreter start.
 
 Python imports only the FIRST sitecustomize on sys.path, so being on
 PYTHONPATH shadows any system sitecustomize; the tail of this module
 chain-loads the next one found so it still runs.
 
 Remove when a real protobuf wheel is available."""
+import importlib.util as _ilu
 import os
+import sys as _sys
+
+_here = os.path.dirname(os.path.abspath(__file__))
+
+
+def _exec_file(name, path):
+    spec = _ilu.spec_from_file_location(name, path)
+    module = _ilu.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
 
 if os.environ.get("SPARK_GRAFT_PB_SHIM") == "1":
     try:
-        from google.protobuf import runtime_version as _rv
-
-        if not getattr(_rv, "_spark_graft_relaxed", False):
-            _orig = _rv.ValidateProtobufRuntimeVersion
-
-            def _validate(*args, **kwargs):
-                try:
-                    gen_major = kwargs.get("gen_major", args[1])
-                    gen_minor = kwargs.get("gen_minor", args[2])
-                    if (
-                        gen_major == _rv.MAJOR
-                        and _rv.MINOR < gen_minor <= _rv.MINOR + 1
-                    ):
-                        return  # one-minor-newer gencode: allowed
-                except Exception:
-                    pass
-                return _orig(*args, **kwargs)
-
-            _rv.ValidateProtobufRuntimeVersion = _validate
-            _rv._spark_graft_relaxed = True
+        _exec_file("_spark_graft_pbcompat",
+                   os.path.join(os.path.dirname(_here), "pbcompat.py")
+                   ).relax_runtime_validator()
     except Exception:
         pass
 
 # chain-load the sitecustomize this one shadows (first match on sys.path
 # outside this directory), whether or not the shim itself is enabled
 try:
-    import importlib.util as _ilu
-    import sys as _sys
-
-    _here = os.path.dirname(os.path.abspath(__file__))
     for _p in _sys.path:
         _cand = os.path.join(_p or ".", "sitecustomize.py")
         if os.path.isfile(_cand) and os.path.dirname(os.path.abspath(_cand)) != _here:
-            _spec = _ilu.spec_from_file_location("_chained_sitecustomize", _cand)
-            if _spec and _spec.loader:
-                _mod = _ilu.module_from_spec(_spec)
-                _spec.loader.exec_module(_mod)
+            _exec_file("_chained_sitecustomize", _cand)
             break
 except Exception:
     pass

@@ -44,8 +44,8 @@ def relax_runtime_validator() -> bool:
     """Patch `runtime_version.ValidateProtobufRuntimeVersion` to accept
     gencode that is same-major and at most ONE minor newer than the
     runtime; every other combination still goes through the original
-    validator (same logic runs in `_pbshim/sitecustomize.py` for forked
-    workers — keep the two in sync)."""
+    validator. `_pbshim/sitecustomize.py` runs this function inside each
+    forked worker."""
     try:
         from google.protobuf import runtime_version as _rv
 
