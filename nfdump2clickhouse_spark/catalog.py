@@ -24,21 +24,27 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _TS_NANOS_CACHE: dict[str, bool] = {}
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The files of parquet path ``path``: itself when it is a file, else
+    its sorted ``part-*.parquet`` files (directory-form parquet, as Spark
+    writes it), falling back to any ``*.parquet`` in it."""
+    import glob
+
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(glob.glob(os.path.join(path, "part-*.parquet"))) or sorted(
+        glob.glob(os.path.join(path, "*.parquet"))
+    )
+
+
 def _events_ts_is_nanos(path: str) -> bool:
     """True when the events fixture stores ``ts`` as TIMESTAMP(NANOS)."""
     cached = _TS_NANOS_CACHE.get(path)
     if cached is None:
-        import glob
-
         import pyarrow.parquet as pq
         import pyarrow.types as pat
 
-        probe = path
-        if os.path.isdir(path):  # Spark writes directory-form parquet
-            parts = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
-            if not parts:
-                parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-            probe = parts[0] if parts else path
+        probe = (_parquet_files(path) or [path])[0]
         ts_type = pq.read_schema(probe).field("ts").type
         cached = pat.is_timestamp(ts_type) and ts_type.unit == "ns"
         _TS_NANOS_CACHE[path] = cached
@@ -91,21 +97,13 @@ def parquet_column_stats(
     caller takes its in-plan bounds arm. Callers must still treat the
     bounds as BINNING bounds (monotone bucketing only), not as exact
     extrema — FLOAT/DOUBLE footers are NaN-blind."""
-    import glob
-
     import pyarrow.parquet as pq
 
     _EXACT_PHYSICAL = {"INT32", "INT64", "FLOAT", "DOUBLE"}
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    parts = [path]
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "part-*.parquet"))) or sorted(
-            glob.glob(os.path.join(path, "*.parquet"))
-        )
     lo = hi = None
     total = 0
-    for p in parts:
+    for p in _parquet_files(os.path.join(sf_dir, f"{name}.parquet")):
         md = pq.ParquetFile(p).metadata
         total += md.num_rows
         try:
