@@ -18,8 +18,6 @@ from .schemas import FIXTURE_SCHEMAS
 
 TABLE_NAMES = tuple(FIXTURE_SCHEMAS)
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 _TS_NANOS_CACHE: dict[str, bool] = {}
 

@@ -1,6 +1,9 @@
-"""Approximate-nearest-neighbor search over the embedding column
-(driver-mandated extension): brute-force cosine top-k as the correctness
-baseline, IVF cell-probing as the scale path.
+"""Embedding and approximate-nearest-neighbor operators (``ann_*``, ``emb_*``).
+
+Brute-force cosine top-k is the correctness baseline; IVF cell-probing
+and product quantization are the scale path. The ``emb_*`` keys
+post-process embeddings (normalization, quantization, projection,
+whitening) and report their geometry.
 
 At 100 TB: the query set broadcasts against a partitioned vector table;
 IVF assignment is one broadcast join against the centroid table (k×dim,
@@ -17,8 +20,262 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table
-from ..functions.similarity import as_double, cosine, dot
+from ..functions.similarity import as_double, cosine, dot, l2_norm
 from ..registry import register
+
+
+# --- single-pass distributed PCA ---------------------------------------------
+@register("emb_pca_project")  # rows-only: eigendecomposition has no SQL analog
+def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed PCA, the one-pass shape that scales: (1) mapInPandas
+    computes per-Arrow-batch Gram partials Xᵀ X and feature sums with one
+    numpy GEMM each — emitting a fixed 64×64 matrix per batch regardless
+    of row count; (2) a tiny reduce sums them (shuffle volume: P·64²
+    doubles, independent of corpus size); (3) the driver eigendecomposes
+    the 64×64 covariance (O(dim³), constant); (4) top-4 components are
+    broadcast back as a literal and projection is one vectorized GEMM per
+    batch. No iteration, no per-row Python, no N×dim collect. Rows-only:
+    tests/test_correctness.py pins variance-explained and
+    reconstruction-orthogonality against numpy's full PCA instead.
+    """
+    import numpy as np
+    import pandas as pd
+
+    # a NULL embedding is un-projectable (r9 edge batch, nullmix mode:
+    # None cells would break the np.stack in every Arrow batch)
+    e = (
+        table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("embedding").isNotNull())
+    )
+    dim = 64
+
+    def gram_partials(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            yield pd.DataFrame(
+                {
+                    "n": [float(X.shape[0])],
+                    "s": [X.sum(axis=0).tolist()],
+                    "g": [(X.T @ X).ravel().tolist()],
+                }
+            )
+
+    parts = e.select("embedding").mapInPandas(
+        gram_partials, "n double, s array<double>, g array<double>"
+    )
+    agg = parts.agg(
+        F.sum("n").alias("n"),
+        F.array(*[F.sum(F.element_at("s", i + 1)) for i in range(dim)]).alias("s"),
+    )
+    # gram matrix reduced the same way but via explode to keep the agg
+    # expression count bounded: 4096 positions → (pos, val) rows
+    gsum = (
+        parts.select(F.posexplode("g").alias("pos", "val"))
+        .groupBy("pos")
+        .agg(F.sum("val").alias("v"))
+        .collect()
+    )
+    row = agg.collect()[0]
+    if not row["n"]:
+        # empty corpus (r9 edge batch, class-3 guard): the global agg's
+        # one row carries NULL totals — no moments to decompose, return
+        # the schema-stable empty projection instead of None arithmetic
+        return spark.createDataFrame(
+            [], "vec_id long, pc1 double, pc2 double, pc3 double, pc4 double"
+        )
+    n_rows, s = row["n"], np.array(row["s"])
+    G = np.zeros(dim * dim)
+    for r in gsum:
+        G[r["pos"]] = r["v"]
+    G = G.reshape(dim, dim)
+    mean = s / n_rows
+    cov = G / n_rows - np.outer(mean, mean)
+    vals, vecs = np.linalg.eigh(cov)
+    comps = vecs[:, ::-1][:, :4]  # top-4 components, (dim, 4)
+    # deterministic sign: force the largest-|coeff| entry positive
+    for j in range(4):
+        i = int(np.abs(comps[:, j]).argmax())
+        if comps[i, j] < 0:
+            comps[:, j] = -comps[:, j]
+    comps_b = comps.copy()
+    mean_b = mean.copy()
+
+    def project(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            P = (X - mean_b) @ comps_b
+            out = pd.DataFrame(P.round(4), columns=["pc1", "pc2", "pc3", "pc4"])
+            out.insert(0, "vec_id", pdf["vec_id"].to_numpy())
+            yield out
+
+    return e.mapInPandas(
+        project, "vec_id long, pc1 double, pc2 double, pc3 double, pc4 double"
+    )
+
+
+# --- Matryoshka truncation ---------------------------------------------------
+_MRL_DIM = 16
+
+
+@register(
+    "emb_matryoshka_truncate",
+    oracle=f"""
+    WITH e AS (
+      SELECT vec_id,
+             list_transform(embedding[1:{_MRL_DIM}], x -> CAST(x AS DOUBLE))
+               AS emb
+      FROM embeddings
+    ),
+    n AS (
+      SELECT vec_id, emb,
+             sqrt(list_aggregate(list_transform(emb, x -> x * x), 'sum'))
+               AS nrm
+      FROM e
+    )
+    SELECT vec_id, ROUND(nrm, 4) AS sub_l2,
+           ROUND(emb[1] / nrm, 4) + 0 AS u0,
+           ROUND(emb[2] / nrm, 4) + 0 AS u1
+    FROM n WHERE nrm > 0
+    """,
+)
+def emb_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matryoshka (MRL) truncation: keep the first 16 of 64 dims and
+    re-L2-normalize — the 4× index/bandwidth saving modern embedding
+    models are trained to tolerate (candidate retrieval runs on the
+    prefix; full-dim rescoring only on survivors). Row-local slice +
+    HOF fold, zero shuffle; the retained-recall contract vs full-dim
+    brute force is pinned in tests — the number that decides whether
+    the cheap prefix index is usable."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.slice(as_double("embedding"), 1, _MRL_DIM).alias("emb")
+    )
+    nrm = F.sqrt(F.aggregate("emb", F.lit(0.0), lambda a, x: a + x * x))
+    return (
+        e.select("vec_id", "emb", nrm.alias("nrm"))
+        .filter(F.col("nrm") > 0)
+        .select(
+            "vec_id",
+            F.round("nrm", 4).alias("sub_l2"),
+            (F.round(F.get("emb", 0) / F.col("nrm"), 4) + 0).alias("u0"),
+            (F.round(F.get("emb", 1) / F.col("nrm"), 4) + 0).alias("u1"),
+        )
+    )
+
+
+@register(
+    "emb_normalize",
+    oracle="""
+    WITH e AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+      FROM embeddings
+    ),
+    n AS (
+      SELECT vec_id, emb,
+             sqrt(list_aggregate(list_transform(emb, x -> x * x), 'sum')) AS nrm
+      FROM e
+    )
+    SELECT vec_id, ROUND(nrm, 4) AS l2,
+           ROUND(emb[1] / nrm, 4) + 0 AS u0,
+           ROUND(emb[2] / nrm, 4) + 0 AS u1,
+           ROUND(emb[3] / nrm, 4) + 0 AS u2
+    FROM n
+    """,
+)
+def emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L2-normalize embeddings (the prerequisite for cosine-as-dot ANN
+    indexes: normalize once at ingest, then every similarity is a plain
+    dot product). Pure zip_with/aggregate HOFs, zero shuffle; the fold
+    is sequential so the norm is bit-identical to the oracle's ordered
+    list sum."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    nrm = l2_norm(F.col("emb"))
+    # "+ 0" canonicalizes -0.0 → 0.0 in both engines (SURVEY §8 recipe)
+    return e.select(
+        "vec_id",
+        F.round(nrm, 4).alias("l2"),
+        (F.round(F.get("emb", 0) / nrm, 4) + 0).alias("u0"),
+        (F.round(F.get("emb", 1) / nrm, 4) + 0).alias("u1"),
+        (F.round(F.get("emb", 2) / nrm, 4) + 0).alias("u2"),
+    )
+
+
+@register(
+    "emb_quantize_int8",
+    oracle="""
+    WITH e AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+      FROM embeddings
+    ),
+    s AS (
+      SELECT vec_id, emb,
+             greatest(list_aggregate(list_transform(emb, x -> abs(x)), 'max'),
+                      1e-30) AS scale
+      FROM e
+    ),
+    q AS (
+      SELECT vec_id, emb, scale,
+             list_transform(emb, x -> CAST(round(127 * x / scale) AS INT)) AS qv
+      FROM s
+    )
+    SELECT vec_id, ROUND(scale, 4) AS scale,
+           qv[1] AS q0, qv[2] AS q1, qv[3] AS q2,
+           floor(list_aggregate(
+                   [pow(emb[i] - qv[i] * scale / 127, 2)
+                    for i in generate_series(1, len(emb))],
+                   'sum') / len(emb) * 1000000 + 0.5 + 1e-9) / 1000000 AS mse
+    FROM q
+    """,
+)
+def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric per-vector int8 quantization (the 4× storage cut every
+    100 TB vector corpus takes before indexing): scale = max |x|,
+    q = round(127·x/scale), plus the dequantization MSE as the quality
+    audit column. All array HOFs in codegen — no Python, no shuffle;
+    quantized vectors are emitted as spot-check elements because hashing
+    the full int array adds nothing the MSE doesn't already cover."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    # greatest(·, 1e-30): an all-zero embedding would otherwise divide by
+    # zero — NaN q-values here, a hard NaN→INT cast error in the oracle
+    # (ADVICE r1); with the floor the degenerate vector quantizes to all
+    # zeros with mse 0 on both engines
+    scale = F.greatest(F.array_max(F.transform("emb", F.abs)), F.lit(1e-30))
+    # internal name deliberately differs from the output alias "scale":
+    # with identical names, Spark's implicit LATERAL column alias
+    # resolution would bind the mse expression below to the ROUNDED
+    # output column that precedes it in the select list, silently
+    # dequantizing with round(scale, 4) instead of scale
+    s = e.select("vec_id", "emb", scale.alias("_scale"))
+    q = s.withColumn(
+        "qv",
+        F.transform("emb", lambda x: F.round(x * 127 / F.col("_scale"), 0).cast("int")),
+    )
+    err = F.zip_with(
+        "emb",
+        "qv",
+        lambda x, qq: F.pow(x - qq.cast("double") * F.col("_scale") / 127, 2),
+    )
+    mse = F.aggregate(err, F.lit(0.0), lambda acc, x: acc + x) / F.size("emb")
+    # epsilon half-up rounding (mse ≥ 0): the quantization error can land
+    # exactly on a .5e-6 boundary where engine ulp noise flips the 6th
+    # decimal — same recipe as ts_interpolate / text_quality_filter_e2e
+    eps_round = F.floor(mse * 1000000 + 0.5 + 1e-9) / 1000000
+    return q.select(
+        "vec_id",
+        F.round("_scale", 4).alias("scale"),
+        F.get("qv", 0).alias("q0"),
+        F.get("qv", 1).alias("q1"),
+        F.get("qv", 2).alias("q2"),
+        eps_round.alias("mse"),
+    )
 
 
 @register(
@@ -551,4 +808,872 @@ def ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_rn", F.row_number().over(w_e))
         .filter(F.col("_rn") <= 5)
         .select("query_id", "neighbor_id", "cos_sim")
+    )
+
+
+@register("emb_binarize_hamming")  # rows-only: binary retrieval quality is
+# probabilistic; the recall-vs-cosine contract is pinned in tests
+def emb_binarize_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary embedding retrieval: sign-bit quantization packs each
+    64-dim vector into ONE bigint (32× smaller than float32), and
+    nearest neighbors come from Hamming distance = bit_count(a XOR b) —
+    single-instruction similarity. The sign-random-projection result is
+    what makes this principled: E[hamming]/bits ≈ angle/π, so Hamming
+    ranking approximates cosine ranking (`dedup_simhash` applies the
+    same idea to text; this is the embedding-retrieval form, the
+    standard first-stage filter before float rescoring).
+
+    Shapes (VERDICT r2 next-#4 closed — the r2 demo broadcast the whole
+    packed corpus under an inequality join, a broadcast nested-loop):
+    packing is a row-local HOF fold (zero shuffle); retrieval is
+    multi-index Hamming banding — the 64 bits split into 8×8-bit band
+    keys (identical banding math to `dedup_simhash`), the corpus
+    EXPLODED into an 8-rows-per-vector band index (the LSH index table
+    you'd persist at 2G vectors), and the 8 query codes exploded into
+    radius-1 multi-probes (the band key plus its 8 one-bit flips — 72
+    probe keys/query) so a candidate surfaces whenever ANY band is
+    within 1 bit. The equi-join broadcasts only the tiny probe side;
+    exact bit_count Hamming then verifies and ranks candidates in a
+    query-partitioned window. Pigeonhole: every neighbor within
+    Hamming 15 is guaranteed caught; the recall-vs-cosine contract
+    (empirically 0.125 vs brute-force 0.15 on the fixture, chance 0.01)
+    is pinned in tests."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    def pack(arr):  # fold acc*2 + signbit — 32 bits fit a bigint ANSI-safe
+        return F.aggregate(
+            arr,
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc * 2 + F.when(x > 0, 1).otherwise(0),
+        )
+
+    packed = e.select(
+        "vec_id",
+        pack(F.slice("emb", 1, 32)).alias("code_hi"),
+        pack(F.slice("emb", 33, 32)).alias("code_lo"),
+    )
+    packed = packed.localCheckpoint()  # reused by both join sides
+
+    def band_key(i):  # 8-bit band i of the 64-bit code
+        src = F.col("code_hi") if i < 4 else F.col("code_lo")
+        return F.shiftrightunsigned(src, 24 - 8 * (i % 4)).bitwiseAND(F.lit(255))
+
+    corpus_idx = packed.select(
+        F.col("vec_id").alias("neighbor_id"),
+        "code_hi",
+        "code_lo",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band_idx"), band_key(i).alias("band_key")
+                    )
+                    for i in range(8)
+                ]
+            )
+        ).alias("b"),
+    ).select("neighbor_id", "code_hi", "code_lo", "b.band_idx", "b.band_key")
+
+    probes = (
+        packed.filter(F.col("vec_id") % 64 == 0)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("code_hi").alias("q_hi"),
+            F.col("code_lo").alias("q_lo"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(i).alias("band_idx"), band_key(i).alias("k")
+                        )
+                        for i in range(8)
+                    ]
+                )
+            ).alias("b"),
+        )
+        .select(
+            "query_id",
+            "q_hi",
+            "q_lo",
+            "b.band_idx",
+            F.explode(
+                F.array(
+                    F.col("b.k"),
+                    *[F.col("b.k").bitwiseXOR(F.lit(1 << bit)) for bit in range(8)],
+                )
+            ).alias("band_key"),
+        )
+    )
+    cand = (
+        corpus_idx.join(F.broadcast(probes), ["band_idx", "band_key"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "q_hi", "q_lo", "code_hi", "code_lo")
+        .distinct()
+        .select(
+            "query_id",
+            "neighbor_id",
+            (
+                F.bit_count(F.col("q_hi").bitwiseXOR(F.col("code_hi")))
+                + F.bit_count(F.col("q_lo").bitwiseXOR(F.col("code_lo")))
+            ).alias("hamming"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
+    return (
+        cand.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 5)
+        .select("query_id", "neighbor_id", "hamming")
+    )
+
+
+@register("emb_whitening")  # rows-only: eigendecomposition; whitened-
+# covariance-is-identity and numpy-equality pinned in tests
+def emb_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ZCA whitening of the embedding table: x ↦ Σ^{-1/2}(x − μ), the
+    decorrelating post-process that makes cosine behave like
+    Mahalanobis distance (retrieval-quality standard practice [P]).
+    ZCA (W = U Λ^{-1/2} Uᵀ) over PCA-whitening because it is the unique
+    whitener CLOSEST to the identity — whitened dims stay aligned with
+    the original axes.
+
+    Scale shape: identical one-pass machinery as `emb_pca_project` —
+    per-Arrow-batch Gram partials (one numpy GEMM each, fixed 64×64
+    output regardless of batch rows), a P·64²-double reduce, an O(64³)
+    driver eigh, then the whitening matrix broadcasts back and the
+    transform is one GEMM per batch. λ-floor 1e-6 guards rank
+    deficiency."""
+    import numpy as np
+    import pandas as pd
+
+    # a NULL embedding is un-whitenable (r9 edge batch, nullmix mode)
+    e = (
+        table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("embedding").isNotNull())
+    )
+    dim = 64
+
+    def gram_partials(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            yield pd.DataFrame(
+                {
+                    "n": [float(X.shape[0])],
+                    "s": [X.sum(axis=0).tolist()],
+                    "g": [(X.T @ X).ravel().tolist()],
+                }
+            )
+
+    parts = e.select("embedding").mapInPandas(
+        gram_partials, "n double, s array<double>, g array<double>"
+    )
+    agg = parts.agg(
+        F.sum("n").alias("n"),
+        F.array(*[F.sum(F.element_at("s", i + 1)) for i in range(dim)]).alias("s"),
+    )
+    gsum = (
+        parts.select(F.posexplode("g").alias("pos", "val"))
+        .groupBy("pos")
+        .agg(F.sum("val").alias("v"))
+        .collect()
+    )
+    row = agg.collect()[0]
+    if not row["n"]:
+        # empty corpus (r9 edge batch, class-3 guard): NULL totals —
+        # nothing to whiten, schema-stable empty result
+        return spark.createDataFrame(
+            [], "vec_id long, white string, norm_r double"
+        )
+    n_rows, s = row["n"], np.array(row["s"])
+    G = np.zeros(dim * dim)
+    for r in gsum:
+        G[r["pos"]] = r["v"]
+    cov = G.reshape(dim, dim) / n_rows - np.outer(s / n_rows, s / n_rows)
+    vals, vecs = np.linalg.eigh(cov)
+    W = vecs @ np.diag(1.0 / np.sqrt(np.maximum(vals, 1e-6))) @ vecs.T
+    mean = s / n_rows
+    bw = e.sparkSession.sparkContext.broadcast((W, mean))
+
+    def whiten(batches):
+        Wm, mu = bw.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            Z = (X - mu) @ Wm.T
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    # comma-joined 8-decimal string, NOT array<double>:
+                    # the driver's pandas sort canonicalizer cannot sort
+                    # ndarray cells (the r1 canonicalizer-ERR failure
+                    # mode; SURVEY "flat scalar columns" rule)
+                    "white": [
+                        ",".join(f"{v:.8f}" for v in z) for z in Z
+                    ],
+                    "norm_r": np.round(np.linalg.norm(Z, axis=1), 4),
+                }
+            )
+
+    return e.mapInPandas(
+        whiten, "vec_id long, white string, norm_r double"
+    )
+
+
+# ---------------------------------------------------------------------------
+# ann_recall_report
+# ---------------------------------------------------------------------------
+_RECALL_K = 5
+
+
+@register("ann_recall_report")  # rows-only: recall of a probabilistic
+# index; the >=0.6-average-recall + exact-overlap-arithmetic contracts
+# are pinned in tests
+def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Index-quality report: recall@5 of the IVF index (nprobe=2)
+    against the exact brute-force neighbors, per query — the
+    measurement that decides nprobe/codebook size BEFORE an index
+    serves traffic (`ann_ivf_probe` returns the index's answers; this
+    key grades them). Both runs share one decoded embedding frame; the
+    overlap is one equi-join on (query, neighbor) of two 50-row
+    top-k tables; recall arithmetic is exact integers over k."""
+    from .ann import ann_cosine_topk, ann_ivf_probe
+
+    brute = ann_cosine_topk(spark, sf_dir).select(
+        "query_id", "neighbor_id", F.lit(1).alias("in_brute")
+    )
+    ivf = ann_ivf_probe(spark, sf_dir).select(
+        "query_id", "neighbor_id", F.lit(1).alias("in_ivf")
+    )
+    hits = brute.join(ivf, ["query_id", "neighbor_id"], "inner")
+    per_q = (
+        brute.groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("k"))
+        .join(
+            hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit")),
+            "query_id",
+            "left",
+        )
+        .fillna(0, ["n_hit"])
+        .select(
+            "query_id",
+            "k",
+            "n_hit",
+            F.expr("CAST(n_hit * 10000 DIV k AS BIGINT)").alias("recall_bp"),
+        )
+    )
+    return per_q.orderBy("query_id")
+
+
+# ---------------------------------------------------------------------------
+# emb_cluster_silhouette
+# ---------------------------------------------------------------------------
+@register("emb_cluster_silhouette")  # rows-only: float centroid means
+# and distance ratios are engine-accumulation-specific; the numpy
+# replication + range contracts are pinned in tests
+def emb_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Simplified silhouette per cluster [P — Rousseeuw 1987; the
+    centroid-based O(N·k) variant every large-scale evaluator uses —
+    the exact pairwise form is O(N²)]: for each point, a = distance to
+    its OWN cluster centroid, b = distance to the nearest OTHER
+    centroid, s = (b − a)/max(a, b); reported as per-cluster means.
+    The cluster-quality number that decides k and flags collapsed or
+    overlapping clusters (s ≈ 0) before an index or a SemDeDup run
+    trusts the labels.
+
+    Scale shape: centroids come from ONE posexplode + (label, dim)
+    aggregation (the `emb_pca_project` moment discipline); the k×64
+    centroid table broadcasts back; a/b/s are row-local HOF folds over
+    the broadcast array — the corpus is touched twice (moments +
+    scoring), never joined to itself."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+    )
+    cent = (
+        e.select("label", F.posexplode("v").alias("pos", "x"))
+        .groupBy("label", "pos")
+        .agg(F.avg("x").alias("m"))
+        .groupBy("label")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select(
+            F.col("label").alias("clabel"),
+            F.expr("transform(pm, s -> s.m)").alias("cv"),
+        )
+    )
+    # k rows of 64 doubles — collect to ONE array-of-structs literal
+    rows = cent.collect()
+    if not rows:
+        # zero embeddings -> zero clusters: empty result (r7 edge sweep —
+        # F.array() over no centroids infers VOID and breaks the HOFs)
+        return spark.createDataFrame(
+            [], "label int, n bigint, mean_silhouette double, min_silhouette double"
+        )
+    lit = F.array(
+        *[
+            F.struct(
+                F.lit(r["clabel"]).alias("clabel"),
+                F.lit(r["cv"]).alias("cv"),
+            )
+            for r in rows
+        ]
+    )
+    d2 = (
+        "aggregate(zip_with(v, c.cv, (a, b) -> (a - b) * (a - b)),"
+        " 0D, (acc, x) -> acc + x)"
+    )
+    scored = e.withColumn("cents", lit).select(
+        "label",
+        F.expr(
+            f"sqrt(aggregate(filter(cents, c -> c.clabel = label),"
+            f" cast(null as double), (acc, c) -> {d2}))"
+        ).alias("a"),
+        F.expr(
+            f"sqrt(array_min(transform(filter(cents, c -> c.clabel != label),"
+            f" c -> {d2})))"
+        ).alias("b"),
+    )
+    s = (F.col("b") - F.col("a")) / F.greatest(F.col("a"), F.col("b"))
+    return (
+        scored.groupBy("label")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.avg(s), 4).alias("mean_silhouette"),
+            F.round(F.min(s), 4).alias("min_silhouette"),
+        )
+        .orderBy("label")
+    )
+
+
+# ---------------------------------------------------------------------------
+# emb_dimension_variance
+# ---------------------------------------------------------------------------
+@register(
+    "emb_dimension_variance",
+    oracle="""
+    WITH d AS (
+      SELECT t.i AS dim, CAST(embedding[t.i] AS DOUBLE) AS v
+      FROM embeddings,
+           UNNEST(generate_series(1, len(embedding))) AS t(i)
+    ),
+    m AS (
+      SELECT dim, COUNT(*) AS n, SUM(v) AS s, SUM(v * v) AS ss
+      FROM d GROUP BY dim
+    ),
+    stats AS (
+      SELECT dim - 1 AS dim,
+             s / n AS mean_v,
+             (ss - s * s / n) / (n - 1) AS var_v
+      FROM m
+    ),
+    tot AS (SELECT SUM(var_v) AS tv FROM stats)
+    SELECT CAST(stats.dim AS INT) AS dim,
+           ROUND(mean_v, 4) + 0 AS mean_v,
+           ROUND(var_v, 6) AS var_v,
+           ROUND(10000 * var_v / tot.tv, 4) AS var_share_bp
+    FROM stats CROSS JOIN tot
+    ORDER BY dim
+    """,
+)
+def emb_dimension_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-dimension moment screen over the embedding space: mean,
+    variance, and each dimension's share of total variance in basis
+    points — the health check that finds dead dimensions (≈0 variance:
+    wasted index bytes) and dominant ones (a few dims carrying the
+    space distorts cosine) before `emb_pq_quantize` / `ann_ivf_probe`
+    trust the geometry. Complements `emb_whitening`, which FIXES what
+    this key diagnoses.
+
+    One posexplode → (dim) aggregate with integer-free but
+    expansion-form moments (Σv, Σv² — identical expression both
+    engines, the `stats_levene_test` discipline); 64 output rows; the
+    total-variance normalizer is a window over the 64-row result, not
+    a second scan (`stats_benford_test` lesson)."""
+    e = table(spark, sf_dir, "embeddings").select(
+        F.posexplode(F.col("embedding")).alias("dim", "v0")
+    )
+    d = e.select("dim", F.col("v0").cast("double").alias("v"))
+    m = d.groupBy("dim").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("v").alias("s"),
+        F.sum(F.col("v") * F.col("v")).alias("ss"),
+    )
+    n, s, ss = F.col("n"), F.col("s"), F.col("ss")
+    stats = m.select(
+        "dim",
+        (s / n).alias("mean_raw"),
+        # try_divide: a single vector (n==1) leaves the sample variance
+        # undefined -> NULL, matching DuckDB (r7 edge sweep)
+        F.try_divide(ss - s * s / n, n - 1).alias("var_raw"),
+    )
+    wt = Window.partitionBy().rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    stats = stats.withColumn("tv", F.sum("var_raw").over(wt))
+    return stats.select(
+        F.col("dim").cast("int").alias("dim"),
+        (F.round("mean_raw", 4) + F.lit(0)).alias("mean_v"),
+        F.round("var_raw", 6).alias("var_v"),
+        F.round(F.try_divide(F.lit(10000) * F.col("var_raw"), F.col("tv")), 4).alias(
+            "var_share_bp"
+        ),
+    ).orderBy("dim")
+
+
+# ---------------------------------------------------------------------------
+# emb_random_projection
+# ---------------------------------------------------------------------------
+_JL_K = 16  # target dimensionality
+_JL_MULT = 2654435761
+
+
+@register(
+    "emb_random_projection",
+    oracle=f"""
+    WITH pairs AS (
+      SELECT a.vec_id AS id1, b.vec_id AS id2,
+             CAST(a.embedding AS DOUBLE[]) AS e1,
+             CAST(b.embedding AS DOUBLE[]) AS e2
+      FROM embeddings a JOIN embeddings b
+        ON a.vec_id < 30 AND b.vec_id < 30 AND a.vec_id < b.vec_id
+    ),
+    proj AS (
+      SELECT id1, id2,
+             SQRT(list_sum(list_transform(
+               generate_series(1, len(e1)),
+               i -> POW(e1[i] - e2[i], 2)))) AS d_orig,
+             SQRT(list_sum(list_transform(
+               generate_series(1, {_JL_K}),
+               j -> POW(list_sum(list_transform(
+                      generate_series(1, len(e1)),
+                      i -> (e1[i] - e2[i])
+                           * (CASE WHEN (((i * 73856093 + j * 19349663)
+                                          % 2147483648)
+                                         * {_JL_MULT}) % 4294967296
+                                        < 2147483648
+                              THEN 1.0 ELSE -1.0 END))), 2))))
+               / SQRT(CAST({_JL_K} AS DOUBLE)) AS d_proj
+      FROM pairs
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           ROUND(AVG(ABS(d_proj / d_orig - 1)), 4) AS mean_distortion,
+           ROUND(MAX(ABS(d_proj / d_orig - 1)), 4) AS max_distortion,
+           ROUND(AVG(d_proj / d_orig), 4) AS mean_ratio
+    FROM proj WHERE d_orig > 0
+    """,
+)
+def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Johnson–Lindenstrauss sign projection 64 → 16 dims with a
+    measured distortion report over a 30-vector pair sample: the
+    projection matrix is R[i,j] = ±1 from a deterministic integer hash
+    of (i, j) (Achlioptas' database-friendly construction — no Gaussian
+    sampling, REPRODUCIBLE across engines/reruns), distances scale by
+    1/√k, and the report is mean/max |d_proj/d_orig − 1|. JL is the
+    cheap scale path under every ANN stack here: project once, index
+    in 16 dims, re-rank survivors in 64.
+
+    The projection is row-local array-HOF codegen (transform over a
+    generate-range — the `emb_pq_quantize` nested-literal lesson: no
+    per-cell expression explosion); the 30×29/2 pair sample broadcasts.
+    Both engines compute the SAME ±1 matrix from the same integer
+    arithmetic — nothing is random at execution time."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    ).filter(F.col("vec_id") < 30)
+    a = e.select(F.col("vec_id").alias("id1"), F.col("emb").alias("e1"))
+    b = e.select(F.col("vec_id").alias("id2"), F.col("emb").alias("e2"))
+    pairs = F.broadcast(a).join(b, F.col("id1") < F.col("id2"))
+    diff = F.zip_with("e1", "e2", lambda x, y: x - y)
+    d_orig = F.sqrt(
+        F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
+    )
+
+    def sign(i, j):
+        # ±1 from the Knuth multiplicative hash of (i, j); i is 1-based.
+        # The % 2^31 reduction BEFORE the multiply keeps the product
+        # inside int64 — without it ANSI mode overflows while DuckDB
+        # silently widens to HUGEINT (engines must share the formula)
+        h1 = (
+            i.cast("bigint") * F.lit(73856093) + j * F.lit(19349663)
+        ) % F.lit(2147483648)
+        h = h1 * F.lit(_JL_MULT)
+        return F.when(h % F.lit(4294967296) < F.lit(2147483648), F.lit(1.0)).otherwise(
+            F.lit(-1.0)
+        )
+
+    def proj_coord(j):
+        # sum_i diff[i] * R[i, j] — one fold over the 64-dim difference
+        return F.aggregate(
+            F.zip_with(
+                diff,
+                F.transform(F.sequence(F.lit(1), F.size("e1")), lambda i: i),
+                lambda d, i: d * sign(i, F.lit(j)),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    d_proj = (
+        F.sqrt(
+            sum(proj_coord(j) * proj_coord(j) for j in range(1, _JL_K + 1))
+        )
+        / F.lit(float(_JL_K) ** 0.5)
+    )
+    scored = pairs.select(
+        d_orig.alias("d_orig"), d_proj.alias("d_proj")
+    ).filter(F.col("d_orig") > 0)
+    r = F.col("d_proj") / F.col("d_orig")
+    return scored.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.round(F.avg(F.abs(r - 1)), 4).alias("mean_distortion"),
+        F.round(F.max(F.abs(r - 1)), 4).alias("max_distortion"),
+        F.round(F.avg(r), 4).alias("mean_ratio"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# emb_centroid_drift
+# ---------------------------------------------------------------------------
+@register(
+    "emb_centroid_drift",
+    oracle="""
+    WITH halves AS (
+      SELECT label, (vec_id % 2 = 0) AS half_a,
+             t.i AS dim, CAST(embedding[t.i] AS DOUBLE) AS v
+      FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
+    ),
+    cents AS (
+      SELECT label, half_a, dim, AVG(v) AS c
+      FROM halves GROUP BY label, half_a, dim
+    ),
+    paired AS (
+      SELECT a.label, a.dim, a.c AS ca, b.c AS cb
+      FROM cents a JOIN cents b
+        ON a.label = b.label AND a.dim = b.dim
+       AND a.half_a AND NOT b.half_a
+    ),
+    sums AS (
+      SELECT label,
+             SUM(ca * cb) AS dot,
+             SQRT(SUM(ca * ca)) AS na,
+             SQRT(SUM(cb * cb)) AS nb,
+             SQRT(SUM((ca - cb) * (ca - cb))) AS l2
+      FROM paired GROUP BY label
+    )
+    SELECT CAST(label AS INT) AS label,
+           ROUND(dot / (na * nb), 4) AS centroid_cosine,
+           ROUND(l2, 4) AS centroid_l2_shift
+    FROM sums ORDER BY label
+    """,
+)
+def emb_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space drift: split each cluster's vectors into two
+    deterministic halves (vec_id parity — in production, two time
+    windows), compute both centroids, and report their cosine and L2
+    shift per label. Cosine ≈ 1 means the cluster is stable; a drop
+    says the region MOVED — retrain the IVF/PQ index, recheck SemDeDup
+    assignments. The vector-space sibling of `drift_psi` (scalar
+    distributions) and `emb_dimension_variance` (static geometry).
+
+    One posexplode → (label, half, dim) mean — a single combinable
+    aggregate whose output is 2·k·64 rows — then the half-pairing and
+    norms are arithmetic on that bounded table. The corpus is touched
+    once."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "label", (F.col("vec_id") % 2 == 0).alias("half_a"),
+        F.posexplode(F.col("embedding")).alias("dim", "v0"),
+    )
+    cents = (
+        e.select("label", "half_a", "dim", F.col("v0").cast("double").alias("v"))
+        .groupBy("label", "half_a", "dim")
+        .agg(F.avg("v").alias("c"))
+    )
+    a = cents.filter(F.col("half_a")).select(
+        "label", "dim", F.col("c").alias("ca")
+    )
+    b = cents.filter(~F.col("half_a")).select(
+        "label", "dim", F.col("c").alias("cb")
+    )
+    paired = a.join(b, ["label", "dim"])
+    sums = paired.groupBy("label").agg(
+        F.sum(F.col("ca") * F.col("cb")).alias("dot"),
+        F.sqrt(F.sum(F.col("ca") * F.col("ca"))).alias("na"),
+        F.sqrt(F.sum(F.col("cb") * F.col("cb"))).alias("nb"),
+        F.sqrt(
+            F.sum((F.col("ca") - F.col("cb")) * (F.col("ca") - F.col("cb")))
+        ).alias("l2"),
+    )
+    return sums.select(
+        F.col("label").cast("int").alias("label"),
+        F.round(F.col("dot") / (F.col("na") * F.col("nb")), 4).alias(
+            "centroid_cosine"
+        ),
+        F.round("l2", 4).alias("centroid_l2_shift"),
+    ).orderBy("label")
+
+
+# ---------------------------------------------------------------------------
+# emb_distance_histogram
+# ---------------------------------------------------------------------------
+@register(
+    "emb_distance_histogram",
+    oracle="""
+    WITH s AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
+      FROM embeddings WHERE vec_id < 100
+    ),
+    pairs AS (
+      SELECT SQRT(list_sum(list_transform(
+               generate_series(1, len(a.e)),
+               i -> POW(a.e[i] - b.e[i], 2)))) AS d
+      FROM s a JOIN s b ON a.vec_id < b.vec_id
+    ),
+    m AS (SELECT MIN(d) AS dmin, MAX(d) AS dmax, AVG(d) AS dmean,
+                 STDDEV_SAMP(d) AS dstd, COUNT(*) AS n
+          FROM pairs),
+    binned AS (
+      SELECT CASE WHEN m.dmax = m.dmin THEN 0
+                  ELSE LEAST(CAST(FLOOR((p.d - m.dmin)
+                               / ((m.dmax - m.dmin) / 10)) AS INT), 9)
+             END AS bin
+      FROM pairs p CROSS JOIN m
+    )
+    SELECT CAST(bin AS INT) AS bin,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           ROUND((SELECT dmean FROM m), 4) AS mean_dist,
+           ROUND((SELECT dstd / dmean FROM m), 4) AS rel_spread
+    FROM binned GROUP BY bin ORDER BY bin
+    """,
+)
+def emb_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise-distance histogram over a 100-vector sample with the
+    relative spread σ/μ — the distance-CONCENTRATION diagnostic: in
+    high dimensions distances crowd toward one value (rel_spread → 0),
+    and when they do, nearest-neighbor thresholds and `dedup_embedding_
+    cosine` cutoffs stop meaning anything. The sanity check run BEFORE
+    the ANN stack's thresholds are trusted; complements
+    `emb_dimension_variance` (per-axis view) with the pairwise view.
+
+    The 100-row sample self-joins broadcast (4 950 pairs); distances
+    are row-local HOF folds; the 10-bin histogram and moments are
+    arithmetic on the pair table. min/max binning is shared exactly by
+    both engines (same floor/least clamp)."""
+    s = (
+        table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") < 100)
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    )
+    a = s.select(F.col("vec_id").alias("ia"), F.col("e").alias("ea"))
+    b = s.select(F.col("vec_id").alias("ib"), F.col("e").alias("eb"))
+    dist = F.sqrt(
+        F.aggregate(
+            F.zip_with("ea", "eb", lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+    pairs = (
+        F.broadcast(a)
+        .join(b, F.col("ia") < F.col("ib"))
+        .select(dist.alias("d"))
+        .localCheckpoint()  # moments + binning share one compute
+    )
+    m = pairs.agg(
+        F.min("d").alias("dmin"),
+        F.max("d").alias("dmax"),
+        F.avg("d").alias("dmean"),
+        F.stddev_samp("d").alias("dstd"),
+    ).collect()[0]
+    if m["dmin"] is None:
+        # fewer than two sample vectors: no pairs, no histogram — empty
+        # on both sides (r7 edge sweep: None arithmetic crashed here)
+        return spark.createDataFrame(
+            [], "bin int, n_pairs bigint, mean_dist double, rel_spread double"
+        )
+    width = (m["dmax"] - m["dmin"]) / 10
+    if width == 0:
+        # all pairwise distances identical (e.g. duplicate vectors):
+        # one degenerate bin 0, mirrored by the oracle's dmax=dmin CASE.
+        # (try_divide by 0 would NOT be NULL-parity here: Spark's least()
+        # skips NULLs, so floor(NULL) would clamp to 9 — ADVICE r7 #1.)
+        binned = pairs.select(F.lit(0).alias("bin"))
+    else:
+        binned = pairs.select(
+            F.least(
+                F.floor(
+                    F.try_divide(F.col("d") - F.lit(m["dmin"]), F.lit(width))
+                ).cast("int"),
+                F.lit(9),
+            ).alias("bin")
+        )
+    rel = (
+        m["dstd"] / m["dmean"]
+        if m["dstd"] is not None and m["dmean"]
+        else None
+    )
+    return (
+        binned.groupBy("bin")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
+        .select(
+            F.col("bin").cast("int").alias("bin"),
+            "n_pairs",
+            F.round(F.lit(m["dmean"]), 4).alias("mean_dist"),
+            F.round(F.lit(rel).cast("double"), 4).alias("rel_spread"),
+        )
+        .orderBy("bin")
+    )
+
+
+# ---------------------------------------------------------------------------
+# emb_anisotropy
+# ---------------------------------------------------------------------------
+@register(
+    "emb_anisotropy",
+    oracle="""
+    WITH norm AS (
+      SELECT vec_id,
+             list_transform(CAST(embedding AS DOUBLE[]),
+               x -> x / sqrt(list_sum(list_transform(
+                 CAST(embedding AS DOUBLE[]), y -> y * y)))) AS u
+      FROM embeddings
+    ),
+    dims AS (
+      SELECT t.i AS dim, SUM(u[t.i]) AS s, COUNT(*) AS n
+      FROM norm, UNNEST(generate_series(1, len(u))) AS t(i)
+      GROUP BY t.i
+    ),
+    agg AS (
+      SELECT SUM(s * s) AS ss, MAX(n) AS n FROM dims
+    )
+    SELECT CAST(n AS BIGINT) AS n_vectors,
+           ROUND((ss - n) / (n * (n - 1.0)), 4) + 0 AS mean_pairwise_cosine,
+           ROUND(SQRT(ss) / n, 4) AS mean_vector_norm
+    FROM agg
+    """,
+)
+def emb_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space anisotropy: the average pairwise cosine over ALL
+    n(n−1) vector pairs, computed WITHOUT any pair join via the exact
+    identity Σ_{i≠j} uᵢ·uⱼ = ‖Σu‖² − n for unit vectors — one pass,
+    one 64-float sum. Near-0 is isotropic (directions spread — cosine
+    similarity is meaningful); near-1 is the cone-shaped pathology
+    famous in LLM embeddings [Ethayarajh 2019], where everything is
+    'similar' to everything and `dedup_embedding_cosine` thresholds
+    stop discriminating. ‖mean vector‖ reported as the equivalent
+    geometric read.
+
+    THE showcase of algebra-over-shuffle: the naive form is an n²
+    pair join (`emb_distance_histogram` samples it); the identity
+    computes the exact all-pairs mean with a posexplode aggregate —
+    at 100 TB this is the difference between impossible and one scan."""
+    norm_u = F.transform(
+        F.col("emb"),
+        lambda x: x
+        / F.sqrt(F.aggregate(F.col("emb"), F.lit(0.0), lambda a, y: a + y * y)),
+    )
+    e = (
+        table(spark, sf_dir, "embeddings")
+        .select(F.col("embedding").cast("array<double>").alias("emb"))
+        .select(F.posexplode(norm_u).alias("dim", "u"))
+    )
+    dims = e.groupBy("dim").agg(
+        F.sum("u").alias("s"), F.count(F.lit(1)).alias("n")
+    )
+    agg = dims.agg(
+        F.sum(F.col("s") * F.col("s")).alias("ss"), F.max("n").alias("n")
+    )
+    n = F.col("n")
+    return agg.select(
+        n.cast("bigint").alias("n_vectors"),
+        # try_divide: a single vector (n==1) has no pairs -> NULL,
+        # matching DuckDB's NULL-on-zero-divisor division (r7 edge sweep)
+        (F.round(F.try_divide(F.col("ss") - n, n * (n - 1.0)), 4) + F.lit(0)).alias(
+            "mean_pairwise_cosine"
+        ),
+        F.round(F.sqrt(F.col("ss")) / n, 4).alias("mean_vector_norm"),
+    )
+
+
+# --- product quantization ----------------------------------------------------
+@register("emb_pq_quantize")  # rows-only: the codebook argmin is not
+# reasonably SQL-expressible; numpy-pinned reconstruction contract in tests
+def emb_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product quantization (PQ): the 64-dim vectors split into 8
+    subspaces of 8 dims; each subspace gets a 16-entry codebook, so a
+    vector compresses to 8 nibbles = 4 bytes (64x smaller than
+    float64) — the storage layer under every billion-vector ANN index
+    (IVF-PQ). Codebooks here are sampled deterministically (the
+    subvectors of the 16 hash-chosen seed vectors — k-means would
+    tighten them; seeding keeps the key reproducible, same policy as
+    `ann_ivf_probe`'s trained codebook).
+
+    Scale shape: the 16x64-float codebook is driver state broadcast as
+    LITERALS, assignment is a pure-Column argmin (zero Exchange, zero
+    Python) exactly like the IVF assignment; only the final per-
+    subspace report aggregates. Output: per-subspace distinct-code
+    usage and reconstruction MSE (x1e4), pinned against numpy."""
+    from ..catalog import table as _table
+    from ..functions.similarity import as_double
+
+    e = (
+        _table(spark, sf_dir, "embeddings")
+        # a NULL embedding cannot be quantized (and a NULL seed row
+        # crashed the codebook slicing — r8 nullmix sweep)
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", as_double("embedding").alias("emb"))
+    )
+    seeds = (
+        e.withColumn("h", F.xxhash64(F.col("vec_id").cast("string")))
+        .orderBy("h", "vec_id")
+        .limit(16)
+        .collect()
+    )
+    if not seeds:
+        # empty corpus: no codebook to sample (r7 edge sweep — empty
+        # nested literals infer VOID and break the zip_with distances)
+        return spark.createDataFrame(
+            [], "subspace int, n_vectors bigint, n_codes_used bigint, mse_e4 double"
+        )
+    codebooks = [
+        [[float(v) for v in row["emb"][s * 8 : (s + 1) * 8]] for row in seeds]
+        for s in range(8)
+    ]  # [subspace][code][dim] — 16x64 doubles of driver state
+
+    parts = []
+    for s in range(8):
+        sub = F.slice("emb", s * 8 + 1, 8)
+        # ONE nested-array literal per subspace + HOF distance: keeps the
+        # codegen'd expression tree tiny (a naive 16x8 expanded per-dim sum
+        # is ~1k expression nodes per subspace and OOMs janino)
+        cb = F.lit(codebooks[s])
+        dists = F.transform(
+            cb,
+            lambda c: F.aggregate(
+                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+        )
+        parts.append(
+            F.struct(
+                F.lit(s).alias("subspace"),
+                (F.array_position(dists, F.array_min(dists)) - 1)
+                .cast("int")
+                .alias("code"),
+                F.array_min(dists).alias("err"),
+            )
+        )
+    assigned = e.select(
+        "vec_id", F.explode(F.array(*parts)).alias("a")
+    ).select("vec_id", "a.subspace", "a.code", "a.err")
+    return (
+        assigned.groupBy("subspace")
+        .agg(
+            F.count(F.lit(1)).alias("n_vectors"),
+            F.countDistinct("code").alias("n_codes_used"),
+            F.round(F.avg("err") * 10000, 4).alias("mse_e4"),
+        )
+        .orderBy("subspace")
     )

@@ -1,6 +1,7 @@
-"""Scalar-function surface (SURVEY §2.8): string / date / math /
-conditional / array / map / json / ip families, each exercised as a query
-key. All built-in pyspark.sql.functions — JVM-side, inside whole-stage
+"""Scalar-function operators (SURVEY §2.8).
+
+String / date / math / conditional / array / map / json / ip families,
+each exercised as a query key. All built-in pyspark.sql.functions — JVM-side, inside whole-stage
 codegen; no Python in the hot path.
 """
 
@@ -10,7 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
-from ..functions.ip import ip_in_cidr, ipv4_to_num
+from ..functions.ip import ipv4_to_num
 from ..registry import register
 
 
@@ -302,31 +303,6 @@ def ip_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "filter_cidr",
-    oracle="""
-    SELECT user_id, ip FROM (
-      SELECT DISTINCT user_id,
-             '10.0.' || CAST(user_id % 256 AS VARCHAR) || '.7' AS ip
-      FROM events WHERE user_id IS NOT NULL)
-    WHERE CAST(split_part(ip, '.', 1) AS BIGINT) * 16777216
-        + CAST(split_part(ip, '.', 2) AS BIGINT) * 65536
-        + CAST(split_part(ip, '.', 3) AS BIGINT) * 256
-        + CAST(split_part(ip, '.', 4) AS BIGINT)
-          BETWEEN 167772160 AND 167776255
-    """,
-)
-def filter_cidr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CIDR membership 10.0.0.0/20 compiled to a [lo, hi] range on the
-    numeric address — pushdown-capable (SURVEY §4.3.2), unlike any
-    string-prefix formulation. NULL users synthesize no address —
-    pinned two-sided (class D, same contract as ip_funcs)."""
-    e = table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    ip = F.concat(F.lit("10.0."), (F.col("user_id") % 256).cast("string"), F.lit(".7"))
-    df = e.select("user_id", ip.alias("ip")).distinct()
-    return df.filter(ip_in_cidr(ipv4_to_num(F.col("ip")), "10.0.0.0/20"))
-
-
-@register(
     "ip6_funcs",
     oracle="""
     SELECT DISTINCT user_id,
@@ -462,29 +438,6 @@ def array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id2",
         F.size(F.array_intersect("w1", "w2")).alias("n_common"),
         F.size(F.array_union("w1", "w2")).alias("n_union"),
-    )
-
-
-@register(
-    "agg_histogram",
-    oracle="""
-    SELECT l_returnflag,
-           CAST(floor(l_extendedprice / 10000) AS BIGINT) AS bucket,
-           COUNT(*) AS n
-    FROM lineitem
-    GROUP BY 1, 2
-    """,
-)
-def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Numeric histogram via arithmetic bucketing (ClickHouse histogram /
-    width_bucket-style) — a plain two-key aggregation, partial+final."""
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy(
-            "l_returnflag",
-            F.floor(F.col("l_extendedprice") / 10000).cast("bigint").alias("bucket"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -728,4 +681,180 @@ def array_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return e.select("vec_id", F.posexplode(diffs).alias("pos", "diff")).select(
         "vec_id", (F.col("pos") + 1).cast("long").alias("pos"), "diff"
+    )
+
+
+# --- VARIANT semi-structured type --------------------------------------------
+@register(
+    "json_variant",
+    oracle="""
+    SELECT event_type,
+           COUNT(*) AS n,
+           ROUND(AVG(CAST(json_extract_string(props, '$.k') AS INT)), 4)
+             AS avg_k,
+           MAX(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k
+    FROM events GROUP BY event_type
+    """,
+)
+def json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured analytics through the VARIANT type (Spark 4):
+    `parse_json` once into the binary variant encoding, then typed
+    `variant_get` paths — the open-table-format answer to schemaless
+    event properties. Versus `get_json_object` (string re-parse per
+    extraction, cf. `json_funcs`), VARIANT parses once and every path
+    access is a binary traversal — the difference between O(paths) and
+    O(paths × parse) on a 100 TB event stream; with shredding the
+    accessed paths become parquet columns and pushdown applies."""
+    e = table(spark, sf_dir, "events")
+    v = e.select("event_type", F.parse_json("props").alias("v"))
+    k = F.variant_get("v", "$.k", "int")
+    return v.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.avg(k), 4).alias("avg_k"),
+        F.max(k).alias("max_k"),
+    )
+
+
+# --- map higher-order functions ----------------------------------------------
+@register(
+    "map_hof_funcs",
+    oracle="""
+    WITH base AS (
+      SELECT event_id, event_type, value FROM events
+      WHERE event_id % 100 = 0
+    )
+    SELECT event_id, 'v_' || event_type AS k, ROUND(value * 2, 4) AS v
+    FROM base
+    UNION ALL
+    SELECT event_id, 'base' AS k, 1.0 AS v FROM base
+    """,
+)
+def map_hof_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Map higher-order functions (§2.8 depth beyond `map_funcs`):
+    build a map column, `transform_keys` (prefix), `transform_values`
+    (double), `map_concat` a constant entry, then explode entries back
+    to rows for the cross-engine check. All four are row-local codegen
+    expressions — zero shuffle; the oracle states the same result
+    relationally (DuckDB's map surface differs, which is itself the
+    point: map HOFs are Spark-side sugar over per-row kv data)."""
+    e = table(spark, sf_dir, "events").filter(F.col("event_id") % 100 == 0)
+    m = F.create_map(F.col("event_type"), F.col("value"))
+    m2 = F.transform_keys(m, lambda k, v: F.concat(F.lit("v_"), k))
+    m3 = F.transform_values(m2, lambda k, v: v * 2)
+    m4 = F.map_concat(m3, F.create_map(F.lit("base"), F.lit(1.0)))
+    return (
+        e.select("event_id", F.explode(m4).alias("k", "v"))
+        .select("event_id", "k", F.round("v", 4).alias("v"))
+    )
+
+
+# --- collation-aware grouping ------------------------------------------------
+@register(
+    "str_collation",
+    oracle="""
+    SELECT lower(mixed) AS k, COUNT(*) AS n
+    FROM (
+      SELECT CASE WHEN event_id % 2 = 0 THEN upper(event_type)
+                  ELSE event_type END AS mixed
+      FROM events
+    )
+    GROUP BY lower(mixed)
+    """,
+)
+def str_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Collation-aware grouping (Spark 4 COLLATE): group a mixed-case
+    column under UTF8_LCASE so 'CLICK' and 'click' land in one group —
+    the engine-level answer to case-insensitive dimensions (vs
+    scattering lower() into every query; with collated columns declared
+    at the table level the comparison semantics follow the data).
+    Output is canonicalized with lower() because the group
+    REPRESENTATIVE under a case-insensitive collation is
+    engine/order-dependent — only the equivalence class is defined.
+    Collation compares hash like ordinary strings: still one
+    partial+final agg."""
+    e = table(spark, sf_dir, "events")
+    mixed = F.when(
+        F.col("event_id") % 2 == 0, F.upper("event_type")
+    ).otherwise(F.col("event_type"))
+    return (
+        e.select(mixed.alias("mixed"))
+        .select(F.expr("mixed COLLATE UTF8_LCASE").alias("mixed"))
+        .groupBy("mixed")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.lower("mixed").alias("k"), "n")
+    )
+
+
+# ---------------------------------------------------------------------------
+# str_kv_parse
+# ---------------------------------------------------------------------------
+@register(
+    "str_kv_parse",
+    oracle="""
+    WITH lines AS (
+      SELECT 'type=' || event_type || ' uid=' || CAST(user_id AS VARCHAR)
+             || ' cents=' || CAST(CAST(FLOOR(COALESCE(value, 0) * 100)
+                                       AS BIGINT) AS VARCHAR) AS logfmt,
+             event_id
+      FROM events WHERE event_id < 5000
+    ),
+    parsed AS (
+      SELECT event_id,
+             regexp_extract(logfmt, 'type=([a-z]+)', 1) AS type_v,
+             CAST(regexp_extract(logfmt, 'uid=([0-9]+)', 1) AS BIGINT) AS uid_v,
+             CAST(regexp_extract(logfmt, 'cents=([0-9-]+)', 1) AS BIGINT)
+               AS cents_v
+      FROM lines
+    )
+    SELECT type_v AS event_type,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(COUNT(DISTINCT uid_v) AS BIGINT) AS n_users,
+           CAST(SUM(cents_v) AS BIGINT) AS cents_sum
+    FROM parsed GROUP BY type_v ORDER BY type_v
+    """,
+)
+def str_kv_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """logfmt key=value field parsing: render events as
+    'type=… uid=… cents=…' lines (the convention half of ops logging
+    emits), parse them back with `str_to_map` — Spark's purpose-built
+    splitter for exactly this — and hash-verify the rollup against the
+    source. The structured-logging sibling of `scan_text_regex_parse`
+    (which handles lines that AREN'T this disciplined).
+
+    `str_to_map(s, ' ', '=')` is one codegen expression producing the
+    whole field map (no per-field regex passes); typed fields come out
+    with `element_at` + cast. The oracle parses the same lines with
+    per-field regex — same semantics, each engine on its native
+    idiom (§2.8 map-functions note)."""
+    ev = (
+        table(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 5000)
+        .select(
+            "event_id",
+            F.concat(
+                F.lit("type="),
+                F.col("event_type"),
+                F.lit(" uid="),
+                F.col("user_id").cast("string"),
+                F.lit(" cents="),
+                F.floor(F.coalesce(F.col("value"), F.lit(0)) * 100)
+                .cast("bigint")
+                .cast("string"),
+            ).alias("logfmt"),
+        )
+    )
+    m = ev.select(F.expr("str_to_map(logfmt, ' ', '=')").alias("kv"))
+    parsed = m.select(
+        F.element_at("kv", "type").alias("event_type"),
+        F.element_at("kv", "uid").cast("bigint").alias("uid"),
+        F.element_at("kv", "cents").cast("bigint").alias("cents"),
+    )
+    return (
+        parsed.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.count_distinct(F.col("uid")).cast("bigint").alias("n_users"),
+            F.sum("cents").cast("bigint").alias("cents_sum"),
+        )
+        .orderBy("event_type")
     )

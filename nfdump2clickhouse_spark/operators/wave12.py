@@ -1,235 +1,3 @@
-"""Wave-12 operators (round 2): C4-style global line dedup and BPE merge
-computation — the two corpus-construction ops still missing from the
-training-data family.
-
-Same SURVEY §5.3 conventions as waves 4-11.
-"""
-
-from __future__ import annotations
-
-import pandas as pd  # module-level: pandas_udf resolves string type hints
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
-
-from ..catalog import table
-from ..functions.text import words
-from ..registry import register
-
-_CHUNK = 8  # words per pseudo-line (fixture text has no sentence marks)
-
-
-@register(
-    "text_line_dedup",
-    oracle=f"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS ws
-      FROM documents
-    ),
-    chunks AS (
-      SELECT doc_id, CAST(i AS INT) AS pos,
-             array_to_string(ws[(i * {_CHUNK} + 1):((i + 1) * {_CHUNK})], ' ')
-               AS chunk
-      FROM w, UNNEST(generate_series(0,
-               greatest(CAST(ceil(len(ws) * 1.0 / {_CHUNK}) AS BIGINT) - 1, 0)))
-             AS t(i)
-      WHERE len(ws) > 0
-    ),
-    ranked AS (
-      SELECT doc_id, pos, chunk,
-             ROW_NUMBER() OVER (PARTITION BY chunk ORDER BY doc_id, pos) AS rn
-      FROM chunks
-    )
-    SELECT doc_id,
-           COUNT(*) AS n_chunks,
-           CAST(count_if(rn = 1) AS BIGINT) AS n_kept,
-           md5(COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk END, ' '
-                          ORDER BY pos), '')) AS kept_fp
-    FROM ranked GROUP BY doc_id
-    """,
-)
-def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style GLOBAL line deduplication: every repeated line across
-    the whole corpus is kept only at its first occurrence (ordered by
-    (doc_id, pos)) and removed everywhere else — the op that strips
-    boilerplate headers/footers repeated across millions of pages,
-    which doc-level dedup never sees. Fixture text has no sentence
-    marks, so 'lines' are fixed 8-word chunks; the pipeline is
-    line-splitter-agnostic.
-
-    Scale shape — exactly C4's: explode to (chunk, doc, pos), ONE hash
-    shuffle keyed on the chunk (window row_number picks the canonical
-    first copy; at petabyte scale the same dedup is a min-aggregate +
-    semi-join on the chunk hash, same single shuffle), then a per-doc
-    regroup to reassemble survivors in order. Output per doc: chunk
-    counts and the md5 of the re-joined surviving text (compact,
-    hash-checkable)."""
-    d = table(spark, sf_dir, "documents")
-    n_chunks = F.ceil(F.size(F.col("ws")) / F.lit(_CHUNK)).cast("bigint")
-    chunks = (
-        d.select("doc_id", words(F.col("text")).alias("ws"))
-        .filter(F.size("ws") > 0)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), n_chunks - 1),
-                    lambda i: F.array_join(
-                        F.slice(F.col("ws"), i * _CHUNK + 1, _CHUNK), " "
-                    ),
-                )
-            ).alias("pos", "chunk"),
-        )
-    )
-    w = Window.partitionBy("chunk").orderBy("doc_id", "pos")
-    ranked = chunks.withColumn("rn", F.row_number().over(w))
-    return ranked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.count_if(F.col("rn") == 1).alias("n_kept"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("rn") == 1, F.struct("pos", "chunk")
-                            )
-                        )
-                    ),
-                    lambda s: s["chunk"],
-                ),
-                " ",
-            )
-        ).alias("kept_fp"),
-    )
-
-
-# --- BPE merge computation ---------------------------------------------------
-
-
-def bpe_reference(word_freqs: dict[str, int], n_merges: int) -> list[tuple]:
-    """Pure-Python BPE (Sennrich et al.'s algorithm) used by the contract
-    test: returns [(rank, 'a b', freq)] with the same deterministic
-    lexicographic tiebreak as the distributed version."""
-    vocab = {tuple(wd): f for wd, f in word_freqs.items()}
-    merges = []
-    for rank in range(n_merges):
-        pairs: dict[tuple, int] = {}
-        for syms, f in vocab.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] = (
-                    pairs.get((syms[i], syms[i + 1]), 0) + f
-                )
-        if not pairs:
-            break
-        # deterministic: highest freq, then lexicographically SMALLEST pair
-        top_f = max(pairs.values())
-        best = min(p for p, f in pairs.items() if f == top_f)
-        merges.append((rank, " ".join(best), top_f))
-        new_vocab = {}
-        for syms, f in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if (
-                    i < len(syms) - 1
-                    and (syms[i], syms[i + 1]) == best
-                ):
-                    out.append(syms[i] + syms[i + 1])
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + f
-        vocab = new_vocab
-    return merges
-
-
-def learn_bpe_merges(
-    spark: SparkSession, sf_dir: str, n_merges: int = 5
-) -> list[tuple[int, str, int]]:
-    """Learn the first ``n_merges`` BPE merge rules over the corpus;
-    returns ``[(rank, "a b", freq), ...]``. Shared by
-    `tokenizer_bpe_merges` (the training surface) and wave15's
-    `tokenizer_bpe_apply` (the encoding surface)."""
-    from pyspark.sql.functions import pandas_udf
-
-    d = table(spark, sf_dir, "documents")
-    word_freq = (
-        d.select(F.explode(words(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    # symbol arrays: one char per symbol to start (Spark's regex split
-    # emits a trailing empty string — drop it or it becomes a symbol)
-    vocab = word_freq.select(
-        F.filter(F.split("w", "(?!^)"), lambda x: x != "").alias("syms"), "f"
-    ).localCheckpoint()
-
-    merges = []
-    for rank in range(n_merges):
-        pairs = (
-            vocab.select(
-                "f",
-                F.explode(
-                    F.zip_with(
-                        F.slice(
-                            "syms", 1, F.greatest(F.size("syms") - 1, F.lit(0))
-                        ),
-                        F.slice(
-                            "syms", 2, F.greatest(F.size("syms") - 1, F.lit(0))
-                        ),
-                        lambda a, b: F.concat(a, F.lit(" "), b),
-                    )
-                ).alias("pair"),
-            )
-            .groupBy("pair")
-            .agg(F.sum("f").alias("pf"))
-        )
-        top = pairs.orderBy(F.desc("pf"), "pair").limit(1).collect()
-        if not top:
-            break
-        pair, pf = top[0].pair, int(top[0].pf)
-        merges.append((rank, pair, pf))
-        a, b = pair.split(" ")
-
-        @pandas_udf("array<string>")
-        def apply_merge(s: pd.Series) -> pd.Series:
-            def m(syms):
-                out, i = [], 0
-                n = len(syms)
-                while i < n:
-                    if i < n - 1 and syms[i] == a and syms[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                return out
-
-            return s.apply(m)
-
-        vocab = vocab.select(
-            apply_merge("syms").alias("syms"), "f"
-        ).localCheckpoint()
-
-    return merges
-
-
-@register("tokenizer_bpe_merges")  # rows-only: iterative algorithm; pinned
-# against the pure-Python reference implementation in tests
-def tokenizer_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer training, the distributed formulation: learn the
-    first 5 merge rules over the corpus (Sennrich-style byte-pair
-    encoding on the word-frequency table) — `text_vocab_topk` is pass
-    0 of tokenizer training; this is the iterative core.
-
-    Per iteration: adjacent-symbol-pair counts are ONE weighted agg
-    over the (distinct-word, freq) table — corpus size only matters in
-    the initial word count, every iteration is O(|vocab|); the argmax
-    merge rule (deterministic freq-then-lexicographic tiebreak) is a
-    1-row collect; applying the merge is a vectorized pandas UDF over
-    the symbol arrays. This is the real tokenizer-training dataflow
-    (HF tokenizers does the same loop in Rust over one machine's RAM;
-    the Spark shape is what works when the word table doesn't fit)."""
-    merges = learn_bpe_merges(spark, sf_dir, n_merges=5)
-    return spark.createDataFrame(merges, "rank int, pair string, freq long")
+# Import path kept for the certified body of `tokenizer_bpe_apply`, which
+# imports from here; fold it into text when that key is re-certified.
+from .text import learn_bpe_merges  # noqa: F401

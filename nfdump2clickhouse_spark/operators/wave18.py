@@ -1,256 +1,4 @@
-"""Wave-18 keys (round 4): unigram-LM tokenizer training + ZCA whitening.
-
-- ``tokenizer_unigram_em``: SentencePiece-style unigram language-model
-  tokenizer training by (Viterbi-)EM over the word-frequency table
-  [P — Kudo 2018, SentencePiece]. Completes the tokenizer family:
-  `text_vocab_topk` (pass 0) → `tokenizer_bpe_merges` / `_apply` (BPE)
-  → unigram EM (the other mainstream algorithm).
-- ``emb_whitening``: ZCA whitening of the embedding table from one-pass
-  Gram partials (the `emb_pca_project` machinery) — decorrelates
-  dimensions so cosine ≈ Mahalanobis, a standard retrieval-quality
-  post-process [P — ZCA/whitening literature].
-
-Both are rows-only (iterative / eigendecomposition — not
-SQL-expressible); tests pin each against an independent pure-Python /
-numpy reference implementation instead.
-"""
-
-from __future__ import annotations
-
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
-from ..catalog import table
-from ..functions.text import words
-from ..registry import register
-
-_SEED_N = 300  # substring-seed vocabulary size (top by weighted freq)
-_MAX_PIECE = 4
-_EM_ITERS = 3
-_TOP_OUT = 50
-
-
-def _viterbi(word: str, logp: dict[str, float]) -> list[str]:
-    """Best segmentation of ``word`` under piece log-probs: maximize
-    Σ logp, tie-break by FEWER pieces then lexicographic piece
-    sequence. Single characters are always in the vocabulary, so every
-    word segments. Shared by the engine's E-step executors and
-    (deliberately) NOT by the test's reference implementation, which
-    re-derives segmentation independently."""
-    n = len(word)
-    # dp[i] = (score, -n_pieces, seq_tuple) best for word[:i]
-    NEG = float("-inf")
-    dp: list[tuple] = [(NEG, 0, ())] * (n + 1)
-    dp[0] = (0.0, 0, ())
-    for i in range(1, n + 1):
-        best = (NEG, 0, ())
-        for l in range(1, min(_MAX_PIECE, i) + 1):
-            piece = word[i - l : i]
-            lp = logp.get(piece)
-            if lp is None or dp[i - l][0] == NEG:
-                continue
-            cand = (
-                dp[i - l][0] + lp,
-                dp[i - l][1] - 1,
-                dp[i - l][2] + (piece,),
-            )
-            if cand[:2] > best[:2] or (cand[:2] == best[:2] and cand[2] < best[2]):
-                best = cand
-        dp[i] = best  # single chars guarantee best[0] > -inf
-    return list(dp[n][2])
-
-
-@register("tokenizer_unigram_em")  # rows-only: iterative EM; pinned against
-# an independent pure-Python EM on the same word-frequency dict in tests
-def tokenizer_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM tokenizer training (SentencePiece's other half,
-    Kudo 2018 [P]) by Viterbi-EM: seed a substring vocabulary, then
-    alternate (E) best-segmentation piece counts under current piece
-    probabilities with (M) probability re-normalization; prune
-    zero-count pieces each round. The Viterbi (hard-EM) variant is
-    chosen over forward-backward soft counts deliberately: integer
-    counts keep every iteration deterministic and engine-comparable,
-    the property this registry certifies (documented divergence from
-    SentencePiece's soft E-step).
-
-    Scale shape: corpus size only enters the ONE word-frequency agg
-    (distinct words ≪ corpus); every EM iteration is an Arrow-batched
-    mapInPandas over the distinct-word table with the ≤ ~350-piece
-    vocabulary broadcast as a plain dict, followed by a piece-count agg
-    of at most |vocab| rows and an O(|vocab|) driver M-step. No
-    corpus-sized shuffle after the first agg; same dataflow as
-    `tokenizer_bpe_merges`."""
-    import math
-
-    d = table(spark, sf_dir, "documents")
-    word_freq = (
-        d.select(F.explode(words(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
-        .localCheckpoint()  # reused every EM iteration
-    )
-
-    # --- seed vocabulary: weighted substring counts, lengths 1..4 -------
-    def substrings(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for w, f in zip(pdf["w"], pdf["f"]):
-                n = len(w)
-                for i in range(n):
-                    for l in range(1, min(_MAX_PIECE, n - i) + 1):
-                        rows.append((w[i : i + l], int(f)))
-            if rows:
-                yield pd.DataFrame(rows, columns=["piece", "f"])
-
-    sub = (
-        word_freq.mapInPandas(substrings, "piece string, f long")
-        .groupBy("piece")
-        .agg(F.sum("f").alias("cnt"))
-    )
-    top = sub.orderBy(F.desc("cnt"), "piece").limit(_SEED_N).collect()
-    chars = (
-        sub.filter(F.length("piece") == 1).select("piece", "cnt").collect()
-    )
-    counts: dict[str, int] = {}
-    for r in chars:  # single chars first: coverage guarantee
-        counts[r["piece"]] = int(r["cnt"])
-    for r in top:
-        counts.setdefault(r["piece"], int(r["cnt"]))
-
-    # --- Viterbi-EM ----------------------------------------------------
-    for _ in range(_EM_ITERS):
-        total = sum(counts.values())
-        logp = {p: math.log(c / total) for p, c in counts.items()}
-        blog = spark.sparkContext.broadcast(logp)
-
-        def e_step(batches):
-            import pandas as pd
-
-            from nfdump2clickhouse_spark.operators.wave18 import _viterbi
-
-            lp = blog.value
-            for pdf in batches:
-                acc: dict[str, int] = {}
-                for w, f in zip(pdf["w"], pdf["f"]):
-                    for piece in _viterbi(w, lp):
-                        acc[piece] = acc.get(piece, 0) + int(f)
-                if acc:
-                    yield pd.DataFrame(
-                        list(acc.items()), columns=["piece", "cnt"]
-                    )
-
-        new_counts = (
-            word_freq.mapInPandas(e_step, "piece string, cnt long")
-            .groupBy("piece")
-            .agg(F.sum("cnt").alias("cnt"))
-            .collect()
-        )
-        counts = {r["piece"]: int(r["cnt"]) for r in new_counts}
-
-    total = sum(counts.values())
-    out = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:_TOP_OUT]
-    return spark.createDataFrame(
-        [
-            (p, c, int((2 * 10**6 * c + total) // (2 * total)))
-            for p, c in out
-        ],
-        "piece string, count bigint, prob_e6 bigint",
-    )
-
-
-@register("emb_whitening")  # rows-only: eigendecomposition; whitened-
-# covariance-is-identity and numpy-equality pinned in tests
-def emb_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ZCA whitening of the embedding table: x ↦ Σ^{-1/2}(x − μ), the
-    decorrelating post-process that makes cosine behave like
-    Mahalanobis distance (retrieval-quality standard practice [P]).
-    ZCA (W = U Λ^{-1/2} Uᵀ) over PCA-whitening because it is the unique
-    whitener CLOSEST to the identity — whitened dims stay aligned with
-    the original axes.
-
-    Scale shape: identical one-pass machinery as `emb_pca_project` —
-    per-Arrow-batch Gram partials (one numpy GEMM each, fixed 64×64
-    output regardless of batch rows), a P·64²-double reduce, an O(64³)
-    driver eigh, then the whitening matrix broadcasts back and the
-    transform is one GEMM per batch. λ-floor 1e-6 guards rank
-    deficiency."""
-    import numpy as np
-    import pandas as pd
-
-    # a NULL embedding is un-whitenable (r9 edge batch, nullmix mode)
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .filter(F.col("embedding").isNotNull())
-    )
-    dim = 64
-
-    def gram_partials(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "n": [float(X.shape[0])],
-                    "s": [X.sum(axis=0).tolist()],
-                    "g": [(X.T @ X).ravel().tolist()],
-                }
-            )
-
-    parts = e.select("embedding").mapInPandas(
-        gram_partials, "n double, s array<double>, g array<double>"
-    )
-    agg = parts.agg(
-        F.sum("n").alias("n"),
-        F.array(*[F.sum(F.element_at("s", i + 1)) for i in range(dim)]).alias("s"),
-    )
-    gsum = (
-        parts.select(F.posexplode("g").alias("pos", "val"))
-        .groupBy("pos")
-        .agg(F.sum("val").alias("v"))
-        .collect()
-    )
-    row = agg.collect()[0]
-    if not row["n"]:
-        # empty corpus (r9 edge batch, class-3 guard): NULL totals —
-        # nothing to whiten, schema-stable empty result
-        return spark.createDataFrame(
-            [], "vec_id long, white string, norm_r double"
-        )
-    n_rows, s = row["n"], np.array(row["s"])
-    G = np.zeros(dim * dim)
-    for r in gsum:
-        G[r["pos"]] = r["v"]
-    cov = G.reshape(dim, dim) / n_rows - np.outer(s / n_rows, s / n_rows)
-    vals, vecs = np.linalg.eigh(cov)
-    W = vecs @ np.diag(1.0 / np.sqrt(np.maximum(vals, 1e-6))) @ vecs.T
-    mean = s / n_rows
-    bw = e.sparkSession.sparkContext.broadcast((W, mean))
-
-    def whiten(batches):
-        Wm, mu = bw.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Z = (X - mu) @ Wm.T
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    # comma-joined 8-decimal string, NOT array<double>:
-                    # the driver's pandas sort canonicalizer cannot sort
-                    # ndarray cells (the r1 canonicalizer-ERR failure
-                    # mode; SURVEY "flat scalar columns" rule)
-                    "white": [
-                        ",".join(f"{v:.8f}" for v in z) for z in Z
-                    ],
-                    "norm_r": np.round(np.linalg.norm(Z, axis=1), 4),
-                }
-            )
-
-    return e.mapInPandas(
-        whiten, "vec_id long, white string, norm_r double"
-    )
+# Import path kept for the certified body of `tokenizer_unigram_em`, whose
+# worker UDF imports from here; fold it into text when that key is
+# re-certified.
+from .text import _viterbi  # noqa: F401

@@ -1,748 +1,3 @@
-"""Wave-5 operators (round 2): statistical analytics, time-series
-diagnostics, graph analytics, incremental-aggregation algebra, and the
-pure-DataFrame MinHash path for training-data dedup.
-
-Every hash-checked key follows SURVEY §5.3: floats rounded to 4, columns
-aliased identically on both sides, window ORDER BYs carry unique
-tiebreakers, and cross-engine-identical randomness comes from md5/xxhash
-of data keys, never engine RNG.
-"""
-
-from __future__ import annotations
-
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
-
-from ..catalog import table
-from ..functions.similarity import as_double, l2_norm
-from ..functions.text import shingles, words
-from ..registry import register
-
-# --- statistics --------------------------------------------------------------
-
-_CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-
-
-@register(
-    "stats_corr_matrix",
-    oracle="""
-    SELECT p.x, p.y,
-           ROUND(CASE p.x || p.y
-             WHEN 'l_quantityl_extendedprice' THEN corr(l_quantity, l_extendedprice)
-             WHEN 'l_quantityl_discount'      THEN corr(l_quantity, l_discount)
-             WHEN 'l_quantityl_tax'           THEN corr(l_quantity, l_tax)
-             WHEN 'l_extendedpricel_discount' THEN corr(l_extendedprice, l_discount)
-             WHEN 'l_extendedpricel_tax'      THEN corr(l_extendedprice, l_tax)
-             WHEN 'l_discountl_tax'           THEN corr(l_discount, l_tax)
-           END, 4) + 0 AS r
-    FROM lineitem,
-         (VALUES ('l_quantity','l_extendedprice'), ('l_quantity','l_discount'),
-                 ('l_quantity','l_tax'), ('l_extendedprice','l_discount'),
-                 ('l_extendedprice','l_tax'), ('l_discount','l_tax')) AS p(x, y)
-    GROUP BY p.x, p.y
-    """,
-)
-def stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlation matrix (upper triangle) over the fact
-    table's numeric measures — the feature-redundancy screen run before
-    training-set assembly.
-
-    ONE scan computes all C(4,2) pairs as parallel co-moment aggregates
-    (each is a 5-accumulator algebraic agg → map-side partial, one
-    1-row exchange); the matrix is then unpivoted driver-free with
-    `stack`. At 100 TB this stays a single pass over the corpus —
-    the naive per-pair loop would be 6 scans.
-
-    Each correlation is `try_divide(covar_samp, sx*sy)` rather than the
-    builtin `F.corr`, which THROWS DIVIDE_BY_ZERO under ANSI when a
-    column is constant where DuckDB's corr returns NULL (r7 edge sweep;
-    the exact rewrite certified in `stats_spearman_corr`). Each stddev
-    conditions on the PARTNER column being non-null so all moments run
-    over the same pairwise-complete set DuckDB's corr uses — identical
-    to the plain stddev when NULLs are absent, divergent exactly when
-    x/y NULLs don't coincide (ADVICE r9 medium; the `agg_stddev_var`
-    convention). The n>0 filter mirrors the oracle's GROUP BY over a
-    cross join with the empty fact table, which yields zero groups — a
-    global Spark agg always emits its one row, so on a zero-row scan
-    the stack output is dropped identically."""
-    li = table(spark, sf_dir, "lineitem")
-    pairs = [
-        (x, y) for i, x in enumerate(_CORR_COLS) for y in _CORR_COLS[i + 1 :]
-    ]
-
-    def _corr(x: str, y: str):
-        sx = F.stddev_samp(F.when(F.col(y).isNotNull(), F.col(x)))
-        sy = F.stddev_samp(F.when(F.col(x).isNotNull(), F.col(y)))
-        return F.round(F.try_divide(F.covar_samp(x, y), sx * sy), 4) + F.lit(0)
-
-    agg = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[_corr(x, y).alias(f"c{i}") for i, (x, y) in enumerate(pairs)],
-    )
-    stack = ", ".join(
-        f"'{x}', '{y}', c{i}" for i, (x, y) in enumerate(pairs)
-    )
-    return agg.where(F.col("n") > 0).select(
-        F.expr(f"stack({len(pairs)}, {stack}) AS (x, y, r)")
-    )
-
-
-@register(
-    "agg_linreg",
-    oracle="""
-    SELECT l_returnflag,
-           ROUND(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
-           ROUND(regr_intercept(l_extendedprice, l_quantity), 4) AS icept,
-           ROUND(regr_r2(l_extendedprice, l_quantity), 4) AS r2,
-           regr_count(l_extendedprice, l_quantity) AS n
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def agg_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group least-squares fit (price ~ quantity) with the SQL-2016
-    REGR_* aggregate family — trend extraction as a grouped algebraic
-    aggregate: 6 accumulators per group, map-side partials, one shuffle
-    keyed on the group. The closed-form slope/intercept/R² needs no
-    iteration, so 100 TB costs exactly one pass."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.regr_slope("l_extendedprice", "l_quantity"), 4).alias("slope"),
-        F.round(
-            F.regr_intercept("l_extendedprice", "l_quantity"), 4
-        ).alias("icept"),
-        F.round(F.regr_r2("l_extendedprice", "l_quantity"), 4).alias("r2"),
-        F.regr_count("l_extendedprice", "l_quantity").alias("n"),
-    )
-
-
-# --- time-series diagnostics -------------------------------------------------
-
-_ACF_LAGS = range(1, 8)
-
-
-@register(
-    "ts_autocorr",
-    oracle=f"""
-    WITH d AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, SUM(o_totalprice) AS rev
-      FROM orders GROUP BY 1
-    ),
-    l AS (
-      SELECT rev,
-             {", ".join(f"LAG(rev, {k}) OVER w AS r{k}" for k in _ACF_LAGS)}
-      FROM d WINDOW w AS (ORDER BY day)
-    ),
-    c AS (
-      SELECT {", ".join(f"corr(rev, r{k}) AS c{k}" for k in _ACF_LAGS)} FROM l
-    )
-    {" UNION ALL ".join(f"SELECT {k} AS lag, ROUND(c{k}, 4) + 0 AS acf FROM c" for k in _ACF_LAGS)}
-    """,
-)
-def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation of the daily-revenue series at lags 1..7 — the
-    seasonality probe run before forecasting or anomaly thresholds.
-
-    The series is the OUTPUT of a distributed day-grain aggregation
-    (one shuffle over the corpus → one row per day); the unpartitioned
-    lag window then runs over thousands of rows, not 100 TB, so the
-    single-task window is the cheap part by construction. ACF is over
-    observed days (calendar gap-fill is `ts_gap_fill`'s job)."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum("o_totalprice").alias("rev"))
-    w = Window.orderBy("day")
-    lagged = daily.select(
-        "rev", *[F.lag("rev", k).over(w).alias(f"r{k}") for k in _ACF_LAGS]
-    )
-    c = lagged.agg(
-        *[
-            (F.round(F.corr("rev", f"r{k}"), 4) + F.lit(0)).alias(f"c{k}")
-            for k in _ACF_LAGS
-        ]
-    )
-    stack = ", ".join(f"{k}, c{k}" for k in _ACF_LAGS)
-    return c.select(
-        F.expr(f"stack({len(list(_ACF_LAGS))}, {stack}) AS (lag, acf)")
-    )
-
-
-@register(
-    "ts_seasonal_decompose",
-    oracle="""
-    WITH d AS (
-      SELECT CAST(o_orderdate AS DATE) AS day, SUM(o_totalprice) AS rev
-      FROM orders GROUP BY 1
-    ),
-    t AS (
-      SELECT day, rev,
-             AVG(rev) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING
-                            AND 3 FOLLOWING) AS trend
-      FROM d
-    )
-    SELECT CAST(date_part('dow', day) AS INT) AS dow,
-           COUNT(*) AS n_days,
-           ROUND(AVG(rev - trend), 4) + 0 AS seasonal
-    FROM t GROUP BY 1
-    """,
-)
-def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical additive decomposition, the moving-average flavor:
-    trend = centered 7-day rolling mean of daily revenue, seasonal =
-    day-of-week mean of the detrended series. Like `ts_autocorr`, all
-    windowing happens on the post-aggregation day-grain series (tiny at
-    any corpus scale); the corpus-sized work is the one day-grain
-    shuffle. dow is 0=Sunday in both engines (Spark dayofweek() is
-    1-based)."""
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum("o_totalprice").alias("rev"))
-    w = Window.orderBy("day").rowsBetween(-3, 3)
-    t = daily.select(
-        "day", "rev", F.avg("rev").over(w).alias("trend")
-    )
-    return t.groupBy(
-        (F.dayofweek("day") - 1).cast("int").alias("dow")
-    ).agg(
-        F.count(F.lit(1)).alias("n_days"),
-        (F.round(F.avg(F.col("rev") - F.col("trend")), 4) + F.lit(0)).alias(
-            "seasonal"
-        ),
-    )
-
-
-# --- graph analytics ---------------------------------------------------------
-
-
-@register(
-    "graph_triangle_count",
-    oracle="""
-    WITH e0 AS MATERIALIZED (
-      SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
-                      greatest(c.c_nationkey, s.s_nationkey) AS b
-      FROM lineitem l
-      JOIN orders o ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      WHERE c.c_nationkey <> s.s_nationkey
-    ),
-    tri AS (
-      SELECT e1.a AS x, e1.b AS y, e2.b AS z
-      FROM e0 e1 JOIN e0 e2 ON e1.b = e2.a
-                 JOIN e0 e3 ON e3.a = e1.a AND e3.b = e2.b
-    ),
-    m AS (
-      SELECT x AS node FROM tri UNION ALL
-      SELECT y FROM tri UNION ALL
-      SELECT z FROM tri
-    )
-    SELECT node, COUNT(*) AS triangles FROM m GROUP BY node
-    """,
-)
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle count on the undirected nation trade graph —
-    the clustering/community primitive next to `graph_pagerank` and
-    `dedup_cluster_cc`.
-
-    Compact-forward algorithm: edges are oriented low→high nationkey, so
-    each triangle {x<y<z} is materialized exactly once by the path join
-    (x,y)⋈(y,z) closed by (x,z) — the standard distributed formulation
-    whose candidate count is Σ d(v)²/2, not |V|³. The corpus-scale work
-    is the star join folding 100 TB of facts into the tiny distinct edge
-    list (broadcast dims, one dedup shuffle); the triangle joins then run
-    on |E| rows. Per-node counts come from unioning the three corners —
-    membership, not wedge-count, so no double counting."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    e0 = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.least("c_nationkey", "s_nationkey").alias("a"),
-            F.greatest("c_nationkey", "s_nationkey").alias("b"),
-        )
-        .distinct()
-    )
-    # the edge list is tiny after the distinct; checkpoint so the three
-    # self-join arms reuse it instead of re-running the star join 3×
-    # (measured 250 s → 3 s at sf0.1)
-    e0 = e0.localCheckpoint()
-    e1 = e0.alias("e1")
-    e2 = e0.alias("e2")
-    e3 = e0.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
-        .join(
-            e3,
-            (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")),
-        )
-        .select(
-            F.col("e1.a").alias("x"),
-            F.col("e1.b").alias("y"),
-            F.col("e2.b").alias("z"),
-        )
-    )
-    corners = (
-        tri.select(F.col("x").alias("node"))
-        .unionAll(tri.select(F.col("y").alias("node")))
-        .unionAll(tri.select(F.col("z").alias("node")))
-    )
-    return corners.groupBy("node").agg(F.count(F.lit(1)).alias("triangles"))
-
-
-# --- incremental-aggregation algebra -----------------------------------------
-
-
-@register(
-    "agg_partial_merge",
-    oracle="""
-    WITH p AS (
-      SELECT l_orderkey % 4 AS shard, l_returnflag,
-             COUNT(*) AS c, SUM(l_extendedprice) AS s,
-             MIN(l_extendedprice) AS mn, MAX(l_extendedprice) AS mx
-      FROM lineitem GROUP BY 1, 2
-    )
-    SELECT l_returnflag, CAST(SUM(c) AS BIGINT) AS n,
-           ROUND(SUM(s), 2) AS total,
-           ROUND(SUM(s) / SUM(c), 4) AS avg_price,
-           ROUND(MIN(mn), 2) AS min_price,
-           ROUND(MAX(mx), 2) AS max_price
-    FROM p GROUP BY l_returnflag
-    """,
-)
-def agg_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level aggregation: per-shard partial states (count/sum/min/
-    max) re-aggregated into global figures — the algebra behind
-    incremental rollups, materialized-view maintenance, and cross-
-    datacenter merge (each site ships O(groups) state, never rows).
-    The oracle computes the SAME two-level plan, pinning that the merge
-    functions (sum-of-counts, sum-of-sums, min-of-mins, max-of-maxes,
-    ratio-of-merged-sums for avg) reconstruct the direct answer; the
-    equality with the direct single-level aggregate is asserted in
-    tests/test_correctness.py. This is also exactly what Spark's own
-    partial/final HashAggregate pair does inside one query — here it is
-    made explicit so the state can live across runs."""
-    li = table(spark, sf_dir, "lineitem")
-    partial = li.groupBy(
-        (F.col("l_orderkey") % 4).alias("shard"), "l_returnflag"
-    ).agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum("l_extendedprice").alias("s"),
-        F.min("l_extendedprice").alias("mn"),
-        F.max("l_extendedprice").alias("mx"),
-    )
-    return partial.groupBy("l_returnflag").agg(
-        F.sum("c").alias("n"),
-        F.round(F.sum("s"), 2).alias("total"),
-        F.round(F.sum("s") / F.sum("c"), 4).alias("avg_price"),
-        F.round(F.min("mn"), 2).alias("min_price"),
-        F.round(F.max("mx"), 2).alias("max_price"),
-    )
-
-
-# --- data profiling ----------------------------------------------------------
-
-_PROFILE_NUM = ["o_orderkey", "o_custkey", "o_totalprice"]
-_PROFILE_STR = ["o_orderstatus", "o_orderpriority"]
-
-
-@register(
-    "data_profile",
-    oracle="""
-    SELECT 'o_orderkey' AS col, COUNT(*) AS n,
-           COUNT(*) - COUNT(o_orderkey) AS nulls,
-           COUNT(DISTINCT o_orderkey) AS n_distinct,
-           ROUND(MIN(o_orderkey) + 0.0, 4) AS min_num,
-           ROUND(MAX(o_orderkey) + 0.0, 4) AS max_num,
-           CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-    FROM orders
-    UNION ALL
-    SELECT 'o_custkey', COUNT(*), COUNT(*) - COUNT(o_custkey),
-           COUNT(DISTINCT o_custkey), ROUND(MIN(o_custkey) + 0.0, 4),
-           ROUND(MAX(o_custkey) + 0.0, 4), NULL, NULL
-    FROM orders
-    UNION ALL
-    SELECT 'o_totalprice', COUNT(*), COUNT(*) - COUNT(o_totalprice),
-           COUNT(DISTINCT o_totalprice), ROUND(MIN(o_totalprice), 4),
-           ROUND(MAX(o_totalprice), 4), NULL, NULL
-    FROM orders
-    UNION ALL
-    SELECT 'o_orderstatus', COUNT(*), COUNT(*) - COUNT(o_orderstatus),
-           COUNT(DISTINCT o_orderstatus), NULL, NULL,
-           MIN(o_orderstatus), MAX(o_orderstatus)
-    FROM orders
-    UNION ALL
-    SELECT 'o_orderpriority', COUNT(*), COUNT(*) - COUNT(o_orderpriority),
-           COUNT(DISTINCT o_orderpriority), NULL, NULL,
-           MIN(o_orderpriority), MAX(o_orderpriority)
-    FROM orders
-    """,
-)
-def data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-level data profile (row count, null count, exact distinct
-    cardinality, min/max) — the ingest-time quality gate every pipeline
-    runs before trusting a new drop.
-
-    ONE scan: all per-column aggregates run in a single Aggregate (the
-    multi-distinct is planned via Expand — one pass over the data,
-    ×|distinct cols| row amplification map-side). At 100 TB swap exact
-    COUNT(DISTINCT) for approx_count_distinct and the Expand disappears;
-    exact is kept here because the oracle must agree bit-for-bit. The
-    per-column rows are unpivoted with `stack`, never a driver loop of
-    per-column jobs."""
-    o = table(spark, sf_dir, "orders")
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for c in _PROFILE_NUM + _PROFILE_STR:
-        aggs.append((F.count(F.lit(1)) - F.count(c)).alias(f"nulls_{c}"))
-        aggs.append(F.countDistinct(c).alias(f"nd_{c}"))
-    for c in _PROFILE_NUM:
-        aggs.append(F.round(F.min(c) + F.lit(0.0), 4).alias(f"mn_{c}"))
-        aggs.append(F.round(F.max(c) + F.lit(0.0), 4).alias(f"mx_{c}"))
-    for c in _PROFILE_STR:
-        aggs.append(F.min(c).alias(f"mns_{c}"))
-        aggs.append(F.max(c).alias(f"mxs_{c}"))
-    one = table(spark, sf_dir, "orders").agg(*aggs)
-    parts = []
-    for c in _PROFILE_NUM:
-        parts.append(
-            f"'{c}', n, nulls_{c}, nd_{c}, mn_{c}, mx_{c}, "
-            "CAST(NULL AS STRING), CAST(NULL AS STRING)"
-        )
-    for c in _PROFILE_STR:
-        parts.append(
-            f"'{c}', n, nulls_{c}, nd_{c}, CAST(NULL AS DOUBLE), "
-            f"CAST(NULL AS DOUBLE), mns_{c}, mxs_{c}"
-        )
-    return one.select(
-        F.expr(
-            f"stack({len(parts)}, {', '.join(parts)}) "
-            "AS (col, n, nulls, n_distinct, min_num, max_num, min_str, max_str)"
-        )
-    )
-
-
-# --- deterministic weighted sampling -----------------------------------------
-
-
-@register(
-    "sample_weighted",
-    oracle="""
-    WITH k AS (
-      SELECT o_orderkey, o_totalprice,
-             ln((CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
-                 AS BIGINT) + 0.5) / 4294967296.0) / o_totalprice AS score
-      FROM orders
-    )
-    SELECT o_orderkey, ROUND(o_totalprice, 2) AS w,
-           ROUND(score * 1000000, 4) + 0 AS score_ppm
-    FROM k ORDER BY score DESC, o_orderkey LIMIT 200
-    """,
-)
-def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling without replacement (k=200, weight ∝ order
-    value), the deterministic A-Res/Efraimidis-Spirakis formulation:
-    each row's priority is ln(u)/w with u a uniform derived from md5 of
-    the row KEY — membership is a pure function of the data, so
-    backfills and both engines agree exactly (engine RNG cannot be
-    replayed across partitionings; cf. `sample_reservoir` for the
-    unweighted cousin).
-
-    Physical shape: `TakeOrderedAndProject` — per-task k-heaps, driver
-    merges P heaps; no sort or shuffle of the corpus at any scale."""
-    o = table(spark, sf_dir, "orders")
-    u = (
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        + 0.5
-    ) / 4294967296.0
-    score = F.log(u) / F.col("o_totalprice")
-    return (
-        o.select(
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("w"),
-            # "+ 0" canonicalizes -0.0 → 0.0 (SURVEY §8 recipe; a barely-
-            # negative score rounds to -0.0 here, seen at sf0.1)
-            (F.round(score * 1_000_000, 4) + F.lit(0)).alias("score_ppm"),
-            score.alias("_s"),
-        )
-        .orderBy(F.col("_s").desc(), "o_orderkey")
-        .limit(200)
-        .drop("_s")
-    )
-
-
-# --- char-ngram language model scoring ---------------------------------------
-
-
-@register(
-    "text_ngram_lm",
-    oracle="""
-    WITH bg AS (
-      SELECT doc_id, substr(text, CAST(i AS INT), 2) AS b
-      FROM documents,
-           LATERAL (SELECT unnest(range(1, greatest(length(text), 1))) AS i) t
-      WHERE length(text) >= 2
-    ),
-    model AS (
-      SELECT b, ln(COUNT(*) * 1.0 / SUM(COUNT(*)) OVER ()) AS logp
-      FROM bg GROUP BY b
-    )
-    SELECT bg.doc_id, COUNT(*) AS n_bigrams,
-           ROUND(AVG(model.logp), 4) AS avg_logp
-    FROM bg JOIN model ON bg.b = model.b
-    GROUP BY bg.doc_id
-    """,
-)
-def text_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-bigram language-model scoring: train unigram-of-bigrams
-    probabilities on the corpus itself, then score each document by mean
-    log-probability — the KenLM-style fluency/quality signal used to
-    filter machine-generated or garbled text from training data
-    (low avg_logp = improbable character sequences).
-
-    Pipeline: row-local bigram explode (sequence+substr HOF, no UDF) →
-    one aggregation keyed on the bigram (char-bigram vocab is bounded by
-    charset², so the model table stays small and AQE broadcasts the
-    score join) → per-doc mean. For word-level n-gram LMs the identical
-    plan holds except the model join stays a shuffle join keyed on the
-    n-gram — still two bounded shuffles at 100 TB."""
-    d = table(spark, sf_dir, "documents").filter(F.length("text") >= 2)
-    bg = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("text") - 1),
-                lambda i: F.col("text").substr(i, F.lit(2)),
-            )
-        ).alias("b"),
-    )
-    w_all = Window.partitionBy()
-    model = (
-        bg.groupBy("b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("b", F.log(F.col("cnt") / F.sum("cnt").over(w_all)).alias("logp"))
-    )
-    return (
-        bg.join(model, "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.avg("logp"), 4).alias("avg_logp"),
-        )
-    )
-
-
-# --- pure-DataFrame MinHash banding ------------------------------------------
-
-_MH_HASHES = 32
-_MH_BANDS = 8  # r = 4 rows/band; P(candidate | J=0.8) ≈ 0.985, | J=0.3) ≈ 0.06
-
-
-@register("dedup_minhash_pure")  # rows-only: banding is probabilistic;
-# precision/recall vs the exact-Jaccard key are pinned in tests
-def dedup_minhash_pure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup detection as pure Column expressions — no
-    MLlib, no vector UDT, no Python worker: signatures are
-    array_min over xxhash64 of the shingle set (row-local, codegen'd),
-    band keys hash 4-signature slices, candidates come from equal band
-    keys, and every candidate is verified with EXACT Jaccard
-    (array_intersect on the carried shingle sets) so precision is 1.0
-    by construction; banding only affects recall (b=8, r=4 → ≈0.985 at
-    the J=0.8 threshold).
-
-    This is the 100 TB path of the dedup family: vs MLlib's
-    `dedup_near_minhash` it is deterministic across runs/engines (seeded
-    xxhash64, no RNG), keeps signatures out of Python entirely, and its
-    only shuffles are the band-bucket groupBy and the pair dedup — both
-    keyed, both bounded by the hot-bucket cap (same guard as
-    `dedup_ngram_jaccard`). Verification joins fetch only candidate
-    docs' shingle sets, never the corpus."""
-    d = table(spark, sf_dir, "documents")
-    # same single-row-group parallelism gate as shingle_pair_counts: the
-    # 32-hash signature HOF is the CPU hot spot and must not serialize
-    par = spark.sparkContext.defaultParallelism
-    if len(d.inputFiles()) < par:  # metadata-only (vs .rdd → extra job)
-        d = d.repartition(par)
-    sets = d.select(
-        "doc_id", F.array_distinct(shingles(words(F.col("text")))).alias("shs")
-    ).filter(F.size("shs") > 0)
-    # shingle sets feed three arms (signatures + both verify sides);
-    # checkpoint so tokenization runs once, not three times
-    sets = sets.localCheckpoint()
-    sig = sets.select(
-        "doc_id",
-        "shs",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(_MH_HASHES - 1)),
-            lambda j: F.array_min(
-                F.transform(
-                    F.col("shs"),
-                    lambda s: F.xxhash64(F.concat(j.cast("string"), F.lit("|"), s)),
-                )
-            ),
-        ).alias("sig"),
-    )
-    r = _MH_HASHES // _MH_BANDS
-    band_cols = [
-        F.xxhash64(
-            F.concat_ws(
-                ",",
-                F.lit(str(b)),
-                *[
-                    F.element_at("sig", b * r + i + 1).cast("string")
-                    for i in range(r)
-                ],
-            )
-        ).alias(f"bk{b}")
-        for b in range(_MH_BANDS)
-    ]
-    bands = sig.select(
-        "doc_id", F.size("shs").alias("n"), F.array(*band_cols).alias("bks")
-    ).select("doc_id", "n", F.explode("bks").alias("bk"))
-    buckets = bands.groupBy("bk").agg(
-        F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ds")
-    )
-    buckets = buckets.filter(
-        (F.size("ds") >= 2) & (F.size("ds") <= 10_000)
-    )
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ds",
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ds"),
-                                i + 2,
-                                F.greatest(F.size("ds") - i - 1, F.lit(0)),
-                            ),
-                            lambda y: F.struct(
-                                x["doc_id"].alias("id1"),
-                                y["doc_id"].alias("id2"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .distinct()
-    )
-    lhs = sets.select(
-        F.col("doc_id").alias("id1"), F.col("shs").alias("shs1")
-    )
-    rhs = sets.select(
-        F.col("doc_id").alias("id2"), F.col("shs").alias("shs2")
-    )
-    verified = (
-        pairs.join(lhs, "id1")
-        .join(rhs, "id2")
-        .select(
-            "id1",
-            "id2",
-            (
-                F.size(F.array_intersect("shs1", "shs2"))
-                / (
-                    F.size("shs1")
-                    + F.size("shs2")
-                    - F.size(F.array_intersect("shs1", "shs2"))
-                )
-            ).alias("j"),
-        )
-        .filter(F.col("j") >= 0.8)
-    )
-    return verified.select(
-        "id1", "id2", F.round("j", 4).alias("jaccard")
-    )
-
-
-# --- end-to-end curation manifest --------------------------------------------
-
-
-@register(
-    "curation_manifest_e2e",
-    oracle="""
-    WITH j AS (
-      SELECT d.doc_id, d.lang, d.source, d.text,
-             len(list_filter(string_split(d.text, ' '), w -> w <> ''))
-               AS tokens,
-             sqrt(list_aggregate(
-               list_transform(e.embedding, x -> CAST(x AS DOUBLE) *
-                                               CAST(x AS DOUBLE)), 'sum'))
-               AS nrm
-      FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-      WHERE d.n_chars BETWEEN 50 AND 10000
-    ),
-    q AS (SELECT * FROM j WHERE tokens >= 10),
-    dd AS (
-      SELECT *, ROW_NUMBER() OVER
-        (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-      FROM q
-    )
-    SELECT doc_id, lang, source, tokens,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                     AS BIGINT) % 20 < 1 THEN 'test'
-                WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                     AS BIGINT) % 20 < 3 THEN 'valid'
-                ELSE 'train' END AS split,
-           ROUND(nrm, 4) AS l2
-    FROM dd WHERE rn = 1
-    """,
-)
-def curation_manifest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-manifest assembly — the composition every
-    curation run executes: join text with its embedding, length/token
-    quality gate, exact-dup removal by content fingerprint (keep lowest
-    doc_id), deterministic hash-bucket split assignment (85/10/5,
-    backfill-stable), embedding L2 norm carried for downstream filters.
-
-    Scale shape: the doc⋈embedding join is keyed on the id both tables
-    are naturally bucketed by; the fingerprint dedup is ONE hash shuffle
-    keyed on md5(text) (pre-hashed, so wide text never rides the
-    shuffle twice); split/norm are row-local. Three bounded shuffles
-    total at any corpus size."""
-    d = table(spark, sf_dir, "documents").filter(
-        F.col("n_chars").between(50, 10_000)
-    )
-    e = table(spark, sf_dir, "embeddings")
-    j = d.join(e, d.doc_id == e.vec_id).select(
-        "doc_id",
-        "lang",
-        "source",
-        "text",
-        F.size(words(F.col("text"))).alias("tokens"),
-        l2_norm(as_double("embedding")).alias("nrm"),
-    )
-    # r11 (guide §2.3 — shuffle keys, not payloads): hash the text to its
-    # 32-byte fingerprint BEFORE the dedup shuffle and drop the text
-    # column; nothing downstream reads it, so the window's exchange
-    # carries fingerprints instead of whole documents
-    q = j.filter(F.col("tokens") >= 10).select(
-        "doc_id", "lang", "source", "tokens", "nrm", F.md5("text").alias("fp")
-    )
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    dd = q.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % 20
-    )
-    return dd.select(
-        "doc_id",
-        "lang",
-        "source",
-        "tokens",
-        F.when(bucket < 1, "test")
-        .when(bucket < 3, "valid")
-        .otherwise("train")
-        .alias("split"),
-        F.round("nrm", 4).alias("l2"),
-    )
+# Import path kept for the certified body of `dedup_method_overlap`, which
+# imports from here; fold it into dedup_extra when that key is re-certified.
+from .dedup_extra import dedup_minhash_pure  # noqa: F401

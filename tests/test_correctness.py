@@ -3,6 +3,7 @@ runs on Spark and (when an oracle exists) must match DuckDB exactly."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 
@@ -282,7 +283,7 @@ def test_bloom_prefilter_selectivity(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from nfdump2clickhouse_spark.catalog import table
-    from nfdump2clickhouse_spark.operators.wave4 import (
+    from nfdump2clickhouse_spark.operators.joins import (
         bloom_build,
         bloom_might_contain,
     )
@@ -384,7 +385,7 @@ def test_spacesaving_no_false_negatives(spark):
 
     import pyspark.sql.functions as F
 
-    from nfdump2clickhouse_spark.operators.wave6 import mg_summaries
+    from nfdump2clickhouse_spark.operators.relational import mg_summaries
 
     # 3 heavy items (30%, 20%, 10%) + uniform tail over 1000 ids
     rows = (
@@ -632,7 +633,7 @@ def test_bpe_merges_match_reference(spark, sf_dir):
 
     from nfdump2clickhouse_spark.catalog import table
     from nfdump2clickhouse_spark.functions.text import words
-    from nfdump2clickhouse_spark.operators.wave12 import bpe_reference
+    from nfdump2clickhouse_spark.operators.text import bpe_reference
 
     got = [
         (r.rank, r.pair, r.freq)
@@ -741,14 +742,34 @@ def test_registry_order_certification_rotation():
         if n_uncert >= 50:
             assert all(tier(k) != 3 for k in window), (
                 "sweep window would waste budget re-certifying current passes")
-    # the expensive streaming demos trail in RAW registration order — the
-    # evidence-free property that is stable across sweep rounds (asserting
-    # it on the evidence-adjusted order broke whenever the pool shrank)
+    # the expensive streaming demos trail in the SWEEP_ORDER base table —
+    # the evidence-free property that is stable across sweep rounds
+    # (asserting it on the evidence-adjusted order broke whenever the pool
+    # shrank)
+    base = registry.SWEEP_ORDER
+    stream_pos = [i for i, k in enumerate(base) if k.startswith("stream_")]
+    assert all(i >= 0.6 * len(base) for i in stream_pos), (
+        "streaming demos must sit in the SWEEP_ORDER tail (cheap hash "
+        "families first)")
+
+
+def test_sweep_order_lists_every_key_once():
+    """SWEEP_ORDER is the base sweep order: every registered key appears
+    in it exactly once, and it names no key that is not registered."""
     registry._load_operators()
-    reg_order = list(registry._REGISTRY)
-    stream_pos = [i for i, k in enumerate(reg_order) if k.startswith("stream_")]
-    assert all(i >= 0.6 * len(reg_order) for i in stream_pos), (
-        "streaming demos must register late (cheap hash families first)")
+    assert len(set(registry.SWEEP_ORDER)) == len(registry.SWEEP_ORDER)
+    assert set(registry.SWEEP_ORDER) == set(registry._REGISTRY)
+
+
+def test_registry_order_ignores_registration_order(monkeypatch):
+    """The sweep order comes from the SWEEP_ORDER table, not from the order
+    in which operator modules happen to register their keys: reversing
+    the registry's insertion order leaves ``all_specs()`` unchanged."""
+    registry._load_operators()
+    before = list(registry.all_specs())
+    reversed_registry = dict(reversed(list(registry._REGISTRY.items())))
+    monkeypatch.setattr(registry, "_REGISTRY", reversed_registry)
+    assert list(registry.all_specs()) == before
 
 
 def test_evidence_hashes_cover_every_driver_certification():
@@ -1012,7 +1033,7 @@ def test_bpe_apply_matches_pure_python(spark, sf_dir):
     """Distributed BPE encode == pure-Python Sennrich greedy encode with
     the same learned merges, recomputed here doc-by-doc."""
     from nfdump2clickhouse_spark.catalog import table
-    from nfdump2clickhouse_spark.operators.wave12 import learn_bpe_merges
+    from nfdump2clickhouse_spark.operators.text import learn_bpe_merges
 
     merges = [m[1].split(" ") for m in learn_bpe_merges(spark, sf_dir, 5)]
 
@@ -1111,24 +1132,26 @@ def test_ivfpq_recall_contract(spark, sf_dir):
 
 
 def test_sweep_order_unit(monkeypatch):
-    """Pure-unit pin of the rotation tiers: err < never-seen < pass,
-    stable within tiers (registration order preserved)."""
+    """Pure-unit pin of the rotation tiers: err < never-seen < pass, each
+    tier in SWEEP_ORDER whatever order the keys are passed in."""
     ev = {"a": "pass", "b": "err", "d": "pass", "f": "err"}
     monkeypatch.setattr(registry, "_certification_evidence", lambda: ev)
-    got = registry._sweep_order(["a", "b", "c", "d", "e", "f"])
+    monkeypatch.setattr(registry, "SWEEP_ORDER", ("a", "b", "c", "d", "e", "f"))
+    got = registry._sweep_order(["f", "e", "d", "c", "b", "a"])
     assert got == ["b", "f", "c", "e", "a", "d"]
 
 
 def test_sweep_order_tiers_on_synthetic_evidence(monkeypatch):
     """All four tiers on the real registry with made-up driver evidence
     (the committed evidence certifies every key, so it exercises only
-    the last tier). The last three registered keys are, in registration
-    order, never swept, a pass whose source changed since certification,
-    and an ERR; they must lead in reverse order (ERR, stale pass, never
-    swept), followed by every certified key in registration order."""
+    the last tier). The last three SWEEP_ORDER keys are, in table order,
+    never swept, a pass whose source changed since certification, and an
+    ERR; they must lead in reverse order (ERR, stale pass, never swept),
+    followed by every certified key in SWEEP_ORDER, whatever the
+    registration order."""
     registry._load_operators()
     reg_order = list(registry._REGISTRY)
-    *certified, never, stale, err = reg_order
+    *certified, never, stale, err = registry.SWEEP_ORDER
     evidence = {k: ("pass", 12) for k in certified + [stale]}
     evidence[err] = ("err", 12)
     hashes = {
@@ -1920,7 +1943,7 @@ def test_funnel_windowed_dp_vs_bruteforce(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave16 import _FUNNEL_W_S
+    from nfdump2clickhouse_spark.operators.events import _FUNNEL_W_S
 
     pdf = (
         _table(spark, sf_dir, "events")
@@ -1975,15 +1998,15 @@ def test_kcore_fixpoint_reached(spark, sf_dir):
     """The unrolled peel count must be PAST the fixpoint: running the
     same peel with one extra round must not change the surviving set
     (otherwise the fixed unroll silently under-peels)."""
-    import nfdump2clickhouse_spark.operators.wave17 as w17
+    import nfdump2clickhouse_spark.operators.joins as joins
 
-    base = w17.graph_kcore(spark, sf_dir).toPandas()
-    orig = w17._KCORE_ROUNDS
+    base = joins.graph_kcore(spark, sf_dir).toPandas()
+    orig = joins._KCORE_ROUNDS
     try:
-        w17._KCORE_ROUNDS = orig + 1
-        more = w17.graph_kcore(spark, sf_dir).toPandas()
+        joins._KCORE_ROUNDS = orig + 1
+        more = joins.graph_kcore(spark, sf_dir).toPandas()
     finally:
-        w17._KCORE_ROUNDS = orig
+        joins._KCORE_ROUNDS = orig
     b = base.sort_values("node").reset_index(drop=True)
     m = more.sort_values("node").reset_index(drop=True)
     assert b.equals(m), "peel had not converged within the unrolled rounds"
@@ -1992,11 +2015,11 @@ def test_kcore_fixpoint_reached(spark, sf_dir):
 def test_kcore_is_maximal_subgraph(spark, sf_dir):
     """Every surviving node's core_degree must be >= k, and the core is
     consistent: degrees counted only among survivors."""
-    import nfdump2clickhouse_spark.operators.wave17 as w17
+    import nfdump2clickhouse_spark.operators.joins as joins
 
-    pdf = w17.graph_kcore(spark, sf_dir).toPandas()
+    pdf = joins.graph_kcore(spark, sf_dir).toPandas()
     if len(pdf):
-        assert (pdf["core_degree"] >= w17._KCORE_K).all()
+        assert (pdf["core_degree"] >= joins._KCORE_K).all()
 
 
 def test_repeat_factor_copies_bounds(spark, sf_dir):
@@ -2027,7 +2050,7 @@ def test_unigram_em_matches_pure_python_reference(spark, sf_dir):
 
     from nfdump2clickhouse_spark.catalog import table as _table
     from nfdump2clickhouse_spark.functions.text import words
-    from nfdump2clickhouse_spark.operators.wave18 import (
+    from nfdump2clickhouse_spark.operators.text import (
         _EM_ITERS, _MAX_PIECE, _SEED_N, _TOP_OUT,
     )
 
@@ -2230,7 +2253,7 @@ def test_cuped_actually_reduces_variance(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave20 import _MULT, _SPLIT
+    from nfdump2clickhouse_spark.operators.events import _MULT, _SPLIT
 
     e = (
         _table(spark, sf_dir, "events")
@@ -2295,6 +2318,10 @@ def test_registry_catalog_reconciles(spark, sf_dir):
     assert set(pdf.loc[pdf["hash_checked"], "key"]) == oracled
     assert (pdf["summary"].str.len() > 0).all(), "undocumented key"
     assert pdf["key"].is_unique
+    for key, module in zip(pdf["key"], pdf["module"]):
+        mod = importlib.import_module(f"nfdump2clickhouse_spark.operators.{module}")
+        fn = SPECS[key].fn
+        assert getattr(mod, fn.__name__, None) is fn, (key, module)
 
 
 def test_hll_sliding_union_error_bound(spark, sf_dir):
@@ -2451,7 +2478,7 @@ def test_spatial_grid_cover_is_complete(spark):
     import pyspark.sql.functions as F
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave23 import _RADIUS_KM
+    from nfdump2clickhouse_spark.operators.joins import _RADIUS_KM
 
     sfd = "/root/testdata/sf0.001"
     got = (
@@ -2577,7 +2604,7 @@ def test_vocab_coverage_matches_pandas(spark, sf_dir):
     import re
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave23 import _VOCAB_K
+    from nfdump2clickhouse_spark.operators.text import _VOCAB_K
 
     got = (
         SPECS["tokenizer_vocab_coverage"].fn(spark, sf_dir)
@@ -2689,7 +2716,7 @@ def test_power_analysis_formula(spark, sf_dir):
     import math
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave24 import _Z_SUM
+    from nfdump2clickhouse_spark.operators.events import _Z_SUM
 
     got = (
         SPECS["events_power_analysis"].fn(spark, sf_dir)
@@ -2735,7 +2762,7 @@ def test_hill_tail_matches_numpy(spark, sf_dir):
     import numpy as np
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave24 import _HILL_K
+    from nfdump2clickhouse_spark.operators.stats import _HILL_K
 
     got = (
         SPECS["stats_hill_tail_index"].fn(spark, sf_dir)
@@ -2770,7 +2797,7 @@ def test_kcenter_matches_numpy_greedy(spark, sf_dir):
     import numpy as np
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave25 import _KCENTER_K
+    from nfdump2clickhouse_spark.operators.ml import _KCENTER_K
 
     got = SPECS["sample_kcenter_coreset"].fn(spark, sf_dir).toPandas()
     pdf = _table(spark, sf_dir, "embeddings").select("vec_id", "embedding").toPandas()
@@ -3090,7 +3117,7 @@ def test_lttb_endpoints_and_membership(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave28 import _LTTB_BUCKETS
+    from nfdump2clickhouse_spark.operators.windows import _LTTB_BUCKETS
 
     got = SPECS["ts_downsample_lttb"].fn(spark, sf_dir).toPandas()
     daily = (
@@ -3331,7 +3358,7 @@ def test_neyman_allocates_exact_budget_optimally(spark, sf_dir):
     import math
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave29 import _NEYMAN_N
+    from nfdump2clickhouse_spark.operators.ml import _NEYMAN_N
 
     got = (
         SPECS["sample_neyman_allocation"].fn(spark, sf_dir)
@@ -3515,7 +3542,7 @@ def test_ppswor_is_exact_weighted_top200(spark, sf_dir):
     import numpy as np
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave31 import _M32, _MULT
+    from nfdump2clickhouse_spark.operators.ml import _M32, _MULT
 
     got = SPECS["sample_ppswor"].fn(spark, sf_dir).toPandas()
     o = _table(spark, sf_dir, "orders").select(
@@ -3637,7 +3664,7 @@ def test_wordpiece_canonical_examples_and_spark_economics(spark, sf_dir):
     canonical BERT example shapes, then full-corpus reconciliation of
     the Spark economics against a pandas replay."""
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave31 import (
+    from nfdump2clickhouse_spark.operators.text import (
         build_wordpiece_vocab,
         wordpiece_encode,
     )
@@ -4262,7 +4289,7 @@ def test_random_projection_matches_numpy(spark, sf_dir):
     import numpy as np
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave36 import _JL_K, _JL_MULT
+    from nfdump2clickhouse_spark.operators.ann import _JL_K, _JL_MULT
 
     row = SPECS["emb_random_projection"].fn(spark, sf_dir).toPandas().iloc[0]
     emb = (
@@ -4580,7 +4607,7 @@ def test_balanced_downsample_exact_membership(spark, sf_dir):
     id checksum pins exact membership, and kept counts are
     min(500, class size)."""
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave38 import _BAL_MULT
+    from nfdump2clickhouse_spark.operators.ml import _BAL_MULT
 
     got = (
         SPECS["sample_balanced_downsample"].fn(spark, sf_dir)
@@ -4603,7 +4630,7 @@ def test_soundex_spark_matches_python_reference(spark, sf_dir):
     import pyspark.sql.functions as SF
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave38 import soundex_py
+    from nfdump2clickhouse_spark.operators.dedup_extra import soundex_py
 
     for w, code in [
         ("Robert", "R163"), ("Rupert", "R163"), ("Ashcraft", "A261"),
@@ -4876,7 +4903,7 @@ def test_median_of_means_robustness_property(spark, sf_dir):
     import numpy as np
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave40 import _MOM_MULT
+    from nfdump2clickhouse_spark.operators.aggregations import _MOM_MULT
 
     row = SPECS["agg_median_of_means"].fn(spark, sf_dir).toPandas().iloc[0]
     o = _table(spark, sf_dir, "orders").select(
@@ -6328,7 +6355,7 @@ def test_block_bootstrap_python_replication(spark, sf_dir):
     import numpy as np
 
     from nfdump2clickhouse_spark.catalog import table as _table
-    from nfdump2clickhouse_spark.operators.wave50 import (
+    from nfdump2clickhouse_spark.operators.stats import (
         _BB_BLOCK, _BB_MULT, _BB_REPS,
     )
 

@@ -14,7 +14,7 @@ struct constants. Survey ref: SURVEY §1.2 FLOW_COLUMNS contract,
 
 from __future__ import annotations
 
-from nfdump2clickhouse_spark.operators.wave10 import decode_v5
+from nfdump2clickhouse_spark.operators.flows import decode_v5
 from nfdump2clickhouse_spark.sources.netflow_v9 import decode_flow_stream
 
 

@@ -420,11 +420,11 @@ def test_ext_schema_grammar_errors(bad):
 
 # --- extended filter end-to-end vs a DuckDB oracle on the widened
 # --- flow table DERIVED from the real events parquet. Landed r10 as
-# --- the registered key `filter_nfdump_extended` (operators/wave53);
+# --- the registered key `filter_nfdump_extended` (operators/relational);
 # --- derivation + case list are imported from the operator module so
 # --- the test and the certified key can never drift apart.
 
-from nfdump2clickhouse_spark.operators.wave53 import (  # noqa: E402
+from nfdump2clickhouse_spark.operators.relational import (  # noqa: E402
     EXT_CASES as EXT_E2E_CASES,
     EXT_DERIVE_SQL as _EXT_DERIVE_SQL,
     ext_flows_from_events as _ext_flows_from_events,

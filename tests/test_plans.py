@@ -793,7 +793,7 @@ def test_zorder_layout_improves_rowgroup_skipping(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from nfdump2clickhouse_spark.catalog import table
-    from nfdump2clickhouse_spark.operators.wave4 import _z_col
+    from nfdump2clickhouse_spark.operators.scans import _z_col
 
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_orderkey")
 
@@ -1058,7 +1058,7 @@ def test_lpa_no_mandatory_broadcast(spark, sf_dir):
     hints surface as ResolvedHint. The operator localCheckpoints the
     edge fold (which would hide any hint from the final plan), so the
     pin inspects the pre-checkpoint fold directly."""
-    from nfdump2clickhouse_spark.operators.wave15 import _lpa_edges
+    from nfdump2clickhouse_spark.operators.joins import _lpa_edges
 
     analyzed = (
         _lpa_edges(spark, sf_dir)._jdf.queryExecution().analyzed().toString()
@@ -1163,7 +1163,7 @@ def test_bloom_screen_probes_are_all_broadcast(spark, sf_dir):
     data-sized exchange after its shingle distinct. Inspected on the
     pre-checkpoint frame directly (the operator's checkpoint would hide
     it — the `graph_label_propagation` pin pattern)."""
-    from nfdump2clickhouse_spark.operators.wave24 import _SCREEN_K, _bloom_parts
+    from nfdump2clickhouse_spark.operators.dedup_extra import _SCREEN_K, _bloom_parts
 
     _, flagged = _bloom_parts(spark, sf_dir)
     plan = get_plan(flagged, "simple")
@@ -1519,7 +1519,7 @@ def test_winsorized_binned_branch_matches_plain(spark, sf_dir, monkeypatch):
     cumulative count to (bin, grp) partitions with a grp-partitioned
     offsets arm — no unpartitioned window anywhere — and produce
     IDENTICAL rows."""
-    from nfdump2clickhouse_spark.operators import wave15
+    from nfdump2clickhouse_spark.operators import aggregations
 
     plain = SPECS["agg_winsorized_mean"].fn(spark, sf_dir)
     plan_plain = get_plan(plain, "simple")
@@ -1527,7 +1527,7 @@ def test_winsorized_binned_branch_matches_plain(spark, sf_dir, monkeypatch):
     assert "_pid" not in plan_plain, plan_plain
     rows_plain = sorted(map(tuple, plain.collect()))
 
-    monkeypatch.setattr(wave15, "_WINSOR_BINNED_MIN_ROWS", 0)
+    monkeypatch.setattr(aggregations, "_WINSOR_BINNED_MIN_ROWS", 0)
     binned = SPECS["agg_winsorized_mean"].fn(spark, sf_dir)
     plan_binned = get_plan(binned, "simple")
     assert "hashpartitioning(_pid#" in plan_binned, plan_binned

@@ -595,7 +595,7 @@ def test_v5_decoder_total_on_truncation(n_rec, cut, junk):
     record-count header that overstates the payload."""
     import struct as st
 
-    from nfdump2clickhouse_spark.operators.wave10 import decode_v5
+    from nfdump2clickhouse_spark.operators.flows import decode_v5
 
     recs = [
         st.pack(
