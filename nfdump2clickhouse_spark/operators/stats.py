@@ -281,7 +281,7 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MULT = 2654435761  # Knuth multiplicative hash (same constant as reshape.py)
+_MULT = 2654435761  # Knuth multiplicative hash (the same constant as ml._MULT)
 
 
 @register(
