@@ -765,7 +765,6 @@ def test_registry_order_ignores_registration_order(monkeypatch):
     """The sweep order comes from the SWEEP_ORDER table, not from the order
     in which operator modules happen to register their keys: reversing
     the registry's insertion order leaves ``all_specs()`` unchanged."""
-    registry._load_operators()
     before = list(registry.all_specs())
     reversed_registry = dict(reversed(list(registry._REGISTRY.items())))
     monkeypatch.setattr(registry, "_REGISTRY", reversed_registry)
