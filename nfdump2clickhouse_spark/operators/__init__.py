@@ -1,7 +1,7 @@
 """SURVEY §2 operator inventory, one module per key family.
 
 Importing this package registers every query key in the registry. Import
-order carries no meaning: the driver's base sweep order is the
+order carries no meaning: the correctness sweep's base order is the
 ``registry.SWEEP_ORDER`` table, and ``registry._sweep_order`` rotates it
 on the certification evidence.
 

@@ -207,7 +207,7 @@ def _load_operators() -> None:
 
 
 #: Base sweep order of every registered key: the order in which the
-#: driver's correctness sweep meets keys inside one certification tier
+#: correctness sweep meets keys inside one certification tier
 #: (see ``_sweep_order``). Cheap hash-checked families lead; the
 #: expensive integration keys (``stream_*`` lifecycle demos, capture
 #: decoders, iterative trainers) sit in the tail, so a sweep cut short
