@@ -11,16 +11,18 @@ Structured Streaming:
   for the target + one section per source with `watchdir`/`flowsrc`).
 - `FlowService` starts one StreamingQuery per source; the checkpoint's
   seen-files log replaces the reference's watchdog + file-completeness
-  heuristics, and `foreachBatch` + batch-id ledger replaces its
-  convert→insert→cleanup loop: a batch the query re-offers after a
-  restart is skipped once its ledger marker exists. A crash between
-  the table write and the marker still writes that batch twice
-  (ROADMAP direction 3).
+  heuristics, and `foreachBatch` + one `sources.sinks.commit` per batch
+  replaces its convert→insert→cleanup loop: the batch's files and its
+  ledger marker land together, so a batch the query re-offers after a
+  restart, even after a crash between the two, is written once.
 - `run_once()` (Trigger.availableNow) is the systemd-timer-friendly mode:
   drain everything new, then exit — operationally equivalent to the
   reference's steady state where each 5-min rotation is one unit of work.
 - `run_retention()` is the MergeTree-TTL analog: drop expired `dt=`
   partitions, metadata-only (SURVEY §3.2 E3').
+- Every write but retention's (decode stage, table append, backfill,
+  compaction) is one staged `commit`, which the next commit rolls
+  forward after a crash.
 
 Scale shape: each source is an independent stream (no cross-source
 shuffle); the sink repartitions by (dt, flowsrc) and sorts within
@@ -31,10 +33,10 @@ primary key (SURVEY §4.3.1).
 from __future__ import annotations
 
 import configparser
+import glob
 import logging
 import os
 import shlex
-import shutil
 import subprocess
 from dataclasses import dataclass, field
 from datetime import date
@@ -51,10 +53,11 @@ from .sources.flows import (
     write_staged_flows,
 )
 from .sources.sinks import (
-    batch_ledger,
+    LEAF_GLOB,
+    batch_marker,
+    commit,
     compact_partitions,
     drop_expired_partitions,
-    overwrite_day_partitions,
     write_flows_partitioned,
 )
 
@@ -141,14 +144,18 @@ def parse_config(path: str) -> ServiceConfig:
 class FlowService:
     """One engine instance = one conf file, N source streams, one table.
 
-    Writes from different source streams are serialized by a service-level
-    lock: plain parquet's file-commit protocol (a shared `_temporary` dir
-    at the table root) is not safe under concurrent appends to one path.
-    foreachBatch callbacks execute in the driver process, so the lock is
-    sufficient; the reference had the same property (one file inserted at
-    a time [P]). On a production cluster, pointing the sink at a
-    transactional table format (or per-source staging + metadata commit)
-    lifts the serialization without touching this dataflow."""
+    Every write to the table is one ``sources.sinks.commit``: staged
+    under the table's hidden ``_commits`` dir, then moved in by an
+    idempotent manifest, which the next write rolls forward after a crash.
+    Writes from different source streams, backfill and compaction are
+    serialized by a service-level lock, since each commit first rolls
+    forward whatever it finds. foreachBatch callbacks execute in the
+    driver process, so the lock is sufficient within one process; the
+    reference had the same property (one file inserted at a time [P]).
+    Separate processes (``run-once`` next to ``compact``) are not
+    serialized. On a production cluster, pointing the sink at a
+    transactional table format lifts the serialization without touching
+    this dataflow."""
 
     def __init__(self, spark: SparkSession, config: ServiceConfig):
         import threading
@@ -198,18 +205,18 @@ class FlowService:
         the reference's nfcapd→CSV subprocess step [P SURVEY §3.1 E2] —
         into `<name>.csv` in the staging dir the csv stream watches.
 
-        The command's `{out}` is the hidden staging name, so the output
-        of a command that exits non-zero is never ingested, and its
-        retry on the next run stages under a name the stream has not
-        seen. Driver-side subprocess per 5-min rotation, exactly like
-        the reference daemon; at higher fan-in, run the same template
+        The command's `{out}` is the file's path in the capture's hidden
+        commit dir, so the output of a command that exits non-zero is
+        never ingested, and its retry on the next run stages it again.
+        Driver-side subprocess per 5-min rotation, exactly like the
+        reference daemon; at higher fan-in, run the same template
         through `spark.sparkContext.parallelize(files).pipe(...)` to
         decode on executors."""
         assert src.decode_cmd
 
-        def stage(path: str, tmp: str) -> None:
+        def stage(path: str, out: str) -> None:
             cmd = [
-                part.replace("{file}", path).replace("{out}", tmp)
+                part.replace("{file}", path).replace("{out}", out)
                 for part in shlex.split(src.decode_cmd)
             ]
             res = subprocess.run(cmd, capture_output=True, text=True)
@@ -257,20 +264,22 @@ class FlowService:
         a one-task Spark job around it would add a Python worker's
         start-up cost and no parallelism."""
 
-        def stage(path: str, tmp: str) -> None:
+        def stage(path: str, out: str) -> None:
             with open(path, "rb") as fh:
                 flows = decode_capture(fh.read(), fmt, exporter=src.exporter)
-            write_staged_flows(flows, src.flowsrc, tmp)
+            write_staged_flows(flows, src.flowsrc, out)
 
         return self._stage_new_files(src, ".000.parquet", stage)
 
     def _stage_new_files(self, src: SourceConfig, suffix: str, stage) -> list[str]:
         """The decode stage's one loop: every file in watch_dir without a
-        `.done` marker is staged by ``stage(path, tmp)`` under the hidden
-        `_tmp_<name>`, renamed to `<name><suffix>` and then marked. The
-        marker ledger is success-only: on any failure the tmp file is
-        removed and a warning logs the error, so the file retries on the
-        next run (the reference's file-level retry)."""
+        `.done` marker is one ``commit`` into the staging dir, named by the
+        file: ``stage(path, out)`` writes `<name><suffix>` in the hidden
+        commit dir, and the apply moves it in and writes the
+        `_decoded/<name>.done` marker, so the stream never sees a
+        half-written rotation. The marker ledger is success-only: on any
+        failure a warning logs the error and the file retries on the next
+        run (the reference's file-level retry), staging afresh."""
         staging = self._staging_dir(src)
         ledger = os.path.join(staging, "_decoded")
         os.makedirs(ledger, exist_ok=True)
@@ -280,24 +289,16 @@ class FlowService:
             marker = os.path.join(ledger, f"{name}.done")
             if not os.path.isfile(path) or os.path.exists(marker):
                 continue
-            # `_`-prefixed names are hidden from the file stream source
-            tmp = os.path.join(staging, f"_tmp_{name}")
             try:
-                shutil.rmtree(tmp, ignore_errors=True)  # a leftover write dir
-                stage(path, tmp)
-                # rename is atomic on one filesystem, so the stream never
-                # sees a half-written rotation
-                os.replace(tmp, os.path.join(staging, name + suffix))
+                commit(staging, name,
+                       lambda staged: stage(path, os.path.join(staged, name + suffix)),
+                       marker=marker)
             except Exception as ex:
-                if os.path.isfile(tmp):
-                    os.remove(tmp)
                 self._log.warning(
                     "source=%s decode failed file=%s err=%s",
                     src.name, name, str(ex)[-500:],
                 )
                 continue
-            with open(marker, "w") as fh:
-                fh.write("ok")
             done.append(name)
             self._log.info("source=%s decoded file=%s", src.name, name)
         return done
@@ -326,19 +327,24 @@ class FlowService:
         )
 
     def _sink(self, src: SourceConfig):
-        """The table append behind the ``batch_ledger``: a batch re-offered
-        after a restart is skipped once its marker exists, but a crash
-        between the append and the marker appends it again (ROADMAP
-        direction 3)."""
+        """The table append: one ``commit`` per (source, batch id), whose
+        apply writes the batch's `ledger/batch_<id>.done` marker. A batch
+        re-offered after a restart writes nothing: its marker exists, or
+        appears when the commit a crash interrupted is rolled forward."""
+        ledger = os.path.join(self.config.checkpoint_root, src.name, "ledger")
 
         def append(batch_df: DataFrame, batch_id: int) -> None:
             with self._write_lock:
-                write_flows_partitioned(batch_df, self.config.table_path)
-            self._log.info("source=%s batch=%d committed", src.name, batch_id)
+                committed = commit(
+                    self.config.table_path,
+                    f"{src.name}-batch-{batch_id}",
+                    lambda staged: write_flows_partitioned(batch_df, staged),
+                    marker=batch_marker(ledger, batch_id),
+                )
+            if committed:
+                self._log.info("source=%s batch=%d committed", src.name, batch_id)
 
-        return batch_ledger(
-            append, os.path.join(self.config.checkpoint_root, src.name, "ledger")
-        )
+        return append
 
     def start(self, available_now: bool = False) -> list[StreamingQuery]:
         """Launch one StreamingQuery per configured source (the daemon
@@ -411,16 +417,26 @@ class FlowService:
     def backfill(self, corrected: DataFrame) -> None:
         """Replace the (dt, flowsrc) partitions covered by ``corrected``
         with its rows — the late-data / reprocessing path (a replayed
-        rotation, a fixed decoder). Serialized with ingest via the same
-        write lock; untouched partitions keep their files byte-identical
-        (sources/sinks.overwrite_day_partitions)."""
+        rotation, a fixed decoder). One ``commit``: the rows are staged
+        first, then every parquet file of each leaf they land in is
+        replaced, so ``corrected`` may read the table it rewrites.
+        Serialized with ingest via the same write lock; untouched
+        partitions keep their files byte-identical."""
+        df = with_layout_columns(corrected) if "dt" not in corrected.columns else corrected
+        table = self.config.table_path
+
+        def stage(staged: str) -> list[str]:
+            write_flows_partitioned(df, staged)
+            return [
+                os.path.relpath(f, table)
+                for leaf in glob.glob(os.path.join(staged, LEAF_GLOB))
+                for f in glob.glob(
+                    os.path.join(table, os.path.relpath(leaf, staged), "*.parquet")
+                )
+            ]
+
         with self._write_lock:
-            overwrite_day_partitions(
-                with_layout_columns(corrected)
-                if "dt" not in corrected.columns
-                else corrected,
-                self.config.table_path,
-            )
+            commit(table, "backfill", stage)
             self._log.info("backfill committed")
 
     def table(self) -> DataFrame:

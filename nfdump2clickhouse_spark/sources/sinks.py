@@ -7,11 +7,16 @@ time/address with a 90-day TTL [P]. The engine-native equivalent:
 - sortWithinPartitions(ts, sa_num) pre-write → row-group min/max stats
   behave like MergeTree's sparse primary index (data skipping)
 - retention = dropping whole dt= partitions  → metadata-only, no rewrite
+- every other write to a file target is one staged ``commit``: the new
+  files are staged under a hidden dir, a manifest names the files they
+  replace and the ledger marker, and applying it is idempotent, so a
+  crash at any point rolls forward on the next write
 - ClickHouse parity sink = JDBC in foreachBatch with batch-id idempotence
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from datetime import date, timedelta
@@ -23,33 +28,16 @@ from pyspark.sql.types import StructType
 from ..schemas import FLOWS_TABLE
 
 
-def write_flows_partitioned(
-    df: DataFrame, path: str, mode: str = "append", **options: str
-) -> None:
-    """Partitioned, sorted columnar layout (MergeTree ORDER BY analog);
-    ``options`` are extra parquet writer options for this one write."""
+def write_flows_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
+    """Partitioned, sorted columnar layout (MergeTree ORDER BY analog)."""
     (
         df.repartition("dt", "flowsrc")
         .sortWithinPartitions("ts", "sa_num")
         .write.mode(mode)
         .partitionBy("dt", "flowsrc")
         .option("compression", "zstd")
-        .options(**options)
         .parquet(path)
     )
-
-
-def overwrite_day_partitions(df: DataFrame, path: str) -> None:
-    """Backfill/correction path: replace exactly the (dt, flowsrc)
-    partitions present in ``df``, leaving every other partition's files
-    untouched — Spark's dynamic partition-overwrite mode scoped to this
-    one write. This is how replayed or corrected rotations land without
-    rewriting the table and without the duplicate rows a plain append
-    would create; at 100 TB an overwrite touches only the affected
-    day/source leaves (same layout and sort as the normal sink). The mode
-    is a writer option, so the session's own setting, which every other
-    thread of the session reads, never changes."""
-    write_flows_partitioned(df, path, mode="overwrite", partitionOverwriteMode="dynamic")
 
 
 def drop_expired_partitions(path: str, keep_days: int, today: date) -> list[str]:
@@ -95,15 +83,78 @@ def write_bucketed(
     )
 
 
-#: compaction's target output file size, and the leaf partitions it visits
+#: the hidden dir of a commit target that holds each commit's staged files
+#: (``<name>/``) and its manifest (``<name>.manifest``); a leading "_" and
+#: no "=" keep it out of Spark's partition discovery and out of the file
+#: stream source, so readers never see a staged file, even after a crash
+COMMIT_DIR = "_commits"
+#: the leaf partitions of the flows table
+LEAF_GLOB = "dt=*/flowsrc=*"
+
+
+def commit(path: str, name: str, stage, marker: str | None = None) -> bool:
+    """Write files into ``path`` as one commit named ``name``.
+
+    First any commit a crash left behind is rolled forward, and a commit
+    whose ``marker`` already exists is skipped (returns False). Then
+    ``stage(dir)`` writes the new files under ``<path>/_commits/<name>/``,
+    laid out as they will sit in ``path``, and returns the files (relative
+    to ``path``) they replace. The manifest of those files and the marker
+    is written atomically, and applying it moves the staged files in.
+    Staging again under the same name discards what an interrupted
+    ``stage`` left, so the unit of retry is the whole commit."""
+    roll_forward(path)
+    if marker is not None and os.path.exists(marker):
+        return False
+    staged = os.path.join(path, COMMIT_DIR, name)
+    shutil.rmtree(staged, ignore_errors=True)
+    os.makedirs(staged)
+    manifest = {"remove": list(stage(staged) or ()), "marker": marker}
+    with open(staged + ".manifest.tmp", "w") as fh:
+        json.dump(manifest, fh)
+    os.replace(staged + ".manifest.tmp", staged + ".manifest")
+    _apply(path, name)
+    return True
+
+
+def roll_forward(path: str) -> None:
+    """Finish every commit under ``path`` whose manifest exists: once the
+    manifest is written, the commit has happened."""
+    commits = os.path.join(path, COMMIT_DIR)
+    if os.path.isdir(commits):
+        for entry in sorted(os.listdir(commits)):
+            # a staged dir may end in ".manifest" too (a capture's name)
+            if entry.endswith(".manifest") and os.path.isfile(os.path.join(commits, entry)):
+                _apply(path, entry[: -len(".manifest")])
+
+
+def _apply(path: str, name: str) -> None:
+    """Apply commit ``name``'s manifest: remove the files it lists, each
+    with its Hadoop ``.crc``, move in every staged file still staged, write
+    the marker, then drop the staged dir and the manifest. Every step skips
+    what an interrupted call already did, so calling it again finishes the
+    commit."""
+    staged = os.path.join(path, COMMIT_DIR, name)
+    with open(staged + ".manifest") as fh:
+        manifest = json.load(fh)
+    for rel in manifest["remove"]:
+        head, tail = os.path.split(os.path.join(path, rel))
+        for f in (tail, f".{tail}.crc"):
+            if os.path.exists(os.path.join(head, f)):
+                os.remove(os.path.join(head, f))
+    for d, _subdirs, files in os.walk(staged):
+        target = os.path.normpath(os.path.join(path, os.path.relpath(d, staged)))
+        for f in files:
+            os.makedirs(target, exist_ok=True)
+            os.replace(os.path.join(d, f), os.path.join(target, f))
+    if manifest["marker"] is not None:
+        _mark(manifest["marker"])
+    shutil.rmtree(staged, ignore_errors=True)
+    os.remove(staged + ".manifest")
+
+
+#: compaction's target output file size
 COMPACT_TARGET_FILE_BYTES = 128 * 1024 * 1024
-COMPACT_PARTITION_GLOB = "dt=*/flowsrc=*"
-#: a leaf's staging dir: a leading "_" and no "=" keep it out of Spark's
-#: partition discovery, so readers never see the rewrite, even after a crash
-COMPACT_TMP_DIR = "_compact_tmp"
-#: the list of a leaf's original files, written into its staging dir once
-#: the rewrite is complete; its presence means the swap must roll forward
-COMPACT_SWAP_LIST = "_originals"
 #: the columns of a leaf's files: the table without its partition columns
 _LEAF_SCHEMA = StructType(
     [f for f in FLOWS_TABLE.fields if f.name not in ("dt", "flowsrc")]
@@ -124,21 +175,16 @@ def compact_partitions(spark: SparkSession, path: str) -> list[str]:
     threshold are rewritten, each an independent job touching one
     partition's data. Returns the compacted partition dirs.
 
-    The swap rolls forward: a run that dies after the rewrite is staged
-    leaves the staging dir with the list of originals, and the next run
-    finishes that leaf's swap instead of rewriting what is left."""
+    Each leaf's rewrite is one ``commit`` that removes the leaf's
+    originals. A run that died part-way through a swap is rolled forward
+    before any leaf is listed, so the next run finishes that swap instead
+    of rewriting what is left."""
     import glob as _glob
     import math
 
+    roll_forward(path)
     compacted = []
-    for leaf in sorted(_glob.glob(os.path.join(path, COMPACT_PARTITION_GLOB))):
-        tmp = os.path.join(leaf, COMPACT_TMP_DIR)
-        swap_list = os.path.join(tmp, COMPACT_SWAP_LIST)
-        if os.path.exists(swap_list):
-            with open(swap_list) as fh:
-                _swap_in(leaf, tmp, fh.read().splitlines())
-            compacted.append(leaf)
-            continue
+    for leaf in sorted(_glob.glob(os.path.join(path, LEAF_GLOB))):
         files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
         if len(files) <= 1:
             continue
@@ -146,57 +192,36 @@ def compact_partitions(spark: SparkSession, path: str) -> list[str]:
         n_out = max(1, math.ceil(total / COMPACT_TARGET_FILE_BYTES))
         if n_out >= len(files):
             continue
-        df = spark.read.schema(_LEAF_SCHEMA).parquet(leaf)
-        (
-            df.repartition(n_out)
-            .sortWithinPartitions("ts", "sa_num")
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(tmp)
-        )
-        with open(swap_list + ".tmp", "w") as fh:
-            fh.write("\n".join(files))
-        os.replace(swap_list + ".tmp", swap_list)
-        _swap_in(leaf, tmp, files)
+        rel = os.path.relpath(leaf, path)
+
+        def stage(staged: str) -> list[str]:
+            df = spark.read.schema(_LEAF_SCHEMA).parquet(leaf)
+            (
+                df.repartition(n_out)
+                .sortWithinPartitions("ts", "sa_num")
+                .write.mode("overwrite")
+                .option("compression", "zstd")
+                .parquet(os.path.join(staged, rel))
+            )
+            return [os.path.join(rel, f) for f in files]
+
+        commit(path, "compact-" + rel.replace(os.sep, "-"), stage)
         compacted.append(leaf)
     return compacted
 
 
-def _swap_in(leaf: str, tmp: str, originals: list[str]) -> None:
-    """Replace ``originals`` in ``leaf`` by the parquet files staged in
-    ``tmp``, each file together with its Hadoop ``.crc``, then drop
-    ``tmp``. Every step skips what an earlier, interrupted call already
-    did, so calling it again finishes the swap."""
-    for f in originals:
-        for name in (f, f".{f}.crc"):
-            if os.path.exists(os.path.join(leaf, name)):
-                os.remove(os.path.join(leaf, name))
-    for f in os.listdir(tmp):
-        if f.endswith((".parquet", ".parquet.crc")):
-            os.replace(os.path.join(tmp, f), os.path.join(leaf, f))
-    shutil.rmtree(tmp)
-
-
-def batch_ledger(write, ledger_path: str | None):
-    """``write(batch_df, batch_id)`` as a foreachBatch function keyed by
-    batch id: skip the batch if ``batch_<id>.done`` exists in
-    ``ledger_path``, else write it and then the marker (no ledger path:
-    ``write`` itself). A re-offered batch is a no-op only once its marker
-    exists: a crash between the write and the marker writes it again on
-    restart (ROADMAP direction 3)."""
+def batch_marker(ledger_path: str | None, batch_id: int) -> str | None:
+    """The ledger marker of ``batch_id``: ``batch_<id>.done`` in
+    ``ledger_path``, or None without a ledger."""
     if ledger_path is None:
-        return write
+        return None
+    return os.path.join(ledger_path, f"batch_{batch_id}.done")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(ledger_path, f"batch_{batch_id}.done")
-        if os.path.exists(marker):
-            return
-        write(batch_df, batch_id)
-        os.makedirs(ledger_path, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("ok")
 
-    return write_batch
+def _mark(marker: str) -> None:
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    with open(marker, "w") as fh:
+        fh.write("ok")
 
 
 def jdbc_batch_writer(
@@ -207,35 +232,45 @@ def jdbc_batch_writer(
 ):
     """foreachBatch sink for the ClickHouse-parity path (SURVEY §4.3.5).
 
-    Returns f(batch_df, batch_id) that appends via JDBC behind the
-    ``batch_ledger`` (reference parity: file-level retry [P]): a
-    re-offered batch is skipped once its marker is written, but a crash
-    between the append and the marker appends it again on restart
-    (ROADMAP direction 3).
-    With a real ClickHouse target, pair with ReplacingMergeTree keyed
-    on (batch_id, row) for exactly-once-effect.
+    Returns f(batch_df, batch_id) that appends via JDBC, then writes the
+    batch's ledger marker (reference parity: file-level retry [P]): a
+    re-offered batch is skipped once its marker exists. A JDBC target
+    cannot stage, so a crash between the append and the marker appends
+    the batch again on restart; ``parquet_batch_writer`` has no such
+    window. With a real ClickHouse target, pair with ReplacingMergeTree
+    keyed on (batch_id, row) for exactly-once-effect.
     """
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
+        marker = batch_marker(ledger_path, batch_id)
+        if marker is not None and os.path.exists(marker):
+            return
         # batch_id rides along (same contract as parquet_batch_writer):
         # the provenance column replays/audits need downstream
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
             "append"
         ).jdbc(url, table, properties=properties)
+        if marker is not None:
+            _mark(marker)
 
-    return batch_ledger(write, ledger_path)
+    return write
 
 
 def parquet_batch_writer(path: str, ledger_path: str | None = None):
-    """Same ``batch_ledger`` protocol, and the same crash window between
-    append and marker, with a parquet target — used where no JDBC
-    endpoint exists (tests, offline dev)."""
+    """foreachBatch sink with a parquet target — used where no JDBC
+    endpoint exists (tests, offline dev). Each batch is one ``commit``
+    into ``path`` that writes the batch's ledger marker, so a re-offered
+    batch writes nothing twice, even when a crash came between its files
+    and its marker (no ledger path: every offer appends)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
+        commit(
+            path,
+            f"batch-{batch_id}",
+            lambda staged: batch_df.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
-            .parquet(path)
+            .parquet(staged),
+            marker=batch_marker(ledger_path, batch_id),
         )
 
-    return batch_ledger(write, ledger_path)
+    return write

@@ -557,8 +557,10 @@ def _clean_table(spark, base, watch, fmt):
 
 
 def _staged_files(svc):
+    """The staged files the stream can see: hidden names (`_decoded`,
+    `_commits`) are skipped."""
     return sorted(n for n in os.listdir(svc._staging_dir(svc.config.sources[0]))
-                  if n != "_decoded")
+                  if not n.startswith("_"))
 
 
 def _log_text(svc):
@@ -621,12 +623,13 @@ def test_structural_decode_error_logs_and_retries(spark, tmp_path, fault):
 
 @pytest.mark.parametrize("leftover", ["file", "dir"])
 def test_leftover_tmp_is_hidden_and_overwritten(spark, tmp_path, leftover):
-    """A `_tmp_<name>` left in staging by an interrupted decode (a file, or
-    a write directory) is ignored by the stream and overwritten when that
-    capture decodes."""
+    """A staged file left in `_commits/<name>/` by an interrupted decode (a
+    file, or a write directory), without a manifest, is ignored by the
+    stream and staged afresh when that capture decodes."""
     import shutil
 
     from nfdump2clickhouse_spark.sources.flows import write_staged_flows
+    from nfdump2clickhouse_spark.sources.sinks import COMMIT_DIR
 
     watch = str(tmp_path / "watch")
     _write_captures("nffile", "none", watch, None, n_files=2, records=16)
@@ -638,8 +641,9 @@ def test_leftover_tmp_is_hidden_and_overwritten(spark, tmp_path, leftover):
 
     svc = _native_service(spark, str(tmp_path / "svc"), watch, "nffile")
     staging = svc._staging_dir(svc.config.sources[0])
-    os.makedirs(staging)
-    tmp = os.path.join(staging, f"_tmp_{late}")
+    staged = os.path.join(staging, COMMIT_DIR, late)
+    tmp = os.path.join(staged, f"{late}.000.parquet")
+    os.makedirs(staged)
     junk = [(0, 1, 1.0, "10.9.9.9", "10.9.9.8", 1, 2, "TCP", "......", 1, 1, "x")] * 5
     if leftover == "dir":
         os.makedirs(tmp)
@@ -651,7 +655,8 @@ def test_leftover_tmp_is_hidden_and_overwritten(spark, tmp_path, leftover):
 
     shutil.move(os.path.join(parked, late), watch)
     svc.run_once()
-    assert not os.path.exists(tmp)
+    assert not os.path.exists(staged)
+    assert _staged_files(svc) == sorted(f"{n}.000.parquet" for n in os.listdir(watch))
     assert _rows(svc.table()) == clean
 
 
@@ -703,6 +708,120 @@ def test_failed_decode_cmd_output_stays_hidden(spark, tmp_path):
     assert _rows(svc.table()) == clean
 
 
+def _three_rotations(spark, tmp_path):
+    """The rows a clean single run ingests from three 100-record nffile
+    rotations, and a fresh service over the same watch dir."""
+    watch = str(tmp_path / "watch")
+    _write_captures("nffile", "none", watch, None, n_files=3, records=100)
+    clean = _clean_table(spark, str(tmp_path / "clean"), watch, "nffile")
+    assert len(clean) == 300
+    return clean, _native_service(spark, str(tmp_path / "svc"), watch, "nffile")
+
+
+def test_crash_before_batch_marker_writes_the_batch_once(spark, tmp_path, monkeypatch):
+    """A crash after batch 2's files reach the table and before its ledger
+    marker (injected where the marker's dir is made), then a restart: the
+    replayed batch 2 finds its commit, rolls it forward and adds no rows,
+    so the table equals a clean single run."""
+    from nfdump2clickhouse_spark.sources import sinks
+
+    clean, svc = _three_rotations(spark, tmp_path)
+    ledger = os.path.join(svc.config.checkpoint_root, "edge", "ledger")
+    makedirs, calls = os.makedirs, []
+
+    def crash_at_third_batch(path, *args, **kwargs):
+        if path == ledger:
+            calls.append(path)
+            if len(calls) == 3:
+                raise OSError("injected crash before the batch marker")
+        return makedirs(path, *args, **kwargs)
+
+    monkeypatch.setattr(sinks.os, "makedirs", crash_at_third_batch)
+    with pytest.raises(Exception, match="injected crash"):
+        svc.run_once()
+    monkeypatch.undo()
+    assert sorted(os.listdir(ledger)) == ["batch_0.done", "batch_1.done"]
+
+    svc.run_once()
+    assert _rows(svc.table()) == clean
+
+
+def test_crash_inside_stage_stages_again(spark, tmp_path, monkeypatch):
+    """A crash inside batch 1's stage, after its files are written and
+    before its manifest: readers never see the staged files, and the
+    replayed batch stages again, so the table equals a clean single run."""
+    import nfdump2clickhouse_spark.service as service
+    from nfdump2clickhouse_spark.sources.sinks import COMMIT_DIR
+
+    clean, svc = _three_rotations(spark, tmp_path)
+    write, calls = service.write_flows_partitioned, []
+
+    def crash_at_second_batch(df, path, *args, **kwargs):
+        write(df, path, *args, **kwargs)
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("injected crash inside stage")
+
+    monkeypatch.setattr(service, "write_flows_partitioned", crash_at_second_batch)
+    with pytest.raises(Exception, match="injected crash"):
+        svc.run_once()
+    monkeypatch.undo()
+    commits = os.path.join(svc.config.table_path, COMMIT_DIR)
+    assert os.listdir(commits) == ["edge-batch-1"]
+    assert svc.table().count() == 100
+
+    svc.run_once()
+    assert _rows(svc.table()) == clean
+    assert os.listdir(commits) == []
+
+
+def test_backfill_crash_mid_apply_rolls_forward(spark, tmp_path, monkeypatch):
+    """A crash in the middle of a backfill's apply, at its second file
+    removal in the table: the next write (the next rotation's drain)
+    rolls the backfill forward, and the table equals a run without the
+    crash."""
+    import shutil
+
+    from nfdump2clickhouse_spark.sources import sinks
+
+    captures = str(tmp_path / "captures")
+    _write_captures("nffile", "none", captures, None, n_files=3, records=100)
+    late = sorted(os.listdir(captures))[-1]
+
+    def backfill_then_drain(base, crash):
+        watch = os.path.join(base, "watch")
+        shutil.copytree(captures, watch, ignore=shutil.ignore_patterns(late))
+        svc = _native_service(spark, base, watch, "nffile")
+        svc.run_once()
+        table = svc.config.table_path
+        corrected = svc.table().withColumn("ibyt", F.col("ibyt") * 2)
+        remove, removed = os.remove, []
+
+        def crash_on_second(path):
+            if path.startswith(table) and sinks.COMMIT_DIR not in path:
+                removed.append(path)
+                if len(removed) == 2:
+                    raise OSError(f"injected crash removing {path}")
+            remove(path)
+
+        if crash:
+            monkeypatch.setattr(sinks.os, "remove", crash_on_second)
+            with pytest.raises(OSError, match="injected crash"):
+                svc.backfill(corrected)
+            monkeypatch.undo()
+            assert sorted(os.listdir(os.path.join(table, sinks.COMMIT_DIR))) == [
+                "backfill", "backfill.manifest"]
+        else:
+            svc.backfill(corrected)
+        shutil.copy(os.path.join(captures, late), watch)
+        svc.run_once()
+        return _rows(svc.table())
+
+    clean = backfill_then_drain(str(tmp_path / "clean"), crash=False)
+    assert len(clean) == 300
+    assert backfill_then_drain(str(tmp_path / "svc"), crash=True) == clean
+
+
 def test_service_reads_never_infer_parquet_schema():
     """Spark-free lint: every parquet read chain in service.py and
     sources/sinks.py carries `.schema(`, so schema inference (one Spark
@@ -741,7 +860,10 @@ def test_ingest_decisions_exist_once():
     built once. Decoded captures reach the flows contract only through
     `flows_arrow`: no `mapInPandas` or `timestamp_millis` call (the
     stream demo's DataSource needs neither), and no pyarrow schema
-    literal that lists the flows columns besides `schemas.FLOWS`."""
+    literal that lists the flows columns besides `schemas.FLOWS`. Files
+    move into place only through `sinks.commit`: `os.replace` is called
+    only in `commit` and its `_apply`, and no write relies on Spark's
+    `partitionOverwriteMode`."""
     import ast
     import glob
 
@@ -754,10 +876,13 @@ def test_ingest_decisions_exist_once():
              *glob.glob(os.path.join(root, "streaming", "*.py"))]
     decoders = {"decode_flow_stream", "decode_nffile"}
     forks = {"mapInPandas", "timestamp_millis"}
-    layouts, markers, stray_calls, conversions = [], [], [], []
+    layouts, markers, stray_calls, conversions, moves = [], [], [], [], []
     for path in files:
-        tree = ast.parse(open(path).read())
+        text = open(path).read()
+        tree = ast.parse(text)
         where = os.path.relpath(path, root)
+        if "partitionOverwriteMode" in text:
+            moves.append(f"{where}:partitionOverwriteMode")
         defined = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
         aliases = {a.asname or a.name: a.name for n in ast.walk(tree)
                    if isinstance(n, (ast.Import, ast.ImportFrom)) for a in n.names}
@@ -784,6 +909,10 @@ def test_ingest_decisions_exist_once():
                     stray_calls.append(f"{where}:{node.lineno}")
                 if name in forks:
                     conversions.append(f"{where}:{func}:{name}")
+                if (name == "replace" and getattr(f.value, "id", None) == "os"
+                        and (where, func) not in {("sources/sinks.py", "commit"),
+                                                  ("sources/sinks.py", "_apply")}):
+                    moves.append(f"{where}:{node.lineno}")
                 if (name == "schema" and isinstance(f, ast.Attribute)
                         and aliases.get(getattr(f.value, "id", None)) == "pyarrow"
                         and set(FLOW_COLUMNS) <= {
@@ -798,3 +927,4 @@ def test_ingest_decisions_exist_once():
     assert stray_calls == [], f"decoder called outside decode_capture at {stray_calls}"
     assert len(markers) == 1, f"batch ledger marker built at {markers}"
     assert conversions == [], f"flows contract built outside flows_arrow at {conversions}"
+    assert moves == [], f"files moved into place outside sinks.commit at {moves}"

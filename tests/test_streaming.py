@@ -99,9 +99,10 @@ def test_compaction_merges_small_files(spark, tmp_path):
 
 
 def test_compaction_crash_leaves_readers_unchanged(spark, tmp_path, monkeypatch):
-    """A crash after compaction staged its rewrite, before it swapped the
-    files in, leaves the staged copy on disk; readers must not count it
-    as data or as a partition."""
+    """A crash after compaction staged its rewrite and wrote its manifest,
+    before it swapped the files in, leaves the staged copy on disk under
+    the table's `_commits` dir; readers must not count it as data or as a
+    partition."""
     from nfdump2clickhouse_spark.sources import sinks
 
     svc, leaf = _compaction_service(spark, str(tmp_path))
@@ -121,13 +122,15 @@ def test_compaction_crash_leaves_readers_unchanged(spark, tmp_path, monkeypatch)
         svc.run_compaction()
     monkeypatch.undo()
 
-    assert os.path.isdir(os.path.join(leaf, sinks.COMPACT_TMP_DIR))
+    commits = os.listdir(os.path.join(svc.config.table_path, sinks.COMMIT_DIR))
+    assert any(n.endswith(".manifest") for n in commits)
     assert rows_and_sources() == before
 
 
 def test_compaction_swap_rolls_forward_after_a_crash(spark, tmp_path, monkeypatch):
     """A crash part-way through compaction's swap, at the second file
-    removal in the leaf, loses no rows: the next run finishes the swap
+    removal in the leaf, loses no rows: the next run rolls the swap
+    forward before it lists the leaf, so it finds the leaf compacted
     instead of compacting what is left, and every file leaves or enters
     the leaf together with its `.crc`."""
     from nfdump2clickhouse_spark.sources import sinks
@@ -149,10 +152,11 @@ def test_compaction_swap_rolls_forward_after_a_crash(spark, tmp_path, monkeypatc
         svc.run_compaction()
     monkeypatch.undo()
 
-    assert leaf in svc.run_compaction()
+    assert svc.run_compaction() == []
     assert sorted(svc.table().collect()) == before
+    assert os.listdir(os.path.join(svc.config.table_path, sinks.COMMIT_DIR)) == []
     names = os.listdir(leaf)
-    assert sinks.COMPACT_TMP_DIR not in names
+    assert len([n for n in names if n.endswith(".parquet")]) == 1
     orphans = [n for n in names if n.endswith(".crc") and n[1:-4] not in names]
     assert orphans == []
 
