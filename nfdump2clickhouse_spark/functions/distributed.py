@@ -2,18 +2,20 @@
 
 A window with ORDER BY and no PARTITION BY funnels the whole input
 through ONE task — correct on a fixture, a deadlock at 100 TB. These
-helpers give the exact same results with bounded per-task work via an
-IN-PLAN two-phase scan that runs as ONE executed job (no driver
-collect, no localCheckpoint):
+helpers give the exact same results with bounded per-task work via ONE
+in-plan two-phase scan, :func:`_binned_scan`, that runs as ONE executed
+job (no driver collect, no localCheckpoint):
 
 1. every row gets an equi-width bin id over caller-supplied [lo, hi]
-   bounds of the LEADING order column — parquet-footer min/max when the
-   column is physical (driver metadata, no job), or ``lo=hi=None`` for
-   a one-row min/max aggregate broadcast back in-plan (derived
-   columns);
-2. the rows hash-repartition on the bin id and a window PARTITIONED BY
-   it computes each row's bin-local result plus its bin's subtotal;
-3. a bounded one-row-per-bin window turns the subtotals into per-bin
+   bounds of the LEADING order column (:func:`binned_pid`) — parquet-
+   footer min/max when the column is physical (driver metadata, no
+   job), or ``lo=hi=None`` for a one-row min/max aggregate broadcast
+   back in-plan (derived columns);
+2. the rows hash-repartition on (bin id, group columns) and windows
+   PARTITIONED BY them compute each row's bin-local running value plus
+   its bin's subtotal;
+3. a bounded one-row-per-(bin, group) window, partitioned by the group
+   columns and ordered by the bin id, turns the subtotals into per-bin
    start offsets (and grand totals), which rejoin via broadcast.
 
 Monotonicity of the bin id in the leading key is the only correctness
@@ -35,6 +37,8 @@ from pyspark.sql import functions as F
 # NULL leading keys sort first ASC (NULLS FIRST) and last DESC (NULLS
 # LAST): their bin sits below / above every finite bin id
 _NULL_BIN = 1 << 62
+
+_FULL = (Window.unboundedPreceding, Window.unboundedFollowing)
 
 
 def _default_nbins(df: DataFrame) -> int:
@@ -75,11 +79,17 @@ def _bin_id(x: Column, lo: Column, hi: Column, nbins: int, desc: bool) -> Column
     )
 
 
-def _with_bin_pid(
-    df: DataFrame, col: str, lo, hi, nbins: int, desc: bool = False
+def binned_pid(
+    df: DataFrame,
+    col: str,
+    lo=None,
+    hi=None,
+    nbins: int | None = None,
+    desc: bool = False,
 ) -> DataFrame:
-    """``df`` + a ``_pid`` bin-id column over ``col`` (see
-    :func:`_bin_id`; callers repartition on it themselves). ``lo``/``hi``
+    """``df`` + a ``_pid`` bin-id column (see :func:`_bin_id`) monotone
+    in ``col``'s ASC NULLS FIRST order, or its DESC NULLS LAST order with
+    ``desc=True``; callers repartition on it themselves. ``lo``/``hi``
     are always the RAW column's bounds; timestamp columns bin on their
     microsecond count. Literal bounds keep the bin id a pure plan
     literal (no join, zero jobs); ``lo=None``/``hi=None`` derives the
@@ -91,6 +101,7 @@ def _with_bin_pid(
     callers whose input hangs below an aggregation get that subtree's
     exchange back via ReusedExchange, so the upstream scan still runs
     once."""
+    nbins = nbins or _default_nbins(df)
     x = F.col(col)
     if str(df.schema[col].dataType).startswith("Timestamp"):
         x = F.unix_micros(x)
@@ -105,6 +116,102 @@ def _with_bin_pid(
     )
     pid = _bin_id(x, F.col("_blo"), F.col("_bhi"), nbins, desc)
     return df.join(F.broadcast(b)).withColumn("_pid", pid).drop("_blo", "_bhi")
+
+
+def _binned_scan(
+    df: DataFrame,
+    group_cols: list[str],
+    lead: str,
+    order: list,
+    lo,
+    hi,
+    nbins: int | None,
+    arms,
+    totals: dict[str, str] | None = None,
+    desc: bool = False,
+) -> DataFrame:
+    """THE two-phase binned scan every public helper runs: ``df`` plus
+    one bigint column per arm holding the row's value of that arm over
+    the whole of its group (``group_cols``, ``[]`` for one global
+    ordering) in ``order``, whose leading column ``lead`` is binned
+    over ``lo``/``hi`` (:func:`binned_pid`, ``desc`` as there).
+
+    ``arms(w)`` maps each output column to a pair of window expressions
+    over ``w`` — the (bin, group) partition ordered by ``order``: the
+    row's running value within its bin and its bin's total. The value
+    over the whole group is the running value plus the sum of the totals
+    of the group's earlier bins. ``totals`` maps a column name to an
+    arm's output column; that column carries the arm's total over the
+    whole group on every row. Totals come before the arm columns.
+
+    Plan shape: one hash exchange on (bin id, group columns), shared by
+    the arm windows and the offsets arm (ReusedExchange at runtime: the
+    full-frame total carries the same ``order`` as the running value,
+    so both arms demand identical columns below the exchange; extra
+    payload columns the offsets arm prunes make it re-plan the lineage
+    as a narrow column scan, still one executed job). The offsets arm
+    is one window over one row per (bin, group), partitioned by the
+    group columns and ordered by the bin id; with no group columns it is
+    an unpartitioned nbins-row window, so ungrouped callers must be
+    allowlisted in test_no_unpartitioned_windows_full_registry. It
+    rejoins through one broadcast join."""
+    p = binned_pid(df, lead, lo, hi, nbins, desc).repartition("_pid", *group_cols)
+    pairs = arms(Window.partitionBy("_pid", *group_cols).orderBy(*order))
+    for o, (run, tot) in pairs.items():
+        p = p.withColumn(f"_lc_{o}", run).withColumn(f"_bt_{o}", tot)
+    offw = Window.partitionBy(*group_cols).orderBy("_pid")
+    before = offw.rowsBetween(Window.unboundedPreceding, -1)
+    offs = (
+        p.select("_pid", *group_cols, *[f"_bt_{o}" for o in pairs])
+        .distinct()
+        .select(
+            "_pid",
+            *group_cols,
+            *[
+                F.coalesce(F.sum(f"_bt_{o}").over(before), F.lit(0)).alias(f"_off_{o}")
+                for o in pairs
+            ],
+            *[
+                F.coalesce(F.sum(f"_bt_{o}").over(offw.rowsBetween(*_FULL)), F.lit(0))
+                .cast("bigint")
+                .alias(t)
+                for t, o in (totals or {}).items()
+            ],
+        )
+    )
+    out = p.join(F.broadcast(offs), ["_pid", *group_cols])
+    for o in pairs:
+        out = out.withColumn(o, (F.col(f"_off_{o}") + F.col(f"_lc_{o}")).cast("bigint"))
+    return out.drop(
+        "_pid", *[f"{k}{o}" for o in pairs for k in ("_lc_", "_bt_", "_off_")]
+    )
+
+
+def _sum_arms(sum_cols: list[str], prefix: str, exclusive: bool = False):
+    """Running sums, NULL-free: through the row, or through the row
+    before it with ``exclusive=True`` (first row 0)."""
+
+    def arms(w):
+        run = w.rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
+        return {
+            prefix + c: (
+                F.coalesce(F.sum(c).over(run), F.lit(0)),
+                F.coalesce(F.sum(c).over(w.rowsBetween(*_FULL)), F.lit(0)),
+            )
+            for c in sum_cols
+        }
+
+    return arms
+
+
+def _rank_arm(rank_col: str):
+    """1-based row numbers."""
+    return lambda w: {
+        rank_col: (
+            F.row_number().over(w),
+            F.count(F.lit(1)).over(w.rowsBetween(*_FULL)),
+        )
+    }
 
 
 def binned_prefix_sums(
@@ -122,128 +229,19 @@ def binned_prefix_sums(
     ``order_cols`` ordering (asc, nulls first), equal to
     ``SUM(col) OVER (ORDER BY order_cols ROWS BETWEEN UNBOUNDED
     PRECEDING AND CURRENT ROW)`` — or ``AND 1 PRECEDING`` (first row 0)
-    with ``exclusive=True``, the form bin-packing wants — with ZERO
-    driver jobs. The ordering must be total (callers append a unique
-    tiebreaker, SURVEY §5.3) so the prefix is deterministic across
-    partitionings.
+    with ``exclusive=True``, the form bin-packing wants. The ordering
+    must be total (callers append a unique tiebreaker, SURVEY §5.3) so
+    the prefix is deterministic across partitionings. ``lo``/``hi``
+    bound the leading order column (``None``: the in-plan min/max arm).
 
-    ``lo``/``hi`` bound the leading order column's non-null domain
-    (parquet footer stats, or one min/max agg for derived columns);
-    only monotonicity of the derived bin id matters, so inexact bounds
-    are safe. Adds one ``prefix + col`` bigint column per sum col, and,
-    for every col in ``totals``, a ``prefix + "tot_" + col`` bigint
-    grand-total column carried on every row (NULL-free: empty bins
-    contribute 0, an empty input yields an empty frame). Plan shape:
-    one hash exchange on the bin id shared by the main window and the
-    offsets arm (ReusedExchange at runtime), a bounded nbins-row
-    unpartitioned window on the offsets arm (one row per bin — bins
-    scale with the cluster, never the data; callers must be allowlisted
-    in test_no_unpartitioned_windows_full_registry), and one broadcast
-    join."""
-    nbins = nbins or _default_nbins(df)
-    p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition("_pid")
-    w_run = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
-    )
-    # full-frame spec carries the SAME orderBy (value-identical on an
-    # unbounded frame) so both arms demand identical columns below the
-    # exchange — required for the runtime ReusedExchange match
-    w_bin = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    wout = p
-    for c in sum_cols:
-        wout = wout.withColumn(
-            f"_lc_{c}", F.coalesce(F.sum(c).over(w_run), F.lit(0))
-        ).withColumn(f"_bt_{c}", F.coalesce(F.sum(c).over(w_bin), F.lit(0)))
-    offw = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    totw = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    off_cols = [
-        F.coalesce(F.sum(f"_bt_{c}").over(offw), F.lit(0)).alias(f"_off_{c}")
-        for c in sum_cols
-    ]
-    tot_cols = [
-        F.coalesce(F.sum(f"_bt_{c}").over(totw), F.lit(0))
-        .cast("bigint")
-        .alias(f"{prefix}tot_{c}")
-        for c in (totals or [])
-    ]
-    offs = (
-        wout.select("_pid", *[f"_bt_{c}" for c in sum_cols])
-        .distinct()
-        .select("_pid", *off_cols, *tot_cols)
-    )
-    out = wout.join(F.broadcast(offs), "_pid")
-    for c in sum_cols:
-        out = out.withColumn(
-            prefix + c,
-            (F.col(f"_off_{c}") + F.col(f"_lc_{c}")).cast("bigint"),
-        )
-    drop = (
-        ["_pid"]
-        + [f"_lc_{c}" for c in sum_cols]
-        + [f"_bt_{c}" for c in sum_cols]
-        + [f"_off_{c}" for c in sum_cols]
-    )
-    return out.drop(*drop)
-
-
-def binned_grouped_rank(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    lo=None,
-    hi=None,
-    rank_col: str = "_grank",
-    nbins: int | None = None,
-) -> DataFrame:
-    """Exact 1-based rank WITHIN each group over ``order_cols`` (asc,
-    nulls first), equal to ``ROW_NUMBER() OVER (PARTITION BY group_cols
-    ORDER BY order_cols)`` for a total order, with ZERO driver jobs and
-    without funneling a whole group through one task (a HANDFUL of huge
-    groups would each be one task under a plain group window).
-    ``lo``/``hi`` bound the LEADING ORDER column (groups share the
-    bins). The offsets arm here is a window PARTITIONED BY the group
-    columns over one row per (bin, group) — bounded by nbins x |groups|
-    and, being partitioned, needs no unpartitioned-window
-    allowlisting."""
-    nbins = nbins or _default_nbins(df)
-    p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition(
-        "_pid", *group_cols
-    )
-    w_rn = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    w_cnt = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    wout = p.withColumn("_rn", F.row_number().over(w_rn)).withColumn(
-        "_cnt", F.count(F.lit(1)).over(w_cnt)
-    )
-    offw = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = (
-        wout.select("_pid", *group_cols, "_cnt")
-        .distinct()
-        .select(
-            "_pid",
-            *group_cols,
-            F.coalesce(F.sum("_cnt").over(offw), F.lit(0)).alias("_goff"),
-        )
-    )
-    return (
-        wout.join(F.broadcast(offs), ["_pid", *group_cols])
-        .withColumn(rank_col, (F.col("_goff") + F.col("_rn")).cast("bigint"))
-        .drop("_pid", "_rn", "_cnt", "_goff")
+    Adds one ``prefix + col`` bigint column per sum col, and, for every
+    col in ``totals``, a ``prefix + "tot_" + col`` bigint grand-total
+    column carried on every row (NULL-free: empty bins contribute 0, an
+    empty input yields an empty frame)."""
+    return _binned_scan(
+        df, [], order_cols[0], order_cols, lo, hi, nbins,
+        _sum_arms(sum_cols, prefix, exclusive),
+        {f"{prefix}tot_{c}": prefix + c for c in totals or []},
     )
 
 
@@ -258,74 +256,15 @@ def binned_grouped_prefix_sums(
     nbins: int | None = None,
     totals: list[str] | None = None,
 ) -> DataFrame:
-    """Running totals WITHIN each group over ``order_cols`` (asc, nulls
-    first) — the grouped twin of :func:`binned_prefix_sums` (r12,
-    VERDICT r11 next-#8): splits a ``partitionBy(group)`` cumulative
-    window whose per-group row count can grow domain-sized into
-    ``(bin, group)`` partitions with bounded per-task work. Adds one
-    ``prefix + col`` bigint running-total column per sum col and, for
-    every col in ``totals``, a ``prefix + "tot_" + col`` bigint
-    per-GROUP grand total. The offsets arm is a window PARTITIONED BY
-    the group columns over one row per (bin, group) — bounded by
-    nbins x |groups|, no unpartitioned-window allowlisting needed.
-    Monotonicity contract of ``lo``/``hi`` as in the ungrouped form."""
-    nbins = nbins or _default_nbins(df)
-    p = _with_bin_pid(df, order_cols[0], lo, hi, nbins).repartition(
-        "_pid", *group_cols
+    """:func:`binned_prefix_sums` WITHIN each group (inclusive frame):
+    a ``partitionBy(group)`` cumulative window whose per-group row count
+    can grow domain-sized, without funneling a group through one task.
+    The ``prefix + "tot_" + col`` totals are per-GROUP."""
+    return _binned_scan(
+        df, group_cols, order_cols[0], order_cols, lo, hi, nbins,
+        _sum_arms(sum_cols, prefix),
+        {f"{prefix}tot_{c}": prefix + c for c in totals or []},
     )
-    w_run = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # same orderBy on the full-frame spec: both arms must demand
-    # identical columns below the exchange for the ReusedExchange match
-    w_bin = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    wout = p
-    for c in sum_cols:
-        wout = wout.withColumn(
-            f"_lc_{c}", F.coalesce(F.sum(c).over(w_run), F.lit(0))
-        ).withColumn(f"_bt_{c}", F.coalesce(F.sum(c).over(w_bin), F.lit(0)))
-    offw = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    totw = Window.partitionBy(*group_cols).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    off_cols = [
-        F.coalesce(F.sum(f"_bt_{c}").over(offw), F.lit(0)).alias(f"_off_{c}")
-        for c in sum_cols
-    ]
-    tot_cols = [
-        F.coalesce(F.sum(f"_bt_{c}").over(totw), F.lit(0))
-        .cast("bigint")
-        .alias(f"{prefix}tot_{c}")
-        for c in (totals or [])
-    ]
-    offs = (
-        wout.select("_pid", *group_cols, *[f"_bt_{c}" for c in sum_cols])
-        .distinct()
-        .select("_pid", *group_cols, *off_cols, *tot_cols)
-    )
-    out = wout.join(F.broadcast(offs), ["_pid", *group_cols])
-    for c in sum_cols:
-        out = out.withColumn(
-            prefix + c,
-            (F.col(f"_off_{c}") + F.col(f"_lc_{c}")).cast("bigint"),
-        )
-    drop = (
-        ["_pid"]
-        + [f"_lc_{c}" for c in sum_cols]
-        + [f"_bt_{c}" for c in sum_cols]
-        + [f"_off_{c}" for c in sum_cols]
-    )
-    return out.drop(*drop)
 
 
 def binned_global_rank(
@@ -339,60 +278,36 @@ def binned_global_rank(
     total_col: str | None = None,
     nbins: int | None = None,
 ) -> DataFrame:
-    """In-plan exact 1-based global row number over
-    ``(lead [asc|desc], *tiebreaks asc)``, equal to ``ROW_NUMBER()
-    OVER (ORDER BY ...)`` (DESC NULLS LAST, Spark's ``F.desc`` default)
-    for a total order, with ZERO driver jobs. ``lo``/``hi`` bound the
-    RAW lead column (parquet footer stats; ``None`` = in-plan broadcast
-    min/max arm). ``total_col`` names an optional per-row column
-    holding the total row count.
+    """Exact 1-based global row number over ``(lead [asc|desc],
+    *tiebreaks asc)``, equal to ``ROW_NUMBER() OVER (ORDER BY ...)``
+    (DESC NULLS LAST, Spark's ``F.desc`` default) for a total order.
+    ``lo``/``hi`` bound the RAW lead column (``None``: the in-plan
+    min/max arm). ``total_col`` names an optional per-row column holding
+    the total row count."""
+    return _binned_scan(
+        df, [], lead, [F.desc(lead) if desc else lead, *tiebreaks], lo, hi, nbins,
+        _rank_arm(rank_col), {total_col: rank_col} if total_col else None, desc,
+    )
 
-    Plan shape: one hash exchange on the bin id; the bounded nbins-row
-    offsets arm (callers must be allowlisted in
-    test_no_unpartitioned_windows_full_registry) carries the SAME
-    orderBy as the ranking window so both arms demand identical order
-    columns below the exchange — runtime ReusedExchange collapses them
-    whenever the caller carries no extra payload columns (extra columns
-    are pruned from the offsets arm, which then re-plans the lineage as
-    a NARROW column scan: still one executed job, documented tradeoff)."""
-    nbins = nbins or _default_nbins(df)
-    order = [F.desc(lead) if desc else F.asc(lead)] + [F.asc(c) for c in tiebreaks]
-    p = _with_bin_pid(df, lead, lo, hi, nbins, desc).repartition("_pid")
-    w_rn = Window.partitionBy("_pid").orderBy(*order)
-    w_cnt = (
-        Window.partitionBy("_pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
+def binned_grouped_rank(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str],
+    lo=None,
+    hi=None,
+    rank_col: str = "_grank",
+    nbins: int | None = None,
+) -> DataFrame:
+    """Exact 1-based rank WITHIN each group over ``order_cols`` (asc,
+    nulls first), equal to ``ROW_NUMBER() OVER (PARTITION BY group_cols
+    ORDER BY order_cols)`` for a total order, without funneling a whole
+    group through one task (a HANDFUL of huge groups would each be one
+    task under a plain group window). ``lo``/``hi`` bound the LEADING
+    ORDER column (groups share the bins)."""
+    return _binned_scan(
+        df, group_cols, order_cols[0], order_cols, lo, hi, nbins, _rank_arm(rank_col)
     )
-    wout = p.withColumn("_rn", F.row_number().over(w_rn)).withColumn(
-        "_cnt", F.count(F.lit(1)).over(w_cnt)
-    )
-    offw = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    totw = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    tot = (
-        [F.sum("_cnt").over(totw).cast("bigint").alias("_gtot")]
-        if total_col
-        else []
-    )
-    offs = (
-        wout.select("_pid", "_cnt")
-        .distinct()
-        .select(
-            "_pid",
-            F.coalesce(F.sum("_cnt").over(offw), F.lit(0)).alias("_goff"),
-            *tot,
-        )
-    )
-    out = (
-        wout.join(F.broadcast(offs), "_pid")
-        .withColumn(rank_col, (F.col("_goff") + F.col("_rn")).cast("bigint"))
-        .drop("_pid", "_rn", "_cnt", "_goff")
-    )
-    if total_col:
-        out = out.withColumnRenamed("_gtot", total_col)
-    return out
 
 
 def binned_exact_ntile(
@@ -433,16 +348,3 @@ def binned_exact_ntile(
         )
     )
     return r.withColumn(out_col, (tile + 1).cast("int")).drop(rank_col, "_ntot")
-
-
-def binned_pid(
-    df: DataFrame, col: str, lo=None, hi=None, nbins: int | None = None
-) -> DataFrame:
-    """Public entry to the bin-id mechanism for operators that build
-    their own two-phase scan on top of it (e.g. last/first-value
-    boundary carries): ``df`` + a ``_pid`` column monotone in ``col``'s
-    ASC NULLS FIRST order, bounds from literals or the in-plan
-    broadcast min/max arm (see :func:`_with_bin_pid`). Callers
-    repartition on ``_pid`` themselves."""
-    nbins = nbins or _default_nbins(df)
-    return _with_bin_pid(df, col, lo, hi, nbins)

@@ -58,6 +58,7 @@ from .sources.sinks import (
     commit,
     compact_partitions,
     drop_expired_partitions,
+    roll_forward,
     write_flows_partitioned,
 )
 
@@ -146,7 +147,8 @@ class FlowService:
 
     Every write to the table is one ``sources.sinks.commit``: staged
     under the table's hidden ``_commits`` dir, then moved in by an
-    idempotent manifest, which the next write rolls forward after a crash.
+    idempotent manifest, which the next write, or the next ``start``,
+    rolls forward after a crash.
     Writes from different source streams, backfill and compaction are
     serialized by a service-level lock, since each commit first rolls
     forward whatever it finds. foreachBatch callbacks execute in the
@@ -348,7 +350,14 @@ class FlowService:
 
     def start(self, available_now: bool = False) -> list[StreamingQuery]:
         """Launch one StreamingQuery per configured source (the daemon
-        mode [S .gitignore:132]); `available_now=True` drains and stops."""
+        mode [S .gitignore:132]); `available_now=True` drains and stops.
+        First a commit a crash left half-applied, in the table or in a
+        staging dir, is rolled forward, so a start that writes nothing
+        still leaves the table whole for its readers."""
+        with self._write_lock:
+            roll_forward(self.config.table_path)
+            for src in self.config.sources:
+                roll_forward(self._staging_dir(src))
         queries = []
         for src in self.config.sources:
             if src.decode_cmd:

@@ -30,6 +30,21 @@ def _tmp(prefix: str) -> str:
 
 
 @contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set session conf ``key`` to ``value`` for the block, then restore
+    it (unset again if it was unset), so a demo leaves the session as it
+    found it."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def _demo_state_partitions(spark: SparkSession, n: int = 8):
     """Size the state store for the demo's data, not the session default.
 
@@ -39,12 +54,7 @@ def _demo_state_partitions(spark: SparkSession, n: int = 8):
     × 6 micro-batches of a few hundred rows is pure fixed overhead. On a
     production checkpoint you'd size this once for peak key cardinality;
     the demos run on fresh checkpoints so a small count is correct."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return _session_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
 def _mem_name() -> str:
@@ -273,22 +283,25 @@ def run_transform_with_state(spark: SparkSession) -> DataFrame:
     watch, ckpt = _tmp("watch"), _tmp("ckpt")
     write_flow_files(spark, watch, n_files=3, rows_per_file=150)
     # transformWithState requires the RocksDB state store (the default
-    # HDFS-backed provider does not implement the new state-variable API)
-    spark.conf.set(
+    # HDFS-backed provider does not implement the new state-variable
+    # API); scoped to this drain, so later stateful streams in the
+    # session keep their own provider
+    rocksdb = _session_conf(
+        spark,
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    out = (
-        _source(spark, watch)
-        .groupBy("sa", "da")
-        .transformWithStateInPandas(
-            Stitch(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
+    with rocksdb, _demo_state_partitions(spark):
+        out = (
+            _source(spark, watch)
+            .groupBy("sa", "da")
+            .transformWithStateInPandas(
+                Stitch(),
+                outputStructType=out_schema,
+                outputMode="Update",
+                timeMode="None",
+            )
         )
-    )
-    with _demo_state_partitions(spark):
         sink = _drain_to_memory(out, ckpt, "update")
     # last emitted totals per key = the stitched final state
     return sink.groupBy("sa", "da").agg(
@@ -377,6 +390,51 @@ def run_restart_resume(spark: SparkSession) -> DataFrame:
     )
 
 
+def _request_response_join(spark: SparkSession, how: str, keep=None):
+    """The stream-join demos' scaffold: three 100-row request rotations
+    in one dir and their responses in another — the same flows with
+    src/dst swapped, filtered by ``keep(pdf)`` when given, landing one
+    rotation later (mtime + 300 s, ``ts`` unchanged). Both sides carry a
+    10-minute watermark and join ``how`` on the reversed (addr, port)
+    pair within ±5 minutes of event time. The sources list their dirs
+    only when a query starts, so a caller can still add rotations.
+    Returns ``(joined, request dir, response dir, checkpoint dir)``."""
+    import pyarrow.parquet as pq
+
+    watch_a, watch_b, ckpt = _tmp("req"), _tmp("resp"), _tmp("ckpt")
+    start = datetime(2024, 3, 1, tzinfo=timezone.utc)
+    write_flow_files(spark, watch_a, n_files=3, rows_per_file=100, start=start)
+    os.makedirs(watch_b, exist_ok=True)
+    for p in sorted(os.listdir(watch_a)):
+        pdf = pq.read_table(os.path.join(watch_a, p)).to_pandas()
+        if keep is not None:
+            pdf = pdf[keep(pdf)]
+        pdf = pdf.rename(columns={"sa": "da", "da": "sa", "sp": "dp", "dp": "sp"})
+        out_p = os.path.join(watch_b, p + ".resp")
+        pdf.to_parquet(out_p)
+        st = os.stat(os.path.join(watch_a, p))
+        os.utime(out_p, (st.st_atime + 300, st.st_mtime + 300))
+    req = _source(spark, watch_a, max_files=16).withWatermark("ts", "10 minutes")
+    resp = (
+        _source(spark, watch_b, max_files=16)
+        .withWatermark("ts", "10 minutes")
+        .select(
+            *[F.col(c).alias(f"r_{c}") for c in ("sa", "da", "sp", "dp", "ts", "ibyt")]
+        )
+    )
+    joined = req.join(
+        resp,
+        (F.col("sa") == F.col("r_da"))
+        & (F.col("da") == F.col("r_sa"))
+        & (F.col("sp") == F.col("r_dp"))
+        & (F.col("dp") == F.col("r_sp"))
+        & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 5 MINUTES"))
+        & (F.col("r_ts") <= F.col("ts") + F.expr("INTERVAL 5 MINUTES")),
+        how,
+    ).select("ts", "sa", "da", "sp", "dp", "ibyt", "r_ibyt")
+    return joined, watch_a, watch_b, ckpt
+
+
 def run_stream_stream_join(spark: SparkSession) -> DataFrame:
     """stream_stream_join: watermarked stream-stream inner join — the
     missing piece between stream-static enrichment (foreachBatch) and
@@ -392,49 +450,7 @@ def run_stream_stream_join(spark: SparkSession) -> DataFrame:
     watermark passes ts+5min — without the bound, state grows forever
     (the #1 production failure of stream-stream joins; SURVEY §2.9).
     availableNow + memory sink keeps the demo deterministic."""
-    watch_a, watch_b, ckpt = _tmp("req"), _tmp("resp"), _tmp("ckpt")
-    start = datetime(2024, 3, 1, tzinfo=timezone.utc)
-    write_flow_files(spark, watch_a, n_files=3, rows_per_file=100, start=start)
-    # responses: same flows re-keyed by swapping src/dst, landing one
-    # rotation later (arrival shifts mtime, ts stays in-window)
-    import pyarrow.parquet as pq
-
-    os.makedirs(watch_b, exist_ok=True)
-    for p in sorted(os.listdir(watch_a)):
-        t = pq.read_table(os.path.join(watch_a, p))
-        pdf = t.to_pandas()
-        pdf = pdf.rename(
-            columns={"sa": "da", "da": "sa", "sp": "dp", "dp": "sp"}
-        )[[c for c in pdf.columns]]
-        out_p = os.path.join(watch_b, p + ".resp")
-        pdf.to_parquet(out_p)
-        st = os.stat(os.path.join(watch_a, p))
-        os.utime(out_p, (st.st_atime + 300, st.st_mtime + 300))
-    req = _source(spark, watch_a, max_files=16).withWatermark(
-        "ts", "10 minutes"
-    )
-    resp = (
-        _source(spark, watch_b, max_files=16)
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("sa").alias("r_sa"),
-            F.col("da").alias("r_da"),
-            F.col("sp").alias("r_sp"),
-            F.col("dp").alias("r_dp"),
-            F.col("ts").alias("r_ts"),
-            F.col("ibyt").alias("r_ibyt"),
-        )
-    )
-    joined = req.join(
-        resp,
-        (F.col("sa") == F.col("r_da"))
-        & (F.col("da") == F.col("r_sa"))
-        & (F.col("sp") == F.col("r_dp"))
-        & (F.col("dp") == F.col("r_sp"))
-        & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 5 MINUTES"))
-        & (F.col("r_ts") <= F.col("ts") + F.expr("INTERVAL 5 MINUTES")),
-        "inner",
-    ).select("ts", "sa", "da", "sp", "dp", "ibyt", "r_ibyt")
+    joined, _, _, ckpt = _request_response_join(spark, "inner")
     with _demo_state_partitions(spark):
         return _drain_to_memory(joined, ckpt)
 
@@ -452,23 +468,14 @@ def run_stream_left_outer_join(spark: SparkSession) -> DataFrame:
     exactly half the requests match; a final far-future rotation (no
     joinable rows) advances the watermark past every request's window so
     the unmatched half actually flushes before availableNow terminates."""
-    watch_a, watch_b, ckpt = _tmp("req"), _tmp("resp"), _tmp("ckpt")
-    start = datetime(2024, 3, 1, tzinfo=timezone.utc)
-    write_flow_files(spark, watch_a, n_files=3, rows_per_file=100, start=start)
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(watch_b, exist_ok=True)
-    for p in sorted(os.listdir(watch_a)):
-        pdf = pq.read_table(os.path.join(watch_a, p)).to_pandas()
-        pdf = pdf[pdf["sp"] % 2 == 0]
-        pdf = pdf.rename(columns={"sa": "da", "da": "sa", "sp": "dp", "dp": "sp"})
-        out_p = os.path.join(watch_b, p + ".resp")
-        pdf.to_parquet(out_p)
-        st = os.stat(os.path.join(watch_a, p))
-        os.utime(out_p, (st.st_atime + 300, st.st_mtime + 300))
+    # responses only for even source ports: half the requests match
+    joined, watch_a, watch_b, ckpt = _request_response_join(
+        spark, "left_outer", keep=lambda pdf: pdf["sp"] % 2 == 0
+    )
     # watermark advancer: event times 2 h later, keys that match nothing
-    import pyarrow as pa
-
     adv = pq.read_table(os.path.join(watch_a, sorted(os.listdir(watch_a))[0]))
     apdf = adv.to_pandas().head(5).copy()
     apdf["ts"] = apdf["ts"] + pd.Timedelta(hours=2)
@@ -488,31 +495,6 @@ def run_stream_left_outer_join(spark: SparkSession) -> DataFrame:
         pq.write_table(pa.Table.from_pandas(apdf, schema=adv.schema), adv_p)
         os.utime(adv_p, (newest + 3600, newest + 3600))
 
-    req = _source(spark, watch_a, max_files=16).withWatermark(
-        "ts", "10 minutes"
-    )
-    resp = (
-        _source(spark, watch_b, max_files=16)
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("sa").alias("r_sa"),
-            F.col("da").alias("r_da"),
-            F.col("sp").alias("r_sp"),
-            F.col("dp").alias("r_dp"),
-            F.col("ts").alias("r_ts"),
-            F.col("ibyt").alias("r_ibyt"),
-        )
-    )
-    joined = req.join(
-        resp,
-        (F.col("sa") == F.col("r_da"))
-        & (F.col("da") == F.col("r_sa"))
-        & (F.col("sp") == F.col("r_dp"))
-        & (F.col("dp") == F.col("r_sp"))
-        & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 5 MINUTES"))
-        & (F.col("r_ts") <= F.col("ts") + F.expr("INTERVAL 5 MINUTES")),
-        "left_outer",
-    ).select("ts", "sa", "da", "sp", "dp", "ibyt", "r_ibyt")
     out = _tmp("out")
     with _demo_state_partitions(spark):
 

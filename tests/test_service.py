@@ -777,9 +777,10 @@ def test_crash_inside_stage_stages_again(spark, tmp_path, monkeypatch):
 
 def test_backfill_crash_mid_apply_rolls_forward(spark, tmp_path, monkeypatch):
     """A crash in the middle of a backfill's apply, at its second file
-    removal in the table: the next write (the next rotation's drain)
-    rolls the backfill forward, and the table equals a run without the
-    crash."""
+    removal in the table. A drain with no new capture writes nothing, but
+    starting the service rolls the backfill forward, so the table its
+    readers see equals a run without the crash; so does the table after
+    the next rotation's drain."""
     import shutil
 
     from nfdump2clickhouse_spark.sources import sinks
@@ -813,12 +814,14 @@ def test_backfill_crash_mid_apply_rolls_forward(spark, tmp_path, monkeypatch):
                 "backfill", "backfill.manifest"]
         else:
             svc.backfill(corrected)
+        svc.run_once()
+        tables = [_rows(svc.table())]
         shutil.copy(os.path.join(captures, late), watch)
         svc.run_once()
-        return _rows(svc.table())
+        return tables + [_rows(svc.table())]
 
     clean = backfill_then_drain(str(tmp_path / "clean"), crash=False)
-    assert len(clean) == 300
+    assert [len(t) for t in clean] == [200, 300]
     assert backfill_then_drain(str(tmp_path / "svc"), crash=True) == clean
 
 

@@ -52,9 +52,13 @@ def test_stateful_session_stitch_accumulates(spark):
 def test_transform_with_state_accumulates(spark):
     # the Spark 4 TWS Python worker hard-requires google.protobuf
     pytest.importorskip("google.protobuf.descriptor")
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    before = spark.conf.get(provider, None)
     df = sp.run_transform_with_state(spark)
     total = df.agg(F.sum("n_flows")).collect()[0][0]
     assert total == 450  # same stitched totals as the applyInPandasWithState path
+    # the RocksDB provider TWS needs stays scoped to its own drain
+    assert spark.conf.get(provider, None) == before
 
 
 def _compaction_service(spark, base: str):
