@@ -281,12 +281,21 @@ class FlowService:
         `_decoded/<name>.done` marker, so the stream never sees a
         half-written rotation. The marker ledger is success-only: on any
         failure a warning logs the error and the file retries on the next
-        run (the reference's file-level retry), staging afresh."""
+        run (the reference's file-level retry), staging afresh.
+
+        Names that begin with `.` or `_` are hidden, as in Spark's own
+        listing, and `nfcapd.current.*` is the capture nfcapd is still
+        writing; it is decoded once nfcapd closes it and renames it to
+        its rotation name. A closed capture is decoded as it stands: a
+        truncated one stages its valid prefix and gets its marker, since
+        nfcapd never rewrites a file it has renamed."""
         staging = self._staging_dir(src)
         ledger = os.path.join(staging, "_decoded")
         os.makedirs(ledger, exist_ok=True)
         done = []
         for name in sorted(os.listdir(src.watch_dir)):
+            if name.startswith((".", "_", "nfcapd.current.")):
+                continue
             path = os.path.join(src.watch_dir, name)
             marker = os.path.join(ledger, f"{name}.done")
             if not os.path.isfile(path) or os.path.exists(marker):

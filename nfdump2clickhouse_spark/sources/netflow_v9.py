@@ -169,7 +169,10 @@ def _parse_data(
 def _finalize(
     rec: dict, export_ms: int, uptime_ms: int, ra: str
 ) -> tuple:
-    """Raw slot dict + packet-header context → contract tuple.
+    """Raw slot dict + packet-header context → contract tuple: the one
+    place every native decoder (v9/IPFIX here, nffile layouts v1 and v2)
+    builds a FLOW_COLUMNS tuple. nffile records carry absolute epoch-ms
+    ``_first``/``_last`` and pass ``export_ms = uptime_ms = 0``.
 
     v9 FIRST/LAST_SWITCHED are milliseconds of exporter sysUptime; the
     absolute wall time is ``unixSecs*1000 - sysUptime + value`` (RFC

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -32,6 +33,18 @@ SMALL_SF_DIR = os.path.join(_TESTDATA_ROOT, "sf0.001")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _session_tempdir(tmp_path_factory):
+    """Point `tempfile`'s default directory at a dir under pytest's
+    basetemp for the session. Registry keys and the streaming demos make
+    `mkdtemp` dirs that nothing removes; under the basetemp, pytest's
+    retention of the last few runs bounds them."""
+    before = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.mktemp("mkdtemp"))
+    yield
+    tempfile.tempdir = before
 
 
 @pytest.fixture(scope="session")

@@ -679,6 +679,67 @@ def test_deleted_decode_marker_adds_no_rows(spark, tmp_path):
     assert _rows(svc.table()) == clean
 
 
+def _capture_bytes(tmp_path, n_files, records):
+    """The contents of ``n_files`` bz2 nffile captures, in file order."""
+    gen = str(tmp_path / "gen")
+    _write_captures("nffile", "bz2", gen, None, n_files=n_files, records=records)
+    return [open(os.path.join(gen, n), "rb").read() for n in sorted(os.listdir(gen))]
+
+
+def test_in_progress_capture_is_not_ingested(spark, tmp_path):
+    """`nfcapd.current.*` is the capture nfcapd is still writing: the
+    decode stage leaves it alone, and decodes it whole once nfcapd renames
+    it to its rotation name. Its prefix is never ingested on its own, so
+    the table equals a clean run over the two closed rotations."""
+    first, second = _capture_bytes(tmp_path, 2, 40)
+    clean_watch = tmp_path / "clean_watch"
+    clean_watch.mkdir()
+    (clean_watch / "nfcapd.202403010000").write_bytes(first)
+    (clean_watch / "nfcapd.202403010005").write_bytes(second)
+    clean = _clean_table(spark, str(tmp_path / "clean"), str(clean_watch), "nffile")
+    assert len(clean) == 80
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    (watch / "nfcapd.202403010000").write_bytes(first)
+    current = watch / "nfcapd.current.4242"
+    current.write_bytes(second[: len(second) * 2 // 3])
+    svc = _native_service(spark, str(tmp_path / "svc"), str(watch), "nffile")
+    svc.run_once()
+    assert svc.table().count() == 40
+    assert _staged_files(svc) == ["nfcapd.202403010000.000.parquet"]
+
+    current.write_bytes(second)  # nfcapd closes the file, then renames it
+    os.rename(current, watch / "nfcapd.202403010005")
+    svc.run_once()
+    assert _rows(svc.table()) == clean
+
+
+def test_truncated_closed_capture_ingests_its_prefix(spark, tmp_path):
+    """A capture cut short under a rotation name (nfcapd renames a file
+    only once it is closed, so no retry would find more bytes) ingests
+    exactly the rows `decode_nffile` gets from it, is marked done, and a
+    second run adds nothing."""
+    from nfdump2clickhouse_spark.sources.nffile import decode_nffile
+
+    (full,) = _capture_bytes(tmp_path, 1, 40)
+    prefix = full[: len(full) * 6 // 10]
+    decoded = decode_nffile(prefix)
+    assert 0 < len(decoded) < 40
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    (watch / "nfcapd.202403010000").write_bytes(prefix)
+    svc = _native_service(spark, str(tmp_path / "svc"), str(watch), "nffile")
+    marker = os.path.join(svc._staging_dir(svc.config.sources[0]), "_decoded",
+                          "nfcapd.202403010000.done")
+    cols = ["sa", "da", "sp", "dp", "pr", "flg", "ipkt", "ibyt", "ra"]
+    want = sorted(t[3:] for t in decoded)
+    for _ in range(2):
+        svc.run_once()
+        assert os.path.exists(marker)
+        assert _rows(svc.table().select(*cols)) == want
+
+
 def test_failed_decode_cmd_output_stays_hidden(spark, tmp_path):
     """A decode_cmd that writes part of its output and then exits non-zero
     leaves no visible `<name>.csv` and adds no rows; once the command is
@@ -931,3 +992,47 @@ def test_ingest_decisions_exist_once():
     assert len(markers) == 1, f"batch ledger marker built at {markers}"
     assert conversions == [], f"flows contract built outside flows_arrow at {conversions}"
     assert moves == [], f"files moved into place outside sinks.commit at {moves}"
+
+
+def test_nffile_decisions_exist_once():
+    """Spark-free lint over the native capture decoders: in
+    `sources/nffile.py` the 12-byte data-block header is unpacked only in
+    the block walk `_blocks`, and the compression libraries are imported
+    only in the codec table `_codecs`; in `sources/nffile.py` and
+    `sources/netflow_v9.py` only `netflow_v9._finalize` maps protocol
+    numbers to names (`_PROTO_NAMES.get`), the one place a FLOW_COLUMNS
+    tuple is built."""
+    import ast
+
+    import nfdump2clickhouse_spark.sources as sources
+
+    root = os.path.dirname(sources.__file__)
+    libraries = {"lz4", "zstandard", "compression", "bz2"}
+    found = {"block walk": [], "codec import": [], "proto names": []}
+    for module in ("nffile.py", "netflow_v9.py"):
+
+        def visit(node, func):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            where = f"{module}:{func}:{getattr(node, 'lineno', 0)}"
+            if module == "nffile.py":
+                if (isinstance(node, ast.Call)
+                        and getattr(node.func, "attr", None) in {"unpack", "unpack_from"}
+                        and node.args and getattr(node.args[0], "id", None) == "_DATA_BLOCK"
+                        and func != "_blocks"):
+                    found["block walk"].append(where)
+                names = ([a.name for a in node.names] if isinstance(node, ast.Import)
+                         else [node.module or ""] if isinstance(node, ast.ImportFrom)
+                         else [])
+                if func != "_codecs" and any(n.split(".")[0] in libraries for n in names):
+                    found["codec import"].append(where)
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "get"
+                    and getattr(node.func.value, "id", None) == "_PROTO_NAMES"
+                    and (module, func) != ("netflow_v9.py", "_finalize")):
+                found["proto names"].append(where)
+            for child in ast.iter_child_nodes(node):
+                visit(child, func)
+
+        visit(ast.parse(open(os.path.join(root, module)).read()), None)
+    assert found == {"block walk": [], "codec import": [], "proto names": []}
