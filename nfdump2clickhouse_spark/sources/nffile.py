@@ -134,7 +134,7 @@ COMPRESSION_LZO = 1
 COMPRESSION_BZ2 = 2
 COMPRESSION_LZ4 = 3
 COMPRESSION_ZSTD = 4
-#: codecs a library outside the standard library opens
+#: codecs whose library may be missing, by the name their error gives
 _LIBRARY_CODECS = {COMPRESSION_LZ4: "LZ4", COMPRESSION_ZSTD: "zstd"}
 
 # --- layout v1 (nfdump 1.6.x, published 1.6-branch nffile.h) -----------------
