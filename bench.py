@@ -72,6 +72,7 @@ def _ingest_throughput(spark) -> float:
     ingest of nfcapd-style rotations into the partitioned sorted table —
     the reference's operational envelope ('keeps up with 5-min rotation'
     [P]) made measurable."""
+    import shutil
     import tempfile
     from datetime import datetime, timezone
 
@@ -99,6 +100,7 @@ def _ingest_throughput(spark) -> float:
     t0 = time.perf_counter()
     svc.run_once()
     dt = time.perf_counter() - t0
+    shutil.rmtree(base, ignore_errors=True)
     return round(n_files * rows_per_file / dt, 1)
 
 

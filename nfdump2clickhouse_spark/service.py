@@ -47,6 +47,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .schemas import FLOWS, FLOWS_TABLE, NFDUMP_CSV_RAW
 from .sources.flows import (
+    closed_captures,
     decode_capture,
     project_flows,
     with_layout_columns,
@@ -283,22 +284,19 @@ class FlowService:
         failure a warning logs the error and the file retries on the next
         run (the reference's file-level retry), staging afresh.
 
-        Names that begin with `.` or `_` are hidden, as in Spark's own
-        listing, and `nfcapd.current.*` is the capture nfcapd is still
-        writing; it is decoded once nfcapd closes it and renames it to
-        its rotation name. A closed capture is decoded as it stands: a
-        truncated one stages its valid prefix and gets its marker, since
-        nfcapd never rewrites a file it has renamed."""
+        Only ``closed_captures`` are staged, so `nfcapd.current.*` is
+        decoded once nfcapd closes it and renames it to its rotation
+        name. A closed capture is decoded as it stands: a truncated one
+        stages its valid prefix and gets its marker, since nfcapd never
+        rewrites a file it has renamed."""
         staging = self._staging_dir(src)
         ledger = os.path.join(staging, "_decoded")
         os.makedirs(ledger, exist_ok=True)
         done = []
-        for name in sorted(os.listdir(src.watch_dir)):
-            if name.startswith((".", "_", "nfcapd.current.")):
-                continue
+        for name in closed_captures(src.watch_dir):
             path = os.path.join(src.watch_dir, name)
             marker = os.path.join(ledger, f"{name}.done")
-            if not os.path.isfile(path) or os.path.exists(marker):
+            if os.path.exists(marker):
                 continue
             try:
                 commit(staging, name,

@@ -133,21 +133,46 @@ def write_staged_flows(flows: list[tuple], flowsrc: str, path: str) -> None:
     pq.write_table(flows_arrow(flows, flowsrc), path)
 
 
+def _is_closed_capture(name: str) -> bool:
+    return not name.startswith((".", "_", "nfcapd.current."))
+
+
+def closed_captures(path: str) -> list[str]:
+    """The sorted names of the closed captures in directory ``path``: its
+    regular files, less the names that begin with `.` or `_` (hidden, as
+    in Spark's own listing) and `nfcapd.current.*`. nfcapd writes a
+    capture under `nfcapd.current.<pid>` and renames it to its rotation
+    name only once the file is closed; the reference's watcher filters
+    the temp names out and ingests a capture only after that rename
+    (SURVEY §3.1 E2 [P]). So every reader here offers each capture once
+    and whole: the service's decode stage, the capture stream source and
+    the demos list through this function, and the bulk directory readers
+    apply the same name test to the files Spark lists."""
+    return sorted(
+        n for n in os.listdir(path)
+        if _is_closed_capture(n) and os.path.isfile(os.path.join(path, n))
+    )
+
+
 def _read_capture_directory(
     spark: SparkSession, path: str, fmt: str, flowsrc: str, exporter: str | None
 ) -> DataFrame:
-    """Every capture under ``path`` decoded whole by ``decode_capture`` on
-    one executor task (``binaryFile`` + ``mapInArrow``), as the record
-    batches of ``flows_arrow``, plus the layout columns."""
+    """Every closed capture under ``path`` decoded whole by
+    ``decode_capture`` on one executor task (``binaryFile`` +
+    ``mapInArrow``), as the record batches of ``flows_arrow``, plus the
+    layout columns. Spark lists the files, so paths that are not local
+    work too; the decode skips what ``closed_captures`` would."""
 
     def decode(batches):
         for batch in batches:
-            for content in batch.column("content").to_pylist():
-                flows = decode_capture(content, fmt, exporter=exporter)
-                yield from flows_arrow(flows, flowsrc).to_batches()
+            cols = batch.to_pydict()
+            for file, content in zip(cols["path"], cols["content"]):
+                if _is_closed_capture(file.rsplit("/", 1)[-1]):
+                    flows = decode_capture(content, fmt, exporter=exporter)
+                    yield from flows_arrow(flows, flowsrc).to_batches()
 
     raw = spark.read.format("binaryFile").load(path)
-    return with_layout_columns(raw.select("content").mapInArrow(decode, FLOWS))
+    return with_layout_columns(raw.select("path", "content").mapInArrow(decode, FLOWS))
 
 
 def read_v9_directory(

@@ -6,27 +6,45 @@ dirs: write nfcapd-style rotated files, run a real StreamingQuery with
 own micro-batch and watermarks advance between files, exactly like the
 5-min production cadence), and return the sink contents as a batch
 DataFrame. The driver's rows-only check executes these for real.
+
+Every availableNow run is one `_drain`; the demos differ only in what
+they write, the query they build and the sink. The capture stream
+source lists a directory through `sources.flows.closed_captures`, so
+it never offers the capture nfcapd is still writing. The temp dirs sit
+under one per-process dir that is removed when the process exits: the
+returned frames are lazy over them, so they must outlive the call.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import uuid
 from contextlib import contextmanager
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..schemas import FLOWS
-from ..sources.flows import write_flow_files
+from ..sources.flows import closed_captures, decode_capture, write_flow_files
 from ..sources.sinks import parquet_batch_writer
 
 
+@functools.cache
+def _tmp_root() -> str:
+    root = tempfile.mkdtemp(prefix="sf_demos_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _tmp(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=f"sf_{prefix}_")
+    return tempfile.mkdtemp(prefix=f"sf_{prefix}_", dir=_tmp_root())
 
 
 @contextmanager
@@ -75,21 +93,20 @@ def _source(
     )
 
 
+def _drain(writer: DataStreamWriter, ckpt: str) -> None:
+    """Start ``writer``'s query checkpointed at ``ckpt`` with the
+    availableNow trigger and wait until it has drained its input and
+    stopped. A second drain on the same checkpoint is a restart."""
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    q.awaitTermination()
+
+
 def _drain_to_memory(
     df: DataFrame, ckpt: str, output_mode: str = "append"
 ) -> DataFrame:
-    """Drain ``df`` to its end (availableNow) into a fresh memory sink
-    checkpointed at ``ckpt``; return the sink's contents."""
+    """Drain ``df`` into a fresh memory sink; return the sink's contents."""
     name = _mem_name()
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(df.writeStream.format("memory").queryName(name).outputMode(output_mode), ckpt)
     return df.sparkSession.table(name)
 
 
@@ -104,26 +121,28 @@ def run_stream_dir(spark: SparkSession) -> DataFrame:
     )
 
 
-def run_foreachbatch(spark: SparkSession) -> DataFrame:
-    """stream_foreachbatch: the reference's convert→insert loop [P] as an
-    idempotent per-micro-batch parquet append (JDBC/ClickHouse variant:
-    sources.sinks.jdbc_batch_writer)."""
+def _ledgered_drains(spark: SparkSession, rotations: list[dict]) -> DataFrame:
+    """The foreachBatch demos' scaffold: one watch dir, one checkpoint and
+    one ``parquet_batch_writer`` sink with its batch ledger. For each
+    entry of ``rotations`` (``write_flow_files`` arguments) the rotations
+    land, then a new query drains them. Returns the rows per batch id."""
     watch, ckpt, out, ledger = _tmp("watch"), _tmp("ckpt"), _tmp("out"), _tmp("ledger")
-    write_flow_files(spark, watch, n_files=3, rows_per_file=150)
     sink = parquet_batch_writer(os.path.join(out, "flows"), ledger_path=ledger)
-    q = (
-        _source(spark, watch)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    for rotation in rotations:
+        write_flow_files(spark, watch, **rotation)
+        _drain(_source(spark, watch).writeStream.foreachBatch(sink), ckpt)
     return (
         spark.read.parquet(os.path.join(out, "flows"))
         .groupBy("batch_id")
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
+
+
+def run_foreachbatch(spark: SparkSession) -> DataFrame:
+    """stream_foreachbatch: the reference's convert→insert loop [P] as an
+    idempotent per-micro-batch parquet append (JDBC/ClickHouse variant:
+    sources.sinks.jdbc_batch_writer)."""
+    return _ledgered_drains(spark, [dict(n_files=3, rows_per_file=150)])
 
 
 def run_watermark(spark: SparkSession) -> DataFrame:
@@ -221,6 +240,37 @@ def run_session_stream(spark: SparkSession) -> DataFrame:
         return _drain_to_memory(agg, ckpt)
 
 
+_STITCH_OUT = "sa string, da string, n_flows long, total_bytes long"
+_STITCH_STATE = "n long, total long"
+
+
+def _stitch(key, state: tuple[int, int], pdfs):
+    """One flow-stitching step: add the flows of ``pdfs`` to the running
+    ``state`` (n_flows, total_bytes) of the (sa, da) ``key``; return the
+    new state and its one output row."""
+    n, total = state
+    for pdf in pdfs:
+        n += len(pdf)
+        total += int(pdf["ibyt"].sum())
+    row = {"sa": [key[0]], "da": [key[1]], "n_flows": [n], "total_bytes": [total]}
+    return (n, total), pd.DataFrame(row)
+
+
+def _stitched(spark: SparkSession, stateful) -> DataFrame:
+    """The flow-stitching demos' scaffold: 3 rotations × 150 flows grouped
+    by (sa, da); ``stateful(grouped)`` keeps each key's running totals
+    across micro-batches and emits them in update mode. The last emitted
+    totals per key (their max) are the stitched final state."""
+    watch, ckpt = _tmp("watch"), _tmp("ckpt")
+    write_flow_files(spark, watch, n_files=3, rows_per_file=150)
+    with _demo_state_partitions(spark):
+        grouped = _source(spark, watch).groupBy("sa", "da")
+        sink = _drain_to_memory(stateful(grouped), ckpt, "update")
+    return sink.groupBy("sa", "da").agg(
+        F.max("n_flows").alias("n_flows"), F.max("total_bytes").alias("total_bytes")
+    )
+
+
 def run_transform_with_state(spark: SparkSession) -> DataFrame:
     """stream_tws: the Spark 4 stateful API (transformWithStateInPandas +
     StatefulProcessor) for the same flow-stitching semantics as
@@ -239,74 +289,32 @@ def run_transform_with_state(spark: SparkSession) -> DataFrame:
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("sa", StringType()),
-            StructField("da", StringType()),
-            StructField("n_flows", LongType()),
-            StructField("total_bytes", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", LongType())]
-    )
 
     class Stitch(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", state_schema)
+            self._state = handle.getValueState("agg", _STITCH_STATE)
 
         def handleInputRows(self, key, rows, timerValues):
-            n, total = (self._state.get() or (0, 0)) if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                total += int(pdf["ibyt"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "sa": [key[0]],
-                    "da": [key[1]],
-                    "n_flows": [n],
-                    "total_bytes": [total],
-                }
-            )
+            old = (self._state.get() or (0, 0)) if self._state.exists() else (0, 0)
+            new, out = _stitch(key, old, rows)
+            self._state.update(new)
+            yield out
 
         def close(self) -> None:
             pass
 
-    watch, ckpt = _tmp("watch"), _tmp("ckpt")
-    write_flow_files(spark, watch, n_files=3, rows_per_file=150)
     # transformWithState requires the RocksDB state store (the default
     # HDFS-backed provider does not implement the new state-variable
-    # API); scoped to this drain, so later stateful streams in the
+    # API); scoped to this demo, so later stateful streams in the
     # session keep their own provider
-    rocksdb = _session_conf(
+    with _session_conf(
         spark,
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    with rocksdb, _demo_state_partitions(spark):
-        out = (
-            _source(spark, watch)
-            .groupBy("sa", "da")
-            .transformWithStateInPandas(
-                Stitch(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-        sink = _drain_to_memory(out, ckpt, "update")
-    # last emitted totals per key = the stitched final state
-    return sink.groupBy("sa", "da").agg(
-        F.max("n_flows").alias("n_flows"), F.max("total_bytes").alias("total_bytes")
-    )
+    ):
+        return _stitched(spark, lambda grouped: grouped.transformWithStateInPandas(
+            Stitch(), outputStructType=_STITCH_OUT, outputMode="Update", timeMode="None"
+        ))
 
 
 def run_stateful_sessions(spark: SparkSession) -> DataFrame:
@@ -316,36 +324,18 @@ def run_stateful_sessions(spark: SparkSession) -> DataFrame:
     next; each batch emits the updated totals."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    watch, ckpt = _tmp("watch"), _tmp("ckpt")
-    write_flow_files(spark, watch, n_files=3, rows_per_file=150)
-
     def stitch(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += int(pdf["ibyt"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"sa": [key[0]], "da": [key[1]], "n_flows": [n], "total_bytes": [total]}
-        )
+        new, out = _stitch(key, state.get if state.exists else (0, 0), pdfs)
+        state.update(new)
+        yield out
 
-    out = (
-        _source(spark, watch)
-        .groupBy("sa", "da")
-        .applyInPandasWithState(
-            stitch,
-            outputStructType="sa string, da string, n_flows long, total_bytes long",
-            stateStructType="n long, total long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    with _demo_state_partitions(spark):
-        sink = _drain_to_memory(out, ckpt, "update")
-    # final state per key = last emitted row (max n_flows)
-    return sink.groupBy("sa", "da").agg(
-        F.max("n_flows").alias("n_flows"), F.max("total_bytes").alias("total_bytes")
-    )
+    return _stitched(spark, lambda grouped: grouped.applyInPandasWithState(
+        stitch,
+        outputStructType=_STITCH_OUT,
+        stateStructType=_STITCH_STATE,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    ))
 
 
 def run_restart_resume(spark: SparkSession) -> DataFrame:
@@ -357,37 +347,14 @@ def run_restart_resume(spark: SparkSession) -> DataFrame:
     files; run 3 with nothing new must add zero rows. The seen-files log
     in the checkpoint is what replaces the reference's watcher state, so
     this is the test that it survives process death."""
-    watch, ckpt, out, ledger = _tmp("watch"), _tmp("ckpt"), _tmp("out"), _tmp("ledger")
-    sink = parquet_batch_writer(os.path.join(out, "flows"), ledger_path=ledger)
     start = datetime(2024, 3, 1, tzinfo=timezone.utc)
-
-    def drain() -> None:
-        q = (
-            _source(spark, watch)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    write_flow_files(spark, watch, n_files=2, rows_per_file=120, start=start)
-    drain()
-    from datetime import timedelta
-
     # rotations 2-3: later start → later explicit mtime, listed after run
     # 1's files (no wall-clock sleep needed — mtimes are set, not sampled)
-    write_flow_files(
-        spark, watch, n_files=2, rows_per_file=120,
-        start=start + timedelta(minutes=10),
-    )
-    drain()  # restart from the same checkpoint: must pick up exactly 2 files
-    drain()  # nothing new: must be a no-op
-    return (
-        spark.read.parquet(os.path.join(out, "flows"))
-        .groupBy("batch_id")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
+    return _ledgered_drains(spark, [
+        dict(n_files=2, rows_per_file=120, start=start),
+        dict(n_files=2, rows_per_file=120, start=start + timedelta(minutes=10)),
+        dict(n_files=0),
+    ])
 
 
 def _request_response_join(spark: SparkSession, how: str, keep=None):
@@ -404,8 +371,7 @@ def _request_response_join(spark: SparkSession, how: str, keep=None):
     watch_a, watch_b, ckpt = _tmp("req"), _tmp("resp"), _tmp("ckpt")
     start = datetime(2024, 3, 1, tzinfo=timezone.utc)
     write_flow_files(spark, watch_a, n_files=3, rows_per_file=100, start=start)
-    os.makedirs(watch_b, exist_ok=True)
-    for p in sorted(os.listdir(watch_a)):
+    for p in closed_captures(watch_a):
         pdf = pq.read_table(os.path.join(watch_a, p)).to_pandas()
         if keep is not None:
             pdf = pdf[keep(pdf)]
@@ -476,50 +442,35 @@ def run_stream_left_outer_join(spark: SparkSession) -> DataFrame:
         spark, "left_outer", keep=lambda pdf: pdf["sp"] % 2 == 0
     )
     # watermark advancer: event times 2 h later, keys that match nothing
-    adv = pq.read_table(os.path.join(watch_a, sorted(os.listdir(watch_a))[0]))
+    adv = pq.read_table(os.path.join(watch_a, closed_captures(watch_a)[0]))
     apdf = adv.to_pandas().head(5).copy()
     apdf["ts"] = apdf["ts"] + pd.Timedelta(hours=2)
     apdf["te"] = apdf["te"] + pd.Timedelta(hours=2)
     apdf["sa"] = "255.255.255.255"
     apdf["da"] = "255.255.255.254"
-    # the join's GLOBAL watermark is min(req side, resp side), so the
-    # advancer must land in BOTH watch dirs — advancing only one side
-    # pins the global watermark and no NULL row ever flushes
+    # pandas datetime arithmetic upgrades ts to ns; cast back to the
+    # rotation files' schema or Spark's streaming scan rejects the file
+    advancer = pa.Table.from_pandas(apdf, schema=adv.schema)
     newest = max(
-        os.stat(os.path.join(watch_b, f)).st_mtime for f in os.listdir(watch_b)
+        os.stat(os.path.join(watch_b, f)).st_mtime for f in closed_captures(watch_b)
     )
-    for wdir in (watch_a, watch_b):
-        adv_p = os.path.join(wdir, "nfcapd.advancer")
-        # pandas datetime arithmetic upgrades ts to ns; cast back to the
-        # rotation files' schema or Spark's streaming scan rejects the file
-        pq.write_table(pa.Table.from_pandas(apdf, schema=adv.schema), adv_p)
-        os.utime(adv_p, (newest + 3600, newest + 3600))
-
     out = _tmp("out")
     with _demo_state_partitions(spark):
-
-        def drain() -> None:
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        drain()
         # NULL-side rows are emitted in the batch AFTER the watermark
         # passes their bound; availableNow terminates at end-of-input, so
         # a second drain (new advancer rotation → one more batch) is what
         # flushes the unmatched half — the restart is checkpoint-resumed,
         # exactly the run_restart_resume operational pattern
-        for wdir in (watch_a, watch_b):
-            adv2 = os.path.join(wdir, "nfcapd.advancer2")
-            pq.write_table(pa.Table.from_pandas(apdf, schema=adv.schema), adv2)
-            os.utime(adv2, (newest + 7200, newest + 7200))
-        drain()
+        for hours, name in ((1, "nfcapd.advancer"), (2, "nfcapd.advancer2")):
+            # the join's GLOBAL watermark is min(req side, resp side), so
+            # the advancer must land in BOTH watch dirs — advancing only
+            # one side pins the global watermark and no NULL row flushes
+            for wdir in (watch_a, watch_b):
+                adv_p = os.path.join(wdir, name)
+                pq.write_table(advancer, adv_p)
+                mtime = newest + 3600 * hours
+                os.utime(adv_p, (mtime, mtime))
+            _drain(joined.writeStream.format("parquet").option("path", out), ckpt)
     # drop the advancer rows themselves (recognizable sentinel address):
     # the demo's contract is about the real request population
     return spark.read.parquet(out).filter(F.col("sa") != "255.255.255.255")
@@ -534,7 +485,7 @@ def run_v9_stream_source(spark: SparkSession) -> DataFrame:
 
     Offset design: nfcapd rotation names are time-ordered
     (`nfcapd.YYYYMMDDhhmm`), so the offset is simply the
-    lexicographically LAST ingested file name — O(1) state, no
+    lexicographically LAST closed capture's name — O(1) state, no
     unbounded seen-files log, and a checkpoint restart resumes after
     the recorded rotation exactly like nfcapd's own tailer would. Each
     micro-batch's partitions are the files in (start, end]; the
@@ -559,17 +510,11 @@ def _run_capture_stream_source(
     memory-sink query drains them, a third rotation arrives, and the
     same query drains again. Returns per-capture counts plus the row
     totals seen after each drain."""
-    import shutil
-
     cap_dir, ckpt = _tmp(f"{tag}src"), _tmp(f"{tag}ckpt")
     write(cap_dir, n_files=2, records_per_file=10)
-    fmt_name = f"{decoder}_stream"
-    _register_flow_stream_source(spark, fmt_name, decoder)
     name = _mem_name()
     q = (
-        spark.readStream.format(fmt_name)
-        .option("path", cap_dir)
-        .load()
+        _capture_stream(spark, decoder, cap_dir)
         .writeStream.format("memory")
         .queryName(name)
         .option("checkpointLocation", ckpt)
@@ -602,6 +547,14 @@ def _run_capture_stream_source(
     )
 
 
+def _capture_stream(spark: SparkSession, decoder: str, cap_dir: str) -> DataFrame:
+    """The flow-capture stream source ``<decoder>_stream`` over
+    ``cap_dir``, registered on this session first."""
+    fmt_name = f"{decoder}_stream"
+    _register_flow_stream_source(spark, fmt_name, decoder)
+    return spark.readStream.format(fmt_name).option("path", cap_dir).load()
+
+
 def _register_flow_stream_source(
     spark: SparkSession, fmt_name: str, decoder: str
 ) -> None:
@@ -614,7 +567,10 @@ def _register_flow_stream_source(
     rows. Everything else (the O(1) offset design, per-file partitions,
     whole-file decode) is format-independent, which is the point: the
     streaming contract of an nfcapd directory does not depend on what
-    nfcapd wrote into the files."""
+    nfcapd wrote into the files. Offsets and partitions come from
+    ``closed_captures``, so the capture nfcapd is still writing
+    (`nfcapd.current.*`, which sorts after every rotation name) is
+    never offered, and its rotation is read once it is closed."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -629,27 +585,17 @@ def _register_flow_stream_source(
             return {"last": ""}
 
         def latestOffset(self):
-            names = sorted(
-                n
-                for n in os.listdir(self.path)
-                if os.path.isfile(os.path.join(self.path, n))
-            )
+            names = closed_captures(self.path)
             return {"last": names[-1] if names else ""}
 
         def partitions(self, start, end):
-            names = sorted(
-                n
-                for n in os.listdir(self.path)
-                if start["last"] < n <= end["last"]
-                and os.path.isfile(os.path.join(self.path, n))
-            )
             return [
-                InputPartition(os.path.join(self.path, n)) for n in names
+                InputPartition(os.path.join(self.path, n))
+                for n in closed_captures(self.path)
+                if start["last"] < n <= end["last"]
             ]
 
         def read(self, partition):
-            from nfdump2clickhouse_spark.sources.flows import decode_capture
-
             fpath = partition.value
             with open(fpath, "rb") as fh:
                 content = fh.read()
@@ -700,17 +646,7 @@ def run_v9_restartable(spark: SparkSession, cap_dir: str, ckpt: str) -> int:
     sink at ``ckpt``'s sibling, returning the cumulative row count —
     used by the checkpoint-restart test: each call is a NEW query
     resuming from the committed offset."""
-    _register_flow_stream_source(spark, "v9_stream", "v9")
     out = ckpt + "_out"
-    q = (
-        spark.readStream.format("v9_stream")
-        .option("path", cap_dir)
-        .load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _capture_stream(spark, "v9", cap_dir)
+    _drain(stream.writeStream.format("parquet").option("path", out), ckpt)
     return spark.read.parquet(out).count()

@@ -17,6 +17,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from nfdump2clickhouse_spark.sources import nffile as nf
+from tests.conf_utils import write_conf
 
 
 def _decode_dir(path: str, **kw) -> list[tuple]:
@@ -434,6 +435,24 @@ def test_read_nffile_directory_matches_expected(spark, tmp_path):
             )
 
 
+def test_read_nffile_directory_skips_in_progress_capture(spark, tmp_path):
+    """The bulk readers read closed captures only: `nfcapd.current.<pid>`
+    is the capture nfcapd is still writing, so its prefix adds no rows,
+    and a directory holding nothing else reads 0 rows."""
+    from nfdump2clickhouse_spark.sources.flows import read_nffile_directory
+
+    gen = tmp_path / "gen"
+    nf.write_nffile(str(gen), n_files=2, records_per_file=40)
+    first, second = (p.read_bytes() for p in sorted(gen.iterdir()))
+    live, idle = tmp_path / "live", tmp_path / "idle"
+    for d in (live, idle):
+        d.mkdir()
+        (d / "nfcapd.current.4242").write_bytes(second[: len(second) * 2 // 3])
+    (live / "nfcapd.202403010000").write_bytes(first)
+    assert read_nffile_directory(spark, str(live), flowsrc="edge1").count() == 40
+    assert read_nffile_directory(spark, str(idle), flowsrc="edge1").count() == 0
+
+
 def test_v9_source_detects_nffile_magic(spark, tmp_path):
     """Pointing format=v9 at genuine nfcapd on-disk files fails LOUDLY
     with the format=nffile pointer — the silent-zero-rows failure mode
@@ -458,19 +477,11 @@ def test_service_nffile_source_end_to_end(spark, tmp_path):
     watch.mkdir()
     expected = nf.write_nffile(str(watch), n_files=2, records_per_file=12,
                                exporter="198.51.100.3")
-    conf = tmp_path / "svc.conf"
-    conf.write_text(f"""
-[general]
-table_path = {tmp_path / "table"}
-checkpoint_root = {tmp_path / "ckpt"}
-
-[edge-nffile]
-watchdir = {watch}
-flowsrc = edge-nf
-format = nffile
-exporter = 198.51.100.3
-""")
-    cfg = parse_config(str(conf))
+    conf = write_conf(str(tmp_path), {"edge-nffile": {
+        "watchdir": watch, "flowsrc": "edge-nf", "format": "nffile",
+        "exporter": "198.51.100.3",
+    }})
+    cfg = parse_config(conf)
     assert cfg.sources[0].fmt == "nffile"
     svc = FlowService(spark, cfg)
     svc.run_once()

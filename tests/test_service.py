@@ -12,21 +12,7 @@ import pytest
 
 from nfdump2clickhouse_spark.service import FlowService, parse_config
 from nfdump2clickhouse_spark.sources.flows import write_flow_files
-
-
-def _write_conf(path: str, table: str, ckpt: str, dirs: dict[str, str]) -> str:
-    lines = [
-        "[general]",
-        f"table_path = {table}",
-        f"checkpoint_root = {ckpt}",
-        "keep_days = 90",
-    ]
-    for name, d in dirs.items():
-        lines += [f"[{name}]", f"watchdir = {d}"]
-    conf = os.path.join(path, "nfdump2clickhouse.conf")
-    with open(conf, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    return conf
+from tests.conf_utils import write_conf
 
 
 def test_service_end_to_end(spark, tmp_path):
@@ -39,9 +25,7 @@ def test_service_end_to_end(spark, tmp_path):
     write_flow_files(spark, dirs["router-a"], n_files=2, rows_per_file=100, start=start)
     write_flow_files(spark, dirs["router-b"], n_files=1, rows_per_file=50, start=start)
 
-    conf = _write_conf(
-        base, os.path.join(base, "flows"), os.path.join(base, "ckpt"), dirs
-    )
+    conf = write_conf(base, {name: {"watchdir": d} for name, d in dirs.items()})
     cfg = parse_config(conf)
     assert [s.flowsrc for s in cfg.sources] == ["router-a", "router-b"]
 
@@ -90,14 +74,9 @@ def test_service_decode_cmd_end_to_end(spark, tmp_path):
     for p in paths:
         os.rename(p, p[: -len(".csv")])
 
-    conf_path = os.path.join(base, "c.conf")
-    with open(conf_path, "w") as fh:
-        fh.write(
-            f"[general]\ntable_path = {base}/flows\n"
-            f"checkpoint_root = {base}/ckpt\n"
-            f"[router-raw]\nwatchdir = {watch}\n"
-            "decode_cmd = cp {file} {out}\n"
-        )
+    conf_path = write_conf(
+        base, {"router-raw": {"watchdir": watch, "decode_cmd": "cp {file} {out}"}}
+    )
     cfg = parse_config(conf_path)
     assert cfg.sources[0].decode_cmd == "cp {file} {out}"
 
@@ -129,16 +108,9 @@ def test_systemd_units_and_cli_run_once(spark, tmp_path):
         spark, watch, n_files=1, rows_per_file=40,
         start=datetime(2024, 3, 1, tzinfo=timezone.utc),
     )
-    conf = os.path.join(base, "c.conf")
-    with open(conf, "w") as fh:
-        fh.write(
-            f"[general]\ntable_path = {base}/flows\n"
-            f"checkpoint_root = {base}/ckpt\n"
-            # fixture dates are fixed (2024-03-01); a real keep_days
-            # would expire them relative to today's date
-            "keep_days = 100000\n"
-            f"[router-x]\nwatchdir = {watch}\n"
-        )
+    # fixture dates are fixed (2024-03-01); a real keep_days would
+    # expire them relative to today's date
+    conf = write_conf(base, {"router-x": {"watchdir": watch}}, keep_days=100000)
 
     units = generate_systemd_units(conf, interval="5min")
     assert set(units) == {
@@ -166,9 +138,7 @@ def test_service_retention_drops_old_partitions(spark, tmp_path):
         rows_per_file=60,
         start=datetime(2024, 3, 1, tzinfo=timezone.utc),
     )
-    conf = _write_conf(
-        base, os.path.join(base, "flows"), os.path.join(base, "ckpt"), {"src": watch}
-    )
+    conf = write_conf(base, {"src": {"watchdir": watch}})
     svc = FlowService(spark, parse_config(conf))
     svc.run_once()
     assert svc.table().count() == 60
@@ -239,13 +209,9 @@ def test_service_logging_and_status(spark, tmp_path):
     base = str(tmp_path)
     watch = os.path.join(base, "watch")
     write_flow_files(spark, watch, n_files=2, rows_per_file=60)
-    conf_path = os.path.join(base, "c.conf")
-    with open(conf_path, "w") as fh:
-        fh.write(
-            f"[general]\ntable_path = {base}/flows\n"
-            f"checkpoint_root = {base}/ckpt\nlog_dir = {base}/log\n"
-            f"[edge]\nwatchdir = {watch}\n"
-        )
+    conf_path = write_conf(
+        base, {"edge": {"watchdir": watch}}, log_dir=os.path.join(base, "log")
+    )
     svc = FlowService(spark, parse_config(conf_path))
     svc.run_once()
 
@@ -268,12 +234,7 @@ def test_service_query_filter_pushes_down(spark, tmp_path):
     base = str(tmp_path)
     watch = os.path.join(base, "watch")
     write_flow_files(spark, watch, n_files=1, rows_per_file=200)
-    conf_path = os.path.join(base, "c.conf")
-    with open(conf_path, "w") as fh:
-        fh.write(
-            f"[general]\ntable_path = {base}/flows\n"
-            f"checkpoint_root = {base}/ckpt\n[edge]\nwatchdir = {watch}\n"
-        )
+    conf_path = write_conf(base, {"edge": {"watchdir": watch}})
     svc = FlowService(spark, parse_config(conf_path))
     svc.run_once()
 
@@ -294,12 +255,7 @@ def test_service_backfill_replaces_only_target_partitions(spark, tmp_path):
     watch = os.path.join(base, "watch")
     start = datetime(2024, 3, 1, tzinfo=timezone.utc)
     write_flow_files(spark, watch, n_files=2, rows_per_file=100, start=start)
-    conf_path = os.path.join(base, "c.conf")
-    with open(conf_path, "w") as fh:
-        fh.write(
-            f"[general]\ntable_path = {base}/flows\n"
-            f"checkpoint_root = {base}/ckpt\n[edge]\nwatchdir = {watch}\n"
-        )
+    conf_path = write_conf(base, {"edge": {"watchdir": watch}})
     svc = FlowService(spark, parse_config(conf_path))
     svc.run_once()
     tbl = svc.table()
@@ -367,20 +323,10 @@ def test_service_native_v9_source_end_to_end(spark, tmp_path):
     watch = tmp_path / "captures"
     expected = write_netflow_v9(str(watch), n_files=2, records_per_file=12,
                                 exporter="203.0.113.5")
-    conf = tmp_path / "svc.conf"
-    conf.write_text(
-        f"""[general]
-table_path = {tmp_path}/table
-checkpoint_root = {tmp_path}/ckpt
-
-[edge-v9]
-watchdir = {watch}
-flowsrc = edge9
-format = v9
-exporter = 203.0.113.5
-"""
-    )
-    cfg = parse_config(str(conf))
+    conf = write_conf(str(tmp_path), {"edge-v9": {
+        "watchdir": watch, "flowsrc": "edge9", "format": "v9", "exporter": "203.0.113.5",
+    }}, table_path=f"{tmp_path}/table")
+    cfg = parse_config(conf)
     assert cfg.sources[0].fmt == "v9" and cfg.sources[0].exporter == "203.0.113.5"
     svc = FlowService(spark, cfg)
     svc.run_once()

@@ -11,6 +11,7 @@ import pytest
 
 from nfdump2clickhouse_spark.operators.scans import retention_partition_demo
 from nfdump2clickhouse_spark.streaming import pipeline as sp
+from tests.conf_utils import write_conf
 
 
 def test_stream_dir_exactly_once(spark):
@@ -77,13 +78,7 @@ def _compaction_service(spark, base: str):
         rows_per_file=100,
         start=datetime(2024, 3, 1, tzinfo=timezone.utc),
     )
-    conf = os.path.join(base, "c.conf")
-    with open(conf, "w") as fh:
-        fh.write(
-            f"[general]\ntable_path = {base}/flows\ncheckpoint_root = {base}/ckpt\n"
-            f"[src]\nwatchdir = {watch}\n"
-        )
-    svc = FlowService(spark, parse_config(conf))
+    svc = FlowService(spark, parse_config(write_conf(base, {"src": {"watchdir": watch}})))
     svc.run_once()
     leaf = os.path.join(base, "flows", "dt=2024-03-01", "flowsrc=src")
     return svc, leaf
@@ -313,3 +308,93 @@ def test_v9_stream_source_refuses_nffile_captures(spark, tmp_path):
     write_nffile(cap, n_files=1, records_per_file=8)
     with pytest.raises(Exception, match="format=nffile"):
         sp.run_v9_restartable(spark, cap, str(tmp_path / "ckpt"))
+
+
+def test_capture_stream_source_skips_in_progress_capture(spark, tmp_path):
+    """On a live nfcapd directory `nfcapd.current.<pid>` always exists and
+    sorts after every rotation name. The capture stream source must not
+    take it as its offset: each drain reads exactly the closed rotations,
+    as a clean run over them would (40, 80, 120 rows), and never the
+    in-progress prefix."""
+    from nfdump2clickhouse_spark.sources.nffile import write_nffile
+
+    gen = tmp_path / "gen"
+    write_nffile(str(gen), n_files=3, records_per_file=40)
+    captures = [p.read_bytes() for p in sorted(gen.iterdir())]
+    cap = tmp_path / "caps"
+    cap.mkdir()
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+
+    def drain() -> int:
+        sp._register_flow_stream_source(spark, "nffile_stream", "nffile")
+        q = (
+            spark.readStream.format("nffile_stream").option("path", str(cap)).load()
+            .writeStream.format("parquet").option("path", out)
+            .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        return spark.read.parquet(out).count()
+
+    (cap / "nfcapd.202403010000").write_bytes(captures[0])
+    current = cap / "nfcapd.current.4242"
+    counts = []
+    for i, content in enumerate(captures[1:], 1):
+        current.write_bytes(content[: len(content) * 2 // 3])
+        counts.append(drain())
+        current.write_bytes(content)  # nfcapd closes the file, then renames it
+        os.rename(current, cap / f"nfcapd.20240301{i * 5:04d}")
+    counts.append(drain())
+    assert counts == [40, 80, 120]
+
+
+def test_demo_dirs_are_removed_at_exit(tmp_path):
+    """Spark-free: a process that made a demo temp dir with `_tmp` leaves
+    nothing behind once it exits."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "from nfdump2clickhouse_spark.streaming.pipeline import _tmp; print(_tmp('x'))"
+    made = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        env={**os.environ, "TMPDIR": str(tmp_path)}, check=True,
+    ).stdout.strip()
+    assert made.startswith(str(tmp_path))
+    assert not os.path.exists(made)
+    assert os.listdir(tmp_path) == []
+
+
+def test_streaming_decisions_exist_once():
+    """Spark-free lint over service.py, sources/flows.py and
+    streaming/pipeline.py: a directory is listed (`os.listdir`) only in
+    `closed_captures`, so no reader can offer the capture nfcapd is still
+    writing; and the availableNow trigger is set only in `pipeline._drain`
+    and `FlowService.start`, so every demo drains the same way."""
+    import ast
+
+    import nfdump2clickhouse_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    allowed = {
+        "listdir": {("sources/flows.py", "closed_captures")},
+        "availableNow": {("streaming/pipeline.py", "_drain"), ("service.py", "start")},
+    }
+    found = {"listdir": [], "availableNow": []}
+    for module in ("service.py", "sources/flows.py", "streaming/pipeline.py"):
+
+        def visit(node, func):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                f = node.func
+                if f.attr == "listdir" and getattr(f.value, "id", None) == "os":
+                    found["listdir"].append((module, func))
+                if f.attr == "trigger" and any(
+                        k.arg == "availableNow" for k in node.keywords):
+                    found["availableNow"].append((module, func))
+            for child in ast.iter_child_nodes(node):
+                visit(child, func)
+
+        visit(ast.parse(open(os.path.join(root, module)).read()), None)
+    for what, calls in found.items():
+        assert calls and set(calls) <= allowed[what], f"{what} at {calls}"
